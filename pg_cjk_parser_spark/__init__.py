@@ -23,6 +23,19 @@ GIN index + ranking    index.build.build_index (salted, block-max,
 =====================  ==============================================
 """
 
+import sys as _sys
+
+# Inside a Spark task (unpickling any library UDF imports this package)
+# stop the worker re-reading pyspark.zip before every task; see
+# spark.worker_env. A process that has not imported pyspark is no task.
+if (
+    "pyspark" in _sys.modules
+    and _sys.modules["pyspark"].TaskContext.get() is not None
+):
+    from .spark import worker_env as _worker_env
+
+    _worker_env.install()
+
 from .functions.headline import headline as ts_headline
 from .functions.zht2zhs import zht2zhs as cjk_zht2zhs
 from .kernel.fsm import LASTNUM, TOKEN_ALIASES, TOKEN_DESCRIPTIONS

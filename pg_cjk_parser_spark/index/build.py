@@ -57,6 +57,13 @@ def _manifest_path(index_dir: str, bucket: int) -> str:
     return os.path.join(index_dir, "manifests", f"bucket={bucket}.json")
 
 
+def _atomic_json(path: str, obj: dict) -> None:
+    tmp = f"{path}.tmp.{os.getpid()}"
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+    os.replace(tmp, path)
+
+
 def _bucket_dirs(path: str) -> list[str]:
     """hive bucket= partition dirs under ``path`` ([] for an empty index)."""
     if not os.path.isdir(path):
@@ -1024,27 +1031,25 @@ def build_index(
         "normalize_zht": bool(normalize_zht),
         "build_seconds": round(time.time() - t0, 3),
     }
-    with open(os.path.join(index_dir, "stats.json"), "w") as f:
-        json.dump(stats, f, indent=1)
+    _atomic_json(os.path.join(index_dir, "stats.json"), stats)
 
     os.makedirs(os.path.join(index_dir, "manifests"), exist_ok=True)
     for bucket in range(num_buckets):
         if bucket in done:
             continue
         m = per_bucket.get(bucket, {"n_terms": 0, "n_postings": 0, "total_tf": 0})
-        with open(_manifest_path(index_dir, bucket), "w") as f:
-            json.dump(
-                {
-                    "bucket": bucket,
-                    "status": "complete",
-                    "fingerprint": fingerprint,
-                    "n_docs": int(n_docs),
-                    "built_at": time.time(),
-                    # per-partition metrics (lineage + sizing evidence)
-                    "metrics": m,
-                },
-                f,
-            )
+        _atomic_json(
+            _manifest_path(index_dir, bucket),
+            {
+                "bucket": bucket,
+                "status": "complete",
+                "fingerprint": fingerprint,
+                "n_docs": int(n_docs),
+                "built_at": time.time(),
+                # per-partition metrics (lineage + sizing evidence)
+                "metrics": m,
+            },
+        )
     if not keep_staging:
         shutil.rmtree(staging, ignore_errors=True)
     return stats

@@ -19,9 +19,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import SparkSession, functions as F
 
-from .build import BLOCK_SCHEMA
+from .build import BLOCK_SCHEMA, _atomic_json
 from .codec import decode_positions, decode_varints, delta_decode
-from .streaming import _atomic_json, _rebuild_stats
+from .streaming import _rebuild_stats
 from .tombstones import (
     alive_mask,
     clear_tombstones,

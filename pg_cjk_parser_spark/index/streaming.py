@@ -33,6 +33,7 @@ from .build import (
     DEFAULT_BUCKETS,
     DEFAULT_SALTS,
     PACKED_SCHEMA,
+    _atomic_json,
     _bucket_dirs,
     _encode_cells,
     _packed_postings_gen,
@@ -380,13 +381,6 @@ def _estimated_small(batch: DataFrame) -> bool:
         return 0 < est < _SMALL_EPOCH_BYTES
     except Exception:
         return False
-
-
-def _atomic_json(path: str, obj: dict) -> None:
-    tmp = f"{path}.tmp.{os.getpid()}"
-    with open(tmp, "w") as f:
-        json.dump(obj, f)
-    os.replace(tmp, path)
 
 
 def _rebuild_stats(

@@ -18,6 +18,18 @@ import argparse
 import json
 
 
+def _executor_env(_rows):
+    """Runs in an executor task: where the package came from and
+    whether importing it installed the zip-directory guard."""
+    import pg_cjk_parser_spark
+    from pg_cjk_parser_spark.spark import worker_env
+
+    yield {
+        "package_file": pg_cjk_parser_spark.__file__,
+        "guard_active": worker_env.active(),
+    }
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", help="parquet path or iceberg table of the corpus")
@@ -65,6 +77,12 @@ def main() -> None:
         n_docs=n_docs,
     )
     print(json.dumps({"stats": stats}))
+    executor = (
+        spark.sparkContext.parallelize([0], 1)
+        .mapPartitions(_executor_env)
+        .collect()[0]
+    )
+    print(json.dumps({"executor": executor}))
     for q in args.query:
         rows = search(spark, args.index_dir, q, k=10).collect()
         print(json.dumps({

@@ -235,6 +235,36 @@ def test_clean_rebuild_drops_stale_buckets(spark, tmp_path):
     ).upper() == "STATIC"
 
 
+def test_rebuild_crash_in_stats_write_keeps_previous_stats(
+    spark, tmp_path, monkeypatch
+):
+    """A rebuild that dies part-way through writing stats.json must
+    leave the previous stats.json whole and loadable."""
+    from pg_cjk_parser_spark.query.topk import load_stats
+
+    d = str(tmp_path / "torn")
+    build_index(
+        spark, synth_corpus(spark, 60, seed=42, num_partitions=2), d,
+        num_buckets=4, num_salts=2, block_size=16,
+    )
+    real_dump = json.dump
+
+    def torn_dump(obj, f, *args, **kwargs):
+        if "avgdl" in obj:  # the stats.json write
+            f.write(json.dumps(obj)[:10])
+            raise OSError("disk full")
+        return real_dump(obj, f, *args, **kwargs)
+
+    monkeypatch.setattr(json, "dump", torn_dump)
+    with pytest.raises(OSError, match="disk full"):
+        build_index(
+            spark, synth_corpus(spark, 30, seed=7, num_partitions=2), d,
+            num_buckets=4, num_salts=2, block_size=16,
+        )
+    monkeypatch.undo()
+    assert load_stats(d)["n_docs"] == 60
+
+
 def test_resume_invalidates_on_corpus_change(spark, tmp_path):
     """resume=True after the input corpus changed must NOT reuse stale
     staging/buckets: the default fingerprint folds in corpus identity

@@ -60,6 +60,11 @@ def test_spark_submit_pyfiles_build_and_query(tmp_path, spark):
     ]
     stats = next(p["stats"] for p in payloads if "stats" in p)
     assert stats["n_docs"] == 800
+    # executors import the package from the shipped zip, and that
+    # import installs the zip-directory guard (spark.worker_env)
+    executor = next(p["executor"] for p in payloads if "executor" in p)
+    assert ".zip" in executor["package_file"], executor
+    assert executor["guard_active"], executor
     topk = next(p["topk"] for p in payloads if p.get("query") == "のび太")
     assert len(topk) >= 1
 
