@@ -30,6 +30,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import uuid
 
 import numpy as np
@@ -289,6 +290,24 @@ def epoch_dir_layout(path: str) -> str | None:
     return None
 
 
+# A block's epoch is the epoch=N dir DIRECTLY under the shard root
+# (postings/ or termstats/), followed at most by a bucket dir and the
+# file name.  Anchoring at the end keeps an ancestor of the index dir
+# named epoch=N (or postings/epoch=N) from passing for a block epoch.
+# Java and Python regex share this syntax.
+_EPOCH_PATH_RE = (
+    r"/(?:postings|termstats)/epoch=(\d+)(?:/bucket=\d+)?(?:/[^/]+)?$"
+)
+
+
+def path_epoch(path: str) -> int | None:
+    """Epoch of a shard dir or block file path, None for the batch
+    layout (no epoch dir) - the driver-side twin of
+    :func:`epoch_from_file_path`."""
+    m = re.search(_EPOCH_PATH_RE, path)
+    return int(m.group(1)) if m else None
+
+
 def epoch_from_file_path():
     """Spark Column: a block's epoch parsed from its file path
     (epoch=N dir, 0 for batch-layout files) - the single home of the
@@ -297,7 +316,7 @@ def epoch_from_file_path():
 
     return F.coalesce(
         F.nullif(
-            F.regexp_extract(F.input_file_name(), "epoch=(\\d+)", 1),
+            F.regexp_extract(F.input_file_name(), _EPOCH_PATH_RE, 1),
             F.lit(""),
         ).cast("int"),
         F.lit(0),

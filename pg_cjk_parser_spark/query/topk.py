@@ -1,30 +1,36 @@
-"""BM25 top-k query engine over the partitioned inverted index.
+"""Top-k query engine over the partitioned inverted index: BM25, and
+index-path ``ts_rank`` / ``ts_rank_cd`` bit-identical to the kernel.
 
-Query lifecycle (scatter-gather):
+The seven public entry points are thin wrappers over one executor:
 
-1. Tokenize the query string with the SAME kernel (driver side) ->
-   phrase/AND tree; collect positive terms.
-2. Compute each term's bucket driver-side with a bit-identical
-   pure-Python xxhash64 (no Spark job); read only those ``bucket=``
-   partitions (partition pruning) with a pushed-down
-   ``term IN (...)`` filter.
-3. Load idf per term from the (pruned) termstats shards.
-4. Repartition the matching posting blocks by ``salt``: every term's
-   shard-s list covers the same docid subset (salt is a hash of
-   docid), so each partition can run a LOCAL conjunction/top-k with no
-   further shuffle:
-   - conjunctive (phrase/AND) mode intersects docid sets rarest-first,
-     skipping blocks whose [min_docid, max_docid] range cannot overlap
-     the current candidate set, then rechecks phrase adjacency on
-     decoded positions;
-   - disjunctive (OR) mode does block-max pruning: blocks whose
-     idf-weighted upper bound cannot reach the running per-partition
-     threshold theta are skipped before decoding (WAND-style, term- and
-     block-granular).
-5. Per-partition top-k rows -> global ``orderBy(score desc, docid)
-   .limit(k)`` on <= S*k rows.
+1. **Query spec** (:class:`_QuerySpec`): kind (``bm25`` | ``rank`` |
+   ``rank_cd``), parsed query, idf map and normalization ``method``.
+   Routing tokenizes with the SAME kernel, buckets each term
+   driver-side with a bit-identical pure-Python xxhash64 (no Spark
+   job) and reads df from the pruned termstats shards.  Method bits
+   are checked before routing, the query shape once a query routes;
+   a query that routes to nothing is dropped, never rejected.
+2. **Per-salt scorer** (:func:`_score_group`): salt is a hash of
+   docid, so one salt group's blocks answer each spec LOCALLY with no
+   further shuffle.  Conjunctive (phrase/AND) queries share one
+   rarest-first intersection (:func:`_intersect`) that skips blocks
+   whose [min_docid, max_docid] range cannot overlap the candidates,
+   then recheck phrases or rank from decoded positions.  Flat-OR BM25
+   prunes blocks WAND-style against the running per-group threshold;
+   other boolean trees are evaluated set-theoretically.
+3. **Runners**: :func:`_run_spark` reads the union of every spec's
+   terms and buckets in ONE scan (term IN-list pushed down),
+   repartitions by the collision-free ``salt_partition_count`` map
+   and scores every spec in one ``mapInPandas``; :func:`_run_local`
+   (serving tier: no Spark job) reads with pyarrow, groups by salt
+   and merges on the driver.
 
-Scoring: BM25 with k1/b from the index stats, idf = ln((N-df+0.5)/(df+0.5)+1).
+The Spark runner picks the global merge from what the caller passed:
+a query string keeps ``orderBy(value desc, docid).limit(k)`` over
+<= S*k rows (no Window, no extra Exchange); a list of queries gets a
+per-query ``row_number`` window.
+
+BM25 uses k1/b from the index stats, idf = ln((N-df+0.5)/(df+0.5)+1).
 """
 
 from __future__ import annotations
@@ -37,6 +43,7 @@ from dataclasses import dataclass
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.window import Window
 
 from ..kernel.tsvector import (
     And,
@@ -56,6 +63,7 @@ from ..index.tombstones import (
     epoch_dir_layout,
     epoch_from_file_path,
     load_tombstones,
+    path_epoch,
 )
 
 
@@ -459,15 +467,16 @@ def _route(index_dir: str, query: str, mode: str):
     return stats, pq, bset, idf_map
 
 
-_LOCAL_BLOCK_COLUMNS = [
-    "salt", "term", "n", "min_docid", "max_docid", "docids",
-    "tfs", "doclens", "positions", "max_tf", "min_dl",
-]
+# the block columns the scorers need, for both runners' reads
+_BLOCK_READ_SCHEMA = (
+    "salt int, term string, n int, min_docid long, max_docid long, "
+    "docids binary, tfs binary, doclens binary, positions binary, "
+    "max_tf int, min_dl int"
+)
+_BLOCK_COLUMNS = [c.split()[0] for c in _BLOCK_READ_SCHEMA.split(", ")]
 
 
-def _read_blocks_local(
-    ds, paths, terms, with_epoch: bool = True
-) -> pd.DataFrame:
+def _read_blocks_local(paths, terms, with_epoch: bool = True) -> pd.DataFrame:
     """pyarrow block read for the serving tier.
 
     When per-block epochs are not needed (no tombstones loaded, or a
@@ -477,8 +486,8 @@ def _read_blocks_local(
     sequential per-shard loop.  Epoch-relevant reads fall back to one
     frame per shard path with the block epoch parsed from the path
     (epoch=N dir, 0 for batch dirs) - the no-Spark twin of
-    _epoch_from_path."""
-    import re as _re
+    ``epoch_from_file_path``."""
+    import pyarrow.dataset as ds
 
     flt = ds.field("term").isin(terms)
     if not with_epoch:
@@ -490,37 +499,23 @@ def _read_blocks_local(
         ]
         return (
             ds.dataset(files)
-            .to_table(columns=_LOCAL_BLOCK_COLUMNS, filter=flt)
+            .to_table(columns=_BLOCK_COLUMNS, filter=flt)
             .to_pandas()
         )
     frames = []
     for p in paths:
-        m = _re.search(r"epoch=(\d+)", p)
         f = ds.dataset(p).to_table(
-            columns=_LOCAL_BLOCK_COLUMNS, filter=flt
+            columns=_BLOCK_COLUMNS, filter=flt
         ).to_pandas()
-        f["epoch"] = int(m.group(1)) if m else 0
+        f["epoch"] = path_epoch(p) or 0
         frames.append(f)
     return pd.concat(frames, ignore_index=True)
-
-
-def _epoch_from_path() -> F.Column:
-    """Per-block epoch derived from the file path - shared layout
-    convention (index/tombstones.epoch_from_file_path)."""
-    return epoch_from_file_path()
-
-
-_BLOCK_READ_SCHEMA = (
-    "salt int, term string, n int, min_docid long, max_docid long, "
-    "docids binary, tfs binary, doclens binary, positions binary, "
-    "max_tf int, min_dl int"
-)
 
 
 def _read_blocks(
     spark: SparkSession, paths: list[str], terms, with_epoch: bool = True
 ) -> DataFrame:
-    """The one shared postings-block read every query path uses.
+    """The one postings-block read of the Spark runner.
 
     The explicit schema (the block columns the scorers need) skips
     per-query parquet footer inference and doubles as column pruning;
@@ -538,7 +533,7 @@ def _read_blocks(
         .parquet(*paths)
         .where(F.col("term").isin(list(terms)))
     )
-    return df.withColumn("epoch", _epoch_from_path()) if with_epoch else df
+    return df.withColumn("epoch", epoch_from_file_path()) if with_epoch else df
 
 
 def _needs_epoch(stats, deleted, paths=()) -> bool:
@@ -553,11 +548,189 @@ def _needs_epoch(stats, deleted, paths=()) -> bool:
         return False
     if stats.get("epochs"):
         return True
-    return any("epoch=" in p for p in paths)
+    return any(path_epoch(p) is not None for p in paths)
 
 
-def _postings_paths(index_dir: str, bset, stats) -> list[str]:
-    return _shard_paths(index_dir, "postings", bset, stats)
+# kind -> (kernel function, normalization bits the index serves, flat
+# OR served besides conjunctive).  Other bits need whole-document
+# statistics no posting stores, other shapes a candidate set the index
+# cannot enumerate cheaply: the scan path serves those.
+_RANK_KINDS = {
+    "rank": ("ts_rank", (1, 2, 32), True),
+    "rank_cd": ("ts_rank_cd", (4, 32), False),
+}
+
+
+@dataclass
+class _QuerySpec:
+    """One routed query as the runners and the per-salt scorer see
+    it.  ``kind`` is ``bm25``, ``rank`` (ts_rank) or ``rank_cd``
+    (ts_rank_cd); building a rank spec rejects a query shape the
+    index path cannot serve."""
+
+    query: str
+    kind: str
+    pq: ParsedQuery
+    idf_map: dict
+    method: int = 0
+
+    @staticmethod
+    def check_method(kind: str, method: int) -> None:
+        """Reject normalization bits the index path cannot serve;
+        runs BEFORE routing, so bad bits fail even for a query that
+        matches nothing."""
+        if kind not in _RANK_KINDS:
+            return
+        name, bits, _ = _RANK_KINDS[kind]
+        if method & ~sum(bits):
+            raise ValueError(
+                f"index-path {name} supports normalization bits "
+                f"{'|'.join(map(str, bits))} only"
+            )
+
+    def __post_init__(self):
+        if self.kind not in _RANK_KINDS:
+            return
+        name, _, flat_or = _RANK_KINDS[self.kind]
+        if not (
+            self.pq.conjunctive or (flat_or and _is_flat_or(self.pq.tree))
+        ):
+            shapes = "conjunctive or flat-OR" if flat_or else "conjunctive"
+            raise ValueError(
+                f"query {self.query!r}: index-path {name} supports "
+                f"{shapes} queries only"
+            )
+
+
+def _route_specs(index_dir, queries, mode, kind, method=0):
+    """Validate and route queries into specs: method bits first, then
+    each query's shape once it routes.  Returns ``(stats, specs,
+    paths, deleted, with_epoch)`` over the union of the specs'
+    buckets, or None when no doc can match."""
+    _QuerySpec.check_method(kind, method)
+    stats, specs, bset = None, [], set()
+    # dict.fromkeys: a duplicate query would double-score and skew ranks
+    for q in dict.fromkeys(queries):
+        routed = _route(index_dir, q, mode)
+        if routed is None:
+            continue
+        st, pq, bs, idf_map = routed
+        specs.append(_QuerySpec(q, kind, pq, idf_map, method))
+        stats = stats or st
+        bset.update(bs)
+    if not specs:
+        return None
+    paths = _shard_paths(index_dir, "postings", sorted(bset), stats)
+    if not paths:
+        return None
+    deleted = load_tombstones(index_dir)
+    return stats, specs, paths, deleted, _needs_epoch(stats, deleted, paths)
+
+
+def _score_group(specs, pdf, k, bm25, deleted):
+    """The per-salt scorer dispatch: every spec's top-k over ONE salt
+    group's blocks as aligned ``(query, docid, score)`` arrays, or
+    None.  Each spec sees only its own terms' rows, so queries stay
+    independent; ``bm25`` is the index's ``(k1, b, avgdl)``."""
+    queries, ids, scores = [], [], []
+    for spec in specs:
+        # a lone spec's blocks were read for its terms only
+        sub = pdf if len(specs) == 1 else pdf[
+            pdf["term"].isin(spec.pq.all_terms)
+        ]
+        if not len(sub):
+            continue
+        sub = sub.reset_index(drop=True)
+        if spec.kind == "bm25":
+            hit = _score_local(sub, spec.pq, spec.idf_map, bm25, k, deleted)
+        elif spec.kind == "rank":
+            hit = _rank_ts_local(sub, spec.pq, k, spec.method, deleted)
+        else:
+            hit = _rank_cd_local(sub, spec.pq, k, spec.method, deleted)
+        if hit is not None:
+            queries.append(np.full(hit[0].size, spec.query, object))
+            ids.append(hit[0])
+            scores.append(hit[1])
+    if not ids:
+        return None
+    return tuple(map(np.concatenate, (queries, ids, scores)))
+
+
+def _run_spark(spark, index_dir, queries, k, mode, kind, method=0):
+    """Spark runner: one postings scan, the collision-free salt
+    repartition, one ``mapInPandas`` over every spec, then the merge
+    that fits what the caller passed - a query string gets ``(docid,
+    score|rank)`` via orderBy/limit, a list gets ``(query, rank,
+    docid, score)`` via a per-query window."""
+    single = isinstance(queries, str)
+    value = "rank" if kind in _RANK_KINDS else "score"
+    # a single query's rows carry no query column, so its plan needs no
+    # Project to drop one
+    if single:
+        cols, schema = ("docid", value), f"docid long, {value} double"
+    else:
+        cols = ("query", "docid", "score")
+        schema = "query string, docid long, score double"
+    routed = _route_specs(
+        index_dir, [queries] if single else queries, mode, kind, method
+    )
+    if routed is None:
+        return spark.createDataFrame(
+            [],
+            schema if single
+            else "query string, rank int, docid long, score double",
+        )
+    stats, specs, paths, deleted, with_epoch = routed
+    terms = sorted({t for s in specs for t in s.pq.all_terms})
+    blocks = _read_blocks(spark, paths, terms, with_epoch)
+    bm25 = (stats["k1"], stats["b"], stats["avgdl"])
+
+    def score_partition(batches):
+        frames = [f for f in batches if len(f)]
+        if not frames:
+            return
+        hit = _score_group(
+            specs, pd.concat(frames, ignore_index=True), k, bm25, deleted
+        )
+        if hit is not None:
+            yield pd.DataFrame(dict(zip(cols, hit[-len(cols):])))
+
+    salts = stats["num_salts"]
+    by_salt = blocks.repartition(salt_partition_count(salts), "salt")
+    scored = by_salt.mapInPandas(score_partition, schema)
+    if single:
+        return (
+            scored.orderBy(F.desc(value), F.asc("docid"))
+            .limit(k)
+            .select("docid", value)
+        )
+    w = Window.partitionBy("query").orderBy(F.desc("score"), F.asc("docid"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query", "rank", "docid", "score")
+    )
+
+
+def _run_local(index_dir, query, k, mode, kind, method=0):
+    """Local runner: pyarrow read, each salt group scored in process,
+    global top-k ``(docid, value)`` merged on the driver."""
+    routed = _route_specs(index_dir, [query], mode, kind, method)
+    if routed is None:
+        return []
+    stats, specs, paths, deleted, with_epoch = routed
+    pdf = _read_blocks_local(paths, specs[0].pq.all_terms, with_epoch)
+    bm25 = (stats["k1"], stats["b"], stats["avgdl"])
+    hits = [
+        hit
+        for _, grp in pdf.groupby("salt", sort=False)
+        if (hit := _score_group(specs, grp, k, bm25, deleted)) is not None
+    ]
+    if not hits:
+        return []
+    _, ids, scores = (np.concatenate(c) for c in zip(*hits))
+    ids, scores = _topk(ids, scores, k)
+    return list(zip(ids.tolist(), scores.tolist()))
 
 
 def search(
@@ -568,46 +741,43 @@ def search(
     mode: str = "plain",
 ) -> DataFrame:
     """Top-k ``(docid, score)`` for the query; deterministic tiebreak."""
-    routed = _route(index_dir, query, mode)
-    if routed is None:
-        return spark.createDataFrame([], "docid long, score double")
-    stats, pq, bset, idf_map = routed
-    k1, b, avgdl = stats["k1"], stats["b"], stats["avgdl"]
+    return _run_spark(spark, index_dir, query, k, mode, "bm25")
 
-    paths = _postings_paths(index_dir, bset, stats)
-    if not paths:
-        return spark.createDataFrame([], "docid long, score double")
-    deleted = load_tombstones(index_dir)
-    blocks = _read_blocks(
-        spark, paths, pq.all_terms, _needs_epoch(stats, deleted, paths)
-    )
 
-    phrases = pq.phrases
-    conj = pq.conjunctive
-    tree = pq.tree
-    need_pos = bool(phrases)
-    num_salts = stats["num_salts"]
+def search_many(
+    spark: SparkSession,
+    index_dir: str,
+    queries: list[str],
+    k: int = 10,
+    mode: str = "plain",
+) -> DataFrame:
+    """Batched top-k: ALL queries answered in ONE Spark job -
+    ``(query, rank, docid, score)``, rank-/score-identical per query to
+    :func:`search`.
 
-    def score_partition(batches):
-        frames = [f for f in batches if len(f)]
-        if not frames:
-            return
-        pdf = pd.concat(frames, ignore_index=True)
-        out = _score_local(
-            pdf, idf_map, k1, b, avgdl, k, conj, phrases, need_pos, tree,
-            deleted,
-        )
-        if out is not None:
-            yield out
+    A production workload runs queries in batches, and per-query jobs
+    pay scheduling + scan setup B times; here the routed bucket paths
+    and the term IN-filter are unioned, the postings scan happens once,
+    and each salt partition scores every query against its own term
+    subset (queries stay independent - conjunction semantics are
+    per-query on the filtered frame).  Driver-side routing stays
+    O(total query terms); queries that cannot match any doc are simply
+    absent from the result."""
+    return _run_spark(spark, index_dir, list(queries), k, mode, "bm25")
 
-    scored = blocks.repartition(salt_partition_count(num_salts), "salt").mapInPandas(
-        score_partition, "docid long, score double"
-    )
-    return (
-        scored.orderBy(F.desc("score"), F.asc("docid"))
-        .limit(k)
-        .select("docid", "score")
-    )
+
+def search_local(
+    index_dir: str, query: str, k: int = 10, mode: str = "plain"
+) -> list[tuple[int, float]]:
+    """Serving-tier point query: no Spark session, no job.
+
+    The index is plain parquet, so a low-latency reader (here: pyarrow
+    + NumPy in-process) can serve top-k directly from the pruned
+    bucket shards - the same layout a real serving fleet would mmap.
+    Results are identical to :func:`search` (tests assert it); use the
+    Spark path for scatter-gather over very large per-term lists.
+    """
+    return _run_local(index_dir, query, k, mode, "bm25")
 
 
 def search_rank_cd(
@@ -635,50 +805,130 @@ def search_rank_cd(
     whole-document statistics the index does not store per posting;
     use the scan path for those).
     """
-    if method & ~(4 | 32):
-        raise ValueError(
-            "index-path ts_rank_cd supports normalization bits 4|32 only"
-        )
-    routed = _route(index_dir, query, mode)
-    if routed is None:
-        return spark.createDataFrame([], "docid long, rank double")
-    stats, pq, bset, _idf = routed
-    if not pq.conjunctive:
-        raise ValueError(
-            "index-path ts_rank_cd supports conjunctive queries only"
-        )
-    tree = pq.tree
-    n_terms = len(pq.terms)
+    return _run_spark(spark, index_dir, query, k, mode, "rank_cd", method)
 
-    paths = _postings_paths(index_dir, bset, stats)
-    if not paths:
-        return spark.createDataFrame([], "docid long, rank double")
-    deleted = load_tombstones(index_dir)
-    blocks = _read_blocks(
-        spark, paths, pq.all_terms, _needs_epoch(stats, deleted, paths)
-    )
-    num_salts = stats["num_salts"]
 
-    def rank_partition(batches):
-        frames = [f for f in batches if len(f)]
-        if not frames:
-            return
-        pdf = pd.concat(frames, ignore_index=True)
-        out = _rank_cd_local(pdf, tree, n_terms, k, method, deleted)
-        if out is not None:
-            yield out
+def search_rank(
+    spark: SparkSession,
+    index_dir: str,
+    query: str,
+    k: int = 10,
+    mode: str = "tsquery",
+    method: int = 0,
+) -> DataFrame:
+    """Index-path ``WHERE tsv @@ q ORDER BY ts_rank(tsv, q) DESC
+    LIMIT k`` (tsrank.c calc_rank_or / calc_rank_and semantics).
 
-    ranked = blocks.repartition(salt_partition_count(num_salts), "salt").mapInPandas(
-        rank_partition, "docid long, rank double"
+    * **or-path** (top node not AND/phrase, or a single lexeme): the
+      rank depends only on each term's capped occurrence count, so it
+      is computed fully vectorized from the posting tf streams - no
+      position decode at all.  Candidates are the @@ match set (the
+      union for a flat OR).
+    * **and-path** (top AND or multi-lexeme phrase): the
+      word_distance proximity fold over decoded positions
+      (:meth:`_TermList.positions_bulk`), with curw values taken from
+      an exact precomputed table and the per-doc fold kept
+      sequential, so results are bit-identical to scan-path
+      ``ts_rank`` (tests assert it).  Phrase chains additionally
+      filter candidates to true adjacency matches, matching ``@@``.
+
+    Supported query shapes: conjunctive (AND / phrase) and flat OR.
+    Supported normalization bits: 1 | 2 | 32 (cnt_length is the
+    indexed doclen); bits 8/16 need per-doc distinct-lexeme counts
+    the index does not store - use the scan path."""
+    return _run_spark(spark, index_dir, query, k, mode, "rank", method)
+
+
+def search_many_rank(
+    spark: SparkSession,
+    index_dir: str,
+    queries: list[str],
+    k: int = 10,
+    mode: str = "tsquery",
+    method: int = 0,
+    cd: bool = True,
+) -> DataFrame:
+    """Batched rank workload: every query's ``ORDER BY
+    ts_rank_cd/ts_rank LIMIT k`` answered in ONE Spark job -
+    ``(query, rank, docid, score)`` per-query identical to
+    :func:`search_rank_cd` / :func:`search_rank` (tests assert it).
+    Same unioned-routing strategy as :func:`search_many`; the same
+    per-query shape/method restrictions apply and invalid queries
+    raise up front."""
+    kind = "rank_cd" if cd else "rank"
+    return _run_spark(spark, index_dir, list(queries), k, mode, kind, method)
+
+
+def rank_local(
+    index_dir: str,
+    query: str,
+    k: int = 10,
+    mode: str = "tsquery",
+    method: int = 0,
+    cd: bool = True,
+) -> list[tuple[int, float]]:
+    """Serving-tier ``ORDER BY ts_rank_cd/ts_rank LIMIT k`` - no
+    Spark session, no job; the pyarrow twin of :func:`search_local`
+    for the rank paths.  Results are identical to
+    :func:`search_rank_cd` / :func:`search_rank` (tests assert it);
+    the same supported-shape/method rules apply."""
+    return _run_local(
+        index_dir, query, k, mode, "rank_cd" if cd else "rank", method
     )
-    return (
-        ranked.orderBy(F.desc("rank"), F.asc("docid"))
-        .limit(k)
-        .select("docid", "rank")
-    )
+
+
+def _intersect(per_term, n_terms, pos_terms, deleted):
+    """Rarest-first conjunctive intersection over one salt group:
+    decode the rarest term's list first, then only those blocks of
+    each later term whose [min_docid, max_docid] range overlaps the
+    surviving candidates.  Terms in ``pos_terms`` keep their position
+    blobs for rechecks and ranking.  Returns ``(lists, cand)`` - the
+    decoded lists and the sorted docids holding every term - or None
+    when a required term is missing here or nothing survives."""
+    if len(per_term) < n_terms:
+        return None  # some required term missing in this partition
+    order = sorted(per_term, key=lambda t: int(per_term[t]["n"].sum()))
+    lists: dict[str, _TermList] = {}
+    cand: np.ndarray | None = None
+    for t in order:
+        tb = per_term[t]
+        if cand is not None:
+            if cand.size == 0:
+                return None
+            lo, hi = int(cand[0]), int(cand[-1])
+            tb = tb[(tb["max_docid"] >= lo) & (tb["min_docid"] <= hi)]
+        tl = _TermList(tb, t in pos_terms, deleted)
+        lists[t] = tl
+        cand = tl.ids if cand is None else cand[
+            _isin_sorted(cand, tl.ids)
+        ]
+    if cand is None or cand.size == 0:
+        return None
+    return lists, cand
 
 
 _KEYOFF = 1 << 15  # keeps pos - chain_offset positive inside 16 bits
+
+
+def _pos_keys(tl, cand):
+    """Sorted ``(candidate idx << 16) + position + _KEYOFF`` keys."""
+    cidx, pos = tl.positions_bulk(cand)
+    return (cidx << 16) + pos + _KEYOFF
+
+
+def _chain_starts(keys_of, items):
+    """Keys of every match START of the phrase chain ``items``: the
+    sorted intersection of each term's offset-shifted keys."""
+    base = items[0][1]
+    starts = None
+    for t, off in items:
+        kb = keys_of(t) - (off - base)
+        starts = kb if starts is None else np.intersect1d(
+            starts, kb, assume_unique=True
+        )
+        if not starts.size:
+            break
+    return starts
 
 # sentinel: a bulk ranker detected (candidate, position) key
 # collisions - distinct lexemes clamped to the same position - and
@@ -702,24 +952,14 @@ def _rank_cd_phrase_bulk(lists, cand, items, k, method):
     float adds per doc) so the summation order - and therefore the
     bits - match kernel ts_rank_cd exactly (tests assert identity).
     """
-    base = items[0][1]
-    offsets = [(t, off - base) for t, off in items]
-    width = offsets[-1][1]
-    keybases: dict[str, np.ndarray] = {}
-    for t in {t for t, _ in offsets}:
-        cidx, pos = lists[t].positions_bulk(cand)
-        keybases[t] = (cidx << 16) + pos + _KEYOFF
+    width = items[-1][1] - items[0][1]
+    keybases = {t: _pos_keys(lists[t], cand) for t in {t for t, _ in items}}
     allk = np.concatenate(list(keybases.values()))
     if np.unique(allk).size != allk.size:
         return _COLLIDED  # clamped-position collision: exact path
-    starts = None
-    for t, off in offsets:
-        kb = keybases[t] - off
-        starts = kb if starts is None else np.intersect1d(
-            starts, kb, assume_unique=True
-        )
-        if not starts.size:
-            return None
+    starts = _chain_starts(keybases.__getitem__, items)
+    if not starts.size:
+        return None
     merged = np.sort(allk)
     cnt = np.searchsorted(merged, starts + width, "right") - np.searchsorted(
         merged, starts, "left"
@@ -738,13 +978,10 @@ def _rank_cd_and2_bulk(lists, cand, ta, tb, k, method):
     walks back to the nearest preceding occurrence of the other term,
     and the restart lands one item past the begin).  Each such cover
     holds exactly its two endpoints, so nNoise = q - p - 1."""
-    ia, pa = lists[ta].positions_bulk(cand)
-    ib, pb = lists[tb].positions_bulk(cand)
-    keys = np.concatenate(
-        [(ia << 16) + pa + _KEYOFF, (ib << 16) + pb + _KEYOFF]
-    )
+    ka, kb = _pos_keys(lists[ta], cand), _pos_keys(lists[tb], cand)
+    keys = np.concatenate([ka, kb])
     lab = np.concatenate(
-        [np.zeros(ia.size, np.int8), np.ones(ib.size, np.int8)]
+        [np.zeros(ka.size, np.int8), np.ones(kb.size, np.int8)]
     )
     srt = np.argsort(keys)
     keys = keys[srt]
@@ -797,90 +1034,7 @@ def _emit_rank_rows(cand, dci, contrib, exts, k, method):
         if wdoc > 0.0:
             out_ids.append(int(cand[int(dci[s])]))
             out_ranks.append(wdoc)
-    if not out_ids:
-        return None
-    ids = np.asarray(out_ids, np.int64)
-    ranks = np.asarray(out_ranks, np.float64)
-    sel = np.lexsort((ids, -ranks))[:k]
-    return pd.DataFrame({"docid": ids[sel], "rank": ranks[sel]})
-
-
-def search_rank(
-    spark: SparkSession,
-    index_dir: str,
-    query: str,
-    k: int = 10,
-    mode: str = "tsquery",
-    method: int = 0,
-) -> DataFrame:
-    """Index-path ``WHERE tsv @@ q ORDER BY ts_rank(tsv, q) DESC
-    LIMIT k`` (tsrank.c calc_rank_or / calc_rank_and semantics).
-
-    * **or-path** (top node not AND/phrase, or a single lexeme): the
-      rank depends only on each term's capped occurrence count, so it
-      is computed fully vectorized from the posting tf streams - no
-      position decode at all.  Candidates are the @@ match set (the
-      union for a flat OR).
-    * **and-path** (top AND or multi-lexeme phrase): the
-      word_distance proximity fold over decoded positions
-      (:meth:`_TermList.positions_bulk`), with curw values taken from
-      an exact precomputed table and the per-doc fold kept
-      sequential, so results are bit-identical to scan-path
-      ``ts_rank`` (tests assert it).  Phrase chains additionally
-      filter candidates to true adjacency matches, matching ``@@``.
-
-    Supported query shapes: conjunctive (AND / phrase) and flat OR.
-    Supported normalization bits: 1 | 2 | 32 (cnt_length is the
-    indexed doclen); bits 8/16 need per-doc distinct-lexeme counts
-    the index does not store - use the scan path."""
-    if method & ~(1 | 2 | 32):
-        raise ValueError(
-            "index-path ts_rank supports normalization bits 1|2|32 only"
-        )
-    routed = _route(index_dir, query, mode)
-    if routed is None:
-        return spark.createDataFrame([], "docid long, rank double")
-    stats, pq, bset, _idf = routed
-    tree = pq.tree
-    if not pq.conjunctive and not _is_flat_or(tree):
-        raise ValueError(
-            "index-path ts_rank supports conjunctive or flat-OR "
-            "queries only"
-        )
-
-    paths = _postings_paths(index_dir, bset, stats)
-    if not paths:
-        return spark.createDataFrame([], "docid long, rank double")
-    deleted = load_tombstones(index_dir)
-    blocks = _read_blocks(
-        spark, paths, pq.all_terms, _needs_epoch(stats, deleted, paths)
-    )
-    num_salts = stats["num_salts"]
-    conj = pq.conjunctive
-    phrases = pq.phrases
-    n_terms = len(pq.terms)
-    or_groups = pq.or_groups
-
-    def rank_partition(batches):
-        frames = [f for f in batches if len(f)]
-        if not frames:
-            return
-        pdf = pd.concat(frames, ignore_index=True)
-        out = _rank_ts_local(
-            pdf, tree, conj, phrases, n_terms, k, method, deleted,
-            or_groups,
-        )
-        if out is not None:
-            yield out
-
-    ranked = blocks.repartition(salt_partition_count(num_salts), "salt").mapInPandas(
-        rank_partition, "docid long, rank double"
-    )
-    return (
-        ranked.orderBy(F.desc("rank"), F.asc("docid"))
-        .limit(k)
-        .select("docid", "rank")
-    )
+    return _topk(out_ids, out_ranks, k)
 
 
 _PI2_6 = 1.64493406685
@@ -926,8 +1080,7 @@ def _rank_and2_positions_bulk(lists, cand, terms):
     preserved by segment arithmetic.  Only the final per-doc
     1-(1-res)(1-curw) fold stays a Python loop (a handful of
     multiplies per doc) so the bits match kernel ts_rank.  Position
-    lists clip at
-    MAXNUMPOS (a defensive cap: index-built postings can never
+    lists clip at MAXNUMPOS (a defensive cap: index-built postings can never
     exceed it - the builder stores tf = len(to_tsvector positions),
     which to_tsvector caps at 256)."""
     (ia, pa) = lists[terms[0]].positions_bulk(cand)
@@ -948,9 +1101,8 @@ def _rank_and2_positions_bulk(lists, cand, terms):
     cum = np.cumsum(sizes)
     within = np.arange(tot) - np.repeat(cum - sizes, sizes)
     na_rep = np.repeat(na, sizes)
-    # pair order per doc: l outer over term-1 (sorted-second) wait -
-    # kernel pairs (i=1, k=0): l over terms[1] positions, p inner
-    # over terms[0] positions
+    # kernel pair order (i=1, k=0): l outer over terms[1] positions,
+    # p inner over terms[0] positions
     l_idx = np.repeat(b_start, sizes) + within // na_rep
     p_idx = np.repeat(a_start, sizes) + within % na_rep
     d = np.abs(pb[l_idx] - pa[p_idx])
@@ -974,33 +1126,22 @@ def _rank_and2_positions_bulk(lists, cand, terms):
 def _phrase_start_docs(lists, cand, items):
     """Candidate indices (into ``cand``) having at least one chain
     match - the @@ adjacency recheck, batched."""
-    base = items[0][1]
-    starts = None
-    for t, off in items:
-        cidx, pos = lists[t].positions_bulk(cand)
-        kb = (cidx << 16) + pos + _KEYOFF - (off - base)
-        starts = kb if starts is None else np.intersect1d(
-            starts, kb, assume_unique=True
-        )
-        if not starts.size:
-            return np.empty(0, np.int64)
+    starts = _chain_starts(lambda t: _pos_keys(lists[t], cand), items)
     return np.unique(starts >> 16)
 
 
-def _rank_ts_local(
-    pdf, tree, conj, phrases, n_terms, k, method, deleted=None,
-    or_groups=None,
-):
+def _rank_ts_local(pdf, pq, k, method, deleted=None):
     """Per-salt-partition ts_rank: candidates from the @@ match set,
     ranks bit-identical to kernel ts_rank.
 
-    ``or_groups`` carries the PRE-expansion calc_rank_or items (one
+    ``pq.or_groups`` carries the PRE-expansion calc_rank_or items (one
     group per query item, a prefix's group being its dictionary
     expansion) so the or-path divides by the ITEM count - without it
     a prefix query's rank would shrink by its expansion size vs the
     scan path."""
     from ..kernel.tsrank import _operand_lexemes
 
+    tree = pq.tree
     terms = _operand_lexemes(tree)
     and_path = (
         isinstance(tree, And)
@@ -1008,27 +1149,15 @@ def _rank_ts_local(
     ) and len(terms) >= 2
     per_term = {t: g for t, g in pdf.groupby("term", sort=True)}
 
-    if conj:
-        if len(per_term) < n_terms:
+    if pq.conjunctive:
+        hit = _intersect(
+            per_term, len(pq.terms),
+            per_term if and_path or pq.phrases else (), deleted,
+        )
+        if hit is None:
             return None
-        order = sorted(per_term, key=lambda t: int(per_term[t]["n"].sum()))
-        lists: dict[str, _TermList] = {}
-        cand: np.ndarray | None = None
-        for t in order:
-            tb = per_term[t]
-            if cand is not None:
-                if cand.size == 0:
-                    return None
-                lo, hi = int(cand[0]), int(cand[-1])
-                tb = tb[(tb["max_docid"] >= lo) & (tb["min_docid"] <= hi)]
-            tl = _TermList(tb, and_path or bool(phrases), deleted)
-            lists[t] = tl
-            cand = tl.ids if cand is None else cand[
-                _isin_sorted(cand, tl.ids)
-            ]
-        if cand is None or cand.size == 0:
-            return None
-        for chain in phrases:
+        lists, cand = hit
+        for chain in pq.phrases:
             keep = _phrase_start_docs(lists, cand, chain)
             if not keep.size:
                 return None
@@ -1049,9 +1178,9 @@ def _rank_ts_local(
         # its matched dictionary entries) and divide by the ITEM
         # count - a lexeme repeated across items contributes once
         # per item, exactly like repeated find_wordentry hits
-        groups = (
-            or_groups if or_groups is not None else [[t] for t in terms]
-        )
+        groups = pq.or_groups
+        if groups is None:
+            groups = [[t] for t in terms]
         ranks = np.zeros(cand.size, np.float64)
         for group in groups:
             for t in group:
@@ -1129,7 +1258,7 @@ def _rank_ts_local(
         ranks = ranks / (ranks + 1)
 
     keep = ranks > 0.0
-    return _topk_frame_rank(cand[keep], ranks[keep], k)
+    return _topk(cand[keep], ranks[keep], k)
 
 
 def _isin_sorted(a: np.ndarray, b: np.ndarray) -> np.ndarray:
@@ -1148,228 +1277,19 @@ def _isin_sorted(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     return (j < b.size) & (b[jc] == a)
 
 
-def _topk_frame_rank(ids: np.ndarray, ranks: np.ndarray, k: int):
-    if not ids.size:
-        return None
-    sel = np.lexsort((ids, -ranks))[:k]
-    return pd.DataFrame({"docid": ids[sel], "rank": ranks[sel]})
-
-
-def rank_local(
-    index_dir: str,
-    query: str,
-    k: int = 10,
-    mode: str = "tsquery",
-    method: int = 0,
-    cd: bool = True,
-) -> list[tuple[int, float]]:
-    """Serving-tier ``ORDER BY ts_rank_cd/ts_rank LIMIT k`` - no
-    Spark session, no job; the pyarrow twin of :func:`search_local`
-    for the rank paths.  Results are identical to
-    :func:`search_rank_cd` / :func:`search_rank` (tests assert it);
-    the same supported-shape/method rules apply."""
-    import pyarrow.dataset as ds
-
-    if cd:
-        if method & ~(4 | 32):
-            raise ValueError(
-                "index-path ts_rank_cd supports normalization bits "
-                "4|32 only"
-            )
-    elif method & ~(1 | 2 | 32):
-        raise ValueError(
-            "index-path ts_rank supports normalization bits 1|2|32 only"
-        )
-    routed = _route(index_dir, query, mode)
-    if routed is None:
-        return []
-    stats, pq, bset, _idf = routed
-    if cd and not pq.conjunctive:
-        raise ValueError(
-            "index-path ts_rank_cd supports conjunctive queries only"
-        )
-    if not cd and not pq.conjunctive and not _is_flat_or(pq.tree):
-        raise ValueError(
-            "index-path ts_rank supports conjunctive or flat-OR "
-            "queries only"
-        )
-    paths = _shard_paths(index_dir, "postings", bset, stats)
-    if not paths:
-        return []
-    deleted = load_tombstones(index_dir)
-    pdf = _read_blocks_local(
-        ds, paths, pq.all_terms, _needs_epoch(stats, deleted, paths)
-    )
-    if len(pdf) == 0:
-        return []
-    frames = []
-    for _, grp in pdf.groupby("salt", sort=False):
-        g = grp.reset_index(drop=True)
-        out = (
-            _rank_cd_local(g, pq.tree, len(pq.terms), k, method, deleted)
-            if cd
-            else _rank_ts_local(
-                g, pq.tree, pq.conjunctive, pq.phrases,
-                len(pq.terms), k, method, deleted, pq.or_groups,
-            )
-        )
-        if out is not None:
-            frames.append(out)
-    if not frames:
-        return []
-    allf = pd.concat(frames, ignore_index=True)
-    order = np.lexsort(
-        (allf["docid"].to_numpy(), -allf["rank"].to_numpy())
-    )[:k]
-    return [
-        (int(allf["docid"].iloc[i]), float(allf["rank"].iloc[i]))
-        for i in order
-    ]
-
-
-def search_many_rank(
-    spark: SparkSession,
-    index_dir: str,
-    queries: list[str],
-    k: int = 10,
-    mode: str = "tsquery",
-    method: int = 0,
-    cd: bool = True,
-) -> DataFrame:
-    """Batched rank workload: every query's ``ORDER BY
-    ts_rank_cd/ts_rank LIMIT k`` answered in ONE Spark job -
-    ``(query, rank, docid, score)`` per-query identical to
-    :func:`search_rank_cd` / :func:`search_rank` (tests assert it).
-    Same unioned-routing strategy as :func:`search_many`; the same
-    per-query shape/method restrictions apply and invalid queries
-    raise up front."""
-    if cd and method & ~(4 | 32):
-        raise ValueError(
-            "index-path ts_rank_cd supports normalization bits 4|32 only"
-        )
-    if not cd and method & ~(1 | 2 | 32):
-        raise ValueError(
-            "index-path ts_rank supports normalization bits 1|2|32 only"
-        )
-    routed = []
-    seen: set[str] = set()
-    for q in queries:
-        if q in seen:
-            continue
-        seen.add(q)
-        r = _route(index_dir, q, mode)
-        if r is None:
-            continue
-        _stats, pq, _bs, _idf = r
-        if cd:
-            if not pq.conjunctive:
-                raise ValueError(
-                    f"query {q!r}: index-path ts_rank_cd supports "
-                    "conjunctive queries only"
-                )
-        else:
-            if not pq.conjunctive and not _is_flat_or(pq.tree):
-                raise ValueError(
-                    f"query {q!r}: index-path ts_rank supports "
-                    "conjunctive or flat-OR queries only"
-                )
-        routed.append((q, r))
-    empty_schema = "query string, rank int, docid long, score double"
-    if not routed:
-        return spark.createDataFrame([], empty_schema)
-    stats = routed[0][1][0]
-    num_salts = stats["num_salts"]
-    union_terms = sorted(
-        {t for _, (_, pq, _, _) in routed for t in pq.all_terms}
-    )
-    union_bset = sorted({bk for _, (_, _, bs, _) in routed for bk in bs})
-    paths = _postings_paths(index_dir, union_bset, stats)
-    if not paths:
-        return spark.createDataFrame([], empty_schema)
-    deleted = load_tombstones(index_dir)
-    blocks = _read_blocks(
-        spark, paths, union_terms, _needs_epoch(stats, deleted, paths)
-    )
-    qspecs = [
-        (q, list(pq.all_terms), pq.conjunctive, pq.phrases,
-         len(pq.terms), pq.tree, pq.or_groups)
-        for q, (_, pq, _, _) in routed
-    ]
-
-    def rank_partition(batches):
-        frames = [f for f in batches if len(f)]
-        if not frames:
-            return
-        pdf = pd.concat(frames, ignore_index=True)
-        outs = []
-        for q, all_t, conj, phrases, n_terms, tree, ogs in qspecs:
-            sub = pdf[pdf["term"].isin(all_t)]
-            if not len(sub):
-                continue
-            g = sub.reset_index(drop=True)
-            out = (
-                _rank_cd_local(g, tree, n_terms, k, method, deleted)
-                if cd
-                else _rank_ts_local(
-                    g, tree, conj, phrases, n_terms, k, method, deleted,
-                    ogs,
-                )
-            )
-            if out is not None and len(out):
-                out.insert(0, "query", q)
-                outs.append(out)
-        if outs:
-            yield pd.concat(outs, ignore_index=True)
-
-    ranked = blocks.repartition(salt_partition_count(num_salts), "salt").mapInPandas(
-        rank_partition, "query string, docid long, rank double"
-    )
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("query").orderBy(
-        F.desc("rank"), F.asc("docid")
-    )
-    return (
-        ranked.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= k)
-        .select(
-            "query",
-            F.col("rk").alias("rank"),
-            "docid",
-            F.col("rank").alias("score"),
-        )
-    )
-
-
-def _rank_cd_local(pdf, tree, n_terms, k, method, deleted=None):
+def _rank_cd_local(pdf, pq, k, method, deleted=None):
     """Per-salt-partition candidate intersection + exact kernel
     cover-density ranking from decoded positions."""
-    from ..kernel.tsrank import ts_rank_cd
-
     per_term = {t: g for t, g in pdf.groupby("term", sort=True)}
-    if len(per_term) < n_terms:
+    # every term's positions feed the cover fold
+    hit = _intersect(per_term, len(pq.terms), per_term, deleted)
+    if hit is None:
         return None
-    order = sorted(per_term, key=lambda t: int(per_term[t]["n"].sum()))
-    lists: dict[str, _TermList] = {}
-    cand: np.ndarray | None = None
-    for t in order:
-        tb = per_term[t]
-        if cand is not None:
-            if cand.size == 0:
-                return None
-            lo, hi = int(cand[0]), int(cand[-1])
-            tb = tb[(tb["max_docid"] >= lo) & (tb["min_docid"] <= hi)]
-        tl = _TermList(tb, True, deleted)
-        lists[t] = tl
-        cand = tl.ids if cand is None else cand[
-            _isin_sorted(cand, tl.ids)
-        ]
-    if cand is None or cand.size == 0:
-        return None
+    lists, cand = hit
+    tree = pq.tree
+    out = _COLLIDED
     if isinstance(tree, Phrase):
         out = _rank_cd_phrase_bulk(lists, cand, tree.items, k, method)
-        if out is not _COLLIDED:
-            return out
     elif (
         isinstance(tree, And)
         and len(tree.children) == 2
@@ -1377,19 +1297,13 @@ def _rank_cd_local(pdf, tree, n_terms, k, method, deleted=None):
             isinstance(c, Phrase) and len(c.items) == 1
             for c in tree.children
         )
-        and tree.children[0].items[0][0] != tree.children[1].items[0][0]
     ):
-        out = _rank_cd_and2_bulk(
-            lists,
-            cand,
-            tree.children[0].items[0][0],
-            tree.children[1].items[0][0],
-            k,
-            method,
-        )
-        if out is not _COLLIDED:
-            return out
-    return _rank_cd_generic(lists, cand, tree, k, method)
+        ta, tb = (c.items[0][0] for c in tree.children)
+        if ta != tb:
+            out = _rank_cd_and2_bulk(lists, cand, ta, tb, k, method)
+    if out is _COLLIDED:  # no bulk shape, or a bulk ranker bailed out
+        return _rank_cd_generic(lists, cand, tree, k, method)
+    return out
 
 
 def _rank_cd_generic(lists, cand, tree, k, method):
@@ -1407,98 +1321,7 @@ def _rank_cd_generic(lists, cand, tree, k, method):
         if r > 0.0:
             out_ids.append(int(d))
             out_ranks.append(r)
-    if not out_ids:
-        return None
-    ids = np.asarray(out_ids, np.int64)
-    ranks = np.asarray(out_ranks, np.float64)
-    sel = np.lexsort((ids, -ranks))[:k]
-    return pd.DataFrame({"docid": ids[sel], "rank": ranks[sel]})
-
-
-def search_many(
-    spark: SparkSession,
-    index_dir: str,
-    queries: list[str],
-    k: int = 10,
-    mode: str = "plain",
-) -> DataFrame:
-    """Batched top-k: ALL queries answered in ONE Spark job -
-    ``(query, rank, docid, score)``, rank-/score-identical per query to
-    :func:`search`.
-
-    A production workload runs queries in batches, and per-query jobs
-    pay scheduling + scan setup B times; here the routed bucket paths
-    and the term IN-filter are unioned, the postings scan happens once,
-    and each salt partition scores every query against its own term
-    subset (queries stay independent - conjunction semantics are
-    per-query on the filtered frame).  Driver-side routing stays
-    O(total query terms); queries that cannot match any doc are simply
-    absent from the result."""
-    routed = []
-    seen: set[str] = set()
-    for q in queries:
-        if q in seen:  # a duplicate would double-score and skew ranks
-            continue
-        seen.add(q)
-        r = _route(index_dir, q, mode)
-        if r is not None:
-            routed.append((q, r))
-    empty_schema = "query string, rank int, docid long, score double"
-    if not routed:
-        return spark.createDataFrame([], empty_schema)
-    stats = routed[0][1][0]
-    k1, b, avgdl = stats["k1"], stats["b"], stats["avgdl"]
-    num_salts = stats["num_salts"]
-    union_terms = sorted({t for _, (_, pq, _, _) in routed for t in pq.all_terms})
-    union_bset = sorted({bk for _, (_, _, bs, _) in routed for bk in bs})
-    paths = _postings_paths(index_dir, union_bset, stats)
-    if not paths:
-        return spark.createDataFrame([], empty_schema)
-    deleted = load_tombstones(index_dir)
-    blocks = _read_blocks(
-        spark, paths, union_terms, _needs_epoch(stats, deleted, paths)
-    )
-    qspecs = [
-        (
-            q, list(pq.all_terms), idf_map, pq.conjunctive, pq.phrases,
-            bool(pq.phrases), pq.tree,
-        )
-        for q, (_, pq, _, idf_map) in routed
-    ]
-
-    def score_partition(batches):
-        frames = [f for f in batches if len(f)]
-        if not frames:
-            return
-        pdf = pd.concat(frames, ignore_index=True)
-        outs = []
-        for q, all_t, idf_map, conj, phrases, need_pos, tree in qspecs:
-            sub = pdf[pdf["term"].isin(all_t)]
-            if not len(sub):
-                continue
-            out = _score_local(
-                sub.reset_index(drop=True), idf_map, k1, b, avgdl, k,
-                conj, phrases, need_pos, tree, deleted,
-            )
-            if out is not None and len(out):
-                out.insert(0, "query", q)
-                outs.append(out)
-        if outs:
-            yield pd.concat(outs, ignore_index=True)
-
-    scored = blocks.repartition(salt_partition_count(num_salts), "salt").mapInPandas(
-        score_partition, "query string, docid long, score double"
-    )
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("query").orderBy(
-        F.desc("score"), F.asc("docid")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query", "rank", "docid", "score")
-    )
+    return _topk(out_ids, out_ranks, k)
 
 
 class _TermList:
@@ -1688,138 +1511,59 @@ class _TermList:
         return idx[srt], pos[srt]
 
 
-def search_local(
-    index_dir: str, query: str, k: int = 10, mode: str = "plain"
-) -> list[tuple[int, float]]:
-    """Serving-tier point query: no Spark session, no job.
-
-    The index is plain parquet, so a low-latency reader (here: pyarrow
-    + NumPy in-process) can serve top-k directly from the pruned
-    bucket shards - the same layout a real serving fleet would mmap.
-    Results are identical to :func:`search` (tests assert it); use the
-    Spark path for scatter-gather over very large per-term lists.
-    """
-    import pyarrow.dataset as ds
-
-    routed = _route(index_dir, query, mode)
-    if routed is None:
-        return []
-    stats, pq, bset, idf_map = routed
-    k1, b, avgdl = stats["k1"], stats["b"], stats["avgdl"]
-
-    paths = _shard_paths(index_dir, "postings", bset, stats)
-    if not paths:
-        return []
-    deleted = load_tombstones(index_dir)
-    pdf = _read_blocks_local(
-        ds, paths, pq.all_terms, _needs_epoch(stats, deleted, paths)
-    )
-    if len(pdf) == 0:
-        return []
-    frames = []
-    for _, grp in pdf.groupby("salt", sort=False):
-        out = _score_local(
-            grp.reset_index(drop=True), idf_map, k1, b, avgdl, k,
-            pq.conjunctive, pq.phrases, bool(pq.phrases), pq.tree,
-            deleted,
-        )
-        if out is not None:
-            frames.append(out)
-    if not frames:
-        return []
-    allf = pd.concat(frames, ignore_index=True)
-    order = np.lexsort((allf["docid"].to_numpy(), -allf["score"].to_numpy()))[:k]
-    return [
-        (int(allf["docid"].iloc[i]), float(allf["score"].iloc[i]))
-        for i in order
-    ]
-
-
-def _score_local(pdf, idf_map, k1, b, avgdl, k, conj, phrases, need_pos, tree=None, deleted=None):
-    """Exact local top-k over one salt-partition's blocks."""
+def _score_local(pdf, pq, idf_map, bm25, k, deleted=None):
+    """Exact local BM25 top-k over one salt-partition's blocks;
+    ``bm25`` is the index's ``(k1, b, avgdl)``."""
+    k1, b, avgdl = bm25
+    phrases, tree = pq.phrases, pq.tree
     per_term = {t: g for t, g in pdf.groupby("term", sort=True)}
-    if conj:
-        if len(per_term) < len(idf_map):
-            return None  # some required term missing in this partition
-        phrase_terms = {t for chain in phrases for t, _ in chain}
-        # decode rarest term first; range-prune later terms' blocks
-        order = sorted(per_term, key=lambda t: int(per_term[t]["n"].sum()))
-        lists: dict[str, _TermList] = {}
-        cand: np.ndarray | None = None
-        for t in order:
-            tb = per_term[t]
-            if cand is not None:
-                if cand.size == 0:
-                    return None
-                lo, hi = int(cand[0]), int(cand[-1])
-                tb = tb[(tb["max_docid"] >= lo) & (tb["min_docid"] <= hi)]
-            tl = _TermList(tb, need_pos and t in phrase_terms, deleted)
-            lists[t] = tl
-            cand = tl.ids if cand is None else cand[
-                _isin_sorted(cand, tl.ids)
-            ]
-        if cand is None or cand.size == 0:
-            return None
-        scores = np.zeros(cand.size)
-        for t, tl in lists.items():
-            sel = _isin_sorted(tl.ids, cand)
-            ids_s = tl.ids[sel]
-            contrib = idf_map[t] * tl.tfs[sel] / (
-                tl.tfs[sel] + k1 * (1 - b + b * tl.dls[sel] / avgdl)
-            )
-            scores[np.searchsorted(cand, ids_s)] += contrib
-        if not phrases:
-            return _topk_frame(cand, scores, k)
-        # lazy phrase recheck: walk candidates in score order, decoding
-        # positions only until k docs pass
-        order_idx = np.lexsort((cand, -scores))
-        out_ids: list[int] = []
-        out_scores: list[float] = []
-        for i in order_idx.tolist():
-            d = int(cand[i])
-            if all(_phrase_ok_lazy(chain, lists, d) for chain in phrases):
-                out_ids.append(d)
-                out_scores.append(float(scores[i]))
-                if len(out_ids) >= k:
-                    break
-        if not out_ids:
-            return None
-        return pd.DataFrame({"docid": out_ids, "score": out_scores})
-
-    # boolean (Or/Not) mode: decode every referenced term's list once,
-    # evaluate the query tree set-theoretically over docid sets (with
-    # lazy position checks for phrase nodes), then score the matching
-    # docs over the positive terms they contain.  Block-max pruning
-    # with a remaining-terms bound skips blocks that can neither
-    # produce a fresh top-k doc nor improve a seen candidate - applied
-    # only to terms not needed for tree evaluation correctness...
-    # since every term IS needed for evaluation, pruning here applies
-    # to scoring contributions of docs that cannot match; we keep it
-    # simple and exact: decode all referenced lists (the bucket+term
-    # pruned read already bounds this to |q| lists in this partition).
-    if _is_flat_or(tree):
-        return _score_wand_or(pdf, per_term, idf_map, k1, b, avgdl, k, deleted)
     phrase_terms = {t for chain in phrases for t, _ in chain}
-    lists = {
-        t: _TermList(tb, need_pos and t in phrase_terms, deleted)
-        for t, tb in per_term.items()
-    }
-    matched = _eval_tree(tree, lists, phrases)
-    if matched is None or not matched.size:
-        return None
-    scores = np.zeros(matched.size)
+    if pq.conjunctive:
+        hit = _intersect(per_term, len(pq.terms), phrase_terms, deleted)
+        if hit is None:
+            return None
+        lists, cand = hit
+    elif _is_flat_or(tree):
+        return _score_wand_or(per_term, idf_map, k1, b, avgdl, k, deleted)
+    else:
+        # boolean (Or/Not) mode: every referenced term's list is
+        # decoded, because evaluating the tree needs all of them
+        lists = {
+            t: _TermList(tb, t in phrase_terms, deleted)
+            for t, tb in per_term.items()
+        }
+        cand = _eval_tree(tree, lists, phrases)
+        if cand is None or not cand.size:
+            return None
+    scores = np.zeros(cand.size)
     for t, tl in lists.items():
         w = idf_map.get(t)
         if not w:
             continue  # negated-only term: contributes no score
-        sel = _isin_sorted(tl.ids, matched)
+        sel = _isin_sorted(tl.ids, cand)
         ids_s = tl.ids[sel]
         contrib = w * tl.tfs[sel] / (
             tl.tfs[sel] + k1 * (1 - b + b * tl.dls[sel] / avgdl)
         )
-        scores[np.searchsorted(matched, ids_s)] += contrib
-    keep = scores > 0
-    return _topk_frame(matched[keep], scores[keep], k)
+        scores[np.searchsorted(cand, ids_s)] += contrib
+    if not pq.conjunctive:
+        keep = scores > 0
+        return _topk(cand[keep], scores[keep], k)
+    if not phrases:
+        return _topk(cand, scores, k)
+    # lazy phrase recheck: walk candidates in score order, decoding
+    # positions only until k docs pass
+    order_idx = np.lexsort((cand, -scores))
+    out_ids: list[int] = []
+    out_scores: list[float] = []
+    for i in order_idx.tolist():
+        d = int(cand[i])
+        if all(_phrase_ok_lazy(chain, lists, d) for chain in phrases):
+            out_ids.append(d)
+            out_scores.append(float(scores[i]))
+            if len(out_ids) >= k:
+                break
+    return _topk(out_ids, out_scores, k)  # already in top-k order
 
 
 def _is_flat_or(tree) -> bool:
@@ -1833,7 +1577,7 @@ def _is_flat_or(tree) -> bool:
     )
 
 
-def _score_wand_or(pdf, per_term, idf_map, k1, b, avgdl, k, deleted=None):
+def _score_wand_or(per_term, idf_map, k1, b, avgdl, k, deleted=None):
     """Union top-k with block-max (WAND-style) pruning.
 
     Terms are processed rarest-first (highest idf). Once k candidates
@@ -1879,7 +1623,7 @@ def _score_wand_or(pdf, per_term, idf_map, k1, b, avgdl, k, deleted=None):
         return None
     ids = np.fromiter(acc.keys(), dtype=np.int64, count=len(acc))
     sc = np.fromiter(acc.values(), dtype=np.float64, count=len(acc))
-    return _topk_frame(ids, sc, k)
+    return _topk(ids, sc, k)
 
 
 def _eval_tree(tree, lists: dict[str, "_TermList"], phrases) -> np.ndarray | None:
@@ -1972,9 +1716,12 @@ def _phrase_ok_lazy(chain, lists: dict[str, "_TermList"], docid: int) -> bool:
     return False
 
 
-def _topk_frame(ids: np.ndarray, scores: np.ndarray, k: int):
+def _topk(ids, scores, k: int):
+    """Top-k ``(docids, scores)`` int64/float64 arrays, or None."""
+    ids = np.asarray(ids, np.int64)
+    scores = np.asarray(scores, np.float64)
     if ids.size == 0:
         return None
     # top-k by (score desc, docid asc)
     order = np.lexsort((ids, -scores))[:k]
-    return pd.DataFrame({"docid": ids[order], "score": scores[order]})
+    return ids[order], scores[order]

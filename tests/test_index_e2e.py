@@ -515,18 +515,43 @@ def test_rank_cd_index_path_equals_scan_path(spark, built):
     assert nonempty >= 3  # the comparison must not be vacuous
 
 
+def _rank_entry_points(spark, cd: bool):
+    """Every index-path entry point of one ranking function, as
+    ``fn(index_dir, query, method)`` returning a list."""
+    from pg_cjk_parser_spark.query.topk import (
+        rank_local,
+        search_many_rank,
+        search_rank,
+        search_rank_cd,
+    )
+
+    single = search_rank_cd if cd else search_rank
+    return [
+        lambda idx, q, m: single(
+            spark, idx, q, mode="tsquery", method=m
+        ).collect(),
+        lambda idx, q, m: search_many_rank(
+            spark, idx, [q], mode="tsquery", method=m, cd=cd
+        ).collect(),
+        lambda idx, q, m: rank_local(idx, q, mode="tsquery", method=m, cd=cd),
+    ]
+
+
 def test_rank_cd_index_path_rejects_unsupported(spark, built):
+    """search_rank_cd, search_many_rank(cd=True) and rank_local(cd=True)
+    reject the same method bits and query shapes, method bits before
+    routing; an unsupported shape that matches nothing is empty."""
     import pytest as _pytest
 
-    from pg_cjk_parser_spark.query.topk import search_rank_cd
-
     index_dir, _, _ = built
-    with _pytest.raises(ValueError, match="bits 4|32"):
-        search_rank_cd(spark, index_dir, "doraemnon", method=1)
-    with _pytest.raises(ValueError, match="conjunctive"):
-        search_rank_cd(
-            spark, index_dir, "doraemnon | nobita", mode="tsquery"
-        )
+    for fn in _rank_entry_points(spark, cd=True):
+        with _pytest.raises(ValueError, match="bits 4|32"):
+            fn(index_dir, "doraemnon", 1)
+        with _pytest.raises(ValueError, match="bits 4|32"):
+            fn(index_dir, "zzqxnomatch", 2)
+        with _pytest.raises(ValueError, match="conjunctive"):
+            fn(index_dir, "doraemnon | nobita", 0)
+        assert list(fn(index_dir, "zzqxnomatch | zzqynomatch", 0)) == []
 
 
 def test_rank_cd_phrase_bulk_differential_dense_covers(spark, tmp_path):
@@ -620,18 +645,22 @@ def test_ts_rank_index_path_equals_scan_path(spark, built):
 
 
 def test_ts_rank_index_path_rejects_unsupported(spark, built):
+    """search_rank, search_many_rank(cd=False) and rank_local(cd=False)
+    reject the same method bits and query shapes, method bits before
+    routing; an unsupported shape that matches nothing is empty."""
     import pytest as _pytest
 
-    from pg_cjk_parser_spark.query.topk import search_rank
-
     index_dir, _, _ = built
-    with _pytest.raises(ValueError, match="1|2|32"):
-        search_rank(spark, index_dir, "doraemnon", method=8)
-    with _pytest.raises(ValueError, match="flat-OR"):
-        search_rank(
-            spark, index_dir,
-            "doraemnon | (nobita & doraemon)", mode="tsquery",
-        )
+    for fn in _rank_entry_points(spark, cd=False):
+        with _pytest.raises(ValueError, match="1|2|32"):
+            fn(index_dir, "doraemnon", 8)
+        with _pytest.raises(ValueError, match="1|2|32"):
+            fn(index_dir, "zzqxnomatch", 4)
+        with _pytest.raises(ValueError, match="flat-OR"):
+            fn(index_dir, "doraemnon | (nobita & doraemon)", 0)
+        assert list(
+            fn(index_dir, "zzqxnomatch | (zzqynomatch & zzqznomatch)", 0)
+        ) == []
 
 
 def test_prefix_queries_index_path(spark, built):

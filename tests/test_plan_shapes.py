@@ -94,17 +94,26 @@ def test_search_pushes_term_filter(spark, tmp_path_factory):
     )
     plan = _plan(search(spark, idx, "のび太", k=5))
     assert "PushedFilters: [In(term" in plan, plan
+    # a single query merges with orderBy/limit, never a per-query
+    # window, and its rows carry no query column for a Project to drop
+    assert _count(plan, "Window") == 0, plan
+    assert _count(plan, "Project") == 0, plan
     plan_b = _plan(search_many(spark, idx, ["のび太", "Doraemnon"], k=5))
     assert "PushedFilters: [In(term" in plan_b, plan_b
     assert _count(plan_b, "Scan parquet") == 1, plan_b
 
 
 def test_rank_paths_push_term_filter_single_scan(spark, tmp_path_factory):
-    """search_rank / search_rank_cd must inherit the BM25 scan shape:
-    one parquet scan of routed bucket dirs with the term IN-list
-    pushed down, one hash Exchange on salt, no extra shuffles."""
+    """search_rank / search_rank_cd / search_many_rank must inherit the
+    BM25 scan shape: one parquet scan of routed bucket dirs with the
+    term IN-list pushed down.  Single queries add one hash Exchange on
+    salt and no extra shuffles or windows."""
     from pg_cjk_parser_spark.index.build import build_index
-    from pg_cjk_parser_spark.query.topk import search_rank, search_rank_cd
+    from pg_cjk_parser_spark.query.topk import (
+        search_many_rank,
+        search_rank,
+        search_rank_cd,
+    )
     from pg_cjk_parser_spark.spark.corpus import synth_corpus
 
     idx = str(tmp_path_factory.mktemp("rankidx"))
@@ -120,6 +129,17 @@ def test_rank_paths_push_term_filter_single_scan(spark, tmp_path_factory):
         assert "PushedFilters: [In(term" in plan, plan
         assert _count(plan, "Scan parquet") == 1, plan
         assert _count(plan, "Exchange") <= 2, plan  # salt hash + final sort
+        assert _count(plan, "Window") == 0, plan
+        assert _count(plan, "Project") == 0, plan
+    for cd, qs in (
+        (False, ["doraemnon | nobita", "のび太"]),
+        (True, ["のび太", "doraemnon & nobita"]),
+    ):
+        plan = _plan(
+            search_many_rank(spark, idx, qs, k=5, mode="tsquery", cd=cd)
+        )
+        assert "PushedFilters: [In(term" in plan, plan
+        assert _count(plan, "Scan parquet") == 1, plan
 
 
 def test_url_dedup_partial_max_by_one_exchange(spark, tmp_path_factory):

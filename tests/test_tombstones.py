@@ -869,6 +869,34 @@ def test_foreign_epoch_survives_epoch_bounded_tombstone(spark, tmp_path):
     assert [d for d, _ in search_local(idx, "fast", k=10)] == [1]
 
 
+def test_ancestor_epoch_dir_does_not_unmask_batch_tombstones(
+    spark, tmp_path
+):
+    """Block epochs come from the epoch=N dir directly under the shard
+    root: a batch index whose PATH has an ancestor named epoch=7 still
+    holds epoch-0 blocks, so a default delete (bounded at epoch 0)
+    masks them on the Spark path, the serving path and in compaction."""
+    idx = str(tmp_path / "epoch=7" / "idx")
+    docs = spark.createDataFrame(
+        [(1, "fast table"), (2, "fast value"), (3, "fast row")],
+        "doc_id long, text string",
+    )
+    build_index(
+        spark, docs, idx, docid_col="doc_id",
+        num_buckets=4, num_salts=2, block_size=4,
+    )
+    delete_docs(idx, [2])
+    assert sorted(d for d, _ in search_local(idx, "fast", k=10)) == [1, 3]
+    got = {r.docid for r in search(spark, idx, "fast", k=10).collect()}
+    assert got == {1, 3}
+    compact_index(spark, idx)
+    assert load_tombstones(idx) is None
+    assert load_stats(idx)["n_docs"] == 2
+    got = {r.docid for r in search(spark, idx, "fast", k=10).collect()}
+    assert got == {1, 3}
+    assert sorted(d for d, _ in search_local(idx, "fast", k=10)) == [1, 3]
+
+
 def test_df_cache_sees_foreign_epoch_without_stats_refresh(spark, tmp_path):
     """The serving df cache must not serve stale (or negative)
     dictionary entries after a foreign epoch lands WITHOUT a
