@@ -2,31 +2,44 @@
 
 Pipeline (all DataFrame/Arrow; designed for 1000-executor scale):
 
-1. **Tokenize + explode** (the expensive pass, one tokenizer run per
-   doc): ``tsvector_udf`` -> ``(docid, doclen, term, tf, positions)``.
-   Doc length rides along with every posting so scoring never joins on
-   docid.
-2. **Stage** the exploded postings to parquet once, so the tokenizer
-   pass is never repeated by downstream aggregations (corpus stats,
-   term stats, block encode all read the staging area with column
-   pruning).
-3. **Salted repartition**: ``bucket = pmod(xxhash64(term), B)`` x
-   ``salt = pmod(xxhash64(docid), S)``.  Head CJK bigrams are
-   Zipf-heavy; the salt splits each term's postings into S
+1. **Tokenize + pack** (the expensive pass, one tokenizer run per
+   doc; ``mapInPandas`` over :func:`_packed_postings_gen`): each map
+   task aggregates its docs' postings in numpy and emits ONE packed
+   binary row per (bucket, salt) cell per ~500k postings, so the
+   shuffle moves cells, not postings.  ``bucket =
+   pmod(xxhash64(term), B)`` (one vectorized hash over each batch's
+   vocabulary) x ``salt = pmod(xxhash64(docid), S)``.  Head CJK
+   bigrams are Zipf-heavy; the salt splits each term's postings into S
    docid-disjoint shards so no single reducer owns a head term.  The
    salt doubles as the query-time alignment unit: all terms' shard-s
    lists cover the same docid subset, so per-salt partitions can run
-   local conjunctions/WAND without a docid shuffle.
-4. **Block encode** (``mapInPandas``, streaming with carry-over, no
-   whole-group materialization): per (bucket, salt, term), docid-sorted
-   blocks of ``block_size`` postings; delta+varint docids, varint tfs &
-   doclens, per-doc delta-varint positions, per-block
-   ``(max_tf, min_doclen, min/max docid)`` for block-max pruning.
-5. **Write** parquet partitioned by ``bucket`` (queries touch at most
+   local conjunctions/WAND without a docid shuffle.  Doc length rides
+   along with every posting so scoring never joins on docid.
+2. **Cell shuffle**: ONE exchange that places cell ``bucket*S + salt``
+   on partition ``cell % parts`` (``xxh64.cell_partition_key``), so
+   every reducer gets floor or ceil of B*S/parts cells - hashing
+   (bucket, salt) directly left reducers idle next to ones with 2x
+   the cells.
+3. **Block encode** (``mapInArrow`` over :func:`_encode_cells`): per
+   (bucket, salt, term), docid-sorted blocks of ``block_size``
+   postings; delta+varint docids, varint tfs & doclens, per-doc
+   delta-varint positions, per-block ``(max_tf, min_doclen, min/max
+   docid)`` for block-max pruning.  Blocks leave Python as Arrow
+   batches built from the varint buffers (:func:`_slice_blocks`), with
+   no per-block Python objects and no pandas conversion.
+4. **Write** parquet partitioned by ``bucket`` (queries touch at most
    |q| buckets via partition pruning) + per-bucket ``_manifest.json``
    lineage enabling checkpoint resume: on resume, buckets with a valid
    manifest are skipped and the rest are rebuilt with dynamic
-   partition overwrite.
+   partition overwrite.  Termstats and corpus totals derive from the
+   written blocks' metadata, read with a known schema (no inference
+   job).
+
+Resume and ``keep_staging`` take a row-level path instead of steps
+1-3: the exploded postings (:func:`explode_postings`, one row per
+(doc, term)) are staged to parquet once so a resumed build never
+re-tokenizes, then the same cell exchange, a sort, and ``mapInArrow``
+over the streaming row encoder :func:`_encode_partition`.
 """
 
 from __future__ import annotations
@@ -37,6 +50,8 @@ import time
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .codec import encode_varints_offsets
@@ -178,32 +193,31 @@ PACKED_SCHEMA = "bucket int, salt int, payload binary"
 
 
 def _pack_cell_idx(
-    uterms_b, tidx, docids, tfs, dls, plens, pos_blob
+    uterms, tidx, docids, tfs, dls, plens, pos_blob
 ) -> bytes:
     """Pack one (bucket, salt) cell's postings into a single blob,
-    with the term VOCABULARY stored once and an int32 index per
-    posting (head CJK terms repeat across thousands of postings -
-    per-posting term bytes measured ~30% of the cell shuffle volume,
-    and re-ranking them cost a dict lookup per posting on the reduce
-    side):
+    with the term VOCABULARY (``uterms``, an Arrow binary array of
+    UTF-8 terms) stored once and an int32 index per posting (head CJK
+    terms repeat across thousands of postings - per-posting term
+    bytes measured ~30% of the cell shuffle volume, and re-ranking
+    them cost a dict lookup per posting on the reduce side):
 
     [i64 n][i32 nuniq][docids 8n][tf 4n][doclen 4n][poslen 4n]
     [termidx 4n][utermlen 4nu][uterm utf8 blob][positions blob]
     """
     import struct
 
+    ublob, uoffs = _binary_parts(uterms)
     return b"".join(
         (
-            struct.pack("<qi", len(tidx), len(uterms_b)),
+            struct.pack("<qi", len(tidx), len(uterms)),
             np.ascontiguousarray(docids, np.int64).tobytes(),
             np.ascontiguousarray(tfs, np.int32).tobytes(),
             np.ascontiguousarray(dls, np.int32).tobytes(),
             np.ascontiguousarray(plens, np.int32).tobytes(),
             np.ascontiguousarray(tidx, np.int32).tobytes(),
-            np.fromiter(
-                map(len, uterms_b), np.int32, len(uterms_b)
-            ).tobytes(),
-            b"".join(uterms_b),
+            np.diff(uoffs).astype(np.int32).tobytes(),
+            ublob[uoffs[0] : uoffs[-1]].tobytes(),
             pos_blob,
         )
     )
@@ -222,7 +236,7 @@ def _pack_cell(terms_b, docids, tfs, dls, poss) -> bytes:
             seen[t] = j
         tidx[i] = j
     return _pack_cell_idx(
-        list(seen),
+        pa.array(list(seen), pa.binary()),
         tidx,
         np.array(docids, np.int64),
         np.array(tfs, np.int32),
@@ -249,12 +263,15 @@ def _unpack_cell(buf: bytes):
     return d, t, dl, plen, tidx, utlen, buf[o:tb_end], buf[tb_end:]
 
 
-def _blob_slices(blob: bytes, lens: np.ndarray) -> list[bytes]:
-    offs = np.empty(len(lens) + 1, np.int64)
-    offs[0] = 0
-    np.cumsum(lens, out=offs[1:])
-    ol = offs.tolist()
-    return [blob[ol[i]:ol[i + 1]] for i in range(len(lens))]
+def _merge_vocab(chunks):
+    """Chunk vocabularies (Arrow binary arrays) -> (the merged
+    vocabulary, deduplicated in first-occurrence order, and per chunk
+    an int array mapping each entry to its merged index) - one
+    dictionary encode (C hash) instead of a dict lookup per term."""
+    enc = pa.concat_arrays(chunks).dictionary_encode()
+    ix = enc.indices.to_numpy()
+    bounds = np.cumsum([0] + [len(v) for v in chunks]).tolist()
+    return enc.dictionary, [ix[a:b] for a, b in zip(bounds, bounds[1:])]
 
 
 def _packed_postings_gen(batches, num_buckets, num_salts, flush_at=500_000,
@@ -265,19 +282,24 @@ def _packed_postings_gen(batches, num_buckets, num_salts, flush_at=500_000,
     per *cell* (~B*S rows per flush), not per posting - at 10M postings
     the per-row boundary cost dominated the whole build.
 
-    bucket/salt use the pure-Python spark-xxhash64 port
-    (bit-identical to F.xxhash64; tests/test_xxh64.py), so packed and
-    staged builds address the same shards.
+    bucket/salt use numpy ports of Spark's xxhash64 (bit-identical to
+    F.xxhash64; tests/test_xxh64.py, tests/test_vectorized_internals.py),
+    so packed and staged builds address the same shards.
 
     The post-tokenize aggregation is vectorized per Arrow batch: the
     batch's (term, position) pairs factorize to integer codes (C
     hash), one stable argsort on a (doc, code) key yields the per-doc
     term groups with positions in emission (= ascending) order, salts
-    come from the vectorized xxh64 lane, buckets from a vocabulary-
-    sized cache, and one more stable argsort groups postings by cell.
-    The per-posting dict/append loop this replaces measured 72% of
-    map-side time once the tokenizer had its own fast paths; only
-    vocabulary-sized loops remain in Python.
+    come from the vectorized xxh64 long lane, buckets from ONE
+    vectorized xxh64 call over the batch vocabulary in Arrow string
+    layout (a per-term scalar hash loop measured ~40% of map-side
+    time), and one more stable argsort groups postings by cell.  The
+    per-posting dict/append loop this replaces measured 72% of
+    map-side time once the tokenizer had its own fast paths.  Each
+    cell chunk keeps its slice of the batch vocabulary as an Arrow
+    array, and flush merges a cell's chunks with one dictionary
+    encode (:func:`_merge_vocab`), so no Python loop runs per term or
+    per posting.
 
     Positions accumulate per cell as interleaved ``[npos, p1, ...]``
     int streams (built with a head-slot scatter, no per-posting
@@ -288,21 +310,19 @@ def _packed_postings_gen(batches, num_buckets, num_salts, flush_at=500_000,
     test: identical final index blocks)."""
     from ..kernel.tokenizer import lexemes
     from .codec import encode_varints_offsets
-    from .xxh64 import pmod, spark_xxhash64_long_vec, spark_xxhash64_str
+    from .xxh64 import spark_xxhash64_long_vec, spark_xxhash64_str_vec
 
     norm = None
     if normalize_zht:
         from ..functions.zht2zhs import zht2zhs as norm
 
     ncells = num_buckets * num_salts
-    uterms: list[list] = [[] for _ in range(ncells)]  # cell vocabulary
-    udicts: list[dict] = [{} for _ in range(ncells)]  # bytes -> vocab idx
-    tidx: list[list] = [[] for _ in range(ncells)]    # int32 array chunks
+    uterms: list[list] = [[] for _ in range(ncells)]  # vocab array chunks
+    tidx: list[list] = [[] for _ in range(ncells)]    # chunk-vocab idx
     docids: list[list] = [[] for _ in range(ncells)]  # int64 array chunks
     tfs: list[list] = [[] for _ in range(ncells)]     # int64 array chunks
     dls: list[list] = [[] for _ in range(ncells)]     # int64 array chunks
     posv: list[list] = [[] for _ in range(ncells)]    # stream array chunks
-    bucket_cache: dict[str, tuple] = {}  # term -> (bucket, utf8 bytes)
     count = 0
 
     def flush():
@@ -354,12 +374,11 @@ def _packed_postings_gen(batches, num_buckets, num_salts, flush_at=500_000,
         pe = 0
         for i, c in enumerate(live):
             n = int(cell_counts[i])
+            vocab, maps = _merge_vocab(uterms[c])
             rp.append(
                 _pack_cell_idx(
-                    uterms[c],
-                    tidx[c][0]
-                    if len(tidx[c]) == 1
-                    else np.concatenate(tidx[c]),
+                    vocab,
+                    np.concatenate([m[t_] for m, t_ in zip(maps, tidx[c])]),
                     docids[c][0]
                     if len(docids[c]) == 1
                     else np.concatenate(docids[c]),
@@ -375,7 +394,6 @@ def _packed_postings_gen(batches, num_buckets, num_salts, flush_at=500_000,
             rs.append(c % num_salts)
             pe += n
             uterms[c] = []
-            udicts[c] = {}
             tidx[c] = []
             docids[c] = []
             tfs[c] = []
@@ -438,19 +456,9 @@ def _packed_postings_gen(batches, num_buckets, num_salts, flush_at=500_000,
         # numpy % with a positive divisor matches pmod
         salts_doc = spark_xxhash64_long_vec(docid_arr) % num_salts
 
-        bkt_u = np.empty(V, np.int64)
-        ub: list[bytes] = [b""] * V
-        for j, t in enumerate(uniq.tolist()):
-            ent = bucket_cache.get(t)
-            if ent is None:
-                ent = (
-                    pmod(spark_xxhash64_str(t), num_buckets),
-                    t.encode("utf-8", "surrogatepass"),
-                )
-                if len(bucket_cache) < (1 << 20):
-                    bucket_cache[t] = ent
-            bkt_u[j] = ent[0]
-            ub[j] = ent[1]
+        uarr = pa.array(uniq, pa.string())
+        bkt_u = spark_xxhash64_str_vec(*_binary_parts(uarr)) % num_buckets
+        ub = uarr.cast(pa.binary())
 
         # group postings by cell (stable keeps doc/term order inside)
         p_cell = bkt_u[g_code] * num_salts + salts_doc[g_doc]
@@ -487,22 +495,11 @@ def _packed_postings_gen(batches, num_buckets, num_salts, flush_at=500_000,
         heads_ext = np.append(heads, stream.size)
         for cs, cex in zip(cstarts, cends):
             c = int(cell_s[cs])
-            # per-cell vocabulary: unique batch codes remap onto the
-            # cell's running vocab (vocabulary-sized Python, not
-            # posting-sized)
+            # the chunk's own vocabulary (its unique batch codes, in
+            # code order); flush() merges a cell's chunk vocabularies
             lu, inv = np.unique(code_o[cs:cex], return_inverse=True)
-            ud = udicts[c]
-            ul = uterms[c]
-            remap = np.empty(lu.size, np.int32)
-            for k, j in enumerate(lu.tolist()):
-                tb_ = ub[j]
-                x = ud.get(tb_)
-                if x is None:
-                    x = len(ul)
-                    ud[tb_] = x
-                    ul.append(tb_)
-                remap[k] = x
-            tidx[c].append(remap[inv])
+            uterms[c].append(ub.take(lu))
+            tidx[c].append(inv)
             docids[c].append(did_o[cs:cex])
             tfs[c].append(tf_o[cs:cex])
             dls[c].append(dl_o[cs:cex])
@@ -519,55 +516,48 @@ def _packed_postings_gen(batches, num_buckets, num_salts, flush_at=500_000,
 
 
 def _encode_cells(batches, block_size: int):
-    """Reduce side of the packed shuffle: gather each (bucket, salt)
-    cell's payloads, unpack, sort by (term, docid) with integer term
-    ranks (numpy lexsort; no wide-unicode arrays), and emit posting
-    blocks via the same vectorized block slicer as the row path.
+    """Reduce side of the packed shuffle (``mapInArrow``): gather each
+    (bucket, salt) cell's payloads, unpack, sort by (term, docid) with
+    integer term ranks (numpy lexsort; no wide-unicode arrays), and
+    yield the cell's posting blocks as Arrow batches via the same
+    columnar block slicer as the row path.
 
     Memory: one reduce partition's payloads live in RAM; size
     num_salts (docid-disjoint shards) so cells fit - the salt count is
     the scale lever, exactly as for head-term skew."""
     bs = block_size
     cells: dict[tuple[int, int], list[bytes]] = {}
-    for pdf in batches:
+    for rb in batches:
         for b, s, payload in zip(
-            pdf["bucket"].tolist(), pdf["salt"].tolist(), pdf["payload"].tolist()
+            rb.column("bucket").to_pylist(),
+            rb.column("salt").to_pylist(),
+            rb.column("payload").to_pylist(),
         ):
-            cells.setdefault((int(b), int(s)), []).append(payload)
+            cells.setdefault((b, s), []).append(payload)
 
-    out_rows: list[tuple] = []
     for bkt, salt in sorted(cells):
         parts = [_unpack_cell(p) for p in cells[(bkt, salt)]]
         d = np.concatenate([x[0] for x in parts])
         t = np.concatenate([x[1] for x in parts]).astype(np.int64)
         dl = np.concatenate([x[2] for x in parts]).astype(np.int64)
         plen = np.concatenate([x[3] for x in parts]).astype(np.int64)
-        # per-part vocab -> cell vocab (vocabulary-sized Python), then
-        # one gather per part for the posting codes
-        ud: dict[bytes, int] = {}
-        code_parts = []
-        for x in parts:
-            utb = _blob_slices(x[6], x[5])
-            lookup = np.empty(len(utb), np.int64)
-            for k, u in enumerate(utb):
-                j = ud.get(u)
-                if j is None:
-                    j = len(ud)
-                    ud[u] = j
-                lookup[k] = j
-            code_parts.append(lookup[x[4]])
-        codes = np.concatenate(code_parts)
-        uniq_b = list(ud)
-        order_u = sorted(range(len(uniq_b)), key=uniq_b.__getitem__)
-        rank_arr = np.empty(len(uniq_b), np.int64)
-        for r, i in enumerate(order_u):
-            rank_arr[i] = r
-        ranks = rank_arr[codes]
+        # the parts' vocabularies -> the cell vocabulary, sorted (byte
+        # order == Spark's string order), and each posting's term rank
+        # - no per-term Python
+        vocab, maps = _merge_vocab(
+            [_binary_array(x[6], x[5]) for x in parts]
+        )
+        order_u = pc.sort_indices(vocab).to_numpy()
+        rank_arr = np.empty(order_u.size, np.int64)
+        rank_arr[order_u] = np.arange(order_u.size, dtype=np.int64)
+        ranks = np.concatenate(
+            [rank_arr[m[x[4]]] for m, x in zip(maps, parts)]
+        )
         idx = np.lexsort((d, ranks))
         rs_ = ranks[idx]
-        ds = np.ascontiguousarray(d[idx])
-        ts = np.ascontiguousarray(t[idx])
-        dls_ = np.ascontiguousarray(dl[idx])
+        ds = d[idx]
+        ts = t[idx]
+        dls_ = dl[idx]
         # positions: byte-level gather into sorted posting order - no
         # per-posting bytes objects
         bigbuf = np.frombuffer(b"".join([x[7] for x in parts]), np.uint8)
@@ -593,21 +583,13 @@ def _encode_cells(batches, block_size: int):
         gid = np.searchsorted(gstarts, bstarts, side="right") - 1
         bends = np.minimum(bstarts + bs, gends[gid])
         bids = (bstarts - gstarts[gid]) // bs
-        uniq_str = [
-            uniq_b[i].decode("utf-8", "surrogatepass") for i in order_u
-        ]
-        gterm = [uniq_str[int(rs_[i])] for i in gstarts.tolist()]
-        gl = gid.tolist()
-        _slice_blocks(
-            out_rows, lambda i: (bkt, salt, gterm[gl[i]]), bids,
-            bstarts, bends, ds, ts, dls_, (pos_bytes, p_ends),
-            ds.view(np.uint64), ts.view(np.uint64), dls_.view(np.uint64),
+        terms = vocab.take(order_u).cast(pa.string())
+        nb = bstarts.size
+        yield from _slice_blocks(
+            np.full(nb, bkt, np.int32), np.full(nb, salt, np.int32),
+            terms.take(rs_[bstarts]), bids, bstarts, bends,
+            ds, ts, dls_, (pos_bytes, p_ends),
         )
-        if len(out_rows) >= 2000:
-            yield pd.DataFrame(out_rows, columns=_BLOCK_COLS)
-            out_rows = []
-    if out_rows:
-        yield pd.DataFrame(out_rows, columns=_BLOCK_COLS)
 
 
 def _with_docid(docs: DataFrame, docid_col: str | None) -> DataFrame:
@@ -638,92 +620,132 @@ def explode_postings(
     )
 
 
-_BLOCK_COLS = [
-    "bucket", "salt", "term", "block_id", "n", "min_docid", "max_docid",
-    "docids", "tfs", "doclens", "positions", "max_tf", "min_dl", "sum_tf",
-]
+# BLOCK_SCHEMA as Arrow: what the encoders' batches must carry exactly
+# (``mapInArrow`` checks the types; tests compare it with Spark's own
+# conversion of BLOCK_SCHEMA)
+BLOCK_ARROW_SCHEMA = pa.schema(
+    [
+        ("bucket", pa.int32()), ("salt", pa.int32()), ("term", pa.string()),
+        ("block_id", pa.int32()), ("n", pa.int32()),
+        ("min_docid", pa.int64()), ("max_docid", pa.int64()),
+        ("docids", pa.binary()), ("tfs", pa.binary()),
+        ("doclens", pa.binary()), ("positions", pa.binary()),
+        ("max_tf", pa.int32()), ("min_dl", pa.int32()),
+        ("sum_tf", pa.int64()),
+    ]
+)
+
+# cap on one output batch's binary bytes (all four columns together),
+# far below the 2 GiB an int32-offset binary column can address
+_BATCH_BYTES = 1 << 26
 
 
-def _slice_blocks(
-    out_rows, keys_of, bids, bstarts, bends, d, t, dl, poss, du, tu, lu
-):
-    """Assemble block rows: one vectorized varint encode per column for
-    ALL blocks, then per-block byte-range slicing.  ``bstarts`` must
-    partition [0, len(du)) contiguously (block starts include every
-    group start), so ``reduceat`` segments == blocks.
+def _binary_parts(arr) -> tuple[np.ndarray, np.ndarray]:
+    """(data bytes, int64 offsets) of an Arrow binary/string array,
+    zero-copy: value ``i`` is ``data[offs[i]:offs[i + 1]]``."""
+    n = len(arr)
+    _, obuf, dbuf = arr.buffers()
+    offs = np.frombuffer(obuf, np.int32, n + 1, arr.offset * 4)
+    if dbuf is None:  # no value has a byte
+        return np.empty(0, np.uint8), offs.astype(np.int64)
+    return np.frombuffer(dbuf, np.uint8), offs.astype(np.int64)
 
-    ``poss`` is either a list of per-posting position blobs (row
-    path: joined per block) or a ``(uint8 array, int64 ends)`` pair of
-    the already-ordered position byte stream plus per-posting end
-    offsets (cell path: sliced per block, no per-posting objects)."""
+
+def _binary_array(data, lens) -> pa.Array:
+    """Arrow binary array over ``data`` (bytes or uint8 array, zero-
+    copy) holding consecutive values of byte lengths ``lens``."""
+    offs = np.zeros(len(lens) + 1, np.int32)
+    np.cumsum(lens, out=offs[1:])
+    return pa.Array.from_buffers(
+        pa.binary(), len(lens), [None, pa.py_buffer(offs), pa.py_buffer(data)]
+    )
+
+
+def _slice_blocks(bucket, salt, term, bids, bstarts, bends, d, t, dl, pos):
+    """Assemble posting blocks as Arrow batches: one vectorized varint
+    encode per column for ALL blocks, then each binary column is ONE
+    ``from_buffers`` over that varint buffer with the blocks' byte
+    offsets - no per-block Python objects.  ``bstarts``/``bends`` must
+    partition [0, len(d)) contiguously (block starts include every
+    group start), so ``reduceat`` segments == blocks and block byte
+    ranges tile each buffer.
+
+    ``bucket``/``salt`` are per-block int arrays, ``term`` a per-block
+    Arrow string array, ``d``/``t``/``dl`` the postings' int64 docids,
+    tfs and doclens, and ``pos`` a ``(uint8 bytes, int64 ends)`` pair:
+    the position byte stream in posting order plus each posting's end
+    offset.  Returns one batch, or several when the binary columns
+    would pass ``_BATCH_BYTES``."""
+    du = np.ascontiguousarray(d).view(np.uint64)
+    tu = np.ascontiguousarray(t).view(np.uint64)
+    lu = np.ascontiguousarray(dl).view(np.uint64)
     deltas = du.copy()
     deltas[1:] -= du[:-1]
     deltas[bstarts] = du[bstarts]  # first docid of each block is absolute
-    dbuf, dend = encode_varints_offsets(deltas)
-    tbuf, tend = encode_varints_offsets(tu)
-    lbuf, lend = encode_varints_offsets(lu)
-    max_tf = np.maximum.reduceat(tu, bstarts)
-    min_dl = np.minimum.reduceat(lu, bstarts)
-    sum_tf = np.add.reduceat(tu, bstarts)
-    b0d = np.where(bstarts > 0, dend[bstarts - 1], 0)
-    b1d = dend[bends - 1]
-    b0t = np.where(bstarts > 0, tend[bstarts - 1], 0)
-    b1t = tend[bends - 1]
-    b0l = np.where(bstarts > 0, lend[bstarts - 1], 0)
-    b1l = lend[bends - 1]
-    ns = bends - bstarts
-    dmin = d[bstarts]
-    dmax = d[bends - 1]
-    bl = bstarts.tolist()
-    be = bends.tolist()
-    if isinstance(poss, tuple):
-        pb_arr, p_ends = poss
-        pb0 = np.where(bstarts > 0, p_ends[bstarts - 1], 0).tolist()
-        pb1 = p_ends[bends - 1].tolist()
+    last = bends - 1
+    bins = [
+        (buf, np.concatenate(([0], ends[last])))  # block byte offsets
+        for buf, ends in (
+            encode_varints_offsets(deltas),
+            encode_varints_offsets(tu),
+            encode_varints_offsets(lu),
+            pos,
+        )
+    ]
+    cols = [
+        np.asarray(bucket, np.int32), np.asarray(salt, np.int32), term,
+        np.asarray(bids, np.int32), (bends - bstarts).astype(np.int32),
+        d[bstarts], d[last], *bins,
+        np.maximum.reduceat(tu, bstarts).astype(np.int32),
+        np.minimum.reduceat(lu, bstarts).astype(np.int32),
+        np.add.reduceat(tu, bstarts).astype(np.int64),
+    ]
 
-        def get_pos(i):
-            return pb_arr[pb0[i] : pb1[i]].tobytes()
+    def piece(c, i0, i1):
+        if isinstance(c, tuple):
+            buf, offs = c
+            o = offs[i0 : i1 + 1]
+            return _binary_array(buf[o[0] : o[-1]], np.diff(o))
+        if isinstance(c, pa.Array):
+            return c.slice(i0, i1 - i0)
+        return pa.array(c[i0:i1])
 
-    else:
-
-        def get_pos(i):
-            return b"".join(poss[bl[i] : be[i]])
-
-    for i in range(len(bl)):
-        key = keys_of(i)
-        out_rows.append(
-            (
-                key[0], key[1], key[2], int(bids[i]), int(ns[i]),
-                int(dmin[i]), int(dmax[i]),
-                dbuf[b0d[i]:b1d[i]].tobytes(),
-                tbuf[b0t[i]:b1t[i]].tobytes(),
-                lbuf[b0l[i]:b1l[i]].tobytes(),
-                get_pos(i),
-                int(max_tf[i]), int(min_dl[i]), int(sum_tf[i]),
+    total = sum(offs for _, offs in bins)
+    nb = bstarts.size
+    out = []
+    i0 = 0
+    while i0 < nb:
+        i1 = int(np.searchsorted(total, total[i0] + _BATCH_BYTES, "right")) - 1
+        i1 = min(max(i1, i0 + 1), nb)
+        out.append(
+            pa.RecordBatch.from_arrays(
+                [piece(c, i0, i1) for c in cols], schema=BLOCK_ARROW_SCHEMA
             )
         )
+        i0 = i1
+    return out
 
 
-def _emit_final_group(out_rows, key, bid0, d, t, dl, poss, bs):
-    """Flush one complete group (all blocks, incl. trailing partial)."""
+def _emit_final_group(key, bid0, d, t, dl, pos, bs):
+    """Blocks of one complete group (all, incl. the trailing partial
+    one); ``pos`` is a ``(uint8 bytes, int64 lengths)`` pair."""
     n = len(d)
     if n == 0:
-        return
-    d = np.ascontiguousarray(d)
-    t = np.ascontiguousarray(t)
-    dl = np.ascontiguousarray(dl)
+        return []
     bstarts = np.arange(0, n, bs, dtype=np.int64)
     bends = np.minimum(bstarts + bs, n)
-    bids = bstarts // bs + bid0
-    _slice_blocks(
-        out_rows, lambda i: key, bids, bstarts, bends,
-        d, t, dl, poss,
-        d.view(np.uint64), t.view(np.uint64), dl.view(np.uint64),
+    nb = bstarts.size
+    return _slice_blocks(
+        np.full(nb, key[0], np.int32), np.full(nb, key[1], np.int32),
+        pa.array([key[2]] * nb, pa.string()), bstarts // bs + bid0,
+        bstarts, bends, d, t, dl, (pos[0], np.cumsum(pos[1])),
     )
 
 
 def _encode_partition(batches, block_size: int):
-    """Streaming block encoder over (bucket,salt,term,docid)-sorted rows.
+    """Streaming block encoder over (bucket,salt,term,docid)-sorted
+    Arrow batches of posting rows (``mapInArrow``; resume/keep_staging
+    path).
 
     Vectorized per Arrow batch, not per block: group/block boundaries,
     per-block reductions (``reduceat``) and the three varint streams
@@ -733,23 +755,23 @@ def _encode_partition(batches, block_size: int):
     group is carried over with its running block_id so a head term
     larger than a batch never materializes in full."""
     bs = block_size
-    out_rows: list[tuple] = []
     ckey = None     # carried tail group: key, next block_id, arrays
     cblock = 0
-    cd = ct = cdl = None
-    cpos: list = []
+    cd = ct = cdl = cpb = cpl = None
 
-    for pdf in batches:
-        nb_rows = len(pdf)
+    for rb in batches:
+        nb_rows = rb.num_rows
         if nb_rows == 0:
             continue
-        b = pdf["bucket"].to_numpy()
-        s = pdf["salt"].to_numpy()
-        term = pdf["term"].to_numpy()
-        d = pdf["docid"].to_numpy().astype(np.int64, copy=False)
-        t = pdf["tf"].to_numpy().astype(np.int64)
-        dl = pdf["doclen"].to_numpy().astype(np.int64)
-        poss = pdf["positions"].tolist()
+        b = rb.column("bucket").to_numpy()
+        s = rb.column("salt").to_numpy()
+        term = rb.column("term").to_numpy(zero_copy_only=False)
+        d = rb.column("docid").to_numpy().astype(np.int64, copy=False)
+        t = rb.column("tf").to_numpy().astype(np.int64)
+        dl = rb.column("doclen").to_numpy().astype(np.int64)
+        pb, po = _binary_parts(rb.column("positions"))
+        pb = pb[po[0] : po[-1]]
+        pl = np.diff(po)
 
         change = np.empty(nb_rows, dtype=bool)
         change[0] = True
@@ -767,9 +789,12 @@ def _encode_partition(batches, block_size: int):
                     d = np.concatenate((cd, d))
                     t = np.concatenate((ct, t))
                     dl = np.concatenate((cdl, dl))
-                    poss = cpos + poss
+                    pb = np.concatenate((cpb, pb))
+                    pl = np.concatenate((cpl, pl))
             else:
-                _emit_final_group(out_rows, ckey, cblock, cd, ct, cdl, cpos, bs)
+                yield from _emit_final_group(
+                    ckey, cblock, cd, ct, cdl, (cpb, cpl), bs
+                )
             ckey = None
 
         n = nb_rows + carry_len
@@ -782,6 +807,8 @@ def _encode_partition(batches, block_size: int):
         # partial block (carried to the next batch)
         last_lo = int(gstarts[-1])
         E = last_lo + ((n - last_lo) // bs) * bs
+        pe = np.cumsum(pl[:E])
+        pbE = int(pe[-1]) if E else 0
         if E > 0:
             glens = gends - gstarts
             ofs = np.arange(n, dtype=np.int64) - np.repeat(gstarts, glens)
@@ -792,12 +819,11 @@ def _encode_partition(batches, block_size: int):
             bids = (bstarts - gstarts[gid]) // bs
             if base0:
                 bids = bids + np.where(gid == 0, base0, 0)
-            gl = gid.tolist()
-            _slice_blocks(
-                out_rows, lambda i: gkeys[gl[i]], bids, bstarts, bends,
-                d, t, dl, poss,
-                d[:E].view(np.uint64), t[:E].view(np.uint64),
-                dl[:E].view(np.uint64),
+            yield from _slice_blocks(
+                np.array([k[0] for k in gkeys], np.int32)[gid],
+                np.array([k[1] for k in gkeys], np.int32)[gid],
+                pa.array([k[2] for k in gkeys], pa.string()).take(gid),
+                bids, bstarts, bends, d[:E], t[:E], dl[:E], (pb, pe),
             )
 
         ckey = gkeys[-1]
@@ -805,15 +831,25 @@ def _encode_partition(batches, block_size: int):
         cd = d[E:].copy()
         ct = t[E:].copy()
         cdl = dl[E:].copy()
-        cpos = poss[E:]
-
-        if len(out_rows) >= 2000:
-            yield pd.DataFrame(out_rows, columns=_BLOCK_COLS)
-            out_rows = []
+        cpb = pb[pbE:].copy()
+        cpl = pl[E:].copy()
     if ckey is not None:
-        _emit_final_group(out_rows, ckey, cblock, cd, ct, cdl, cpos, bs)
-    if out_rows:
-        yield pd.DataFrame(out_rows, columns=_BLOCK_COLS)
+        yield from _emit_final_group(ckey, cblock, cd, ct, cdl, (cpb, cpl), bs)
+
+
+def _cell_blocks(cells: DataFrame, num_salts: int, parts: int, block_size: int):
+    """Reduce side shared by build, append and compact: packed cell
+    rows -> posting blocks.  One exchange that places cell
+    ``bucket * num_salts + salt`` on partition ``cell % parts``
+    (collision-free, xxh64.cell_partition_key), then ``mapInArrow``
+    over :func:`_encode_cells`, whose batches already carry
+    BLOCK_SCHEMA's Arrow types (no pandas round trip either way)."""
+    from .xxh64 import cell_partition_key
+
+    cell = F.col("bucket") * num_salts + F.col("salt")
+    return cells.repartition(parts, cell_partition_key(cell, parts)).mapInArrow(
+        lambda it: _encode_cells(it, block_size), BLOCK_SCHEMA
+    )
 
 
 def build_index(
@@ -848,6 +884,8 @@ def build_index(
     """
     import hashlib
     import shutil
+
+    from .xxh64 import cell_partition_key
 
     os.makedirs(index_dir, exist_ok=True)
     if fingerprint is None:
@@ -909,7 +947,8 @@ def build_index(
     # per map chunk, the shuffle moves ~B*S rows per map task instead
     # of one row per posting (the per-row Python<->JVM Arrow boundary
     # measured ~5s per direction at 10M postings), and the reducer
-    # sorts + block-encodes in numpy.  The row-level staging path is
+    # sorts + block-encodes in numpy and hands Arrow batches straight
+    # back to the JVM.  The row-level staging path is
     # kept for resume (skip re-tokenizing completed buckets) and
     # keep_staging.
     if resume or keep_staging:
@@ -937,10 +976,11 @@ def build_index(
             todo = src.where(
                 ~F.col("bucket").isin([int(x) for x in sorted(done)])
             )
+        cell = F.col("bucket") * num_salts + F.col("salt")
         blocks = (
-            todo.repartition(parts, "bucket", "salt")
+            todo.repartition(parts, cell_partition_key(cell, parts))
             .sortWithinPartitions("bucket", "salt", "term", "docid")
-            .mapInPandas(
+            .mapInArrow(
                 lambda it: _encode_partition(it, block_size), BLOCK_SCHEMA
             )
         )
@@ -954,9 +994,7 @@ def build_index(
             ),
             PACKED_SCHEMA,
         )
-        blocks = cells.repartition(parts, "bucket", "salt").mapInPandas(
-            lambda it: _encode_cells(it, block_size), BLOCK_SCHEMA
-        )
+        blocks = _cell_blocks(cells, num_salts, parts, block_size)
     conf_key = "spark.sql.sources.partitionOverwriteMode"
     prev_mode = spark.conf.get(conf_key, None)
     spark.conf.set(conf_key, "dynamic")
@@ -970,9 +1008,10 @@ def build_index(
         # df = sum(n) and cf = sum(sum_tf) are exact: every posting
         # lands in exactly one block.
         if _bucket_dirs(pdir):
-            meta = spark.read.parquet(pdir).select(
-                "bucket", "term", "n", "sum_tf"
-            )
+            # a known schema: inferring it costs a footer-reading job
+            meta = spark.read.schema(
+                "bucket int, term string, n int, sum_tf long"
+            ).parquet(pdir)
             termstats = meta.groupBy("bucket", "term").agg(
                 F.sum("n").alias("df"), F.sum("sum_tf").alias("cf")
             )
@@ -991,7 +1030,8 @@ def build_index(
         # per-bucket metrics for the lineage manifests and - summed
         # driver-side over <= num_buckets rows - the corpus totals
         rows = (
-            spark.read.parquet(ts_dir)
+            spark.read.schema("bucket int, df long, cf long")
+            .parquet(ts_dir)
             .groupBy("bucket")
             .agg(
                 F.sum("cf").alias("cf"),

@@ -17,9 +17,10 @@ import time
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import SparkSession, functions as F
 
-from .build import BLOCK_SCHEMA, _atomic_json
+from .build import _atomic_json
 from .codec import decode_positions, decode_varints, delta_decode
 from .streaming import _rebuild_stats
 from .tombstones import (
@@ -259,7 +260,7 @@ def _decode_to_cells(batches, flush_at: int = 500_000, deleted=None):
             n_tot, ul, _ud, xs, ns_, idp, tfp, dlp, plp, pp = acc
             rp.append(
                 _pack_cell_idx(
-                    ul,
+                    pa.array(ul, pa.binary()),
                     np.repeat(
                         np.asarray(xs, np.int32),
                         np.asarray(ns_, np.int64),
@@ -380,7 +381,7 @@ def compact_index(
         spark.sparkContext.defaultParallelism * 4,
     )
 
-    from .build import PACKED_SCHEMA, _encode_cells
+    from .build import PACKED_SCHEMA, _cell_blocks
 
     postings = _read_postings_mixed(spark, index_dir)
     # SNAPSHOT the tombstone files: deletes arriving during the (long)
@@ -429,9 +430,7 @@ def compact_index(
     ).withColumn("epoch", epoch_col).mapInPandas(
         lambda it: _decode_to_cells(it, deleted=deleted), PACKED_SCHEMA
     )
-    blocks = cells.repartition(parts, "bucket", "salt").mapInPandas(
-        lambda it: _encode_cells(it, block_size), BLOCK_SCHEMA
-    )
+    blocks = _cell_blocks(cells, stats["num_salts"], parts, block_size)
     epochs = sorted(stats.get("epochs", [])) or [0]
     new_epoch = epochs[-1]
     tmp_postings = os.path.join(index_dir, "_compact_postings")
@@ -742,7 +741,7 @@ def merge_epochs(
     pdir = os.path.join(index_dir, "postings")
     tdir = os.path.join(index_dir, "termstats")
 
-    from .build import PACKED_SCHEMA, _encode_cells
+    from .build import PACKED_SCHEMA, _cell_blocks
 
     sel_paths = [
         p
@@ -772,9 +771,7 @@ def merge_epochs(
         ).withColumn("epoch", epoch_col).mapInPandas(
             lambda it: _decode_to_cells(it, deleted=deleted), PACKED_SCHEMA
         )
-        blocks = cells.repartition(parts, "bucket", "salt").mapInPandas(
-            lambda it: _encode_cells(it, block_size), BLOCK_SCHEMA
-        )
+        blocks = _cell_blocks(cells, stats["num_salts"], parts, block_size)
         tmp_postings = os.path.join(index_dir, "_merge_postings")
         shutil.rmtree(tmp_postings, ignore_errors=True)
         blocks.write.mode("overwrite").partitionBy("bucket").parquet(

@@ -35,10 +35,12 @@ from .build import (
     PACKED_SCHEMA,
     _atomic_json,
     _bucket_dirs,
+    _cell_blocks,
     _encode_cells,
     _packed_postings_gen,
     _with_docid,
 )
+from .xxh64 import cell_partition_key
 
 
 def _stats_path(index_dir: str) -> str:
@@ -205,9 +207,10 @@ def append_index_batch(
         # (tiny) encoded blocks into one output file; the extra
         # funnel shuffle moves kilobytes and replaces a 64-file
         # commit with a single rename
+        nred = max(1, num_buckets // 4)
         blocks = (
-            cells.repartition(max(1, num_buckets // 4), "bucket")
-            .mapInPandas(
+            cells.repartition(nred, cell_partition_key(F.col("bucket"), nred))
+            .mapInArrow(
                 lambda it: _encode_cells(it, block_size), BLOCK_SCHEMA
             )
             .repartition(1)
@@ -222,18 +225,11 @@ def append_index_batch(
     else:
         from pyspark import StorageLevel
 
+        parts = min(
+            num_buckets * num_salts, spark.sparkContext.defaultParallelism * 2
+        )
         blocks = (
-            cells.repartition(
-                min(
-                    num_buckets * num_salts,
-                    spark.sparkContext.defaultParallelism * 2,
-                ),
-                "bucket",
-                "salt",
-            )
-            .mapInPandas(
-                lambda it: _encode_cells(it, block_size), BLOCK_SCHEMA
-            )
+            _cell_blocks(cells, num_salts, parts, block_size)
             .withColumn("epoch", F.lit(epoch))
             # kept for the termstats derivation below: re-reading data
             # that was written milliseconds ago is pure fixed cost

@@ -134,6 +134,121 @@ def salt_partition_count(num_salts: int) -> int:
     return num_salts
 
 
+@functools.lru_cache(maxsize=64)
+def partition_keys(parts: int) -> tuple[int, ...]:
+    """``keys[p]`` is the smallest int that Spark's hash partitioning
+    (``pmod(Murmur3(int), parts)``) sends to partition ``p``: a
+    key->partition table that lets a shuffle place id ``c`` on
+    partition ``c % parts`` exactly (:func:`cell_partition_key`)."""
+    keys: list = [None] * parts
+    left = parts
+    k = 0
+    while left:
+        p = pmod(spark_mmh3_int(k), parts)
+        if keys[p] is None:
+            keys[p] = k
+            left -= 1
+        k += 1
+    return tuple(keys)
+
+
+def cell_partition_key(cell, parts: int):
+    """Shuffle key for ``repartition(parts, key)`` that sends the int
+    id column ``cell`` to partition ``cell % parts``: the id picks its
+    partition's entry of :func:`partition_keys` through a literal
+    array, evaluated in the JVM.  Hashing (bucket, salt) directly put
+    several cells on one reducer and left others idle (4 of 16 build
+    tasks got 4 cells / none); with this map every partition gets
+    floor or ceil of ids/parts."""
+    from pyspark.sql import functions as F
+
+    keys = F.array(*[F.lit(k) for k in partition_keys(parts)])
+    return F.element_at(keys, cell % parts + 1).cast("int")
+
+
+def spark_xxhash64_str_vec(data, offsets):
+    """Vectorized :func:`spark_xxhash64_str` over many UTF-8 strings
+    in Arrow string layout: ``data`` holds the concatenated bytes and
+    string ``i`` is ``data[offsets[i]:offsets[i + 1]]``.  Every XXH64
+    step runs as uint64 numpy lanes over the strings that still have
+    input (32-byte stripes, then 8-, 4- and 1-byte tails, then the
+    avalanche); unaligned 8/4-byte reads are strided views over a
+    zero-padded copy of ``data``.  Bit-identical to the scalar
+    (tested for every length 0..70 and against ``F.xxhash64``).
+    Returns signed int64."""
+    import numpy as np
+
+    P1 = np.uint64(_P1)
+    P2 = np.uint64(_P2)
+    P3 = np.uint64(_P3)
+    P4 = np.uint64(_P4)
+    P5 = np.uint64(_P5)
+
+    def rotl(x, r):
+        return (x << np.uint64(r)) | (x >> np.uint64(64 - r))
+
+    def rnd(acc, x):
+        return rotl(acc + x * P2, 31) * P1
+
+    offs = np.asarray(offsets, np.int64)
+    starts = offs[:-1] - offs[0]
+    lens = np.diff(offs)
+    raw = np.frombuffer(data, np.uint8)[offs[0] : offs[-1]]
+    buf = np.zeros(raw.size + 8, np.uint8)
+    buf[: raw.size] = raw
+    # element i of u64/u32 reads buf[i:i+8] / buf[i:i+4], little-endian
+    u64 = np.ndarray((raw.size + 1,), "<u8", buf, 0, (1,))
+    u32 = np.ndarray((raw.size + 1,), "<u4", buf, 0, (1,))
+
+    h = np.full(lens.size, (42 + _P5) & _M, np.uint64)
+    nstripes = lens // 32
+    pos = starts + nstripes * 32
+    rem = lens - nstripes * 32
+    with np.errstate(over="ignore"):
+        big = np.flatnonzero(nstripes)
+        if big.size:
+            s0 = starts[big]
+            ns = nstripes[big]
+            v = [
+                np.full(big.size, (42 + a) & _M, np.uint64)
+                for a in (_P1 + _P2, _P2, 0, -_P1)
+            ]
+            for k in range(int(ns.max())):
+                a = np.flatnonzero(ns > k)
+                base = s0[a] + 32 * k
+                for j in range(4):
+                    v[j][a] = rnd(v[j][a], u64[base + 8 * j])
+            hb = rotl(v[0], 1) + rotl(v[1], 7) + rotl(v[2], 12) + rotl(v[3], 18)
+            for vj in v:
+                hb = (hb ^ rnd(np.uint64(0), vj)) * P1 + P4
+            h[big] = hb
+        h += lens.astype(np.uint64)
+        for _ in range(3):  # at most three 8-byte words after the stripes
+            a = np.flatnonzero(rem >= 8)
+            if not a.size:
+                break
+            h[a] = rotl(h[a] ^ rnd(np.uint64(0), u64[pos[a]]), 27) * P1 + P4
+            pos[a] += 8
+            rem[a] -= 8
+        a = np.flatnonzero(rem >= 4)
+        h[a] = rotl(h[a] ^ (u32[pos[a]].astype(np.uint64) * P1), 23) * P2 + P3
+        pos[a] += 4
+        rem[a] -= 4
+        for _ in range(3):
+            a = np.flatnonzero(rem > 0)
+            if not a.size:
+                break
+            h[a] = rotl(h[a] ^ (buf[pos[a]].astype(np.uint64) * P5), 11) * P1
+            pos[a] += 1
+            rem[a] -= 1
+        h ^= h >> np.uint64(33)
+        h *= P2
+        h ^= h >> np.uint64(29)
+        h *= P3
+        h ^= h >> np.uint64(32)
+    return h.view(np.int64)
+
+
 def spark_xxhash64_long_vec(v):
     """Vectorized :func:`spark_xxhash64_long` over an int64 numpy
     array (one fixed 8-byte lane: the XXH64 short path specializes to

@@ -59,6 +59,20 @@ def _random_posting_rows(rng, n_terms, max_post):
     )
 
 
+def _arrow_batches(frames):
+    """pandas posting/cell frames -> the Arrow batches mapInArrow feeds."""
+    import pyarrow as pa
+
+    return iter([pa.RecordBatch.from_pandas(f, preserve_index=False) for f in frames])
+
+
+def _blocks_frame(batches):
+    """An encoder's Arrow block batches -> one pandas frame."""
+    import pyarrow as pa
+
+    return pa.Table.from_batches(list(batches)).to_pandas()
+
+
 def _decode_block_rows(out):
     rec = []
     for r in out.itertuples(index=False):
@@ -79,8 +93,6 @@ def test_encode_partition_roundtrip_any_batching():
     batch split (incl. 1-row batches exercising the carry path)."""
     import random
 
-    import pandas as pd
-
     from pg_cjk_parser_spark.index.build import _encode_partition
 
     rng = random.Random(11)
@@ -94,9 +106,7 @@ def test_encode_partition_roundtrip_any_batching():
         )
         for chunk in (len(df), 333, 13):
             batches = [df.iloc[i:i + chunk] for i in range(0, len(df), chunk)]
-            out = pd.concat(
-                list(_encode_partition(iter(batches), bs)), ignore_index=True
-            )
+            out = _blocks_frame(_encode_partition(_arrow_batches(batches), bs))
             assert sorted(_decode_block_rows(out)) == want
             gb = out.groupby(["bucket", "salt", "term"])["block_id"].apply(
                 lambda s_: sorted(s_) == list(range(len(s_)))
@@ -120,9 +130,7 @@ def test_encode_cells_matches_row_encoder():
     rng = random.Random(23)
     df = _random_posting_rows(rng, 60, 120)
     # rows path
-    row_out = pd.concat(
-        list(_encode_partition(iter([df]), 32)), ignore_index=True
-    )
+    row_out = _blocks_frame(_encode_partition(_arrow_batches([df]), 32))
     # packed path: split postings into 3 arbitrary map chunks per cell
     cells = {}
     for r in df.sample(frac=1.0, random_state=7).itertuples(index=False):
@@ -137,9 +145,7 @@ def test_encode_cells_matches_row_encoder():
         (b, s, _pack_cell(*c)) for (b, s, _), c in sorted(cells.items())
     ]
     pdf = pd.DataFrame(rows, columns=["bucket", "salt", "payload"])
-    cell_out = pd.concat(
-        list(_encode_cells(iter([pdf]), 32)), ignore_index=True
-    )
+    cell_out = _blocks_frame(_encode_cells(_arrow_batches([pdf]), 32))
     key = ["bucket", "salt", "term", "block_id"]
     a = row_out.sort_values(key, ignore_index=True)
     c = cell_out.sort_values(key, ignore_index=True)

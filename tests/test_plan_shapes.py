@@ -196,3 +196,40 @@ def test_link_graph_single_scan_single_exchange(spark, tmp_path_factory):
     assert _count(plan, "Scan parquet") == 1, plan
     assert _count(plan, "Exchange") == 1, plan
     assert "partial_count" in plan, plan
+
+
+def test_build_index_cell_exchange_then_map_in_arrow(
+    spark, docs, tmp_path, monkeypatch
+):
+    """The packed build is tokenizer MapInPandas -> ONE Exchange keyed
+    by the collision-free cell map -> MapInArrow block encode (no
+    pandas round trip on the reduce side, no hash of (bucket, salt))."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from pg_cjk_parser_spark.index.build import build_index
+
+    plans = []
+    write = DataFrameWriter.parquet
+
+    def spy(self, path, *args, **kwargs):
+        plans.append(_plan(self._df))
+        return write(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    build_index(
+        spark, docs, str(tmp_path / "idx"), docid_col="doc_id",
+        num_buckets=8, num_salts=4,
+    )
+    plan = plans[0]  # the postings write
+    for op in ("MapInPandas", "Exchange", "MapInArrow"):
+        assert _count(plan, op) == 1, plan
+
+    def op_id(op):
+        return int(re.search(rf"^\((\d+)\) {op}\s*$", plan, re.M).group(1))
+
+    assert op_id("MapInPandas") < op_id("Exchange") < op_id("MapInArrow"), plan
+    key = re.search(
+        r"^\(\d+\) Exchange\s*\n(?:.+\n)*?Arguments: (.+)$", plan, re.M
+    ).group(1)
+    assert key.startswith("hashpartitioning(element_at("), key
+    assert not re.match(r"hashpartitioning\(bucket#\d+, salt#\d+", key), key

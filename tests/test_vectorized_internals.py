@@ -1,6 +1,10 @@
-"""Focused differentials for the round-6 vectorized internals:
+"""Focused differentials for the vectorized internals:
 
-- spark_xxhash64_long_vec must be bit-identical to the scalar port;
+- spark_xxhash64_long_vec and spark_xxhash64_str_vec must be
+  bit-identical to the scalar ports (and to Spark's xxhash64);
+- cell_partition_key must spread real cell rows evenly over the
+  shuffle partitions;
+- the Arrow block encoders must yield exactly BLOCK_SCHEMA's Arrow form;
 - the vectorized _packed_postings_gen must emit the same postings as
   a straightforward per-doc reference aggregation;
 - compaction's whole-batch fast decode must match the exact per-block
@@ -12,20 +16,26 @@ import random
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 
 from pg_cjk_parser_spark.index.build import (
-    _blob_slices,
+    BLOCK_ARROW_SCHEMA,
+    BLOCK_SCHEMA,
+    PACKED_SCHEMA,
+    _binary_parts,
     _packed_postings_gen,
     _unpack_cell,
 )
 from pg_cjk_parser_spark.index.xxh64 import (
+    cell_partition_key,
     pmod,
     salt_partition_count,
     spark_mmh3_int,
     spark_xxhash64_long,
     spark_xxhash64_long_vec,
     spark_xxhash64_str,
+    spark_xxhash64_str_vec,
 )
 
 
@@ -37,6 +47,158 @@ def test_xxh64_long_vec_bit_identity():
     out = spark_xxhash64_long_vec(np.array(vals, np.int64))
     for i, v in enumerate(vals):
         assert int(out[i]) == spark_xxhash64_long(v)
+
+
+def _str_hash_vec(arr):
+    return spark_xxhash64_str_vec(*_binary_parts(arr))
+
+
+@pytest.fixture(scope="module")
+def bench_pdf():
+    """docid/text of a benchmark-generator corpus (perfbench/gen.py:
+    multilingual Zipf text)."""
+    import importlib.util
+    import pathlib
+    import sys
+
+    path = pathlib.Path(__file__).resolve().parents[1] / "perfbench" / "gen.py"
+    spec = importlib.util.spec_from_file_location("perfbench_gen", path)
+    gen = sys.modules.setdefault(spec.name, importlib.util.module_from_spec(spec))
+    spec.loader.exec_module(gen)  # dataclasses need the module registered
+    corpus = gen.make_corpus(5, 600, boilerplate_share=0.05)
+    return pd.DataFrame(
+        {"docid": np.asarray(corpus.doc_id, np.int64), "text": corpus.text}
+    )
+
+
+def _hash_strings(pdf):
+    from pg_cjk_parser_spark.kernel.tokenizer import lexemes
+
+    rng = random.Random(3)
+    chars = ["a", "Z", "7", "é", "ß", "漢", "字", "한", "국", "か", "ナ", "😀", "𠀋"]
+    mixed = []
+    for n in range(71):  # every UTF-8 byte length 0..70, mixed widths
+        s_ = ""
+        while len(s_.encode()) < n:
+            c = rng.choice(chars)
+            if len((s_ + c).encode()) > n:
+                c = "x"
+            s_ += c
+        mixed.append(s_)
+    return (
+        ["x" * n for n in range(71)]
+        + mixed
+        + ["漢" * n for n in range(25)]
+        + ["한국어", "개인정보보호", "ひらがな", "カタカナ", "ドラえもん",
+           "のび太", "😀", "👨‍👩‍👧", "🀄" * 9, "「」", "漢字とカナmixed123"]
+        + sorted({t for text in pdf["text"] for t, _ in lexemes(text)})
+    )
+
+
+def test_xxh64_str_vec_bit_identity(bench_pdf):
+    strings = _hash_strings(bench_pdf)
+    arr = pa.array(strings, pa.string())
+    assert _str_hash_vec(arr).tolist() == [spark_xxhash64_str(x) for x in strings]
+    # a sliced array (non-zero Arrow offset) hashes its own strings
+    sl = arr.slice(40, 90)
+    assert _str_hash_vec(sl).tolist() == [
+        spark_xxhash64_str(x) for x in strings[40:130]
+    ]
+
+
+def test_xxh64_str_vec_matches_spark(spark, bench_pdf):
+    from pyspark.sql import functions as F
+
+    sample = random.Random(9).sample(_hash_strings(bench_pdf), 150)
+    rows = spark.createDataFrame(
+        [(i, x) for i, x in enumerate(sample)], "i int, s string"
+    ).select("i", F.xxhash64("s").alias("h")).collect()
+    got = _str_hash_vec(pa.array(sample, pa.string()))
+    for r in rows:
+        assert int(got[r.i]) == r.h, sample[r.i]
+
+
+@pytest.mark.parametrize(
+    "nb, ns, parts",
+    [(8, 4, 16), (64, 4, 128), (64, 4, 256), (8, 2, 3), (4, 4, 64)],
+)
+def test_cell_partition_key_balances_cells(spark, bench_pdf, nb, ns, parts):
+    """Partition histogram of real cell rows: every partition gets
+    floor or ceil of cells/parts, and cell c lands on c % parts."""
+    from pyspark.sql import functions as F
+
+    cells_pdf = pd.concat(
+        list(_packed_postings_gen(iter([bench_pdf]), nb, ns)),
+        ignore_index=True,
+    )
+    assert len(set(zip(cells_pdf["bucket"], cells_pdf["salt"]))) == nb * ns
+    cell = F.col("bucket") * ns + F.col("salt")
+    rows = (
+        spark.createDataFrame(cells_pdf, PACKED_SCHEMA)
+        .repartition(parts, cell_partition_key(cell, parts))
+        .select(F.spark_partition_id().alias("p"), cell.alias("c"))
+        .distinct()
+        .collect()
+    )
+    assert sorted((r.c, r.p) for r in rows) == [
+        (c, c % parts) for c in range(nb * ns)
+    ]
+    per = np.bincount([r.p for r in rows], minlength=parts)
+    lo, hi = (nb * ns) // parts, -(-(nb * ns) // parts)
+    assert per.min() >= lo and per.max() <= hi, per
+
+
+def test_encoders_yield_block_arrow_schema(spark, corpus_pdf):
+    """Both block encoders yield batches typed exactly as Spark's Arrow
+    form of BLOCK_SCHEMA (mapInArrow rejects any other types)."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from pg_cjk_parser_spark.index.build import (
+        _encode_cells,
+        _encode_partition,
+        _postings_gen,
+    )
+
+    want = to_arrow_schema(spark.createDataFrame([], BLOCK_SCHEMA).schema)
+    assert BLOCK_ARROW_SCHEMA == want
+    cells = [
+        pa.RecordBatch.from_pandas(f, preserve_index=False)
+        for f in _packed_postings_gen(iter([corpus_pdf]), 8, 2)
+    ]
+    out = list(_encode_cells(iter(cells), 32))
+    assert out and all(b.schema == want for b in out)
+
+    rows = pd.concat(list(_postings_gen(iter([corpus_pdf.iloc[:300]]))))
+    rows["bucket"] = [pmod(spark_xxhash64_str(t), 8) for t in rows["term"]]
+    rows["salt"] = spark_xxhash64_long_vec(rows["docid"].to_numpy()) % 2
+    rows = rows.sort_values(["bucket", "salt", "term", "docid"], ignore_index=True)
+    batches = [
+        pa.RecordBatch.from_pandas(rows.iloc[i : i + 500], preserve_index=False)
+        for i in range(0, len(rows), 500)
+    ]
+    out = list(_encode_partition(iter(batches), 32))
+    assert out and all(b.schema == want for b in out)
+    assert sum(int(b.column("n").to_numpy().sum()) for b in out) == len(rows)
+
+
+def test_block_batches_split_at_byte_cap(monkeypatch, corpus_pdf):
+    """Output batches stay under the binary byte cap (int32 offsets)
+    and splitting them changes no block."""
+    from pg_cjk_parser_spark.index import build
+
+    cells = [
+        pa.RecordBatch.from_pandas(f, preserve_index=False)
+        for f in _packed_postings_gen(iter([corpus_pdf]), 4, 2)
+    ]
+    whole = list(build._encode_cells(iter(cells), 32))
+    monkeypatch.setattr(build, "_BATCH_BYTES", 4096)
+    split = list(build._encode_cells(iter(cells), 32))
+    assert len(split) > 4 * len(whole)
+    bins = ("docids", "tfs", "doclens", "positions")
+    for b in split:
+        size = sum(len(b.column(c).buffers()[2] or b"") for c in bins)
+        assert b.num_rows == 1 or size <= 4096
+    assert pa.Table.from_batches(split).equals(pa.Table.from_batches(whole))
 
 
 def test_mmh3_int_matches_spark_hash(spark):
@@ -56,6 +218,11 @@ def test_salt_partition_count_is_collision_free():
         assert p >= s
         mods = {pmod(spark_mmh3_int(x), p) for x in range(s)}
         assert len(mods) == s, (s, p)
+
+
+def _blob_slices(blob: bytes, lens: np.ndarray) -> list[bytes]:
+    offs = np.concatenate(([0], np.cumsum(lens))).tolist()
+    return [blob[offs[i]:offs[i + 1]] for i in range(len(lens))]
 
 
 def _cells_to_postings(frames):
@@ -161,9 +328,9 @@ def test_compact_fast_decode_matches_exact(tmp_path, corpus_pdf):
         list(_packed_postings_gen(iter([corpus_pdf]), 8, 2)),
         ignore_index=True,
     )
-    blocks = pd.concat(
-        list(_encode_cells(iter([cells]), 32)), ignore_index=True
-    )
+    blocks = pa.Table.from_batches(
+        list(_encode_cells(iter([pa.RecordBatch.from_pandas(cells, preserve_index=False)]), 32))
+    ).to_pandas()
     blocks["epoch"] = 0
     fast = _cells_to_postings(
         _decode_to_cells(iter([blocks]), deleted=None)
