@@ -29,17 +29,11 @@ Pipeline (all DataFrame/Arrow; designed for 1000-executor scale):
    no per-block Python objects and no pandas conversion.
 4. **Write** parquet partitioned by ``bucket`` (queries touch at most
    |q| buckets via partition pruning) + per-bucket ``_manifest.json``
-   lineage enabling checkpoint resume: on resume, buckets with a valid
-   manifest are skipped and the rest are rebuilt with dynamic
-   partition overwrite.  Termstats and corpus totals derive from the
-   written blocks' metadata, read with a known schema (no inference
-   job).
-
-Resume and ``keep_staging`` take a row-level path instead of steps
-1-3: the exploded postings (:func:`explode_postings`, one row per
-(doc, term)) are staged to parquet once so a resumed build never
-re-tokenizes, then the same cell exchange, a sort, and ``mapInArrow``
-over the streaming row encoder :func:`_encode_partition`.
+   lineage enabling checkpoint resume: on resume, the cells of buckets
+   with a valid manifest are filtered out before the cell exchange and
+   the rest are rebuilt with dynamic partition overwrite.  Termstats
+   and corpus totals derive from the written blocks' metadata, read
+   with a known schema (no inference job).
 """
 
 from __future__ import annotations
@@ -104,91 +98,6 @@ def _valid_buckets(index_dir: str, fingerprint: str) -> set[int]:
     return ok
 
 
-POSTING_ROW_SCHEMA = (
-    "docid long, doclen int, term string, tf int, positions binary"
-)
-
-
-def _enc_pos(ps: list[int]) -> bytes:
-    """Per-(doc,term) positions blob: varint [npos, delta positions...].
-
-    Same wire format as codec.encode_positions for a single doc, but
-    built with a plain-Python loop - positions lists are tiny (tf is
-    almost always 1-3) so this beats a NumPy round-trip per call.
-    """
-    out = bytearray()
-    n = len(ps)
-    while n >= 128:
-        out.append((n & 127) | 128)
-        n >>= 7
-    out.append(n)
-    prev = 0
-    for p in ps:
-        d = p - prev
-        prev = p
-        while d >= 128:
-            out.append((d & 127) | 128)
-            d >>= 7
-        out.append(d)
-    return bytes(out)
-
-
-def _postings_gen(batches, normalize_zht: bool = False):
-    """Per-doc tokenize + aggregate, emitting flat pre-exploded rows.
-
-    Flat str/int/binary columns keep the Arrow python->JVM transfer on
-    the fast path; nested array<struct<..array<int>>> output measured
-    ~6x slower and degraded under high parallelism.
-    """
-    from ..kernel.tokenizer import lexemes
-
-    norm = None
-    if normalize_zht:
-        from ..functions.zht2zhs import zht2zhs as norm
-
-    docid_out: list[int] = []
-    dl_out: list[int] = []
-    term_out: list[str] = []
-    tf_out: list[int] = []
-    pos_out: list[bytes] = []
-
-    def frame():
-        return pd.DataFrame(
-            {
-                "docid": np.array(docid_out, dtype=np.int64),
-                "doclen": np.array(dl_out, dtype=np.int32),
-                "term": term_out,
-                "tf": np.array(tf_out, dtype=np.int32),
-                "positions": pos_out,
-            }
-        )
-
-    for pdf in batches:
-        for docid, text in zip(pdf["docid"].tolist(), pdf["text"].tolist()):
-            if norm is not None and text is not None:
-                text = norm(text)
-            lex = lexemes(text) if text is not None else []
-            agg: dict[str, list[int]] = {}
-            for term, pos in lex:
-                l = agg.get(term)
-                if l is None:
-                    agg[term] = [pos]
-                else:
-                    l.append(pos)
-            dl = len(lex)
-            for term, ps in agg.items():
-                docid_out.append(docid)
-                dl_out.append(dl)
-                term_out.append(term)
-                tf_out.append(len(ps))
-                pos_out.append(_enc_pos(ps))
-        if len(docid_out) >= 200_000:
-            yield frame()
-            docid_out, dl_out, term_out, tf_out, pos_out = [], [], [], [], []
-    if docid_out:
-        yield frame()
-
-
 PACKED_SCHEMA = "bucket int, salt int, payload binary"
 
 
@@ -220,29 +129,6 @@ def _pack_cell_idx(
             ublob[uoffs[0] : uoffs[-1]].tobytes(),
             pos_blob,
         )
-    )
-
-
-def _pack_cell(terms_b, docids, tfs, dls, poss) -> bytes:
-    """Per-posting-terms convenience packer (tests / small callers):
-    dedupes the term list in first-occurrence order and emits the
-    same wire format as :func:`_pack_cell_idx`."""
-    seen: dict[bytes, int] = {}
-    tidx = np.empty(len(terms_b), np.int32)
-    for i, t in enumerate(terms_b):
-        j = seen.get(t)
-        if j is None:
-            j = len(seen)
-            seen[t] = j
-        tidx[i] = j
-    return _pack_cell_idx(
-        pa.array(list(seen), pa.binary()),
-        tidx,
-        np.array(docids, np.int64),
-        np.array(tfs, np.int32),
-        np.array(dls, np.int32),
-        np.fromiter(map(len, poss), np.int32, len(poss)),
-        b"".join(poss),
     )
 
 
@@ -284,7 +170,8 @@ def _packed_postings_gen(batches, num_buckets, num_salts, flush_at=500_000,
 
     bucket/salt use numpy ports of Spark's xxhash64 (bit-identical to
     F.xxhash64; tests/test_xxh64.py, tests/test_vectorized_internals.py),
-    so packed and staged builds address the same shards.
+    so every index writer addresses the same shards as a Spark-side
+    ``pmod(xxhash64(...))``.
 
     The post-tokenize aggregation is vectorized per Arrow batch: the
     batch's (term, position) pairs factorize to integer codes (C
@@ -306,8 +193,8 @@ def _packed_postings_gen(batches, num_buckets, num_salts, flush_at=500_000,
     work), and flush time delta-encodes + LEB128-encodes EVERY cell's
     stream in one vectorized pass (codec.encode_varints_offsets),
     slicing the shared byte buffer back into per-cell blobs by offset
-    - same wire format as the per-doc loop produced (differential
-    test: identical final index blocks)."""
+    - each posting's bytes are ``codec.encode_positions([its list])``
+    (differential test against a per-doc reference aggregation)."""
     from ..kernel.tokenizer import lexemes
     from .codec import encode_varints_offsets
     from .xxh64 import spark_xxhash64_long_vec, spark_xxhash64_str_vec
@@ -519,12 +406,13 @@ def _encode_cells(batches, block_size: int):
     """Reduce side of the packed shuffle (``mapInArrow``): gather each
     (bucket, salt) cell's payloads, unpack, sort by (term, docid) with
     integer term ranks (numpy lexsort; no wide-unicode arrays), and
-    yield the cell's posting blocks as Arrow batches via the same
-    columnar block slicer as the row path.
+    yield the cell's posting blocks as Arrow batches via the columnar
+    block slicer :func:`_slice_blocks`.
 
-    Memory: one reduce partition's payloads live in RAM; size
-    num_salts (docid-disjoint shards) so cells fit - the salt count is
-    the scale lever, exactly as for head-term skew."""
+    Memory: one reduce partition's payloads live in RAM, and it encodes
+    one cell at a time; size num_salts (docid-disjoint shards) so cells
+    fit - the salt count is the scale lever, exactly as for head-term
+    skew."""
     bs = block_size
     cells: dict[tuple[int, int], list[bytes]] = {}
     for rb in batches:
@@ -562,14 +450,7 @@ def _encode_cells(batches, block_size: int):
         # per-posting bytes objects
         bigbuf = np.frombuffer(b"".join([x[7] for x in parts]), np.uint8)
         starts = np.cumsum(plen) - plen
-        lens_o = plen[idx]
-        starts_o = starts[idx]
-        p_ends = np.cumsum(lens_o)
-        total_pb = int(p_ends[-1]) if lens_o.size else 0
-        out_i = np.repeat(starts_o - (p_ends - lens_o), lens_o) + np.arange(
-            total_pb, dtype=np.int64
-        )
-        pos_bytes = bigbuf[out_i]
+        pos_bytes, p_ends = _gather_bytes(bigbuf, starts[idx], plen[idx])
 
         n = len(rs_)
         change = np.empty(n, dtype=bool)
@@ -596,28 +477,6 @@ def _with_docid(docs: DataFrame, docid_col: str | None) -> DataFrame:
     if docid_col is None:
         return docs.withColumn("docid", F.xxhash64(F.col("url")))
     return docs.withColumn("docid", F.col(docid_col).cast("long"))
-
-
-def explode_postings(
-    docs: DataFrame,
-    docid_col: str | None,
-    text_col: str,
-    normalize_zht: bool = False,
-) -> DataFrame:
-    """(docid, doclen, term, tf, positions:binary) - one row per (doc, term).
-
-    Doc-id density matters: delta-varint docid blocks are ~2.4x smaller
-    (and build ~1.4x faster) with dense/clustered int64 ids than with
-    random hash ids.  Pass a dense ``docid_col`` when the corpus has
-    one (ingest sequence, crawl timestamp); ``xxhash64(url)`` is the
-    fallback when only urls identify documents.
-    """
-    sel = _with_docid(docs, docid_col).select(
-        "docid", F.col(text_col).alias("text")
-    )
-    return sel.mapInPandas(
-        lambda it: _postings_gen(it, normalize_zht), POSTING_ROW_SCHEMA
-    )
 
 
 # BLOCK_SCHEMA as Arrow: what the encoders' batches must carry exactly
@@ -649,6 +508,18 @@ def _binary_parts(arr) -> tuple[np.ndarray, np.ndarray]:
     if dbuf is None:  # no value has a byte
         return np.empty(0, np.uint8), offs.astype(np.int64)
     return np.frombuffer(dbuf, np.uint8), offs.astype(np.int64)
+
+
+def _gather_bytes(buf, starts, lens) -> tuple[np.ndarray, np.ndarray]:
+    """Byte ranges ``buf[starts[i]:starts[i] + lens[i]]`` in the given
+    order as ONE uint8 array (one fancy-index gather, no per-range
+    objects), plus each range's end offset in it."""
+    ends = np.cumsum(lens)
+    total = int(ends[-1]) if ends.size else 0
+    idx = np.repeat(starts - (ends - lens), lens) + np.arange(
+        total, dtype=np.int64
+    )
+    return buf[idx], ends
 
 
 def _binary_array(data, lens) -> pa.Array:
@@ -726,117 +597,6 @@ def _slice_blocks(bucket, salt, term, bids, bstarts, bends, d, t, dl, pos):
     return out
 
 
-def _emit_final_group(key, bid0, d, t, dl, pos, bs):
-    """Blocks of one complete group (all, incl. the trailing partial
-    one); ``pos`` is a ``(uint8 bytes, int64 lengths)`` pair."""
-    n = len(d)
-    if n == 0:
-        return []
-    bstarts = np.arange(0, n, bs, dtype=np.int64)
-    bends = np.minimum(bstarts + bs, n)
-    nb = bstarts.size
-    return _slice_blocks(
-        np.full(nb, key[0], np.int32), np.full(nb, key[1], np.int32),
-        pa.array([key[2]] * nb, pa.string()), bstarts // bs + bid0,
-        bstarts, bends, d, t, dl, (pos[0], np.cumsum(pos[1])),
-    )
-
-
-def _encode_partition(batches, block_size: int):
-    """Streaming block encoder over (bucket,salt,term,docid)-sorted
-    Arrow batches of posting rows (``mapInArrow``; resume/keep_staging
-    path).
-
-    Vectorized per Arrow batch, not per block: group/block boundaries,
-    per-block reductions (``reduceat``) and the three varint streams
-    (docid deltas, tfs, doclens) are each computed ONCE per batch and
-    sliced per block afterwards, so numpy call count is O(batches)
-    rather than O(blocks).  The trailing (possibly batch-spanning)
-    group is carried over with its running block_id so a head term
-    larger than a batch never materializes in full."""
-    bs = block_size
-    ckey = None     # carried tail group: key, next block_id, arrays
-    cblock = 0
-    cd = ct = cdl = cpb = cpl = None
-
-    for rb in batches:
-        nb_rows = rb.num_rows
-        if nb_rows == 0:
-            continue
-        b = rb.column("bucket").to_numpy()
-        s = rb.column("salt").to_numpy()
-        term = rb.column("term").to_numpy(zero_copy_only=False)
-        d = rb.column("docid").to_numpy().astype(np.int64, copy=False)
-        t = rb.column("tf").to_numpy().astype(np.int64)
-        dl = rb.column("doclen").to_numpy().astype(np.int64)
-        pb, po = _binary_parts(rb.column("positions"))
-        pb = pb[po[0] : po[-1]]
-        pl = np.diff(po)
-
-        change = np.empty(nb_rows, dtype=bool)
-        change[0] = True
-        change[1:] = (term[1:] != term[:-1]) | (s[1:] != s[:-1]) | (b[1:] != b[:-1])
-        gstarts = np.flatnonzero(change)
-        gkeys = [(int(b[i]), int(s[i]), term[i]) for i in gstarts.tolist()]
-
-        base0 = 0       # block_id base for group 0 (continuing carry)
-        carry_len = 0
-        if ckey is not None:
-            if gkeys[0] == ckey:
-                base0 = cblock
-                carry_len = len(cd)
-                if carry_len:
-                    d = np.concatenate((cd, d))
-                    t = np.concatenate((ct, t))
-                    dl = np.concatenate((cdl, dl))
-                    pb = np.concatenate((cpb, pb))
-                    pl = np.concatenate((cpl, pl))
-            else:
-                yield from _emit_final_group(
-                    ckey, cblock, cd, ct, cdl, (cpb, cpl), bs
-                )
-            ckey = None
-
-        n = nb_rows + carry_len
-        gstarts = gstarts + carry_len
-        if carry_len:
-            gstarts[0] = 0
-        gends = np.append(gstarts[1:], n)
-
-        # emit region: everything except the last group's trailing
-        # partial block (carried to the next batch)
-        last_lo = int(gstarts[-1])
-        E = last_lo + ((n - last_lo) // bs) * bs
-        pe = np.cumsum(pl[:E])
-        pbE = int(pe[-1]) if E else 0
-        if E > 0:
-            glens = gends - gstarts
-            ofs = np.arange(n, dtype=np.int64) - np.repeat(gstarts, glens)
-            bstart_all = np.flatnonzero((ofs % bs) == 0)
-            bstarts = bstart_all[bstart_all < E]
-            gid = np.searchsorted(gstarts, bstarts, side="right") - 1
-            bends = np.minimum(np.minimum(bstarts + bs, gends[gid]), E)
-            bids = (bstarts - gstarts[gid]) // bs
-            if base0:
-                bids = bids + np.where(gid == 0, base0, 0)
-            yield from _slice_blocks(
-                np.array([k[0] for k in gkeys], np.int32)[gid],
-                np.array([k[1] for k in gkeys], np.int32)[gid],
-                pa.array([k[2] for k in gkeys], pa.string()).take(gid),
-                bids, bstarts, bends, d[:E], t[:E], dl[:E], (pb, pe),
-            )
-
-        ckey = gkeys[-1]
-        cblock = int((E - last_lo) // bs) + (base0 if len(gstarts) == 1 else 0)
-        cd = d[E:].copy()
-        ct = t[E:].copy()
-        cdl = dl[E:].copy()
-        cpb = pb[pbE:].copy()
-        cpl = pl[E:].copy()
-    if ckey is not None:
-        yield from _emit_final_group(ckey, cblock, cd, ct, cdl, (cpb, cpl), bs)
-
-
 def _cell_blocks(cells: DataFrame, num_salts: int, parts: int, block_size: int):
     """Reduce side shared by build, append and compact: packed cell
     rows -> posting blocks.  One exchange that places cell
@@ -866,33 +626,39 @@ def build_index(
     resume: bool = False,
     fingerprint: str | None = None,
     num_partitions: int | None = None,
-    keep_staging: bool = False,
     n_docs: int | None = None,
     normalize_zht: bool = False,
 ) -> dict:
     """Build (or resume) the inverted index for ``docs``; returns stats.
+
+    ``docid_col`` names an integer doc-id column; ``None`` uses
+    ``xxhash64(url)``.  Doc-id density matters: delta-varint docid
+    blocks are ~2.4x smaller (and build ~1.4x faster) with
+    dense/clustered int64 ids than with random hash ids.  Pass a dense
+    ``docid_col`` when the corpus has one (ingest sequence, crawl
+    timestamp); ``xxhash64(url)`` is the fallback when only urls
+    identify documents.
+
+    ``resume=True`` keeps every bucket whose manifest carries
+    ``fingerprint`` and rebuilds the rest; the tokenizer pass still
+    reads the whole corpus, but only the missing buckets' cells are
+    shuffled, encoded and written.
 
     ``normalize_zht=True`` maps traditional->simplified CJK
     (cjk_zht2zhs) inside the tokenizer pass, so traditional and
     simplified spellings index to the same terms; the flag is recorded
     in stats.json and query routing applies the same normalization to
     query text automatically.
-
-    ``keep_staging=True`` retains the exploded-postings staging parquet
-    (skips re-tokenizing on resume at the cost of ~staged-corpus
-    storage); by default it is deleted after a successful build.
     """
     import hashlib
     import shutil
 
-    from .xxh64 import cell_partition_key
-
     os.makedirs(index_dir, exist_ok=True)
     if fingerprint is None:
-        # the fingerprint gates BOTH bucket-manifest resume and staging
-        # reuse, so it must identify the corpus, not just the layout:
-        # resuming after the input changed must invalidate everything
-        # rather than silently mix old staged postings with new docs.
+        # the fingerprint gates bucket-manifest resume, so it must
+        # identify the corpus, not just the layout: resuming after the
+        # input changed must rebuild every bucket rather than keep
+        # buckets built from the old docs next to ones from the new.
         if n_docs is None:
             n_docs = docs.count()
         try:
@@ -904,7 +670,7 @@ def build_index(
         else:
             # in-memory DataFrame: no input files to identify the corpus,
             # and doc count alone cannot distinguish two different
-            # same-sized corpora - so never reuse prior staging/buckets
+            # same-sized corpora - so never reuse prior buckets
             # (a caller who wants resume for an in-memory source passes
             # an explicit content-derived ``fingerprint``)
             src_h = "mem"
@@ -926,75 +692,32 @@ def build_index(
     t0 = time.time()
     pdir = os.path.join(index_dir, "postings")
     ts_dir = os.path.join(index_dir, "termstats")
-    staging = os.path.join(index_dir, "_staging_postings")
-
-    def exploded():
-        p = explode_postings(docs, docid_col, text_col, normalize_zht)
-        return p.withColumn(
-            "bucket", F.pmod(F.xxhash64("term"), F.lit(num_buckets)).cast("int")
-        ).withColumn(
-            "salt", F.pmod(F.xxhash64("docid"), F.lit(num_salts)).cast("int")
-        )
-
     if n_docs is None:
         n_docs = docs.count()
     parts = num_partitions or min(
         num_buckets * num_salts, spark.sparkContext.defaultParallelism * 4
     )
 
-    # The default path is fully fused AND packed: the tokenizer pass
-    # packs each (bucket, salt) cell's postings into one fat binary row
-    # per map chunk, the shuffle moves ~B*S rows per map task instead
-    # of one row per posting (the per-row Python<->JVM Arrow boundary
-    # measured ~5s per direction at 10M postings), and the reducer
-    # sorts + block-encodes in numpy and hands Arrow batches straight
-    # back to the JVM.  The row-level staging path is
-    # kept for resume (skip re-tokenizing completed buckets) and
-    # keep_staging.
-    if resume or keep_staging:
-        # staging is only reusable if it was built from the SAME corpus:
-        # _SUCCESS alone would happily resume onto stale postings after
-        # the input changed (same layout, different docs)
-        smeta_path = os.path.join(staging, "_staging_meta.json")
-
-        def _staging_ok() -> bool:
-            if not os.path.exists(os.path.join(staging, "_SUCCESS")):
-                return False
-            try:
-                with open(smeta_path) as f:
-                    return json.load(f).get("fingerprint") == fingerprint
-            except Exception:
-                return False
-
-        if not (resume and _staging_ok()):
-            exploded().write.mode("overwrite").parquet(staging)
-            with open(smeta_path, "w") as f:
-                json.dump({"fingerprint": fingerprint}, f)
-        src = spark.read.parquet(staging)
-        todo = src
-        if done:
-            todo = src.where(
-                ~F.col("bucket").isin([int(x) for x in sorted(done)])
-            )
-        cell = F.col("bucket") * num_salts + F.col("salt")
-        blocks = (
-            todo.repartition(parts, cell_partition_key(cell, parts))
-            .sortWithinPartitions("bucket", "salt", "term", "docid")
-            .mapInArrow(
-                lambda it: _encode_partition(it, block_size), BLOCK_SCHEMA
-            )
-        )
-    else:
-        sel = _with_docid(docs, docid_col).select(
-            "docid", F.col(text_col).alias("text")
-        )
-        cells = sel.mapInPandas(
-            lambda it: _packed_postings_gen(
-                it, num_buckets, num_salts, normalize_zht=normalize_zht
-            ),
-            PACKED_SCHEMA,
-        )
-        blocks = _cell_blocks(cells, num_salts, parts, block_size)
+    # Fully fused AND packed: the tokenizer pass packs each (bucket,
+    # salt) cell's postings into one fat binary row per map chunk, the
+    # shuffle moves ~B*S rows per map task instead of one row per
+    # posting (the per-row Python<->JVM Arrow boundary measured ~5s per
+    # direction at 10M postings), and the reducer sorts + block-encodes
+    # in numpy and hands Arrow batches straight back to the JVM.
+    sel = _with_docid(docs, docid_col).select(
+        "docid", F.col(text_col).alias("text")
+    )
+    cells = sel.mapInPandas(
+        lambda it: _packed_postings_gen(
+            it, num_buckets, num_salts, normalize_zht=normalize_zht
+        ),
+        PACKED_SCHEMA,
+    )
+    if done:
+        # resume: completed buckets' cells never reach the exchange, and
+        # dynamic partition overwrite leaves their files untouched
+        cells = cells.where(~F.col("bucket").isin(sorted(done)))
+    blocks = _cell_blocks(cells, num_salts, parts, block_size)
     conf_key = "spark.sql.sources.partitionOverwriteMode"
     prev_mode = spark.conf.get(conf_key, None)
     spark.conf.set(conf_key, "dynamic")
@@ -1090,6 +813,4 @@ def build_index(
                 "metrics": m,
             },
         )
-    if not keep_staging:
-        shutil.rmtree(staging, ignore_errors=True)
     return stats

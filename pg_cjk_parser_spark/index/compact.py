@@ -6,6 +6,13 @@ head terms accumulate many short tails. Compaction decodes all block
 rows back to postings, re-sorts per (bucket, salt, term, docid), and
 re-encodes full blocks under a single consolidated epoch, swapping
 directories atomically and collapsing the epoch manifests.
+
+One decoder turns blocks back into postings: :func:`_decode_batch`
+decodes a whole Arrow batch of block rows at once and drops
+tombstoned postings with one mask.  Compaction, :func:`merge_epochs`,
+their tombstone accounting and the :func:`decode_postings` export all
+call it; compaction's postings then go back through the build's
+packed-cell encoder.
 """
 
 from __future__ import annotations
@@ -16,19 +23,17 @@ import shutil
 import time
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import SparkSession, functions as F
 
 from .build import _atomic_json
-from .codec import decode_positions, decode_varints, delta_decode
+from .codec import decode_varints
 from .streaming import _rebuild_stats
 from .tombstones import (
     alive_mask,
     clear_tombstones,
     epoch_dir_layout,
     epoch_from_file_path,
-    epochs_of,
     list_tombstone_files,
     load_tombstones,
 )
@@ -38,59 +43,132 @@ _POSTING_SCHEMA = (
     "positions binary"
 )
 
+# the block columns the decoder reads (plus ``epoch``)
+_BLOCK_COLS = (
+    "bucket", "salt", "term", "n", "docids", "tfs", "doclens", "positions"
+)
 
-def _decode_blocks(batches, deleted=None):
-    """Decode posting blocks back to one row per posting.  Column-wise
-    zip iteration + np.repeat for the per-block constants; pandas
-    iterrows (row-at-a-time Series construction) measured ~10x slower
-    on the same loop.  Tombstoned (docid, epoch) versions are dropped
-    so the export is the LIVE corpus."""
-    from .build import _enc_pos
 
-    for pdf in batches:
-        ids_l, tfs_l, dls_l, pos_l, ns, kept = [], [], [], [], [], []
-        eps = epochs_of(pdf)
-        for ri, (docids_b, tfs_b, dls_b, pos_b, ep) in enumerate(zip(
-            pdf["docids"].tolist(), pdf["tfs"].tolist(),
-            pdf["doclens"].tolist(), pdf["positions"].tolist(), eps,
-        )):
-            ids = delta_decode(docids_b).view(np.int64)
-            tfs_d = decode_varints(tfs_b).astype(np.int64)
-            dls_d = decode_varints(dls_b).astype(np.int64)
-            pos_d = decode_positions(pos_b, len(ids))
-            alive = alive_mask(ids, deleted, int(ep))
-            if alive is not None:
-                ids = ids[alive]
-                tfs_d = tfs_d[alive]
-                dls_d = dls_d[alive]
-                pos_d = [p for p, a in zip(pos_d, alive.tolist()) if a]
-                if not len(ids):
-                    continue
-            ids_l.append(ids)
-            tfs_l.append(tfs_d)
-            dls_l.append(dls_d)
-            pos_l.extend(_enc_pos(ps) for ps in pos_d)
-            ns.append(len(ids))
-            kept.append(ri)
-        if not ns:
+def _decode_batch(rb: pa.RecordBatch, deleted, dead: bool = False):
+    """Decode a whole Arrow batch of block rows back to postings, in
+    block order, without tombstoned (docid, epoch) versions - or, with
+    ``dead=True``, only those.
+
+    Each of the docid, tf and doclen columns is ONE varint decode over
+    the batch's concatenated blobs, with per-block cumsum resets for
+    the docid deltas.  Position blobs are not decoded: each posting's
+    ``[npos, deltas...]`` byte range is found from the blobs' value-end
+    bytes, because a block's ``positions`` (codec.encode_positions) is
+    the concatenation of its postings' own blobs.  Tombstones are ONE
+    ``alive_mask`` over every posting of the batch.
+
+    Returns ``(blk, ids, tfs, dls, pstart, plen, pbuf)``: per posting
+    its block row in ``rb``, int64 docid, tf and doclen, and the byte
+    range of its position blob in the uint8 buffer ``pbuf``.  Callers
+    gather the surviving position bytes with ONE
+    ``build._gather_bytes``.
+
+    Blocks are checked before their bytes are trusted: every varint
+    blob holds ``n`` values and ends on a value boundary, each
+    posting's npos equals its tf, and the last posting closes the
+    block's positions blob.  Every block this engine writes passes by
+    construction; a foreign or corrupt block raises ``ValueError``
+    naming its (bucket, salt, term)."""
+    from .build import _binary_parts, _gather_bytes
+
+    nb = rb.num_rows
+    ns = rb.column("n").to_numpy().astype(np.int64)
+    blk = np.repeat(np.arange(nb, dtype=np.int64), ns)
+
+    def fail(bad, what):
+        if bad.any():
+            i = int(np.flatnonzero(bad)[0])
+            b, s, t = (
+                rb.column(c)[i].as_py() for c in ("bucket", "salt", "term")
+            )
+            raise ValueError(
+                f"corrupt posting block bucket={b} salt={s} term={t!r}: "
+                f"{what}"
+            )
+
+    def blobs(col, want):
+        """(uint8 stream, value-end byte indices) of a binary column
+        whose blob i must hold ``want[i]`` whole varints."""
+        data, offs = _binary_parts(rb.column(col))
+        buf = data[offs[0] : offs[-1]]
+        ends = offs[1:] - offs[0]
+        vends = np.flatnonzero(buf < 0x80)
+        got = np.diff(np.searchsorted(vends, ends), prepend=0)
+        # a dangling continuation byte would glue onto the next blob's
+        # first value without changing any count
+        full = np.flatnonzero(ends > offs[:-1] - offs[0])
+        open_ = np.zeros(nb, bool)
+        open_[full] = buf[ends[full] - 1] >= 0x80
+        fail((got != want) | open_, f"{col} is not the block's varints")
+        return buf, vends
+
+    def values(col):
+        return decode_varints(blobs(col, ns)[0])
+
+    ends_n = np.cumsum(ns)
+    c = np.cumsum(values("docids"), dtype=np.uint64)
+    # per-block delta -> absolute: the first delta of a block is its
+    # absolute first docid, so subtract the running sum before it
+    # (uint64 wraparound is the codec's documented arithmetic)
+    off = np.concatenate((np.zeros(1, np.uint64), c))[ends_n - ns]
+    ids = (c - np.repeat(off, ns)).view(np.int64)
+    tfs = values("tfs").astype(np.int64)
+    dls = values("doclens").astype(np.int64)
+
+    # positions: posting p's values end at cv[p + 1] (npos + tf deltas)
+    cv = np.concatenate(([0], np.cumsum(tfs + 1)))
+    pbuf, vends = blobs("positions", cv[ends_n] - cv[ends_n - ns])
+    pend = vends[cv[1:] - 1] + 1
+    pstart = np.concatenate(([0], pend[:-1]))
+    # npos == tf: decode only each posting's head varint
+    head, _ = _gather_bytes(pbuf, pstart, vends[cv[:-1]] + 1 - pstart)
+    bad = np.zeros(nb, bool)
+    bad[blk[decode_varints(head) != tfs.astype(np.uint64)]] = True
+    fail(bad, "a posting's npos differs from its tf")
+
+    eps = rb.column("epoch").to_numpy().astype(np.int64)
+    keep = alive_mask(ids, deleted, np.repeat(eps, ns))
+    if dead:
+        keep = np.zeros(ids.size, bool) if keep is None else ~keep
+    plen = pend - pstart
+    if keep is None:
+        return blk, ids, tfs, dls, pstart, plen, pbuf
+    return (
+        blk[keep], ids[keep], tfs[keep], dls[keep], pstart[keep],
+        plen[keep], pbuf,
+    )
+
+
+def _export_postings(batches, deleted):
+    """``mapInArrow`` body of :func:`decode_postings`: block rows ->
+    one Arrow row per live posting."""
+    from .build import _binary_array, _gather_bytes
+
+    for rb in batches:
+        blk, ids, tfs, dls, pstart, plen, pbuf = _decode_batch(rb, deleted)
+        if not blk.size:
             continue
-        reps = np.asarray(ns, dtype=np.int64)
-        yield pd.DataFrame(
-            {
-                "bucket": np.repeat(
-                    pdf["bucket"].to_numpy(np.int32)[kept], reps
-                ),
-                "salt": np.repeat(
-                    pdf["salt"].to_numpy(np.int32)[kept], reps
-                ),
-                "term": np.repeat(
-                    pdf["term"].to_numpy(object)[kept], reps
-                ),
-                "docid": np.concatenate(ids_l),
-                "tf": np.concatenate(tfs_l),
-                "doclen": np.concatenate(dls_l),
-                "positions": pos_l,
-            }
+        pos, _ = _gather_bytes(pbuf, pstart, plen)
+        ix = pa.array(blk)
+        yield pa.RecordBatch.from_arrays(
+            [
+                rb.column("bucket").take(ix),
+                rb.column("salt").take(ix),
+                rb.column("term").take(ix),
+                pa.array(ids),
+                pa.array(tfs.astype(np.int32)),
+                pa.array(dls.astype(np.int32)),
+                _binary_array(pos, plen),
+            ],
+            names=[
+                "bucket", "salt", "term", "docid", "tf", "doclen",
+                "positions",
+            ],
         )
 
 
@@ -98,273 +176,111 @@ def decode_postings(spark: SparkSession, index_dir: str):
     """Export the index back to one row per posting
     (bucket, salt, term, docid, tf, doclen, positions:binary) - the
     inverse of the build; useful for re-sharding into a different
-    layout or feeding postings to downstream pipelines."""
+    layout or feeding postings to downstream pipelines.  Tombstoned
+    (docid, epoch) versions are dropped, so the export is the LIVE
+    corpus."""
     postings = _read_postings_mixed(spark, index_dir)
     deleted = load_tombstones(index_dir)
     return (
-        postings.select(
-            "bucket", "salt", "term", "docids", "tfs", "doclens",
-            "positions",
-        )
+        postings.select(*_BLOCK_COLS)
         .withColumn("epoch", epoch_from_file_path())
-        .mapInPandas(
-            lambda it: _decode_blocks(it, deleted=deleted),
-            _POSTING_SCHEMA,
+        .mapInArrow(
+            lambda it: _export_postings(it, deleted), _POSTING_SCHEMA
         )
     )
-
-
-def _accumulate_batch_fast(pdf, cells) -> int:
-    """Whole-batch vectorized decode for the no-tombstone case: ONE
-    varint decode per column over the batch's concatenated blobs
-    (docid deltas, tfs, doclens) with per-block cumsum resets, and the
-    position blobs sliced at vectorized varint boundaries - replacing
-    3 ``decode_varints`` + ~10 small numpy calls PER BLOCK (measured
-    ~40% of compaction's map side).  Appends per-block slices (views)
-    into ``cells`` exactly like the per-block path and returns the
-    posting count, or -1 when the batch fails the alignment guards
-    (npos != tf anywhere, or byte/value counts off) - the caller then
-    redoes the batch with the exact per-block path.
-
-    Requires an ``n`` column (postings per block) in the input."""
-    nb = len(pdf)
-    if nb == 0 or "n" not in pdf.columns:
-        return -1
-    ns = pdf["n"].to_numpy().astype(np.int64, copy=False)
-    if (ns <= 0).any():
-        return -1  # degenerate empty blocks: exact path
-    d_list = pdf["docids"].tolist()
-    t_list = pdf["tfs"].tolist()
-    l_list = pdf["doclens"].tolist()
-    p_list = pdf["positions"].tolist()
-    total = int(ns.sum())
-
-    vals_d = decode_varints(b"".join(d_list))
-    vals_t = decode_varints(b"".join(t_list))
-    vals_l = decode_varints(b"".join(l_list))
-    if vals_d.size != total or vals_t.size != total or vals_l.size != total:
-        return -1
-
-    ends_n = np.cumsum(ns)
-    starts_n = ends_n - ns
-    # per-block delta->absolute: global cumsum minus the cumsum value
-    # just before each block's first delta (the first delta per block
-    # is the absolute first docid); uint64 wraparound is the codec's
-    # documented arithmetic
-    c = np.cumsum(vals_d, dtype=np.uint64)
-    off = np.zeros(nb, dtype=np.uint64)
-    off[1:] = c[starts_n[1:] - 1]
-    ids_all = (c - np.repeat(off, ns)).view(np.int64)
-
-    # positions: value-end boundaries over the concatenated stream,
-    # then per-posting byte lengths; guarded per block (value count
-    # must equal sum(tf)+n and the last boundary must close the blob)
-    all_p = b"".join(p_list)
-    pb = np.frombuffer(all_p, np.uint8)
-    vends = np.flatnonzero((pb & 0x80) == 0)
-    blk_bytes = np.fromiter(map(len, p_list), np.int64, nb)
-    blk_byte_ends = np.cumsum(blk_bytes)
-    seg_tf = np.add.reduceat(
-        vals_t.astype(np.int64), starts_n
-    ) if total else np.zeros(0, np.int64)
-    expect_vals = seg_tf + ns
-    got_vals = np.diff(
-        np.searchsorted(vends, blk_byte_ends - 1, side="right"),
-        prepend=0,
-    )
-    if vends.size != int(expect_vals.sum()) or not np.array_equal(
-        got_vals, expect_vals
-    ):
-        return -1
-    post_val_idx = np.cumsum(vals_t.astype(np.int64) + 1)
-    post_byte_ends = vends[post_val_idx - 1] + 1
-    # every block's LAST posting must close the block's blob exactly:
-    # a dangling continuation byte would pass the value-count checks
-    # yet shift the next block's first posting length
-    if not np.array_equal(post_byte_ends[ends_n - 1], blk_byte_ends):
-        return -1
-    plens_all = np.diff(post_byte_ends, prepend=0).astype(np.int32)
-    blk_byte_starts = blk_byte_ends - blk_bytes
-
-    terms = pdf["term"].tolist()
-    buckets = pdf["bucket"].tolist()
-    salts = pdf["salt"].tolist()
-    sn = starts_n.tolist()
-    en = ends_n.tolist()
-    b0 = blk_byte_starts.tolist()
-    b1 = blk_byte_ends.tolist()
-    for ri in range(nb):
-        s, e = sn[ri], en[ri]
-        if s == e:
-            continue
-        t = terms[ri].encode("utf-8", "surrogatepass")
-        acc = cells.setdefault(
-            (int(buckets[ri]), int(salts[ri])), _new_cell_acc()
-        )
-        n = e - s
-        acc[0] += n
-        x = acc[2].get(t)
-        if x is None:
-            x = len(acc[1])
-            acc[2][t] = x
-            acc[1].append(t)
-        acc[3].append(x)
-        acc[4].append(n)
-        acc[5].append(ids_all[s:e])
-        acc[6].append(vals_t[s:e])
-        acc[7].append(vals_l[s:e])
-        acc[8].append(plens_all[s:e])
-        acc[9].append(all_p[b0[ri]:b1[ri]])
-    return total
-
-
-def _new_cell_acc() -> list:
-    """[n_total, uterm_list, uterm_dict, per-block vocab idx,
-    per-block n, id chunks, tf chunks, doclen chunks, plen chunks,
-    position blob chunks] - blocks are single-term, so the term index
-    is one int per block, repeated into the int32 posting column only
-    at pack time."""
-    return [0, [], {}, [], [], [], [], [], [], []]
 
 
 def _decode_to_cells(batches, flush_at: int = 500_000, deleted=None):
     """Decode posting blocks straight into packed (bucket, salt) cells
     for the packed-cell shuffle (build.py:_encode_cells) - the same
     cells-not-rows strategy as the batch build, so compaction never
-    pays the per-posting Arrow row boundary the original row path did.
+    pays a per-posting Arrow row boundary.
 
-    Fast path (every block no tombstone touches): a block's
-    ``positions`` buffer (codec.encode_positions) is byte-for-byte the
-    concatenation of the per-posting ``_enc_pos`` blobs the cell
-    payload wants, so the blob is SLICED at vectorized varint
-    boundaries instead of decoded and re-encoded posting by posting -
-    the per-posting Python work that used to dominate compaction.
-    The boundary walk assumes npos == tf (true by construction for
-    every block this engine writes) and is guarded: a mismatch falls
-    back to the exact decode/re-encode path, as does any block that
-    loses postings to tombstones.
-    """
-    import struct
+    Each batch decodes in one :func:`_decode_batch` call (tombstoned
+    postings already dropped); one stable argsort groups its postings
+    by cell and ONE byte gather moves the surviving position blobs
+    into that order - position lists are never decoded or
+    re-encoded.  A cell chunk keeps its blocks' terms as its
+    vocabulary; flush merges a cell's chunks with one dictionary
+    encode (build._merge_vocab)."""
+    from .build import _gather_bytes, _merge_vocab, _pack_cell_idx
 
-    from .build import _enc_pos
-
-    # (bucket, salt) -> accumulator, see _new_cell_acc
+    # (bucket, salt) -> chunks of (vocab, vocab idx, docids, tfs,
+    # doclens, position lengths, position bytes)
     cells: dict[tuple[int, int], list] = {}
     count = 0
 
     def flush():
-        from .build import _pack_cell_idx
+        rb_, rs_, rp = [], [], []
+        for (b, s), chunks in sorted(cells.items()):
+            vocab, maps = _merge_vocab([ch[0] for ch in chunks])
 
-        rb, rs, rp = [], [], []
-        for (b, s), acc in sorted(cells.items()):
-            n_tot, ul, _ud, xs, ns_, idp, tfp, dlp, plp, pp = acc
+            def cat(k):
+                return np.concatenate([ch[k] for ch in chunks])
+
             rp.append(
                 _pack_cell_idx(
-                    pa.array(ul, pa.binary()),
-                    np.repeat(
-                        np.asarray(xs, np.int32),
-                        np.asarray(ns_, np.int64),
-                    ),
-                    np.concatenate(idp).astype(np.int64),
-                    np.concatenate(tfp),
-                    np.concatenate(dlp),
-                    np.concatenate(plp),
-                    b"".join(pp),
+                    vocab,
+                    np.concatenate([m[ch[1]] for m, ch in zip(maps, chunks)]),
+                    cat(2), cat(3), cat(4), cat(5), cat(6).tobytes(),
                 )
             )
-            rb.append(b)
-            rs.append(s)
+            rb_.append(b)
+            rs_.append(s)
         cells.clear()
-        return pd.DataFrame(
-            {
-                "bucket": np.array(rb, np.int32),
-                "salt": np.array(rs, np.int32),
-                "payload": rp,
-            }
+        return pa.RecordBatch.from_arrays(
+            [
+                pa.array(rb_, pa.int32()), pa.array(rs_, pa.int32()),
+                pa.array(rp, pa.binary()),
+            ],
+            names=["bucket", "salt", "payload"],
         )
 
-    for pdf in batches:
-        if deleted is None:
-            got = _accumulate_batch_fast(pdf, cells)
-            if got >= 0:
-                count += got
-                if count >= flush_at:
-                    df = flush()
-                    count = 0
-                    if len(df):
-                        yield df
-                continue
-        eps = epochs_of(pdf)
-        for bucket, salt, term, docids_b, tfs_b, dls_b, pos_b, ep in zip(
-            pdf["bucket"].tolist(), pdf["salt"].tolist(),
-            pdf["term"].tolist(), pdf["docids"].tolist(),
-            pdf["tfs"].tolist(), pdf["doclens"].tolist(),
-            pdf["positions"].tolist(), eps,
-        ):
-            ids = delta_decode(docids_b).view(np.int64)
-            n = len(ids)
-            if not n:
-                continue
-            tfs_d = decode_varints(tfs_b)
-            dls_d = decode_varints(dls_b)
-            alive = alive_mask(ids, deleted, int(ep))
-            plens = None
-            if alive is None:
-                pb = np.frombuffer(pos_b, np.uint8)
-                ends = np.flatnonzero((pb & 0x80) == 0)
-                vidx = np.cumsum(tfs_d.astype(np.int64) + 1)
-                # npos == tf guard, plus blob closure: the last sliced
-                # boundary must consume the whole blob, so a foreign
-                # block whose per-posting npos differ from tf but sum
-                # to the same total cannot slice misaligned silently
-                if ends.size == vidx[-1]:
-                    byte_ends = ends[vidx - 1] + 1
-                    if int(byte_ends[-1]) == len(pos_b):
-                        plens = np.diff(byte_ends, prepend=0).astype(
-                            np.int32
-                        )
-                        pos_blob = pos_b
-            if plens is None:
-                # exact path: tombstoned block, or npos != tf
-                pos_d = decode_positions(pos_b, n)
-                if alive is not None:
-                    ids = ids[alive]
-                    tfs_d = tfs_d[alive]
-                    dls_d = dls_d[alive]
-                    pos_d = [
-                        p for p, a in zip(pos_d, alive.tolist()) if a
-                    ]
-                    n = len(ids)
-                    if not n:
-                        continue
-                blobs = [_enc_pos(ps) for ps in pos_d]
-                plens = np.fromiter(map(len, blobs), np.int32, n)
-                pos_blob = b"".join(blobs)
-            t = term.encode("utf-8", "surrogatepass")
-            acc = cells.setdefault(
-                (int(bucket), int(salt)), _new_cell_acc()
+    for rb in batches:
+        blk, ids, tfs, dls, pstart, plen, pbuf = _decode_batch(rb, deleted)
+        if not blk.size:
+            continue
+        bkt = rb.column("bucket").to_numpy().astype(np.int64)
+        slt = rb.column("salt").to_numpy().astype(np.int64)
+        key = (bkt << 32 | slt)[blk]
+        # stable: blocks (and so a term's docids) keep their order
+        order = np.argsort(key, kind="stable")
+        key, blk = key[order], blk[order]
+        ids, tfs, dls, plen = ids[order], tfs[order], dls[order], plen[order]
+        pos, pends = _gather_bytes(pbuf, pstart[order], plen)
+        pofs = np.concatenate(([0], pends))  # posting p's bytes start
+        terms = rb.column("term").cast(pa.binary())
+        cstarts = np.flatnonzero(np.diff(key, prepend=-1)).tolist()
+        for cs, ce in zip(cstarts, cstarts[1:] + [key.size]):
+            lu, inv = np.unique(blk[cs:ce], return_inverse=True)
+            cell = (int(bkt[blk[cs]]), int(slt[blk[cs]]))
+            cells.setdefault(cell, []).append(
+                (
+                    terms.take(lu), inv, ids[cs:ce], tfs[cs:ce], dls[cs:ce],
+                    plen[cs:ce], pos[pofs[cs] : pofs[ce]],
+                )
             )
-            acc[0] += n
-            x = acc[2].get(t)
-            if x is None:
-                x = len(acc[1])
-                acc[2][t] = x
-                acc[1].append(t)
-            acc[3].append(x)
-            acc[4].append(n)
-            acc[5].append(ids)
-            acc[6].append(tfs_d)
-            acc[7].append(dls_d)
-            acc[8].append(plens)
-            acc[9].append(pos_blob)
-            count += n
-            if count >= flush_at:
-                df = flush()
-                count = 0
-                if len(df):
-                    yield df
+        count += ids.size
+        if count >= flush_at:
+            yield flush()
+            count = 0
     if cells:
         yield flush()
+
+
+def _decoded_cells(postings, deleted):
+    """Block rows -> packed cell rows (build.PACKED_SCHEMA) with the
+    tombstones ``deleted`` applied: the map side that compaction and
+    :func:`merge_epochs` feed to ``build._cell_blocks``."""
+    from .build import PACKED_SCHEMA
+
+    return (
+        postings.select(*_BLOCK_COLS)
+        .withColumn("epoch", epoch_from_file_path())
+        .mapInArrow(
+            lambda it: _decode_to_cells(it, deleted=deleted), PACKED_SCHEMA
+        )
+    )
 
 
 def compact_index(
@@ -381,7 +297,7 @@ def compact_index(
         spark.sparkContext.defaultParallelism * 4,
     )
 
-    from .build import PACKED_SCHEMA, _cell_blocks
+    from .build import _cell_blocks
 
     postings = _read_postings_mixed(spark, index_dir)
     # SNAPSHOT the tombstone files: deletes arriving during the (long)
@@ -423,14 +339,10 @@ def compact_index(
                 pending_path,
                 {"tomb_files": tomb_files, "removed": removed},
             )
-    epoch_col = epoch_from_file_path()
-    cells = postings.select(
-        "bucket", "salt", "term", "n", "docids", "tfs", "doclens",
-        "positions"
-    ).withColumn("epoch", epoch_col).mapInPandas(
-        lambda it: _decode_to_cells(it, deleted=deleted), PACKED_SCHEMA
+    blocks = _cell_blocks(
+        _decoded_cells(postings, deleted), stats["num_salts"], parts,
+        block_size,
     )
-    blocks = _cell_blocks(cells, stats["num_salts"], parts, block_size)
     epochs = sorted(stats.get("epochs", [])) or [0]
     new_epoch = epochs[-1]
     tmp_postings = os.path.join(index_dir, "_compact_postings")
@@ -562,40 +474,20 @@ def _deleted_stats(postings, deleted) -> dict:
     docid is tombstoned at the posting's epoch, so the scanned volume
     is bounded by the tombstone set."""
 
-    dids, upto = deleted
-
     def gen(batches):
-        for pdf in batches:
-            eps = epochs_of(pdf)
-            out_i, out_t, out_e = [], [], []
-            for docids_b, tfs_b, ep in zip(
-                pdf["docids"].tolist(), pdf["tfs"].tolist(), eps
-            ):
-                ids = delta_decode(docids_b).view(np.int64)
-                alive = alive_mask(ids, deleted, int(ep))
-                if alive is None:
-                    continue
-                hit = ~alive
-                n = int(hit.sum())
-                out_i.append(ids[hit])
-                out_t.append(
-                    decode_varints(tfs_b)[hit].astype(np.int64)
-                )
-                out_e.append(np.full(n, int(ep), np.int64))
-            if out_i:
-                yield pd.DataFrame(
-                    {
-                        "docid": np.concatenate(out_i),
-                        "epoch": np.concatenate(out_e),
-                        "tf": np.concatenate(out_t),
-                    }
+        for rb in batches:
+            blk, ids, tfs, *_ = _decode_batch(rb, deleted, dead=True)
+            if blk.size:
+                eps = rb.column("epoch").to_numpy().astype(np.int64)
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(ids), pa.array(eps[blk]), pa.array(tfs)],
+                    names=["docid", "epoch", "tf"],
                 )
 
-    epoch_col = epoch_from_file_path()
     row = (
-        postings.select("docids", "tfs")
-        .withColumn("epoch", epoch_col)
-        .mapInPandas(gen, "docid long, epoch long, tf long")
+        postings.select(*_BLOCK_COLS)
+        .withColumn("epoch", epoch_from_file_path())
+        .mapInArrow(gen, "docid long, epoch long, tf long")
         .agg(
             F.countDistinct("docid", "epoch").alias("nd"),
             F.sum("tf").alias("tt"),
@@ -741,7 +633,7 @@ def merge_epochs(
     pdir = os.path.join(index_dir, "postings")
     tdir = os.path.join(index_dir, "termstats")
 
-    from .build import PACKED_SCHEMA, _cell_blocks
+    from .build import _cell_blocks
 
     sel_paths = [
         p
@@ -764,14 +656,10 @@ def merge_epochs(
             if deleted is not None
             else None
         )
-        epoch_col = epoch_from_file_path()
-        cells = postings.select(
-            "bucket", "salt", "term", "n", "docids", "tfs", "doclens",
-            "positions",
-        ).withColumn("epoch", epoch_col).mapInPandas(
-            lambda it: _decode_to_cells(it, deleted=deleted), PACKED_SCHEMA
+        blocks = _cell_blocks(
+            _decoded_cells(postings, deleted), stats["num_salts"], parts,
+            block_size,
         )
-        blocks = _cell_blocks(cells, stats["num_salts"], parts, block_size)
         tmp_postings = os.path.join(index_dir, "_merge_postings")
         shutil.rmtree(tmp_postings, ignore_errors=True)
         blocks.write.mode("overwrite").partitionBy("bucket").parquet(

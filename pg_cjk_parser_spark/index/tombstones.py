@@ -321,11 +321,3 @@ def epoch_from_file_path():
         ).cast("int"),
         F.lit(0),
     )
-
-
-def epochs_of(pdf):
-    """Per-row epoch list for a pandas block frame (0 when the
-    column is absent - batch layout)."""
-    if "epoch" in pdf.columns:
-        return pdf["epoch"].tolist()
-    return [0] * len(pdf)

@@ -38,6 +38,8 @@ def test_positions_roundtrip():
 
 
 def _random_posting_rows(rng, n_terms, max_post):
+    """Random postings sorted by (bucket, salt, term, docid), each with
+    its position list and that list's encoded blob."""
     import pandas as pd
 
     rows = []
@@ -48,19 +50,44 @@ def _random_posting_rows(rng, n_terms, max_post):
             rng.sample(range(-(10**12), 10**12), rng.randrange(1, max(2, max_post)))
         )
         for d in docids:
+            ps = sorted(rng.sample(range(1, 3000), rng.randrange(1, 9)))
             rows.append(
-                (b, s, term, d, rng.randrange(1, 9), rng.randrange(1, 400),
-                 bytes([rng.randrange(1, 5)]))
+                (b, s, term, d, len(ps), rng.randrange(1, 400), ps,
+                 encode_positions([ps]))
             )
     rows.sort(key=lambda r: (r[0], r[1], r[2], r[3]))
     return pd.DataFrame(
         rows,
-        columns=["bucket", "salt", "term", "docid", "tf", "doclen", "positions"],
+        columns=["bucket", "salt", "term", "docid", "tf", "doclen", "plist",
+                 "positions"],
+    )
+
+
+def _pack_rows(df, chunks_of):
+    """One packed-cell frame from posting rows: each (bucket, salt)
+    cell's postings, shuffled, split into payloads by ``chunks_of(i)``
+    (the payload index of the cell's i-th posting)."""
+    import pandas as pd
+
+    from tests.index_reference import pack_cell
+
+    cells = {}
+    shuffled = df.sample(frac=1.0, random_state=7)
+    for i, r in enumerate(shuffled.itertuples(index=False)):
+        c = cells.setdefault((r.bucket, r.salt, chunks_of(i)), ([], [], [], [], []))
+        c[0].append(r.term.encode())
+        c[1].append(r.docid)
+        c[2].append(r.tf)
+        c[3].append(r.doclen)
+        c[4].append(r.positions)
+    return pd.DataFrame(
+        [(b, s, pack_cell(*c)) for (b, s, _), c in sorted(cells.items())],
+        columns=["bucket", "salt", "payload"],
     )
 
 
 def _arrow_batches(frames):
-    """pandas posting/cell frames -> the Arrow batches mapInArrow feeds."""
+    """pandas cell frames -> the Arrow batches mapInArrow feeds."""
     import pyarrow as pa
 
     return iter([pa.RecordBatch.from_pandas(f, preserve_index=False) for f in frames])
@@ -83,30 +110,57 @@ def _decode_block_rows(out):
         assert r.min_docid == ds[0] and r.max_docid == ds[-1]
         assert r.max_tf == tfs.max() and r.min_dl == dls.min()
         assert r.sum_tf == tfs.sum()
-        for d_, t_, l_ in zip(ds.tolist(), tfs.tolist(), dls.tolist()):
-            rec.append((r.bucket, r.salt, r.term, d_, t_, l_))
+        pos = decode_positions(r.positions, r.n)
+        for d_, t_, l_, p_ in zip(ds.tolist(), tfs.tolist(), dls.tolist(), pos):
+            rec.append((r.bucket, r.salt, r.term, d_, t_, l_, p_))
     return rec
 
 
+def _reference_blocks(df, bs):
+    """Per-group reference block encoder: each (bucket, salt, term)
+    group's docid-sorted postings cut into blocks of ``bs``, each
+    column encoded with the plain codec functions."""
+    import pandas as pd
+
+    out = []
+    for (b, s, term), g in df.groupby(["bucket", "salt", "term"], sort=True):
+        g = g.sort_values("docid")
+        for bid, i in enumerate(range(0, len(g), bs)):
+            blk = g.iloc[i:i + bs]
+            d = blk["docid"].to_numpy(np.int64)
+            t = blk["tf"].to_numpy(np.int64)
+            dl = blk["doclen"].to_numpy(np.int64)
+            out.append(
+                (b, s, term, bid, len(blk), d[0], d[-1], delta_encode(d),
+                 encode_varints(t.astype(np.uint64)),
+                 encode_varints(dl.astype(np.uint64)),
+                 encode_positions(list(blk["plist"])), t.max(), dl.min(),
+                 t.sum())
+            )
+    return pd.DataFrame(
+        out,
+        columns=["bucket", "salt", "term", "block_id", "n", "min_docid",
+                 "max_docid", "docids", "tfs", "doclens", "positions",
+                 "max_tf", "min_dl", "sum_tf"],
+    )
+
+
 def test_encode_partition_roundtrip_any_batching():
-    """Batch-vectorized block encoder == source postings, for every
-    batch split (incl. 1-row batches exercising the carry path)."""
+    """Packed-cell block encoder == source postings however a cell's
+    postings are split into payloads: one payload per cell, 3, or one
+    per posting; block ids run 0.. per (bucket, salt, term)."""
     import random
 
-    from pg_cjk_parser_spark.index.build import _encode_partition
+    from pg_cjk_parser_spark.index.build import _encode_cells
 
     rng = random.Random(11)
+    cols = ["bucket", "salt", "term", "docid", "tf", "doclen", "plist"]
     for nt, mp, bs in [(30, 300, 128), (120, 8, 16), (2, 900, 64), (1, 2, 4)]:
         df = _random_posting_rows(rng, nt, mp)
-        want = sorted(
-            tuple(x)
-            for x in df[
-                ["bucket", "salt", "term", "docid", "tf", "doclen"]
-            ].itertuples(index=False)
-        )
-        for chunk in (len(df), 333, 13):
-            batches = [df.iloc[i:i + chunk] for i in range(0, len(df), chunk)]
-            out = _blocks_frame(_encode_partition(_arrow_batches(batches), bs))
+        want = sorted(tuple(x) for x in df[cols].itertuples(index=False))
+        for chunks_of in (lambda i: 0, lambda i: i % 3, lambda i: i):
+            cells = _pack_rows(df, chunks_of)
+            out = _blocks_frame(_encode_cells(_arrow_batches([cells]), bs))
             assert sorted(_decode_block_rows(out)) == want
             gb = out.groupby(["bucket", "salt", "term"])["block_id"].apply(
                 lambda s_: sorted(s_) == list(range(len(s_)))
@@ -115,42 +169,21 @@ def test_encode_partition_roundtrip_any_batching():
 
 
 def test_encode_cells_matches_row_encoder():
-    """Packed-cell reducer produces the same blocks as the row-sorted
-    encoder for the same postings."""
+    """Packed-cell reducer produces the same blocks as a per-group
+    reference block encoder for the same postings."""
     import random
 
-    import pandas as pd
-
-    from pg_cjk_parser_spark.index.build import (
-        _encode_cells,
-        _encode_partition,
-        _pack_cell,
-    )
+    from pg_cjk_parser_spark.index.build import _encode_cells
 
     rng = random.Random(23)
     df = _random_posting_rows(rng, 60, 120)
-    # rows path
-    row_out = _blocks_frame(_encode_partition(_arrow_batches([df]), 32))
+    ref = _reference_blocks(df, 32)
     # packed path: split postings into 3 arbitrary map chunks per cell
-    cells = {}
-    for r in df.sample(frac=1.0, random_state=7).itertuples(index=False):
-        chunk = rng.randrange(3)
-        c = cells.setdefault((r.bucket, r.salt, chunk), ([], [], [], [], []))
-        c[0].append(r.term.encode())
-        c[1].append(r.docid)
-        c[2].append(r.tf)
-        c[3].append(r.doclen)
-        c[4].append(r.positions)
-    rows = [
-        (b, s, _pack_cell(*c)) for (b, s, _), c in sorted(cells.items())
-    ]
-    pdf = pd.DataFrame(rows, columns=["bucket", "salt", "payload"])
-    cell_out = _blocks_frame(_encode_cells(_arrow_batches([pdf]), 32))
+    cells = _pack_rows(df, lambda i: rng.randrange(3))
+    cell_out = _blocks_frame(_encode_cells(_arrow_batches([cells]), 32))
     key = ["bucket", "salt", "term", "block_id"]
-    a = row_out.sort_values(key, ignore_index=True)
+    a = ref.sort_values(key, ignore_index=True)
     c = cell_out.sort_values(key, ignore_index=True)
-    assert a[key + ["n", "min_docid", "max_docid", "max_tf", "min_dl", "sum_tf"]].equals(
-        c[key + ["n", "min_docid", "max_docid", "max_tf", "min_dl", "sum_tf"]]
-    )
-    for col in ("docids", "tfs", "doclens", "positions"):
-        assert (a[col] == c[col]).all(), col
+    assert list(a.columns) == list(c.columns)
+    for col in a.columns:
+        assert a[col].tolist() == c[col].tolist(), col

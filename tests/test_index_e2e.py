@@ -65,7 +65,21 @@ def test_empty_and_stopword_queries(spark, built):
     assert search(spark, index_dir, "", k=5).count() == 0
 
 
+def _bucket_files(index_dir, buckets):
+    """(bucket, file name, st_mtime_ns) under the given postings
+    bucket dirs."""
+    out = []
+    for b in buckets:
+        bdir = os.path.join(index_dir, "postings", f"bucket={b}")
+        for name in sorted(os.listdir(bdir)):
+            out.append((b, name, os.stat(os.path.join(bdir, name)).st_mtime_ns))
+    return out
+
+
 def test_resume_from_checkpoint(spark, built, tmp_path):
+    """Resume rebuilds exactly the buckets whose manifests are gone:
+    the other buckets' files stay untouched, and queries are identical
+    to the oracle again."""
     index_dir, stats, pdocs = built
     # simulate a failed build: remove 3 bucket partitions + manifests
     victims = [0, 5, 11]
@@ -75,14 +89,24 @@ def test_resume_from_checkpoint(spark, built, tmp_path):
         shutil.rmtree(os.path.join(index_dir, "termstats", f"bucket={b}"),
                       ignore_errors=True)
         os.remove(os.path.join(index_dir, "manifests", f"bucket={b}.json"))
+    survivors = [b for b in range(16) if b not in victims]
+    kept = _bucket_files(index_dir, survivors)
 
+    # an in-memory corpus has no input files to fingerprint, so resume
+    # needs the build's own fingerprint passed back
     docs = synth_corpus(spark, N_DOCS, seed=42, num_partitions=4)
     build_index(
         spark, docs, index_dir, num_buckets=16, num_salts=2, block_size=32,
-        resume=True,
+        resume=True, fingerprint=stats["fingerprint"],
     )
     manifests = os.listdir(os.path.join(index_dir, "manifests"))
     assert len(manifests) == 16
+    assert _bucket_files(index_dir, survivors) == kept
+    assert all(
+        os.listdir(os.path.join(index_dir, "postings", f"bucket={b}"))
+        for b in victims
+    )
+    assert not os.path.exists(os.path.join(index_dir, "_staging_postings"))
     for q in QUERIES[:4]:
         got = [(r.docid, round(r.score, 6)) for r in search(spark, index_dir, q, k=10).collect()]
         want = brute_force_topk(pdocs, q, k=10)
@@ -267,17 +291,24 @@ def test_rebuild_crash_in_stats_write_keeps_previous_stats(
 
 def test_resume_invalidates_on_corpus_change(spark, tmp_path):
     """resume=True after the input corpus changed must NOT reuse stale
-    staging/buckets: the default fingerprint folds in corpus identity
-    (doc count + source files), so a changed corpus rebuilds."""
+    buckets: the default fingerprint folds in corpus identity (doc
+    count + source files), so a changed corpus rebuilds.  Both corpora
+    are parquet files, so the default fingerprint identifies them."""
     from pg_cjk_parser_spark.spark.corpus import synth_corpus
     from pg_cjk_parser_spark.query.topk import search_local
 
+    def on_disk(n, seed):
+        p = str(tmp_path / f"corpus_{n}_{seed}")
+        synth_corpus(spark, n, seed=seed, num_partitions=2).write.parquet(p)
+        return spark.read.parquet(p)
+
     d = str(tmp_path / "resume_fp")
-    big = synth_corpus(spark, 120, seed=42, num_partitions=2)
-    build_index(
+    big = on_disk(120, 42)
+    st = build_index(
         spark, big, d, num_buckets=4, num_salts=2, block_size=16, resume=True
     )
-    small = synth_corpus(spark, 40, seed=7, num_partitions=2)
+    assert st["n_docs"] == 120 and not st["fingerprint"].endswith("-mem")
+    small = on_disk(40, 7)
     st = build_index(
         spark, small, d, num_buckets=4, num_salts=2, block_size=16, resume=True
     )
@@ -287,6 +318,12 @@ def test_resume_invalidates_on_corpus_change(spark, tmp_path):
     }
     after = search_local(d, "のび太", k=500)
     assert all(docid in valid for docid, _ in after), "stale docids resumed"
+    # the unchanged corpus resumes: every bucket is complete, so the
+    # build returns the stored stats without rebuilding
+    again = build_index(
+        spark, small, d, num_buckets=4, num_salts=2, block_size=16, resume=True
+    )
+    assert again == st
 
 
 def test_randomized_queries_vs_oracle(spark, built):

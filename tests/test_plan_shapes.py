@@ -69,14 +69,19 @@ def test_contamination_overlap_broadcasts_probe(docs):
 
 
 def test_hash_split_no_shuffle_before_sort(docs):
-    """hash_split is a narrow projection - the only Exchange allowed
-    is the presentation orderBy's range partitioning."""
+    """hash_split is a narrow projection - under a presentation
+    orderBy, the only Exchange is that sort's range partitioning."""
     from pg_cjk_parser_spark.ops.textstats import hash_split
 
-    plan = _plan(hash_split(docs))
+    assert _count(_plan(hash_split(docs)), "Exchange") == 0
+    plan = _plan(hash_split(docs).orderBy("doc_id"))
     # every Exchange must be the rangepartitioning for the final sort
-    for m in re.finditer(r"^\(\d+\) Exchange\s*$(?:\n.+)+?Arguments: (\w+)", plan, re.M):
-        assert m.group(1) == "rangepartitioning", plan
+    keys = re.findall(
+        r"^\(\d+\) Exchange\s*\n(?:.+\n)*?Arguments: (\w+)", plan, re.M
+    )
+    assert keys, plan  # the sort's Exchange, so the loop cannot go vacuous
+    for key in keys:
+        assert key == "rangepartitioning", plan
     assert _count(plan, "Scan parquet") == 1, plan
 
 
@@ -198,12 +203,14 @@ def test_link_graph_single_scan_single_exchange(spark, tmp_path_factory):
     assert "partial_count" in plan, plan
 
 
+@pytest.mark.parametrize("resume", [False, True])
 def test_build_index_cell_exchange_then_map_in_arrow(
-    spark, docs, tmp_path, monkeypatch
+    spark, docs, tmp_path, monkeypatch, resume
 ):
-    """The packed build is tokenizer MapInPandas -> ONE Exchange keyed
-    by the collision-free cell map -> MapInArrow block encode (no
-    pandas round trip on the reduce side, no hash of (bucket, salt))."""
+    """The build is tokenizer MapInPandas -> ONE Exchange keyed by the
+    collision-free cell map -> MapInArrow block encode (no pandas round
+    trip on the reduce side, no hash of (bucket, salt), no sort), with
+    or without resume."""
     from pyspark.sql.readwriter import DataFrameWriter
 
     from pg_cjk_parser_spark.index.build import build_index
@@ -218,11 +225,13 @@ def test_build_index_cell_exchange_then_map_in_arrow(
     monkeypatch.setattr(DataFrameWriter, "parquet", spy)
     build_index(
         spark, docs, str(tmp_path / "idx"), docid_col="doc_id",
-        num_buckets=8, num_salts=4,
+        num_buckets=8, num_salts=4, resume=resume,
+        fingerprint="plan-shape" if resume else None,
     )
     plan = plans[0]  # the postings write
     for op in ("MapInPandas", "Exchange", "MapInArrow"):
         assert _count(plan, op) == 1, plan
+    assert _count(plan, "Sort") == 0, plan
 
     def op_id(op):
         return int(re.search(rf"^\((\d+)\) {op}\s*$", plan, re.M).group(1))

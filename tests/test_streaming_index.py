@@ -151,23 +151,26 @@ def test_compaction_preserves_results(spark, tmp_path):
 
 def test_decode_postings_roundtrip(spark, tmp_path):
     """decode_postings (index -> posting rows) must reproduce exactly
-    what explode_postings fed the build (same docid/tf/doclen/term and
-    byte-identical encoded positions)."""
-    from pg_cjk_parser_spark.index.build import explode_postings
+    the per-doc reference postings of the corpus (same bucket/salt/
+    term/docid/tf/doclen and byte-identical encoded positions)."""
     from pg_cjk_parser_spark.index.compact import decode_postings
+    from tests.index_reference import reference_postings
 
     d = str(tmp_path / "rt")
     docs = synth_corpus(spark, 120, seed=11, num_partitions=2)
     build_index(spark, docs, d, num_buckets=8, num_salts=2, block_size=16)
-    got = {
-        (r.term, r.docid, r.tf, r.doclen, bytes(r.positions))
+    got = [
+        (r.bucket, r.salt, r.term.encode(), r.docid, r.tf, r.doclen,
+         bytes(r.positions))
         for r in decode_postings(spark, d).collect()
-    }
-    want = {
-        (r.term, r.docid, r.tf, r.doclen, bytes(r.positions))
-        for r in explode_postings(docs, None, "text").collect()
-    }
-    assert got == want
+    ]
+    pdf = docs.selectExpr("xxhash64(url) as docid", "text").toPandas()
+    want = [
+        (b, s, *p)
+        for (b, s), ps in reference_postings(pdf, 8, 2).items()
+        for p in ps
+    ]
+    assert sorted(got) == sorted(want)
 
 
 def test_streaming_exact_dedup_first_occurrence(spark, tmp_path):

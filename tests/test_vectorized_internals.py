@@ -4,12 +4,12 @@
   bit-identical to the scalar ports (and to Spark's xxhash64);
 - cell_partition_key must spread real cell rows evenly over the
   shuffle partitions;
-- the Arrow block encoders must yield exactly BLOCK_SCHEMA's Arrow form;
+- the Arrow block encoder must yield exactly BLOCK_SCHEMA's Arrow form;
 - the vectorized _packed_postings_gen must emit the same postings as
   a straightforward per-doc reference aggregation;
-- compaction's whole-batch fast decode must match the exact per-block
-  path posting-for-posting (the ``n`` column gates the fast path, so
-  dropping it forces the exact path on the same input).
+- compaction's whole-batch decoder must match a per-block exact
+  decoder (tests/index_reference.py) posting-for-posting, with and
+  without tombstones, and must reject corrupt blocks by name.
 """
 
 import random
@@ -27,6 +27,7 @@ from pg_cjk_parser_spark.index.build import (
     _packed_postings_gen,
     _unpack_cell,
 )
+from pg_cjk_parser_spark.index.codec import decode_varints
 from pg_cjk_parser_spark.index.xxh64 import (
     cell_partition_key,
     pmod,
@@ -37,6 +38,7 @@ from pg_cjk_parser_spark.index.xxh64 import (
     spark_xxhash64_str,
     spark_xxhash64_str_vec,
 )
+from tests.index_reference import decode_blocks_exact, reference_postings
 
 
 def test_xxh64_long_vec_bit_identity():
@@ -149,15 +151,11 @@ def test_cell_partition_key_balances_cells(spark, bench_pdf, nb, ns, parts):
 
 
 def test_encoders_yield_block_arrow_schema(spark, corpus_pdf):
-    """Both block encoders yield batches typed exactly as Spark's Arrow
+    """The block encoder yields batches typed exactly as Spark's Arrow
     form of BLOCK_SCHEMA (mapInArrow rejects any other types)."""
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    from pg_cjk_parser_spark.index.build import (
-        _encode_cells,
-        _encode_partition,
-        _postings_gen,
-    )
+    from pg_cjk_parser_spark.index.build import _encode_cells
 
     want = to_arrow_schema(spark.createDataFrame([], BLOCK_SCHEMA).schema)
     assert BLOCK_ARROW_SCHEMA == want
@@ -167,18 +165,8 @@ def test_encoders_yield_block_arrow_schema(spark, corpus_pdf):
     ]
     out = list(_encode_cells(iter(cells), 32))
     assert out and all(b.schema == want for b in out)
-
-    rows = pd.concat(list(_postings_gen(iter([corpus_pdf.iloc[:300]]))))
-    rows["bucket"] = [pmod(spark_xxhash64_str(t), 8) for t in rows["term"]]
-    rows["salt"] = spark_xxhash64_long_vec(rows["docid"].to_numpy()) % 2
-    rows = rows.sort_values(["bucket", "salt", "term", "docid"], ignore_index=True)
-    batches = [
-        pa.RecordBatch.from_pandas(rows.iloc[i : i + 500], preserve_index=False)
-        for i in range(0, len(rows), 500)
-    ]
-    out = list(_encode_partition(iter(batches), 32))
-    assert out and all(b.schema == want for b in out)
-    assert sum(int(b.column("n").to_numpy().sum()) for b in out) == len(rows)
+    n_postings = sum(len(v) for v in reference_postings(corpus_pdf, 8, 2).values())
+    assert sum(int(b.column("n").to_numpy().sum()) for b in out) == n_postings
 
 
 def test_block_batches_split_at_byte_cap(monkeypatch, corpus_pdf):
@@ -249,35 +237,6 @@ def _cells_to_postings(frames):
     return {k: sorted(v) for k, v in out.items()}
 
 
-def _reference_postings(pdf, num_buckets, num_salts):
-    """Per-doc dict aggregation, the shape the vectorized generator
-    replaced: (bucket, salt) -> sorted postings with _enc_pos blobs."""
-    from pg_cjk_parser_spark.index.build import _enc_pos
-    from pg_cjk_parser_spark.kernel.tokenizer import lexemes
-
-    out = {}
-    for docid, text in zip(pdf["docid"].tolist(), pdf["text"].tolist()):
-        lex = lexemes(text) if text is not None else []
-        if not lex:
-            continue
-        salt = pmod(spark_xxhash64_long(docid), num_salts)
-        agg = {}
-        for term, p_ in lex:
-            agg.setdefault(term, []).append(p_)
-        for term, ps in agg.items():
-            bkt = pmod(spark_xxhash64_str(term), num_buckets)
-            out.setdefault((bkt, salt), []).append(
-                (
-                    term.encode("utf-8", "surrogatepass"),
-                    docid,
-                    len(ps),
-                    len(lex),
-                    _enc_pos(ps),
-                )
-            )
-    return {k: sorted(v) for k, v in out.items()}
-
-
 @pytest.fixture(scope="module")
 def corpus_pdf():
     from pg_cjk_parser_spark.spark.corpus import _doc_fields
@@ -304,7 +263,7 @@ def test_packed_gen_matches_reference(corpus_pdf):
     got = _cells_to_postings(
         _packed_postings_gen(iter([corpus_pdf]), 16, 4)
     )
-    want = _reference_postings(corpus_pdf, 16, 4)
+    want = reference_postings(corpus_pdf, 16, 4)
     assert set(got) == set(want)
     for k in want:
         assert got[k] == want[k]
@@ -320,9 +279,11 @@ def test_packed_gen_batch_split_invariant(corpus_pdf):
     assert one == many
 
 
-def test_compact_fast_decode_matches_exact(tmp_path, corpus_pdf):
+@pytest.fixture(scope="module")
+def corpus_blocks(corpus_pdf):
+    """(cells, blocks) of the corpus: packed cells, and their encoded
+    blocks as a table whose rows alternate between epochs 0 and 1."""
     from pg_cjk_parser_spark.index.build import _encode_cells
-    from pg_cjk_parser_spark.index.compact import _decode_to_cells
 
     cells = pd.concat(
         list(_packed_postings_gen(iter([corpus_pdf]), 8, 2)),
@@ -330,14 +291,108 @@ def test_compact_fast_decode_matches_exact(tmp_path, corpus_pdf):
     )
     blocks = pa.Table.from_batches(
         list(_encode_cells(iter([pa.RecordBatch.from_pandas(cells, preserve_index=False)]), 32))
-    ).to_pandas()
-    blocks["epoch"] = 0
-    fast = _cells_to_postings(
-        _decode_to_cells(iter([blocks]), deleted=None)
     )
-    exact = _cells_to_postings(
-        _decode_to_cells(iter([blocks.drop(columns=["n"])]), deleted=None)
-    )
+    epochs = pa.array(np.arange(blocks.num_rows) % 2, pa.int32())
+    return cells, blocks.append_column("epoch", epochs)
+
+
+def test_compact_fast_decode_matches_exact(corpus_pdf, corpus_blocks):
+    """The library's whole-batch decoder == the per-block exact
+    decoder, with no tombstones and with every 7th doc tombstoned at
+    both epochs, some of them only up to epoch 0 (sparing epoch 1)."""
+    from pg_cjk_parser_spark.index.compact import _decode_to_cells
+
+    cells, blocks = corpus_blocks
+    batches = blocks.to_batches(max_chunksize=700)  # several batches
+    exact = decode_blocks_exact(blocks.to_pandas())
+    fast = _cells_to_postings(_decode_to_cells(iter(batches), deleted=None))
     assert fast == exact
     # and the decode inverts the encode
     assert fast == _cells_to_postings(iter([cells]))
+
+    dids = np.unique(corpus_pdf["docid"].to_numpy()[::7])
+    upto = np.where(np.arange(dids.size) % 3 == 0, 0, 1).astype(np.int64)
+    deleted = (dids, upto)
+    exact = decode_blocks_exact(blocks.to_pandas(), deleted)
+    fast = _cells_to_postings(_decode_to_cells(iter(batches), deleted=deleted))
+    assert fast == exact
+    kept = {p[1] for v in exact.values() for p in v}
+    spared = set(dids[upto == 0].tolist())
+    assert kept & spared and not kept & set(dids[upto == 1].tolist())
+    n_all = sum(map(len, _cells_to_postings(iter([cells])).values()))
+    assert sum(map(len, fast.values())) < n_all
+
+
+def _corrupt_truncated(tfs, pos):
+    return tfs, pos[:-1]
+
+
+def _corrupt_npos(tfs, pos):
+    """Move one tf unit between neighbors: value counts still match,
+    but two postings' npos no longer equal their tfs."""
+    from pg_cjk_parser_spark.index.codec import encode_varints
+
+    t = decode_varints(tfs).astype(np.int64)
+    i = int(np.flatnonzero(t[1:] >= 2)[0]) + 1
+    t[i - 1] += 1
+    t[i] -= 1
+    return encode_varints(t.astype(np.uint64)), pos
+
+
+@pytest.mark.parametrize("corrupt", [_corrupt_truncated, _corrupt_npos])
+def test_compact_rejects_corrupt_block(spark, tmp_path, corrupt):
+    """A block whose positions blob is cut short, or whose npos differ
+    from its tfs, stops compaction with an error naming the block, and
+    postings/ is left as it was."""
+    import os
+    import re
+
+    import pyarrow.parquet as pq
+
+    from pg_cjk_parser_spark.index.build import build_index
+    from pg_cjk_parser_spark.index.compact import compact_index
+    from pg_cjk_parser_spark.spark.corpus import synth_corpus
+
+    idx = str(tmp_path / "idx")
+    build_index(
+        spark, synth_corpus(spark, 120, seed=3, num_partitions=2), idx,
+        num_buckets=4, num_salts=2, block_size=16,
+    )
+    pdir = os.path.join(idx, "postings")
+    path = next(
+        os.path.join(r, f)
+        for r, _, fs in sorted(os.walk(pdir))
+        for f in sorted(fs)
+        if f.endswith(".parquet")
+    )
+    t = pq.read_table(path)
+    tfs_col = t.column("tfs").to_pylist()
+    i = next(
+        k for k, (n, tb) in enumerate(zip(t.column("n").to_pylist(), tfs_col))
+        if n >= 2 and (decode_varints(tb)[1:] >= 2).any()
+    )
+    pos_col = t.column("positions").to_pylist()
+    tfs_col[i], pos_col[i] = corrupt(tfs_col[i], pos_col[i])
+    for name, col in (("tfs", tfs_col), ("positions", pos_col)):
+        t = t.set_column(
+            t.schema.get_field_index(name), name, pa.array(col, pa.binary())
+        )
+    pq.write_table(t, path)
+    crc = os.path.join(os.path.dirname(path), f".{os.path.basename(path)}.crc")
+    if os.path.exists(crc):
+        os.remove(crc)  # the local filesystem would reject the new bytes
+    bucket = int(re.search(r"bucket=(\d+)", path).group(1))
+    salt, term = t.column("salt")[i].as_py(), t.column("term")[i].as_py()
+
+    def snapshot():
+        return sorted(
+            (os.path.relpath(os.path.join(r, f), pdir), os.stat(os.path.join(r, f)).st_mtime_ns)
+            for r, _, fs in os.walk(pdir)
+            for f in fs
+        )
+
+    before = snapshot()
+    want = f"corrupt posting block bucket={bucket} salt={salt} term={term!r}"
+    with pytest.raises(Exception, match=re.escape(want)):
+        compact_index(spark, idx)
+    assert snapshot() == before
