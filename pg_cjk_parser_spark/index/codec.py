@@ -111,10 +111,3 @@ def decode_positions(buf: bytes, ndocs: int) -> list[list[int]]:
         i += n
         out.append(lst)
     return out
-
-
-def tf_norm(tf: np.ndarray, doclen: np.ndarray, k1: float, b: float, avgdl: float) -> np.ndarray:
-    """idf-free BM25 term contribution: tf / (tf + k1*(1-b+b*dl/avgdl))."""
-    tf = tf.astype(np.float64)
-    denom = tf + k1 * (1.0 - b + b * doclen.astype(np.float64) / avgdl)
-    return tf / denom

@@ -119,22 +119,6 @@ import functools
 
 
 @functools.lru_cache(maxsize=64)
-def salt_partition_count(num_salts: int) -> int:
-    """Smallest shuffle-partition count >= ``num_salts`` under which
-    Spark's hash partitioning sends every salt id 0..num_salts-1 to
-    its OWN partition.  ``repartition(num_salts, "salt")`` routinely
-    collides (measured: salts {0,1,3} of 4 all hashed to one
-    partition, so one scoring task did 75% of the query) - the
-    classic few-distinct-keys repartition skew.  Empty partitions
-    cost a no-op task each, so the search is capped."""
-    hs = [spark_mmh3_int(s) for s in range(num_salts)]
-    for p in range(num_salts, 64 * num_salts + 1):
-        if len({h % p if h % p >= 0 else h % p + p for h in hs}) == num_salts:
-            return p
-    return num_salts
-
-
-@functools.lru_cache(maxsize=64)
 def partition_keys(parts: int) -> tuple[int, ...]:
     """``keys[p]`` is the smallest int that Spark's hash partitioning
     (``pmod(Murmur3(int), parts)``) sends to partition ``p``: a

@@ -18,17 +18,20 @@ The seven public entry points are thin wrappers over one executor:
    then recheck phrases or rank from decoded positions.  Flat-OR BM25
    prunes blocks WAND-style against the running per-group threshold;
    other boolean trees are evaluated set-theoretically.
-3. **Runners**: :func:`_run_spark` reads the union of every spec's
-   terms and buckets in ONE scan (term IN-list pushed down),
-   repartitions by the collision-free ``salt_partition_count`` map
-   and scores every spec in one ``mapInPandas``; :func:`_run_local`
-   (serving tier: no Spark job) reads with pyarrow, groups by salt
-   and merges on the driver.
+3. **Runners**, both over one pyarrow block read
+   (:func:`_read_blocks_local`: term IN-list, optionally ``salt ==
+   s``, pushed into row-group pruning; block epochs from
+   ``path_epoch``).  :func:`_run_spark` launches one task per salt
+   (``spark.range(S)`` with S partitions into ``mapInArrow``); each
+   task reads only its salt's blocks and scores every spec, so there
+   is no parquet scan and no exchange before the merge.
+   :func:`_run_local` (serving tier: no Spark job) reads once, groups
+   by salt and merges on the driver.
 
 The Spark runner picks the global merge from what the caller passed:
 a query string keeps ``orderBy(value desc, docid).limit(k)`` over
-<= S*k rows (no Window, no extra Exchange); a list of queries gets a
-per-query ``row_number`` window.
+<= S*k rows (one job, no Window, no Exchange); a list of queries gets
+a per-query ``row_number`` window.
 
 BM25 uses k1/b from the index stats, idf = ln((N-df+0.5)/(df+0.5)+1).
 """
@@ -42,6 +45,7 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
@@ -57,11 +61,9 @@ from ..kernel.tsvector import (
     to_tsquery,
 )
 from ..index.codec import decode_varints
-from ..index.xxh64 import salt_partition_count
 from ..index.tombstones import (
     alive_mask,
     epoch_dir_layout,
-    epoch_from_file_path,
     load_tombstones,
     path_epoch,
 )
@@ -467,29 +469,31 @@ def _route(index_dir: str, query: str, mode: str):
     return stats, pq, bset, idf_map
 
 
-# the block columns the scorers need, for both runners' reads
-_BLOCK_READ_SCHEMA = (
-    "salt int, term string, n int, min_docid long, max_docid long, "
-    "docids binary, tfs binary, doclens binary, positions binary, "
-    "max_tf int, min_dl int"
-)
-_BLOCK_COLUMNS = [c.split()[0] for c in _BLOCK_READ_SCHEMA.split(", ")]
+# the block columns the scorers need
+_BLOCK_COLUMNS = [
+    "salt", "term", "n", "min_docid", "max_docid", "docids", "tfs",
+    "doclens", "positions", "max_tf", "min_dl",
+]
 
 
-def _read_blocks_local(paths, terms, with_epoch: bool = True) -> pd.DataFrame:
-    """pyarrow block read for the serving tier.
+def _read_blocks_local(
+    paths, terms, with_epoch: bool, salt=None
+) -> pd.DataFrame:
+    """The one pyarrow block read of both runners: ``term IN terms``
+    (and ``salt == salt`` when given) pushed into row-group pruning.
 
     When per-block epochs are not needed (no tombstones loaded, or a
     batch-only layout where every block is epoch 0 - see
     ``_needs_epoch``) all shard paths read as ONE file-list dataset:
     no per-path epoch parse, one threaded scan instead of a
     sequential per-shard loop.  Epoch-relevant reads fall back to one
-    frame per shard path with the block epoch parsed from the path
-    (epoch=N dir, 0 for batch dirs) - the no-Spark twin of
-    ``epoch_from_file_path``."""
+    frame per shard path with the block epoch parsed from the path by
+    ``path_epoch`` (epoch=N dir, 0 for batch dirs)."""
     import pyarrow.dataset as ds
 
     flt = ds.field("term").isin(terms)
+    if salt is not None:
+        flt &= ds.field("salt") == salt
     if not with_epoch:
         files = [
             os.path.join(p, n)
@@ -510,30 +514,6 @@ def _read_blocks_local(paths, terms, with_epoch: bool = True) -> pd.DataFrame:
         f["epoch"] = path_epoch(p) or 0
         frames.append(f)
     return pd.concat(frames, ignore_index=True)
-
-
-def _read_blocks(
-    spark: SparkSession, paths: list[str], terms, with_epoch: bool = True
-) -> DataFrame:
-    """The one postings-block read of the Spark runner.
-
-    The explicit schema (the block columns the scorers need) skips
-    per-query parquet footer inference and doubles as column pruning;
-    leaf dirs are passed as ROOTS (no basePath) because partition-
-    column discovery would conflict across mixed layouts (batch
-    bucket= dirs + appended epoch=/bucket= dirs) - partition values
-    are not needed, the block epoch derives from the file path.
-
-    The epoch column only exists to bound tombstones per posting, so
-    callers pass ``with_epoch=False`` when no tombstones are loaded
-    or the layout is batch-only (every block epoch 0) - the regexp
-    over input_file_name is pure overhead then."""
-    df = (
-        spark.read.schema(_BLOCK_READ_SCHEMA)
-        .parquet(*paths)
-        .where(F.col("term").isin(list(terms)))
-    )
-    return df.withColumn("epoch", epoch_from_file_path()) if with_epoch else df
 
 
 def _needs_epoch(stats, deleted, paths=()) -> bool:
@@ -657,11 +637,12 @@ def _score_group(specs, pdf, k, bm25, deleted):
 
 
 def _run_spark(spark, index_dir, queries, k, mode, kind, method=0):
-    """Spark runner: one postings scan, the collision-free salt
-    repartition, one ``mapInPandas`` over every spec, then the merge
-    that fits what the caller passed - a query string gets ``(docid,
-    score|rank)`` via orderBy/limit, a list gets ``(query, rank,
-    docid, score)`` via a per-query window."""
+    """Spark runner: one task per salt, each reading its own salt's
+    blocks with pyarrow and scoring every spec - no parquet scan and
+    no exchange before the merge.  The merge fits what the caller
+    passed: a query string gets ``(docid, score|rank)`` via
+    orderBy/limit, a list gets ``(query, rank, docid, score)`` via a
+    per-query window."""
     single = isinstance(queries, str)
     value = "rank" if kind in _RANK_KINDS else "score"
     # a single query's rows carry no query column, so its plan needs no
@@ -682,22 +663,23 @@ def _run_spark(spark, index_dir, queries, k, mode, kind, method=0):
         )
     stats, specs, paths, deleted, with_epoch = routed
     terms = sorted({t for s in specs for t in s.pq.all_terms})
-    blocks = _read_blocks(spark, paths, terms, with_epoch)
     bm25 = (stats["k1"], stats["b"], stats["avgdl"])
+    out = pa.schema(
+        list(zip(cols, (pa.string(), pa.int64(), pa.float64())[-len(cols):]))
+    )
 
-    def score_partition(batches):
-        frames = [f for f in batches if len(f)]
-        if not frames:
-            return
-        hit = _score_group(
-            specs, pd.concat(frames, ignore_index=True), k, bm25, deleted
-        )
-        if hit is not None:
-            yield pd.DataFrame(dict(zip(cols, hit[-len(cols):])))
+    def score_salts(batches):
+        for batch in batches:
+            for salt in batch.column(0).to_pylist():
+                pdf = _read_blocks_local(paths, terms, with_epoch, salt)
+                if not len(pdf):
+                    continue
+                hit = _score_group(specs, pdf, k, bm25, deleted)
+                if hit is not None:
+                    yield pa.record_batch(list(hit[-len(cols):]), schema=out)
 
     salts = stats["num_salts"]
-    by_salt = blocks.repartition(salt_partition_count(salts), "salt")
-    scored = by_salt.mapInPandas(score_partition, schema)
+    scored = spark.range(0, salts, 1, salts).mapInArrow(score_salts, schema)
     if single:
         return (
             scored.orderBy(F.desc(value), F.asc("docid"))
@@ -756,13 +738,13 @@ def search_many(
     :func:`search`.
 
     A production workload runs queries in batches, and per-query jobs
-    pay scheduling + scan setup B times; here the routed bucket paths
-    and the term IN-filter are unioned, the postings scan happens once,
-    and each salt partition scores every query against its own term
-    subset (queries stay independent - conjunction semantics are
-    per-query on the filtered frame).  Driver-side routing stays
-    O(total query terms); queries that cannot match any doc are simply
-    absent from the result."""
+    pay scheduling + read setup B times; here the routed bucket paths
+    and the term IN-filter are unioned, each salt's blocks are read
+    once by that salt's task, and the task scores every query against
+    its own term subset (queries stay independent - conjunction
+    semantics are per-query on the filtered frame).  Driver-side
+    routing stays O(total query terms); queries that cannot match any
+    doc are simply absent from the result."""
     return _run_spark(spark, index_dir, list(queries), k, mode, "bm25")
 
 

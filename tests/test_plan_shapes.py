@@ -85,11 +85,9 @@ def test_hash_split_no_shuffle_before_sort(docs):
     assert _count(plan, "Scan parquet") == 1, plan
 
 
-def test_search_pushes_term_filter(spark, tmp_path_factory):
-    """The postings scan must push the term IN-list into parquet
-    row-group pruning and read only routed bucket dirs."""
+@pytest.fixture(scope="module")
+def plan_index(spark, tmp_path_factory):
     from pg_cjk_parser_spark.index.build import build_index
-    from pg_cjk_parser_spark.query.topk import search, search_many
     from pg_cjk_parser_spark.spark.corpus import synth_corpus
 
     idx = str(tmp_path_factory.mktemp("planidx"))
@@ -97,54 +95,108 @@ def test_search_pushes_term_filter(spark, tmp_path_factory):
         spark, synth_corpus(spark, 80, seed=7, num_partitions=2), idx,
         num_buckets=8, num_salts=2, block_size=32,
     )
-    plan = _plan(search(spark, idx, "のび太", k=5))
-    assert "PushedFilters: [In(term" in plan, plan
-    # a single query merges with orderBy/limit, never a per-query
-    # window, and its rows carry no query column for a Project to drop
-    assert _count(plan, "Window") == 0, plan
-    assert _count(plan, "Project") == 0, plan
-    plan_b = _plan(search_many(spark, idx, ["のび太", "Doraemnon"], k=5))
-    assert "PushedFilters: [In(term" in plan_b, plan_b
-    assert _count(plan_b, "Scan parquet") == 1, plan_b
+    return idx
 
 
-def test_rank_paths_push_term_filter_single_scan(spark, tmp_path_factory):
-    """search_rank / search_rank_cd / search_many_rank must inherit the
-    BM25 scan shape: one parquet scan of routed bucket dirs with the
-    term IN-list pushed down.  Single queries add one hash Exchange on
-    salt and no extra shuffles or windows."""
-    from pg_cjk_parser_spark.index.build import build_index
+def test_single_query_plans_have_no_scan_or_exchange(spark, plan_index):
+    """search / search_rank / search_rank_cd launch one task per salt
+    that reads its own blocks with pyarrow: no parquet scan and no
+    exchange before the orderBy/limit merge, no per-query window, and
+    no Project (a single query's rows carry no query column)."""
     from pg_cjk_parser_spark.query.topk import (
-        search_many_rank,
+        search,
         search_rank,
         search_rank_cd,
     )
-    from pg_cjk_parser_spark.spark.corpus import synth_corpus
 
-    idx = str(tmp_path_factory.mktemp("rankidx"))
-    build_index(
-        spark, synth_corpus(spark, 80, seed=7, num_partitions=2), idx,
-        num_buckets=8, num_salts=2, block_size=32,
-    )
-    for fn, q in (
-        (search_rank, "doraemnon | nobita"),
-        (search_rank_cd, "のび太"),
+    for fn, q, mode in (
+        (search, "のび太", "plain"),
+        (search_rank, "doraemnon | nobita", "tsquery"),
+        (search_rank_cd, "のび太", "tsquery"),
     ):
-        plan = _plan(fn(spark, idx, q, k=5, mode="tsquery"))
-        assert "PushedFilters: [In(term" in plan, plan
-        assert _count(plan, "Scan parquet") == 1, plan
-        assert _count(plan, "Exchange") <= 2, plan  # salt hash + final sort
-        assert _count(plan, "Window") == 0, plan
-        assert _count(plan, "Project") == 0, plan
+        plan = _plan(fn(spark, plan_index, q, k=5, mode=mode))
+        for op in ("Exchange", "Scan parquet", "Window", "Project"):
+            assert _count(plan, op) == 0, (op, plan)
+        assert _count(plan, "MapInArrow") == 1, plan
+        assert _count(plan, "TakeOrderedAndProject") == 1, plan
+
+
+def test_batch_plans_have_one_window_exchange(spark, plan_index):
+    """search_many / search_many_rank keep the per-query row_number
+    window; its hash Exchange on query is the plan's only one."""
+    from pg_cjk_parser_spark.query.topk import search_many, search_many_rank
+
+    plans = [
+        _plan(search_many(spark, plan_index, ["のび太", "Doraemnon"], k=5))
+    ]
     for cd, qs in (
         (False, ["doraemnon | nobita", "のび太"]),
         (True, ["のび太", "doraemnon & nobita"]),
     ):
-        plan = _plan(
-            search_many_rank(spark, idx, qs, k=5, mode="tsquery", cd=cd)
-        )
-        assert "PushedFilters: [In(term" in plan, plan
-        assert _count(plan, "Scan parquet") == 1, plan
+        plans.append(_plan(
+            search_many_rank(spark, plan_index, qs, k=5, mode="tsquery", cd=cd)
+        ))
+    for plan in plans:
+        assert _count(plan, "Exchange") == 1, plan
+        assert _count(plan, "Window") >= 1, plan
+        assert _count(plan, "Scan parquet") == 0, plan
+
+
+def test_search_runs_one_job_with_one_task_per_salt(spark, plan_index):
+    """Collecting one search is ONE Spark job whose only stage has one
+    task per salt."""
+    from pg_cjk_parser_spark.query.topk import load_stats, search
+
+    sc = spark.sparkContext
+    sc.setJobGroup("plan-shapes-search", "one search", False)
+    try:
+        rows = search(spark, plan_index, "のび太", k=5).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert rows
+    # the status store is fed by the async listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    st = sc.statusTracker()
+    jobs = st.getJobIdsForGroup("plan-shapes-search")
+    assert len(jobs) == 1, jobs
+    stages = list(st.getJobInfo(jobs[0]).stageIds)
+    assert [st.getStageInfo(s).numTasks for s in stages] == [
+        load_stats(plan_index)["num_salts"]
+    ]
+
+
+def test_salt_reader_returns_only_requested_terms_and_salt(plan_index):
+    """The per-salt pyarrow read pushes both filters: it returns
+    exactly the requested terms' blocks of one salt, and the salts'
+    reads partition the unfiltered-by-salt read."""
+    import pandas as pd
+
+    from pg_cjk_parser_spark.query.topk import (
+        _read_blocks_local,
+        _shard_paths,
+        load_stats,
+        term_buckets,
+    )
+
+    stats = load_stats(plan_index)
+    terms = ["のび", "び太"]
+    bset = sorted(set(term_buckets(terms, stats["num_buckets"]).values()))
+    paths = _shard_paths(plan_index, "postings", bset, stats)
+    full = _read_blocks_local(paths, terms, False)
+    assert set(full["term"]) == set(terms)
+    parts = []
+    for salt in range(stats["num_salts"]):
+        for with_epoch in (False, True):
+            got = _read_blocks_local(paths, terms, with_epoch, salt)
+            assert set(got["salt"]) == {salt}, (salt, with_epoch)
+            assert set(got["term"]) <= set(terms)
+        parts.append(got)
+    key = ["salt", "term", "min_docid"]
+    pd.testing.assert_frame_equal(
+        pd.concat(parts).drop(columns="epoch").sort_values(key)
+        .reset_index(drop=True),
+        full.sort_values(key).reset_index(drop=True),
+    )
 
 
 def test_url_dedup_partial_max_by_one_exchange(spark, tmp_path_factory):

@@ -867,6 +867,57 @@ def test_foreign_epoch_survives_epoch_bounded_tombstone(spark, tmp_path):
     # and an unbounded delete still masks it
     delete_docs(idx, [2], upto_epoch=1)
     assert [d for d, _ in search_local(idx, "fast", k=10)] == [1]
+    got = {r.docid for r in search(spark, idx, "fast", k=10).collect()}
+    assert got == {1}
+
+
+def test_flat_small_epoch_tombstoned_spark_paths_match_local(spark, tmp_path):
+    """On a flat small-epoch index (parquet files directly in
+    epoch=N, block epochs taken from the path) with epoch-bounded
+    tombstones, the Spark runner's per-salt reads agree exactly with
+    the serving tier: search_many with search_local, search_rank_cd
+    with rank_local."""
+    import os
+
+    from pg_cjk_parser_spark.index.streaming import append_index_batch
+    from pg_cjk_parser_spark.index.tombstones import epoch_dir_layout
+
+    idx = str(tmp_path / "flat")
+    for e in range(2):
+        src = str(tmp_path / f"batch{e}")
+        spark.createDataFrame(
+            [(i, TEXTS[i]) for i in range(e * 12, (e + 1) * 12)],
+            "doc_id long, text string",
+        ).write.parquet(src)
+        # a parquet source carries a size estimate: small epochs go flat
+        append_index_batch(
+            spark, spark.read.parquet(src), idx, epoch=e,
+            docid_col="doc_id", num_buckets=4, num_salts=2, block_size=4,
+        )
+        assert epoch_dir_layout(
+            os.path.join(idx, "postings", f"epoch={e}")
+        ) == "flat"
+    delete_docs(idx, [0, 5, 13, 20])
+    # bounded at epoch 0: masks 2, leaves epoch-1 doc 15 visible
+    delete_docs(idx, [2, 15], upto_epoch=0)
+    dead = {0, 2, 5, 13, 20}
+
+    bm25 = ["fast & table", "'fast' | 'spark' | 'batch'", "merge <-> fast"]
+    many = search_many(spark, idx, bm25, k=50, mode="tsquery").collect()
+    for q in bm25:
+        got = [(r.docid, r.score) for r in many if r.query == q]
+        want = search_local(idx, q, k=50, mode="tsquery")
+        assert got == want, q
+        assert want and not dead & {d for d, _ in want}, q
+    assert 15 in {r.docid for r in many}
+    for q in ("fast <-> table", "fast & table", "merge & spark"):
+        got = [
+            (r.docid, r.rank)
+            for r in search_rank_cd(spark, idx, q, k=50).collect()
+        ]
+        want = rank_local(idx, q, k=50)
+        assert got == want, q
+        assert want and not dead & {d for d, _ in want}, q
 
 
 def test_ancestor_epoch_dir_does_not_unmask_batch_tombstones(

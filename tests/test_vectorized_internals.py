@@ -30,8 +30,6 @@ from pg_cjk_parser_spark.index.build import (
 from pg_cjk_parser_spark.index.codec import decode_varints
 from pg_cjk_parser_spark.index.xxh64 import (
     cell_partition_key,
-    pmod,
-    salt_partition_count,
     spark_mmh3_int,
     spark_xxhash64_long,
     spark_xxhash64_long_vec,
@@ -198,14 +196,6 @@ def test_mmh3_int_matches_spark_hash(spark):
     ).collect()
     for r in rows:
         assert spark_mmh3_int(r.v) == r.h
-
-
-def test_salt_partition_count_is_collision_free():
-    for s in (1, 2, 3, 4, 8, 16, 32, 64):
-        p = salt_partition_count(s)
-        assert p >= s
-        mods = {pmod(spark_mmh3_int(x), p) for x in range(s)}
-        assert len(mods) == s, (s, p)
 
 
 def _blob_slices(blob: bytes, lens: np.ndarray) -> list[bytes]:
