@@ -48,7 +48,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .codec import encode_varints_offsets
+from .codec import _binary_parts, _gather_bytes, encode_varints_offsets
 
 BLOCK_SCHEMA = (
     "bucket int, salt int, term string, block_id int, n int, "
@@ -193,10 +193,10 @@ def _packed_postings_gen(batches, num_buckets, num_salts, flush_at=500_000,
     work), and flush time delta-encodes + LEB128-encodes EVERY cell's
     stream in one vectorized pass (codec.encode_varints_offsets),
     slicing the shared byte buffer back into per-cell blobs by offset
-    - each posting's bytes are ``codec.encode_positions([its list])``
-    (differential test against a per-doc reference aggregation)."""
+    - each posting's bytes are its ``[npos, delta positions...]``
+    varint run (differential test against a per-doc reference
+    aggregation)."""
     from ..kernel.tokenizer import lexemes
-    from .codec import encode_varints_offsets
     from .xxh64 import spark_xxhash64_long_vec, spark_xxhash64_str_vec
 
     norm = None
@@ -497,29 +497,6 @@ BLOCK_ARROW_SCHEMA = pa.schema(
 # cap on one output batch's binary bytes (all four columns together),
 # far below the 2 GiB an int32-offset binary column can address
 _BATCH_BYTES = 1 << 26
-
-
-def _binary_parts(arr) -> tuple[np.ndarray, np.ndarray]:
-    """(data bytes, int64 offsets) of an Arrow binary/string array,
-    zero-copy: value ``i`` is ``data[offs[i]:offs[i + 1]]``."""
-    n = len(arr)
-    _, obuf, dbuf = arr.buffers()
-    offs = np.frombuffer(obuf, np.int32, n + 1, arr.offset * 4)
-    if dbuf is None:  # no value has a byte
-        return np.empty(0, np.uint8), offs.astype(np.int64)
-    return np.frombuffer(dbuf, np.uint8), offs.astype(np.int64)
-
-
-def _gather_bytes(buf, starts, lens) -> tuple[np.ndarray, np.ndarray]:
-    """Byte ranges ``buf[starts[i]:starts[i] + lens[i]]`` in the given
-    order as ONE uint8 array (one fancy-index gather, no per-range
-    objects), plus each range's end offset in it."""
-    ends = np.cumsum(lens)
-    total = int(ends[-1]) if ends.size else 0
-    idx = np.repeat(starts - (ends - lens), lens) + np.arange(
-        total, dtype=np.int64
-    )
-    return buf[idx], ends
 
 
 def _binary_array(data, lens) -> pa.Array:

@@ -7,12 +7,13 @@ rows back to postings, re-sorts per (bucket, salt, term, docid), and
 re-encodes full blocks under a single consolidated epoch, swapping
 directories atomically and collapsing the epoch manifests.
 
-One decoder turns blocks back into postings: :func:`_decode_batch`
-decodes a whole Arrow batch of block rows at once and drops
-tombstoned postings with one mask.  Compaction, :func:`merge_epochs`,
-their tombstone accounting and the :func:`decode_postings` export all
-call it; compaction's postings then go back through the build's
-packed-cell encoder.
+Blocks turn back into postings through the library's one block
+decoder, ``codec.decode_blocks``, which decodes a whole Arrow batch of
+block rows at once and drops tombstoned postings with one mask.
+Compaction, :func:`merge_epochs`, their tombstone accounting and the
+:func:`decode_postings` export call it once per batch, as the query
+path and ``validate_index`` do; compaction's postings then go back
+through the build's packed-cell encoder.
 """
 
 from __future__ import annotations
@@ -27,10 +28,9 @@ import pyarrow as pa
 from pyspark.sql import SparkSession, functions as F
 
 from .build import _atomic_json
-from .codec import decode_varints
+from .codec import BLOCK_COLS, _gather_bytes, decode_blocks
 from .streaming import _rebuild_stats
 from .tombstones import (
-    alive_mask,
     clear_tombstones,
     epoch_dir_layout,
     epoch_from_file_path,
@@ -43,114 +43,13 @@ _POSTING_SCHEMA = (
     "positions binary"
 )
 
-# the block columns the decoder reads (plus ``epoch``)
-_BLOCK_COLS = (
-    "bucket", "salt", "term", "n", "docids", "tfs", "doclens", "positions"
-)
-
-
-def _decode_batch(rb: pa.RecordBatch, deleted, dead: bool = False):
-    """Decode a whole Arrow batch of block rows back to postings, in
-    block order, without tombstoned (docid, epoch) versions - or, with
-    ``dead=True``, only those.
-
-    Each of the docid, tf and doclen columns is ONE varint decode over
-    the batch's concatenated blobs, with per-block cumsum resets for
-    the docid deltas.  Position blobs are not decoded: each posting's
-    ``[npos, deltas...]`` byte range is found from the blobs' value-end
-    bytes, because a block's ``positions`` (codec.encode_positions) is
-    the concatenation of its postings' own blobs.  Tombstones are ONE
-    ``alive_mask`` over every posting of the batch.
-
-    Returns ``(blk, ids, tfs, dls, pstart, plen, pbuf)``: per posting
-    its block row in ``rb``, int64 docid, tf and doclen, and the byte
-    range of its position blob in the uint8 buffer ``pbuf``.  Callers
-    gather the surviving position bytes with ONE
-    ``build._gather_bytes``.
-
-    Blocks are checked before their bytes are trusted: every varint
-    blob holds ``n`` values and ends on a value boundary, each
-    posting's npos equals its tf, and the last posting closes the
-    block's positions blob.  Every block this engine writes passes by
-    construction; a foreign or corrupt block raises ``ValueError``
-    naming its (bucket, salt, term)."""
-    from .build import _binary_parts, _gather_bytes
-
-    nb = rb.num_rows
-    ns = rb.column("n").to_numpy().astype(np.int64)
-    blk = np.repeat(np.arange(nb, dtype=np.int64), ns)
-
-    def fail(bad, what):
-        if bad.any():
-            i = int(np.flatnonzero(bad)[0])
-            b, s, t = (
-                rb.column(c)[i].as_py() for c in ("bucket", "salt", "term")
-            )
-            raise ValueError(
-                f"corrupt posting block bucket={b} salt={s} term={t!r}: "
-                f"{what}"
-            )
-
-    def blobs(col, want):
-        """(uint8 stream, value-end byte indices) of a binary column
-        whose blob i must hold ``want[i]`` whole varints."""
-        data, offs = _binary_parts(rb.column(col))
-        buf = data[offs[0] : offs[-1]]
-        ends = offs[1:] - offs[0]
-        vends = np.flatnonzero(buf < 0x80)
-        got = np.diff(np.searchsorted(vends, ends), prepend=0)
-        # a dangling continuation byte would glue onto the next blob's
-        # first value without changing any count
-        full = np.flatnonzero(ends > offs[:-1] - offs[0])
-        open_ = np.zeros(nb, bool)
-        open_[full] = buf[ends[full] - 1] >= 0x80
-        fail((got != want) | open_, f"{col} is not the block's varints")
-        return buf, vends
-
-    def values(col):
-        return decode_varints(blobs(col, ns)[0])
-
-    ends_n = np.cumsum(ns)
-    c = np.cumsum(values("docids"), dtype=np.uint64)
-    # per-block delta -> absolute: the first delta of a block is its
-    # absolute first docid, so subtract the running sum before it
-    # (uint64 wraparound is the codec's documented arithmetic)
-    off = np.concatenate((np.zeros(1, np.uint64), c))[ends_n - ns]
-    ids = (c - np.repeat(off, ns)).view(np.int64)
-    tfs = values("tfs").astype(np.int64)
-    dls = values("doclens").astype(np.int64)
-
-    # positions: posting p's values end at cv[p + 1] (npos + tf deltas)
-    cv = np.concatenate(([0], np.cumsum(tfs + 1)))
-    pbuf, vends = blobs("positions", cv[ends_n] - cv[ends_n - ns])
-    pend = vends[cv[1:] - 1] + 1
-    pstart = np.concatenate(([0], pend[:-1]))
-    # npos == tf: decode only each posting's head varint
-    head, _ = _gather_bytes(pbuf, pstart, vends[cv[:-1]] + 1 - pstart)
-    bad = np.zeros(nb, bool)
-    bad[blk[decode_varints(head) != tfs.astype(np.uint64)]] = True
-    fail(bad, "a posting's npos differs from its tf")
-
-    eps = rb.column("epoch").to_numpy().astype(np.int64)
-    keep = alive_mask(ids, deleted, np.repeat(eps, ns))
-    if dead:
-        keep = np.zeros(ids.size, bool) if keep is None else ~keep
-    plen = pend - pstart
-    if keep is None:
-        return blk, ids, tfs, dls, pstart, plen, pbuf
-    return (
-        blk[keep], ids[keep], tfs[keep], dls[keep], pstart[keep],
-        plen[keep], pbuf,
-    )
-
-
 def _export_postings(batches, deleted):
     """``mapInArrow`` body of :func:`decode_postings`: block rows ->
     one Arrow row per live posting."""
-    from .build import _binary_array, _gather_bytes
+    from .build import _binary_array
 
     for rb in batches:
-        blk, ids, tfs, dls, pstart, plen, pbuf = _decode_batch(rb, deleted)
+        blk, ids, tfs, dls, pstart, plen, pbuf = decode_blocks(rb, deleted)
         if not blk.size:
             continue
         pos, _ = _gather_bytes(pbuf, pstart, plen)
@@ -182,7 +81,7 @@ def decode_postings(spark: SparkSession, index_dir: str):
     postings = _read_postings_mixed(spark, index_dir)
     deleted = load_tombstones(index_dir)
     return (
-        postings.select(*_BLOCK_COLS)
+        postings.select(*BLOCK_COLS)
         .withColumn("epoch", epoch_from_file_path())
         .mapInArrow(
             lambda it: _export_postings(it, deleted), _POSTING_SCHEMA
@@ -196,14 +95,14 @@ def _decode_to_cells(batches, flush_at: int = 500_000, deleted=None):
     cells-not-rows strategy as the batch build, so compaction never
     pays a per-posting Arrow row boundary.
 
-    Each batch decodes in one :func:`_decode_batch` call (tombstoned
+    Each batch decodes in one ``codec.decode_blocks`` call (tombstoned
     postings already dropped); one stable argsort groups its postings
     by cell and ONE byte gather moves the surviving position blobs
     into that order - position lists are never decoded or
     re-encoded.  A cell chunk keeps its blocks' terms as its
     vocabulary; flush merges a cell's chunks with one dictionary
     encode (build._merge_vocab)."""
-    from .build import _gather_bytes, _merge_vocab, _pack_cell_idx
+    from .build import _merge_vocab, _pack_cell_idx
 
     # (bucket, salt) -> chunks of (vocab, vocab idx, docids, tfs,
     # doclens, position lengths, position bytes)
@@ -237,7 +136,7 @@ def _decode_to_cells(batches, flush_at: int = 500_000, deleted=None):
         )
 
     for rb in batches:
-        blk, ids, tfs, dls, pstart, plen, pbuf = _decode_batch(rb, deleted)
+        blk, ids, tfs, dls, pstart, plen, pbuf = decode_blocks(rb, deleted)
         if not blk.size:
             continue
         bkt = rb.column("bucket").to_numpy().astype(np.int64)
@@ -275,7 +174,7 @@ def _decoded_cells(postings, deleted):
     from .build import PACKED_SCHEMA
 
     return (
-        postings.select(*_BLOCK_COLS)
+        postings.select(*BLOCK_COLS)
         .withColumn("epoch", epoch_from_file_path())
         .mapInArrow(
             lambda it: _decode_to_cells(it, deleted=deleted), PACKED_SCHEMA
@@ -476,7 +375,7 @@ def _deleted_stats(postings, deleted) -> dict:
 
     def gen(batches):
         for rb in batches:
-            blk, ids, tfs, *_ = _decode_batch(rb, deleted, dead=True)
+            blk, ids, tfs, *_ = decode_blocks(rb, deleted, dead=True)
             if blk.size:
                 eps = rb.column("epoch").to_numpy().astype(np.int64)
                 yield pa.RecordBatch.from_arrays(
@@ -485,7 +384,7 @@ def _deleted_stats(postings, deleted) -> dict:
                 )
 
     row = (
-        postings.select(*_BLOCK_COLS)
+        postings.select(*BLOCK_COLS)
         .withColumn("epoch", epoch_from_file_path())
         .mapInArrow(gen, "docid long, epoch long, tf long")
         .agg(

@@ -12,10 +12,10 @@ versions as epoch ``e`` - the old version disappears, the new one
 serves (``upsert_index_batch`` in index/streaming.py packages
 exactly that).  Batch-built base postings count as epoch 0.
 
-Every query path filters candidate postings against the tombstones
-(dropped inside ``_TermList`` during decode with the posting's
-epoch, so deleted docs can neither match nor occupy WAND heap
-slots), while corpus statistics (n_docs, avgdl, df) stay as built -
+Every reader drops tombstoned postings as it decodes them: the one
+block decoder, ``codec.decode_blocks``, applies ONE ``alive_mask``
+with each posting's epoch, so on the query path deleted docs can
+neither match nor occupy WAND heap slots, while corpus statistics (n_docs, avgdl, df) stay as built -
 exactly Lucene's live-docs behavior - until ``compact_index``
 applies the tombstones physically and refreshes the statistics.
 

@@ -12,21 +12,27 @@ The seven public entry points are thin wrappers over one executor:
    a query that routes to nothing is dropped, never rejected.
 2. **Per-salt scorer** (:func:`_score_group`): salt is a hash of
    docid, so one salt group's blocks answer each spec LOCALLY with no
-   further shuffle.  Conjunctive (phrase/AND) queries share one
-   rarest-first intersection (:func:`_intersect`) that skips blocks
-   whose [min_docid, max_docid] range cannot overlap the candidates,
-   then recheck phrases or rank from decoded positions.  Flat-OR BM25
-   prunes blocks WAND-style against the running per-group threshold;
-   other boolean trees are evaluated set-theoretically.
+   further shuffle.  The group's blocks are split per term, and each
+   term's surviving blocks decode with ONE call of the library's one
+   block decoder, ``codec.decode_blocks`` (:class:`_TermList`), which
+   also drops tombstoned versions and rejects a corrupt block by
+   name.  Conjunctive (phrase/AND) queries share one rarest-first
+   intersection (:func:`_intersect`) that skips blocks whose
+   [min_docid, max_docid] range cannot overlap the candidates, then
+   recheck phrases or rank from positions decoded for the candidates
+   only.  Flat-OR BM25 prunes blocks WAND-style against the running
+   per-group threshold; other boolean trees are evaluated
+   set-theoretically.
 3. **Runners**, both over one pyarrow block read
    (:func:`_read_blocks_local`: term IN-list, optionally ``salt ==
    s``, pushed into row-group pruning; block epochs from
-   ``path_epoch``).  :func:`_run_spark` launches one task per salt
+   ``path_epoch``).  Blocks stay an Arrow table from the read to the
+   decoder.  :func:`_run_spark` launches one task per salt
    (``spark.range(S)`` with S partitions into ``mapInArrow``); each
    task reads only its salt's blocks and scores every spec, so there
    is no parquet scan and no exchange before the merge.
-   :func:`_run_local` (serving tier: no Spark job) reads once, groups
-   by salt and merges on the driver.
+   :func:`_run_local` (serving tier: no Spark job) reads once, splits
+   the table by salt and merges on the driver.
 
 The Spark runner picks the global merge from what the caller passed:
 a query string keeps ``orderBy(value desc, docid).limit(k)`` over
@@ -44,7 +50,6 @@ import os
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
@@ -60,9 +65,8 @@ from ..kernel.tsvector import (
     query_terms_all,
     to_tsquery,
 )
-from ..index.codec import decode_varints
+from ..index.codec import decode_blocks, gather_positions
 from ..index.tombstones import (
-    alive_mask,
     epoch_dir_layout,
     load_tombstones,
     path_epoch,
@@ -478,7 +482,7 @@ _BLOCK_COLUMNS = [
 
 def _read_blocks_local(
     paths, terms, with_epoch: bool, salt=None
-) -> pd.DataFrame:
+) -> pa.Table:
     """The one pyarrow block read of both runners: ``term IN terms``
     (and ``salt == salt`` when given) pushed into row-group pruning.
 
@@ -487,8 +491,9 @@ def _read_blocks_local(
     ``_needs_epoch``) all shard paths read as ONE file-list dataset:
     no per-path epoch parse, one threaded scan instead of a
     sequential per-shard loop.  Epoch-relevant reads fall back to one
-    frame per shard path with the block epoch parsed from the path by
-    ``path_epoch`` (epoch=N dir, 0 for batch dirs)."""
+    table per shard path with the block epoch parsed from the path by
+    ``path_epoch`` (epoch=N dir, 0 for batch dirs) as an ``epoch``
+    column."""
     import pyarrow.dataset as ds
 
     flt = ds.field("term").isin(terms)
@@ -501,19 +506,13 @@ def _read_blocks_local(
             for n in sorted(os.listdir(p))
             if n.endswith(".parquet")
         ]
-        return (
-            ds.dataset(files)
-            .to_table(columns=_BLOCK_COLUMNS, filter=flt)
-            .to_pandas()
-        )
-    frames = []
+        return ds.dataset(files).to_table(columns=_BLOCK_COLUMNS, filter=flt)
+    tables = []
     for p in paths:
-        f = ds.dataset(p).to_table(
-            columns=_BLOCK_COLUMNS, filter=flt
-        ).to_pandas()
-        f["epoch"] = path_epoch(p) or 0
-        frames.append(f)
-    return pd.concat(frames, ignore_index=True)
+        t = ds.dataset(p).to_table(columns=_BLOCK_COLUMNS, filter=flt)
+        epoch = np.full(t.num_rows, path_epoch(p) or 0, np.int64)
+        tables.append(t.append_column("epoch", pa.array(epoch)))
+    return pa.concat_tables(tables)
 
 
 def _needs_epoch(stats, deleted, paths=()) -> bool:
@@ -607,26 +606,42 @@ def _route_specs(index_dir, queries, mode, kind, method=0):
     return stats, specs, paths, deleted, _needs_epoch(stats, deleted, paths)
 
 
-def _score_group(specs, pdf, k, bm25, deleted):
+def _blocks_by_term(blocks: pa.Table) -> dict:
+    """One salt group's blocks split per term: ``{term: RecordBatch}``
+    in sorted term order, each term's blocks in read order."""
+    rb = blocks.combine_chunks().to_batches()[0]
+    enc = rb.column("term").dictionary_encode()
+    codes = enc.indices.to_numpy()
+    order = np.argsort(codes, kind="stable")
+    cuts = np.cumsum(np.bincount(codes, minlength=len(enc.dictionary)))
+    rows = dict(
+        zip(enc.dictionary.to_pylist(), np.split(order, cuts[:-1]))
+    )
+    return {t: rb.take(rows[t]) for t in sorted(rows)}
+
+
+def _score_group(specs, blocks, k, bm25, deleted):
     """The per-salt scorer dispatch: every spec's top-k over ONE salt
-    group's blocks as aligned ``(query, docid, score)`` arrays, or
-    None.  Each spec sees only its own terms' rows, so queries stay
-    independent; ``bm25`` is the index's ``(k1, b, avgdl)``."""
+    group's blocks (an Arrow table) as aligned ``(query, docid,
+    score)`` arrays, or None.  Each spec sees only its own terms'
+    blocks, so queries stay independent; ``bm25`` is the index's
+    ``(k1, b, avgdl)``."""
+    groups = _blocks_by_term(blocks)
     queries, ids, scores = [], [], []
     for spec in specs:
-        # a lone spec's blocks were read for its terms only
-        sub = pdf if len(specs) == 1 else pdf[
-            pdf["term"].isin(spec.pq.all_terms)
-        ]
-        if not len(sub):
+        per_term = {
+            t: g for t, g in groups.items() if t in spec.pq.all_terms
+        }
+        if not per_term:
             continue
-        sub = sub.reset_index(drop=True)
         if spec.kind == "bm25":
-            hit = _score_local(sub, spec.pq, spec.idf_map, bm25, k, deleted)
+            hit = _score_local(
+                per_term, spec.pq, spec.idf_map, bm25, k, deleted
+            )
         elif spec.kind == "rank":
-            hit = _rank_ts_local(sub, spec.pq, k, spec.method, deleted)
+            hit = _rank_ts_local(per_term, spec.pq, k, spec.method, deleted)
         else:
-            hit = _rank_cd_local(sub, spec.pq, k, spec.method, deleted)
+            hit = _rank_cd_local(per_term, spec.pq, k, spec.method, deleted)
         if hit is not None:
             queries.append(np.full(hit[0].size, spec.query, object))
             ids.append(hit[0])
@@ -671,10 +686,10 @@ def _run_spark(spark, index_dir, queries, k, mode, kind, method=0):
     def score_salts(batches):
         for batch in batches:
             for salt in batch.column(0).to_pylist():
-                pdf = _read_blocks_local(paths, terms, with_epoch, salt)
-                if not len(pdf):
+                blocks = _read_blocks_local(paths, terms, with_epoch, salt)
+                if not blocks.num_rows:
                     continue
-                hit = _score_group(specs, pdf, k, bm25, deleted)
+                hit = _score_group(specs, blocks, k, bm25, deleted)
                 if hit is not None:
                     yield pa.record_batch(list(hit[-len(cols):]), schema=out)
 
@@ -701,12 +716,18 @@ def _run_local(index_dir, query, k, mode, kind, method=0):
     if routed is None:
         return []
     stats, specs, paths, deleted, with_epoch = routed
-    pdf = _read_blocks_local(paths, specs[0].pq.all_terms, with_epoch)
+    blocks = _read_blocks_local(paths, specs[0].pq.all_terms, with_epoch)
     bm25 = (stats["k1"], stats["b"], stats["avgdl"])
+    salt = blocks.column("salt").to_numpy()
     hits = [
         hit
-        for _, grp in pdf.groupby("salt", sort=False)
-        if (hit := _score_group(specs, grp, k, bm25, deleted)) is not None
+        for s in np.unique(salt)
+        if (
+            hit := _score_group(
+                specs, blocks.filter(salt == s), k, bm25, deleted
+            )
+        )
+        is not None
     ]
     if not hits:
         return []
@@ -859,17 +880,18 @@ def rank_local(
     )
 
 
-def _intersect(per_term, n_terms, pos_terms, deleted):
+def _intersect(per_term, n_terms, deleted):
     """Rarest-first conjunctive intersection over one salt group:
     decode the rarest term's list first, then only those blocks of
     each later term whose [min_docid, max_docid] range overlaps the
-    surviving candidates.  Terms in ``pos_terms`` keep their position
-    blobs for rechecks and ranking.  Returns ``(lists, cand)`` - the
-    decoded lists and the sorted docids holding every term - or None
-    when a required term is missing here or nothing survives."""
+    surviving candidates.  Returns ``(lists, cand)`` - the decoded
+    lists and the sorted docids holding every term - or None when a
+    required term is missing here or nothing survives."""
     if len(per_term) < n_terms:
         return None  # some required term missing in this partition
-    order = sorted(per_term, key=lambda t: int(per_term[t]["n"].sum()))
+    order = sorted(
+        per_term, key=lambda t: int(per_term[t].column("n").to_numpy().sum())
+    )
     lists: dict[str, _TermList] = {}
     cand: np.ndarray | None = None
     for t in order:
@@ -878,8 +900,11 @@ def _intersect(per_term, n_terms, pos_terms, deleted):
             if cand.size == 0:
                 return None
             lo, hi = int(cand[0]), int(cand[-1])
-            tb = tb[(tb["max_docid"] >= lo) & (tb["min_docid"] <= hi)]
-        tl = _TermList(tb, t in pos_terms, deleted)
+            tb = tb.filter(
+                (tb.column("max_docid").to_numpy() >= lo)
+                & (tb.column("min_docid").to_numpy() <= hi)
+            )
+        tl = _TermList(tb, deleted)
         lists[t] = tl
         cand = tl.ids if cand is None else cand[
             _isin_sorted(cand, tl.ids)
@@ -1112,7 +1137,7 @@ def _phrase_start_docs(lists, cand, items):
     return np.unique(starts >> 16)
 
 
-def _rank_ts_local(pdf, pq, k, method, deleted=None):
+def _rank_ts_local(per_term, pq, k, method, deleted=None):
     """Per-salt-partition ts_rank: candidates from the @@ match set,
     ranks bit-identical to kernel ts_rank.
 
@@ -1129,13 +1154,9 @@ def _rank_ts_local(pdf, pq, k, method, deleted=None):
         isinstance(tree, And)
         or (isinstance(tree, Phrase) and len(tree.items) > 1)
     ) and len(terms) >= 2
-    per_term = {t: g for t, g in pdf.groupby("term", sort=True)}
 
     if pq.conjunctive:
-        hit = _intersect(
-            per_term, len(pq.terms),
-            per_term if and_path or pq.phrases else (), deleted,
-        )
+        hit = _intersect(per_term, len(pq.terms), deleted)
         if hit is None:
             return None
         lists, cand = hit
@@ -1145,9 +1166,7 @@ def _rank_ts_local(pdf, pq, k, method, deleted=None):
                 return None
             cand = cand[keep]
     else:  # flat OR
-        lists = {
-            t: _TermList(tb, False, deleted) for t, tb in per_term.items()
-        }
+        lists = {t: _TermList(tb, deleted) for t, tb in per_term.items()}
         cand = np.unique(np.concatenate([tl.ids for tl in lists.values()]))
         if not cand.size:
             return None
@@ -1259,12 +1278,10 @@ def _isin_sorted(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     return (j < b.size) & (b[jc] == a)
 
 
-def _rank_cd_local(pdf, pq, k, method, deleted=None):
+def _rank_cd_local(per_term, pq, k, method, deleted=None):
     """Per-salt-partition candidate intersection + exact kernel
     cover-density ranking from decoded positions."""
-    per_term = {t: g for t, g in pdf.groupby("term", sort=True)}
-    # every term's positions feed the cover fold
-    hit = _intersect(per_term, len(pq.terms), per_term, deleted)
+    hit = _intersect(per_term, len(pq.terms), deleted)
     if hit is None:
         return None
     lists, cand = hit
@@ -1307,132 +1324,42 @@ def _rank_cd_generic(lists, cand, tree, k, method):
 
 
 class _TermList:
-    """Decoded posting list for one term in one partition, with lazy
-    per-block position decoding for phrase rechecks."""
+    """One term's live postings in one salt group, from ONE
+    ``decode_blocks`` call over its (already pruned) blocks: sorted
+    ``ids`` with their ``tfs`` / ``dls``, and each posting's position
+    byte range in the decoder's buffer.  Tombstoned versions are gone
+    already - the decoder's alive mask drops them with each posting's
+    block epoch - and positions decode only for the docs a ranker or
+    phrase recheck asks for."""
 
-    __slots__ = (
-        "ids", "tfs", "dls", "blk_ids", "blk_pos", "blk_n",
-        "blk_tf", "blk_lo", "blk_hi", "blk_ep", "_poscache", "_deleted",
-    )
+    __slots__ = ("ids", "tfs", "dls", "_pstart", "_plen", "_pbuf")
 
-    def __init__(self, tb, decode_pos_blobs: bool, deleted=None):
-        # batch-decode docids across ALL blocks in one varint pass:
-        # concatenated per-block delta streams -> global cumsum minus a
-        # per-block correction (each block's first delta is absolute)
-        ns = tb["n"].to_numpy().astype(np.int64)
-        bufs_d = list(tb["docids"])
-        deltas = decode_varints(b"".join(bufs_d))
-        if deltas.size:
-            ends = np.cumsum(ns)
-            starts = ends - ns
-            g = np.cumsum(deltas, dtype=np.uint64)
-            prev_end = np.concatenate(
-                ([np.uint64(0)], g[ends[:-1] - 1])
-            ).astype(np.uint64)
-            corr = np.repeat(prev_end, ns)
-            ids = (g - corr).view(np.int64)
-        else:
-            ids = np.empty(0, np.int64)
-            starts = ends = np.empty(0, np.int64)
-        blk_eps = (
-            tb["epoch"].to_numpy().astype(np.int64)
-            if "epoch" in tb.columns
-            else np.zeros(len(tb), np.int64)
+    def __init__(self, blocks, deleted=None):
+        _, ids, tfs, dls, pstart, plen, self._pbuf = decode_blocks(
+            blocks, deleted
         )
-        tfs = decode_varints(b"".join(tb["tfs"])).astype(np.float64)
-        blk_ids, blk_pos, blk_n, blk_tf, blk_ep = [], [], [], [], []
-        if decode_pos_blobs:
-            for i, (buf_p, n) in enumerate(zip(tb["positions"], ns.tolist())):
-                blk_ids.append(ids[starts[i] : ends[i]])
-                blk_pos.append(buf_p)
-                blk_n.append(n)
-                # physical-order per-posting tf slice: npos == stored
-                # tf by construction, which lets _decode_block lay out
-                # the position stream without walking it
-                blk_tf.append(tfs[starts[i] : ends[i]])
-                blk_ep.append(int(blk_eps[i]))
-        dls = decode_varints(b"".join(tb["doclens"])).astype(np.float64)
         srt = np.argsort(ids, kind="stable")
         self.ids = ids[srt]
-        self.tfs = tfs[srt]
-        self.dls = dls[srt]
-        # tombstones: deleted postings (docid tombstoned at an epoch
-        # bound >= the posting's epoch) drop out of the SCORING arrays
-        # - they can't match or take top-k slots - while the block
-        # arrays keep their physical layout for position decoding,
-        # re-checking the tombstone per block there.  The per-posting
-        # epoch expansion only happens when tombstones exist - it is
-        # pure overhead on the (common) tombstone-free query.
-        self._deleted = deleted
-        if deleted is not None:
-            alive = alive_mask(
-                self.ids, deleted, np.repeat(blk_eps, ns)[srt]
-            )
-            if alive is not None:
-                self.ids = self.ids[alive]
-                self.tfs = self.tfs[alive]
-                self.dls = self.dls[alive]
-        self.blk_ids = blk_ids
-        self.blk_pos = blk_pos
-        self.blk_n = blk_n
-        self.blk_tf = blk_tf
-        self.blk_ep = blk_ep
-        if blk_ids:
-            self.blk_lo = np.array([int(x[0]) for x in blk_ids])
-            self.blk_hi = np.array([int(x[-1]) for x in blk_ids])
-        else:
-            self.blk_lo = self.blk_hi = np.empty(0, np.int64)
-        self._poscache: dict[int, list] = {}
+        self.tfs = tfs[srt].astype(np.float64)
+        self.dls = dls[srt].astype(np.float64)
+        self._pstart = pstart[srt]
+        self._plen = plen[srt]
 
-    def _decode_block(self, bi: int):
-        """Decode block ``bi``'s position stream once and cache
-        (values, per-posting delta offsets, per-posting counts).
-
-        The stream layout per posting is [npos, deltas...], and npos
-        equals the posting's stored tf (both are len(positions) at
-        build), so the offsets come from one cumsum over the block's
-        tf slice instead of a sequential Python walk over the decoded
-        values - the walk was the hot spot of phrase rechecks over
-        head terms."""
-        dec = self._poscache.get(bi)
-        if dec is None:
-            vals = decode_varints(self.blk_pos[bi])
-            cnts = self.blk_tf[bi].astype(np.int64)
-            ends = np.cumsum(cnts + 1)
-            if ends.size and int(ends[-1]) != vals.size:
-                raise ValueError(
-                    "position stream length disagrees with stored tf"
-                )
-            offs = ends - cnts
-            dec = (vals, offs, cnts)
-            self._poscache[bi] = dec
-        return dec
+    def _positions(self, sel):
+        """``(npos, positions)`` of the postings ``sel`` selects."""
+        npos = self.tfs[sel].astype(np.int64)
+        return npos, gather_positions(
+            self._pbuf, self._pstart[sel], self._plen[sel], npos
+        )
 
     def positions_of(self, docid: int):
-        """Positions for one doc (None if absent).  The containing
-        block's varint stream is decoded once (vectorized) and cached
-        per block; only the REQUESTED posting's deltas are then
-        prefix-summed - phrase rechecks touch a few docs per block, so
-        materializing every posting's list (the old decode_positions
-        call) wasted ~3/4 of the recheck time on the reference CJK
-        phrase queries."""
-        for bi in np.flatnonzero(
-            (self.blk_lo <= docid) & (self.blk_hi >= docid)
-        ).tolist():
-            bids = self.blk_ids[bi]
-            j = int(np.searchsorted(bids, docid))
-            if j >= bids.size or bids[j] != docid:
-                continue
-            if self._deleted is not None and alive_mask(
-                np.array([docid], np.int64),
-                self._deleted,
-                self.blk_ep[bi],
-            ) is not None:
-                continue  # this block holds a tombstoned version
-            vals, offs, cnts = self._decode_block(bi)
-            s = int(offs[j])
-            return np.cumsum(vals[s : s + int(cnts[j])]).tolist()
-        return None
+        """Positions for one doc (None if absent): :meth:`positions_bulk`
+        for one candidate, found by binary search."""
+        lo = np.searchsorted(self.ids, docid, "left")
+        hi = np.searchsorted(self.ids, docid, "right")
+        if lo == hi:
+            return None
+        return self._positions(slice(lo, hi))[1].tolist()
 
     def positions_bulk(self, cand: np.ndarray):
         """Positions for EVERY candidate docid in one vectorized pass.
@@ -1442,66 +1369,18 @@ class _TermList:
         position) - the batched equivalent of calling
         :meth:`positions_of` per candidate, for rankers that touch
         every candidate (cover-density) rather than a few."""
-        out_idx: list[np.ndarray] = []
-        out_pos: list[np.ndarray] = []
-        lo, hi = (int(cand[0]), int(cand[-1])) if cand.size else (0, -1)
-        for bi in range(len(self.blk_ids)):
-            if self.blk_lo[bi] > hi or self.blk_hi[bi] < lo:
-                continue
-            bids = self.blk_ids[bi]
-            # sorted membership (np.isin would re-sort `cand` for
-            # EVERY block, which dominated wall time at ~1k blocks x
-            # 50k candidates)
-            sel = np.flatnonzero(_isin_sorted(bids, cand))
-            if not sel.size:
-                continue
-            if self._deleted is not None:
-                alive = alive_mask(
-                    bids[sel], self._deleted, self.blk_ep[bi]
-                )
-                if alive is not None:
-                    sel = sel[alive]
-                    if not sel.size:
-                        continue
-            vals, offs, cnts = self._decode_block(bi)
-            n = cnts[sel]
-            starts = offs[sel]
-            tot = int(n.sum())
-            cum = np.cumsum(n)
-            gather = (
-                np.repeat(starts, n)
-                + np.arange(tot)
-                - np.repeat(cum - n, n)
-            )
-            deltas = vals[gather].astype(np.int64)
-            g = np.cumsum(deltas)
-            prev_end = np.concatenate(([0], g[cum[:-1] - 1]))
-            pos = g - np.repeat(prev_end, n)
-            out_pos.append(pos)
-            out_idx.append(
-                np.repeat(np.searchsorted(cand, bids[sel]), n)
-            )
-        if not out_idx:
-            e = np.empty(0, np.int64)
-            return e, e
-        idx = np.concatenate(out_idx)
-        pos = np.concatenate(out_pos)
-        # one doc lives in exactly one block per term, and positions
-        # ascend within a posting: a stable sort on doc alone yields
-        # (doc, position) order
-        srt = np.argsort(idx, kind="stable")
-        return idx[srt], pos[srt]
+        sel = np.flatnonzero(_isin_sorted(self.ids, cand))
+        npos, pos = self._positions(sel)
+        return np.repeat(np.searchsorted(cand, self.ids[sel]), npos), pos
 
 
-def _score_local(pdf, pq, idf_map, bm25, k, deleted=None):
+def _score_local(per_term, pq, idf_map, bm25, k, deleted=None):
     """Exact local BM25 top-k over one salt-partition's blocks;
     ``bm25`` is the index's ``(k1, b, avgdl)``."""
     k1, b, avgdl = bm25
     phrases, tree = pq.phrases, pq.tree
-    per_term = {t: g for t, g in pdf.groupby("term", sort=True)}
-    phrase_terms = {t for chain in phrases for t, _ in chain}
     if pq.conjunctive:
-        hit = _intersect(per_term, len(pq.terms), phrase_terms, deleted)
+        hit = _intersect(per_term, len(pq.terms), deleted)
         if hit is None:
             return None
         lists, cand = hit
@@ -1510,10 +1389,7 @@ def _score_local(pdf, pq, idf_map, bm25, k, deleted=None):
     else:
         # boolean (Or/Not) mode: every referenced term's list is
         # decoded, because evaluating the tree needs all of them
-        lists = {
-            t: _TermList(tb, t in phrase_terms, deleted)
-            for t, tb in per_term.items()
-        }
+        lists = {t: _TermList(tb, deleted) for t, tb in per_term.items()}
         cand = _eval_tree(tree, lists, phrases)
         if cand is None or not cand.size:
             return None
@@ -1570,7 +1446,9 @@ def _score_wand_or(per_term, idf_map, k1, b, avgdl, k, deleted=None):
     score the block could still improve). Both conditions keep the
     result exact; tests assert identity with the brute-force oracle.
     """
-    acc: dict[int, float] = {}
+    # the docids seen so far, sorted, and their running scores
+    ids = np.empty(0, np.int64)
+    acc = np.empty(0, np.float64)
     order = sorted(per_term, key=lambda t: -idf_map.get(t, 0.0))
     for n_seen, t in enumerate(order, start=1):
         tb = per_term[t]
@@ -1578,34 +1456,34 @@ def _score_wand_or(per_term, idf_map, k1, b, avgdl, k, deleted=None):
         if w <= 0:
             continue
         remaining_ub = sum(idf_map.get(u, 0.0) for u in order[n_seen:])
-        if len(acc) >= k:
-            theta = np.partition(
-                np.fromiter(acc.values(), dtype=np.float64), -k
-            )[-k]
-            mx = tb["max_tf"].to_numpy().astype(np.float64)
-            ub = w * mx / (
-                mx + k1 * (1 - b + b * tb["min_dl"].to_numpy() / avgdl)
+        if ids.size >= k:
+            theta = np.partition(acc, -k)[-k]
+            mx, mdl, lo, hi = (
+                tb.column(c).to_numpy()
+                for c in ("max_tf", "min_dl", "min_docid", "max_docid")
             )
+            mx = mx.astype(np.float64)
+            ub = w * mx / (mx + k1 * (1 - b + b * mdl / avgdl))
             keep_mask = (ub + remaining_ub) >= theta
             if not keep_mask.all():
-                seen = np.fromiter(acc.keys(), dtype=np.int64)
-                seen.sort()
-                lo = tb["min_docid"].to_numpy()
-                hi = tb["max_docid"].to_numpy()
                 has_cand = (
-                    np.searchsorted(seen, hi, "right")
-                    - np.searchsorted(seen, lo, "left")
+                    np.searchsorted(ids, hi, "right")
+                    - np.searchsorted(ids, lo, "left")
                 ) > 0
-                tb = tb[keep_mask | has_cand]
-        tl = _TermList(tb, False, deleted)
+                tb = tb.filter(keep_mask | has_cand)
+        tl = _TermList(tb, deleted)
         contrib = w * tl.tfs / (tl.tfs + k1 * (1 - b + b * tl.dls / avgdl))
-        for d, c in zip(tl.ids.tolist(), contrib.tolist()):
-            acc[d] = acc.get(d, 0.0) + c
-    if not acc:
+        # union, then add each posting's contribution in list order, so
+        # every doc sums its terms rarest-first (add.at: a docid listed
+        # twice adds twice)
+        merged = np.union1d(ids, tl.ids)
+        sc = np.zeros(merged.size)
+        sc[np.searchsorted(merged, ids)] = acc
+        np.add.at(sc, np.searchsorted(merged, tl.ids), contrib)
+        ids, acc = merged, sc
+    if not ids.size:
         return None
-    ids = np.fromiter(acc.keys(), dtype=np.int64, count=len(acc))
-    sc = np.fromiter(acc.values(), dtype=np.float64, count=len(acc))
-    return _topk(ids, sc, k)
+    return _topk(ids, acc, k)
 
 
 def _eval_tree(tree, lists: dict[str, "_TermList"], phrases) -> np.ndarray | None:

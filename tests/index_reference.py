@@ -5,7 +5,10 @@ plain per-doc and per-block Python, slow but easy to check by eye.
 - ``reference_postings``: per-doc tokenize + dict aggregation, the
   postings a build must produce;
 - ``decode_blocks_exact``: per-block decode of posting blocks with
-  per-block tombstone masks, the postings compaction must recover.
+  per-block tombstone masks, the postings compaction must recover;
+- the plain per-blob codec (``encode_varints``, ``delta_encode`` /
+  ``delta_decode``, ``encode_positions`` / ``decode_positions``) the
+  references encode and decode one blob at a time with.
 """
 
 import numpy as np
@@ -13,10 +16,8 @@ import pyarrow as pa
 
 from pg_cjk_parser_spark.index.build import _pack_cell_idx
 from pg_cjk_parser_spark.index.codec import (
-    decode_positions,
     decode_varints,
-    delta_decode,
-    encode_positions,
+    encode_varints_offsets,
 )
 from pg_cjk_parser_spark.index.tombstones import alive_mask
 from pg_cjk_parser_spark.index.xxh64 import (
@@ -24,6 +25,54 @@ from pg_cjk_parser_spark.index.xxh64 import (
     spark_xxhash64_long,
     spark_xxhash64_str,
 )
+
+
+def encode_varints(a: np.ndarray) -> bytes:
+    """LEB128-encode a uint64 array (vectorized)."""
+    buf, _ = encode_varints_offsets(a)
+    return buf.tobytes()
+
+
+def delta_encode(docids: np.ndarray) -> bytes:
+    d = np.ascontiguousarray(docids).view(np.uint64)
+    deltas = np.diff(d, prepend=np.uint64(0))
+    return encode_varints(deltas)
+
+
+def delta_decode(buf: bytes) -> np.ndarray:
+    deltas = decode_varints(buf)
+    return np.cumsum(deltas, dtype=np.uint64)
+
+
+def encode_positions(pos_lists: list[list[int]]) -> bytes:
+    """Concatenated per-doc position lists: [npos, delta positions...]."""
+    flat: list[int] = []
+    for ps in pos_lists:
+        flat.append(len(ps))
+        prev = 0
+        for p in ps:
+            flat.append(p - prev)
+            prev = p
+    return encode_varints(np.array(flat, dtype=np.uint64))
+
+
+def decode_positions(buf: bytes, ndocs: int) -> list[list[int]]:
+    """Per-doc position lists.  Position lists are tiny (tf ~ 1-3), so
+    plain-Python accumulation beats per-doc NumPy calls."""
+    vals = decode_varints(buf).tolist()
+    out = []
+    i = 0
+    for _ in range(ndocs):
+        n = vals[i]
+        i += 1
+        acc = 0
+        lst = []
+        for d in vals[i : i + n]:
+            acc += d
+            lst.append(acc)
+        i += n
+        out.append(lst)
+    return out
 
 
 def pack_cell(terms_b, docids, tfs, dls, poss) -> bytes:

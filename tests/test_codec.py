@@ -1,8 +1,8 @@
 import numpy as np
 
-from pg_cjk_parser_spark.index.codec import (
+from pg_cjk_parser_spark.index.codec import decode_varints
+from tests.index_reference import (
     decode_positions,
-    decode_varints,
     delta_decode,
     delta_encode,
     encode_positions,
@@ -29,6 +29,28 @@ def test_delta_roundtrip_signed_docids():
     d = np.sort(np.array([-(1 << 62), -5, -1, 0, 3, 1 << 61], dtype=np.int64))
     got = delta_decode(delta_encode(d)).view(np.int64)
     assert np.array_equal(got, d)
+
+
+def test_one_block_decoder():
+    """``decode_varints`` is called only inside index/codec.py: the
+    library has one block decoder, and a second copy fails here."""
+    import ast
+    import pathlib
+
+    import pg_cjk_parser_spark
+
+    root = pathlib.Path(pg_cjk_parser_spark.__file__).parent
+    callers = set()
+    for path in sorted(root.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(node, ast.Call):
+                f = node.func
+                name = f.id if isinstance(f, ast.Name) else getattr(
+                    f, "attr", None
+                )
+                if name == "decode_varints":
+                    callers.add(path.relative_to(root).as_posix())
+    assert callers == {"index/codec.py"}
 
 
 def test_positions_roundtrip():

@@ -182,12 +182,14 @@ def test_salt_reader_returns_only_requested_terms_and_salt(plan_index):
     terms = ["のび", "び太"]
     bset = sorted(set(term_buckets(terms, stats["num_buckets"]).values()))
     paths = _shard_paths(plan_index, "postings", bset, stats)
-    full = _read_blocks_local(paths, terms, False)
+    full = _read_blocks_local(paths, terms, False).to_pandas()
     assert set(full["term"]) == set(terms)
     parts = []
     for salt in range(stats["num_salts"]):
         for with_epoch in (False, True):
-            got = _read_blocks_local(paths, terms, with_epoch, salt)
+            got = _read_blocks_local(
+                paths, terms, with_epoch, salt
+            ).to_pandas()
             assert set(got["salt"]) == {salt}, (salt, with_epoch)
             assert set(got["term"]) <= set(terms)
         parts.append(got)

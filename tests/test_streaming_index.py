@@ -316,6 +316,22 @@ def test_validate_index_batch_stream_and_corruption(spark, tmp_path):
     assert rep["ok"], rep["errors"]
     assert rep["checks"]["epochs"] == 2
 
+    # batch index + an appended epoch: the bucket manifests sum to the
+    # batch base (manifests/base.json), not to the whole index
+    adir = str(tmp_path / "vappend")
+    half = F.pmod(F.xxhash64("url"), F.lit(2))
+    build_index(
+        spark, docs.where(half == 0), adir, num_buckets=8, num_salts=2,
+        block_size=16,
+    )
+    append_index_batch(
+        spark, docs.where(half == 1), adir, epoch=1, num_buckets=8,
+        num_salts=2, block_size=16,
+    )
+    rep = validate_index(adir, deep=True)
+    assert rep["ok"], rep["errors"]
+    assert rep["checks"]["buckets"] == 8 and rep["checks"]["epochs"] == 1
+
     # corruption: tamper a bucket manifest's metrics -> caught
     mp = os.path.join(bdir, "manifests", "bucket=3.json")
     with open(mp) as f:

@@ -7,9 +7,11 @@
 - the Arrow block encoder must yield exactly BLOCK_SCHEMA's Arrow form;
 - the vectorized _packed_postings_gen must emit the same postings as
   a straightforward per-doc reference aggregation;
-- compaction's whole-batch decoder must match a per-block exact
-  decoder (tests/index_reference.py) posting-for-posting, with and
-  without tombstones, and must reject corrupt blocks by name.
+- the library's one block decoder (codec.decode_blocks) must match a
+  per-block exact decoder (tests/index_reference.py)
+  posting-for-posting, with and without tombstones, and every reader
+  (compaction, queries, validate_index) must reject a corrupt block
+  by name.
 """
 
 import random
@@ -23,11 +25,10 @@ from pg_cjk_parser_spark.index.build import (
     BLOCK_ARROW_SCHEMA,
     BLOCK_SCHEMA,
     PACKED_SCHEMA,
-    _binary_parts,
     _packed_postings_gen,
     _unpack_cell,
 )
-from pg_cjk_parser_spark.index.codec import decode_varints
+from pg_cjk_parser_spark.index.codec import _binary_parts, decode_varints
 from pg_cjk_parser_spark.index.xxh64 import (
     cell_partition_key,
     spark_mmh3_int,
@@ -320,7 +321,7 @@ def _corrupt_truncated(tfs, pos):
 def _corrupt_npos(tfs, pos):
     """Move one tf unit between neighbors: value counts still match,
     but two postings' npos no longer equal their tfs."""
-    from pg_cjk_parser_spark.index.codec import encode_varints
+    from tests.index_reference import encode_varints
 
     t = decode_varints(tfs).astype(np.int64)
     i = int(np.flatnonzero(t[1:] >= 2)[0]) + 1
@@ -333,7 +334,8 @@ def _corrupt_npos(tfs, pos):
 def test_compact_rejects_corrupt_block(spark, tmp_path, corrupt):
     """A block whose positions blob is cut short, or whose npos differ
     from its tfs, stops compaction with an error naming the block, and
-    postings/ is left as it was."""
+    postings/ is left as it was.  Queries on the block's term and deep
+    validation reject the same block through the same decoder."""
     import os
     import re
 
@@ -341,6 +343,9 @@ def test_compact_rejects_corrupt_block(spark, tmp_path, corrupt):
 
     from pg_cjk_parser_spark.index.build import build_index
     from pg_cjk_parser_spark.index.compact import compact_index
+    from pg_cjk_parser_spark.index.validate import validate_index
+    from pg_cjk_parser_spark.kernel.tokenizer import lexemes
+    from pg_cjk_parser_spark.query.topk import search, search_local
     from pg_cjk_parser_spark.spark.corpus import synth_corpus
 
     idx = str(tmp_path / "idx")
@@ -357,9 +362,13 @@ def test_compact_rejects_corrupt_block(spark, tmp_path, corrupt):
     )
     t = pq.read_table(path)
     tfs_col = t.column("tfs").to_pylist()
+    # a block a plain query for its term reaches
     i = next(
-        k for k, (n, tb) in enumerate(zip(t.column("n").to_pylist(), tfs_col))
+        k for k, (n, tb, term) in enumerate(zip(
+            t.column("n").to_pylist(), tfs_col, t.column("term").to_pylist()
+        ))
         if n >= 2 and (decode_varints(tb)[1:] >= 2).any()
+        and [lx for lx, _ in lexemes(term)] == [term]
     )
     pos_col = t.column("positions").to_pylist()
     tfs_col[i], pos_col[i] = corrupt(tfs_col[i], pos_col[i])
@@ -386,3 +395,14 @@ def test_compact_rejects_corrupt_block(spark, tmp_path, corrupt):
     with pytest.raises(Exception, match=re.escape(want)):
         compact_index(spark, idx)
     assert snapshot() == before
+
+    # the query path reads bucket dirs as file lists: it names the
+    # block by salt and term
+    named = f"corrupt posting block salt={salt} term={term!r}"
+    with pytest.raises(ValueError, match=re.escape(named)):
+        search_local(idx, term)
+    with pytest.raises(Exception, match=re.escape(named)):
+        search(spark, idx, term).collect()
+    rep = validate_index(idx, deep=True, sample_blocks=1 << 30)
+    assert not rep["ok"]
+    assert any(want in e for e in rep["errors"]), rep["errors"]
