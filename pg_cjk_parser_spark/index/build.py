@@ -27,13 +27,17 @@ Pipeline (all DataFrame/Arrow; designed for 1000-executor scale):
    docid)`` for block-max pruning.  Blocks leave Python as Arrow
    batches built from the varint buffers (:func:`_slice_blocks`), with
    no per-block Python objects and no pandas conversion.
-4. **Write** parquet partitioned by ``bucket`` (queries touch at most
-   |q| buckets via partition pruning) + per-bucket ``_manifest.json``
-   lineage enabling checkpoint resume: on resume, the cells of buckets
-   with a valid manifest are filtered out before the cell exchange and
-   the rest are rebuilt with dynamic partition overwrite.  Termstats
-   and corpus totals derive from the written blocks' metadata, read
-   with a known schema (no inference job).
+4. **Write** epoch 0 of the epoch protocol (index/streaming.py,
+   ``_write_epoch`` - the same writer large appends use): blocks under
+   ``postings/epoch=0/bucket=N`` (queries touch at most |q| buckets
+   via directory pruning), termstats under ``termstats/epoch=0/
+   bucket=N`` derived from the written blocks' metadata, then
+   ``manifests/epoch=0.json`` LAST, carrying the totals and the
+   corpus fingerprint; stats.json derives from the manifests.  A
+   clean build first removes the previous index, tombstones
+   included, so a crash before the manifest serves nothing under
+   stale stats; ``resume=True`` returns the stored stats once epoch
+   0 is complete for the same fingerprint and rebuilds otherwise.
 """
 
 from __future__ import annotations
@@ -62,10 +66,6 @@ DEFAULT_SALTS = 4
 DEFAULT_BLOCK = 128
 
 
-def _manifest_path(index_dir: str, bucket: int) -> str:
-    return os.path.join(index_dir, "manifests", f"bucket={bucket}.json")
-
-
 def _atomic_json(path: str, obj: dict) -> None:
     tmp = f"{path}.tmp.{os.getpid()}"
     with open(tmp, "w") as f:
@@ -78,24 +78,6 @@ def _bucket_dirs(path: str) -> list[str]:
     if not os.path.isdir(path):
         return []
     return [x for x in os.listdir(path) if x.startswith("bucket=")]
-
-
-def _valid_buckets(index_dir: str, fingerprint: str) -> set[int]:
-    mdir = os.path.join(index_dir, "manifests")
-    if not os.path.isdir(mdir):
-        return set()
-    ok = set()
-    for name in os.listdir(mdir):
-        if not name.endswith(".json"):
-            continue
-        try:
-            with open(os.path.join(mdir, name)) as f:
-                m = json.load(f)
-            if m.get("fingerprint") == fingerprint and m.get("status") == "complete":
-                ok.add(int(m["bucket"]))
-        except Exception:
-            continue
-    return ok
 
 
 PACKED_SCHEMA = "bucket int, salt int, payload binary"
@@ -479,6 +461,27 @@ def _with_docid(docs: DataFrame, docid_col: str | None) -> DataFrame:
     return docs.withColumn("docid", F.col(docid_col).cast("long"))
 
 
+def _doc_cells(
+    docs: DataFrame, docid_col, text_col, num_buckets, num_salts,
+    normalize_zht, obs=None,
+) -> DataFrame:
+    """The tokenizer pass of the batch build and of appends: docs ->
+    packed (bucket, salt) cell rows (:func:`_packed_postings_gen`).
+    ``obs``, when given, counts the source docs as the observed
+    metric ``n_docs``."""
+    sel = _with_docid(docs, docid_col).select(
+        "docid", F.col(text_col).alias("text")
+    )
+    if obs is not None:
+        sel = sel.observe(obs, F.count(F.lit(1)).alias("n_docs"))
+    return sel.mapInPandas(
+        lambda it: _packed_postings_gen(
+            it, num_buckets, num_salts, normalize_zht=normalize_zht
+        ),
+        PACKED_SCHEMA,
+    )
+
+
 # BLOCK_SCHEMA as Arrow: what the encoders' batches must carry exactly
 # (``mapInArrow`` checks the types; tests compare it with Spark's own
 # conversion of BLOCK_SCHEMA)
@@ -616,10 +619,13 @@ def build_index(
     timestamp); ``xxhash64(url)`` is the fallback when only urls
     identify documents.
 
-    ``resume=True`` keeps every bucket whose manifest carries
-    ``fingerprint`` and rebuilds the rest; the tokenizer pass still
-    reads the whole corpus, but only the missing buckets' cells are
-    shuffled, encoded and written.
+    The index is written as epoch 0 of the epoch protocol, manifest
+    last (module docstring, step 4).  ``resume=True`` returns the
+    stored stats without running a Spark job when epoch 0's manifest
+    is complete and carries ``fingerprint`` - also after later
+    appends, and after a compaction or merge folded epoch 0 into
+    another epoch (its manifest carries the fingerprint on) - and
+    runs a clean build otherwise.
 
     ``normalize_zht=True`` maps traditional->simplified CJK
     (cjk_zht2zhs) inside the tokenizer pass, so traditional and
@@ -632,10 +638,10 @@ def build_index(
 
     os.makedirs(index_dir, exist_ok=True)
     if fingerprint is None:
-        # the fingerprint gates bucket-manifest resume, so it must
-        # identify the corpus, not just the layout: resuming after the
-        # input changed must rebuild every bucket rather than keep
-        # buckets built from the old docs next to ones from the new.
+        # the fingerprint gates resume, so it must identify the
+        # corpus, not just the layout: resuming after the input
+        # changed must rebuild rather than keep an index built from
+        # the old docs.
         if n_docs is None:
             n_docs = docs.count()
         try:
@@ -647,7 +653,7 @@ def build_index(
         else:
             # in-memory DataFrame: no input files to identify the corpus,
             # and doc count alone cannot distinguish two different
-            # same-sized corpora - so never reuse prior buckets
+            # same-sized corpora - so never reuse a prior build
             # (a caller who wants resume for an in-memory source passes
             # an explicit content-derived ``fingerprint``)
             src_h = "mem"
@@ -656,138 +662,67 @@ def build_index(
         fingerprint = (
             f"fp3-{num_buckets}-{num_salts}-{block_size}{zs}-n{n_docs}-{src_h}"
         )
-    done = _valid_buckets(index_dir, fingerprint) if resume else set()
-    if resume and len(done) == num_buckets:
-        with open(os.path.join(index_dir, "stats.json")) as f:
-            return json.load(f)
-    if not resume:
-        # clean rebuild: dynamic partition overwrite would leave stale
-        # partitions (old buckets / streaming epochs) behind otherwise
-        for sub in ("postings", "termstats", "manifests"):
-            shutil.rmtree(os.path.join(index_dir, sub), ignore_errors=True)
-
-    t0 = time.time()
-    pdir = os.path.join(index_dir, "postings")
-    ts_dir = os.path.join(index_dir, "termstats")
-    if n_docs is None:
-        n_docs = docs.count()
-    parts = num_partitions or min(
-        num_buckets * num_salts, spark.sparkContext.defaultParallelism * 4
+    from .streaming import (
+        _build_fingerprint,
+        _epoch_dirs,
+        _epoch_manifest,
+        _rebuild_stats,
+        _write_epoch,
     )
 
+    mpath = _epoch_manifest(index_dir, 0)
+    if resume and _build_fingerprint(index_dir) == fingerprint:
+        try:
+            with open(os.path.join(index_dir, "stats.json")) as f:
+                return json.load(f)
+        except (OSError, ValueError):
+            pass  # its stats were lost: rebuild
+    # clean build: nothing of a previous index may survive - stale
+    # epochs, a half-written epoch 0, tombstones that would mask the
+    # rebuilt docs, or a compaction journal
+    for name in ("stats.json", "_compact_pending.json"):
+        try:
+            os.remove(os.path.join(index_dir, name))
+        except FileNotFoundError:
+            pass
+    for sub in ("manifests", "postings", "termstats", "tombstones"):
+        shutil.rmtree(os.path.join(index_dir, sub), ignore_errors=True)
+
+    t0 = time.time()
+    if n_docs is None:
+        n_docs = docs.count()
     # Fully fused AND packed: the tokenizer pass packs each (bucket,
     # salt) cell's postings into one fat binary row per map chunk, the
     # shuffle moves ~B*S rows per map task instead of one row per
     # posting (the per-row Python<->JVM Arrow boundary measured ~5s per
     # direction at 10M postings), and the reducer sorts + block-encodes
     # in numpy and hands Arrow batches straight back to the JVM.
-    sel = _with_docid(docs, docid_col).select(
-        "docid", F.col(text_col).alias("text")
+    cells = _doc_cells(
+        docs, docid_col, text_col, num_buckets, num_salts, normalize_zht
     )
-    cells = sel.mapInPandas(
-        lambda it: _packed_postings_gen(
-            it, num_buckets, num_salts, normalize_zht=normalize_zht
-        ),
-        PACKED_SCHEMA,
+    total_tf, n_postings, n_terms = _write_epoch(
+        spark, cells, *_epoch_dirs(index_dir, 0), num_buckets, num_salts,
+        block_size, num_partitions,
     )
-    if done:
-        # resume: completed buckets' cells never reach the exchange, and
-        # dynamic partition overwrite leaves their files untouched
-        cells = cells.where(~F.col("bucket").isin(sorted(done)))
-    blocks = _cell_blocks(cells, num_salts, parts, block_size)
-    conf_key = "spark.sql.sources.partitionOverwriteMode"
-    prev_mode = spark.conf.get(conf_key, None)
-    spark.conf.set(conf_key, "dynamic")
-    try:
-        blocks.write.mode("overwrite").partitionBy("bucket").parquet(pdir)
-
-        # termstats + corpus totals derive from per-block metadata: a
-        # column-pruned read of (bucket, term, n, sum_tf) over the
-        # just-written blocks - ~1/block_size of the postings volume -
-        # instead of a second full shuffle over raw postings.
-        # df = sum(n) and cf = sum(sum_tf) are exact: every posting
-        # lands in exactly one block.
-        if _bucket_dirs(pdir):
-            # a known schema: inferring it costs a footer-reading job
-            meta = spark.read.schema(
-                "bucket int, term string, n int, sum_tf long"
-            ).parquet(pdir)
-            termstats = meta.groupBy("bucket", "term").agg(
-                F.sum("n").alias("df"), F.sum("sum_tf").alias("cf")
-            )
-            termstats.write.mode("overwrite").partitionBy("bucket").parquet(
-                ts_dir
-            )
-    finally:
-        if prev_mode is None:
-            spark.conf.unset(conf_key)
-        else:
-            spark.conf.set(conf_key, prev_mode)
-
-    per_bucket: dict[int, dict] = {}
-    if _bucket_dirs(ts_dir):
-        # one small job over the (term, df, cf) shards yields BOTH the
-        # per-bucket metrics for the lineage manifests and - summed
-        # driver-side over <= num_buckets rows - the corpus totals
-        rows = (
-            spark.read.schema("bucket int, df long, cf long")
-            .parquet(ts_dir)
-            .groupBy("bucket")
-            .agg(
-                F.sum("cf").alias("cf"),
-                F.sum("df").alias("df"),
-                F.count(F.lit(1)).alias("n_terms"),
-            )
-            .collect()
-        )
-        per_bucket = {
-            int(r.bucket): {
-                "n_terms": int(r.n_terms),
-                "n_postings": int(r.df or 0),
-                "total_tf": int(r.cf or 0),
-            }
-            for r in rows
-        }
-        total_tf = sum(m["total_tf"] for m in per_bucket.values())
-        n_postings = sum(m["n_postings"] for m in per_bucket.values())
-        n_terms = sum(m["n_terms"] for m in per_bucket.values())
-    else:
-        os.makedirs(ts_dir, exist_ok=True)
-        total_tf = n_postings = n_terms = 0
-    avgdl = total_tf / max(n_docs, 1)
-
-    stats = {
-        "n_docs": int(n_docs),
-        "avgdl": float(avgdl),
-        "total_tf": total_tf,
-        "n_postings": n_postings,
-        "n_terms_approx": n_terms,
-        "num_buckets": num_buckets,
-        "num_salts": num_salts,
-        "block_size": block_size,
-        "k1": k1,
-        "b": b,
-        "fingerprint": fingerprint,
-        "normalize_zht": bool(normalize_zht),
-        "build_seconds": round(time.time() - t0, 3),
-    }
-    _atomic_json(os.path.join(index_dir, "stats.json"), stats)
-
-    os.makedirs(os.path.join(index_dir, "manifests"), exist_ok=True)
-    for bucket in range(num_buckets):
-        if bucket in done:
-            continue
-        m = per_bucket.get(bucket, {"n_terms": 0, "n_postings": 0, "total_tf": 0})
-        _atomic_json(
-            _manifest_path(index_dir, bucket),
-            {
-                "bucket": bucket,
-                "status": "complete",
-                "fingerprint": fingerprint,
-                "n_docs": int(n_docs),
-                "built_at": time.time(),
-                # per-partition metrics (lineage + sizing evidence)
-                "metrics": m,
-            },
-        )
-    return stats
+    os.makedirs(os.path.dirname(mpath), exist_ok=True)
+    _atomic_json(
+        mpath,
+        {
+            "epoch": 0,
+            "status": "complete",
+            "n_docs": int(n_docs),
+            "total_tf": total_tf,
+            "n_postings": n_postings,
+            "n_terms": n_terms,
+            "fingerprint": fingerprint,
+            "applied_at": time.time(),
+        },
+    )
+    return _rebuild_stats(
+        index_dir, num_buckets, num_salts, block_size, k1, b, normalize_zht,
+        extra={
+            "n_terms_approx": n_terms,
+            "fingerprint": fingerprint,
+            "build_seconds": round(time.time() - t0, 3),
+        },
+    )

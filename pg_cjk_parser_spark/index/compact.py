@@ -1,11 +1,13 @@
-"""Index compaction: merge streaming epochs into one optimal layout.
+"""Index compaction: merge an index's epochs into one optimal layout.
 
-Incremental appends leave one block sequence per (term, salt, epoch);
-queries stay correct (the scorer merges block sequences by docid) but
-head terms accumulate many short tails. Compaction decodes all block
-rows back to postings, re-sorts per (bucket, salt, term, docid), and
-re-encodes full blocks under a single consolidated epoch, swapping
-directories atomically and collapsing the epoch manifests.
+Every index is a sequence of epochs - the batch build is epoch 0 and
+appends add 1, 2, ... (index/streaming.py) - and each epoch leaves one
+block sequence per (term, salt); queries stay correct (the scorer
+merges block sequences by docid) but head terms accumulate many short
+tails. Compaction decodes all block rows back to postings, re-sorts
+per (bucket, salt, term, docid), and re-encodes full blocks under a
+single consolidated epoch, swapping directories atomically and
+collapsing the epoch manifests.
 
 Blocks turn back into postings through the library's one block
 decoder, ``codec.decode_blocks``, which decodes a whole Arrow batch of
@@ -13,7 +15,10 @@ block rows at once and drops tombstoned postings with one mask.
 Compaction, :func:`merge_epochs`, their tombstone accounting and the
 :func:`decode_postings` export call it once per batch, as the query
 path and ``validate_index`` do; compaction's postings then go back
-through the build's packed-cell encoder.
+through the build's packed-cell encoder and its one nested-epoch
+writer (``streaming._write_epoch``), into temporary dirs that swap
+in.  The consolidated manifest carries the batch build's fingerprint
+on, so ``build_index(resume=True)`` still finds the build.
 """
 
 from __future__ import annotations
@@ -27,9 +32,9 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import SparkSession, functions as F
 
-from .build import _atomic_json
+from .build import _atomic_json, _bucket_dirs
 from .codec import BLOCK_COLS, _gather_bytes, decode_blocks
-from .streaming import _rebuild_stats
+from .streaming import _build_fingerprint, _rebuild_stats, _write_epoch
 from .tombstones import (
     clear_tombstones,
     epoch_dir_layout,
@@ -78,7 +83,7 @@ def decode_postings(spark: SparkSession, index_dir: str):
     layout or feeding postings to downstream pipelines.  Tombstoned
     (docid, epoch) versions are dropped, so the export is the LIVE
     corpus."""
-    postings = _read_postings_mixed(spark, index_dir)
+    postings = _read_epochs(spark, os.path.join(index_dir, "postings"))
     deleted = load_tombstones(index_dir)
     return (
         postings.select(*BLOCK_COLS)
@@ -170,7 +175,7 @@ def _decode_to_cells(batches, flush_at: int = 500_000, deleted=None):
 def _decoded_cells(postings, deleted):
     """Block rows -> packed cell rows (build.PACKED_SCHEMA) with the
     tombstones ``deleted`` applied: the map side that compaction and
-    :func:`merge_epochs` feed to ``build._cell_blocks``."""
+    :func:`merge_epochs` feed to ``streaming._write_epoch``."""
     from .build import PACKED_SCHEMA
 
     return (
@@ -191,14 +196,7 @@ def compact_index(
     with open(os.path.join(index_dir, "stats.json")) as f:
         stats = json.load(f)
     block_size = block_size or stats["block_size"]
-    parts = num_partitions or min(
-        stats["num_buckets"] * stats["num_salts"],
-        spark.sparkContext.defaultParallelism * 4,
-    )
-
-    from .build import _cell_blocks
-
-    postings = _read_postings_mixed(spark, index_dir)
+    postings = _read_epochs(spark, os.path.join(index_dir, "postings"))
     # SNAPSHOT the tombstone files: deletes arriving during the (long)
     # compaction are neither applied nor cleared.  A DEFAULT delete
     # (upto = current max epoch, which equals the consolidated epoch
@@ -238,43 +236,21 @@ def compact_index(
                 pending_path,
                 {"tomb_files": tomb_files, "removed": removed},
             )
-    blocks = _cell_blocks(
-        _decoded_cells(postings, deleted), stats["num_salts"], parts,
-        block_size,
-    )
     epochs = sorted(stats.get("epochs", [])) or [0]
     new_epoch = epochs[-1]
+    # the consolidated epoch goes through the build's writer into
+    # temporary dirs; its termstats derive from the NEW block
+    # metadata, so tombstoned docs no longer count
     tmp_postings = os.path.join(index_dir, "_compact_postings")
-    blocks.withColumn("epoch", F.lit(new_epoch)).write.mode(
-        "overwrite"
-    ).partitionBy("epoch", "bucket").parquet(tmp_postings)
-
-    # termstats: re-aggregate into the flat per-epoch layout (one
-    # plain dir, bucket as a data column, one file per bucket) - same
-    # shape streaming appends write, so a compacted index plus later
-    # epochs keeps a uniform directory depth for partition discovery.
-    # Without tombstones the old termstats re-aggregate cheaply; with
-    # tombstones applied, per-term df/cf must come from the NEW block
-    # metadata (deleted docs no longer count), the same
-    # (term, n, sum_tf) derivation the batch build uses.
     tmp_ts = os.path.join(index_dir, "_compact_termstats")
-    if removed is None:
-        ts = (
-            _read_termstats_mixed(spark, index_dir)
-            .groupBy("bucket", "term")
-            .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
-        )
-    else:
-        ts = (
-            spark.read.parquet(tmp_postings)
-            .select("bucket", "term", "n", "sum_tf")
-            .groupBy("bucket", "term")
-            .agg(F.sum("n").alias("df"), F.sum("sum_tf").alias("cf"))
-        )
-    (
-        ts.repartition(stats["num_buckets"], "bucket")
-        .write.mode("overwrite")
-        .parquet(os.path.join(tmp_ts, f"epoch={new_epoch}"))
+    for tmp in (tmp_postings, tmp_ts):
+        shutil.rmtree(tmp, ignore_errors=True)
+    _write_epoch(
+        spark, _decoded_cells(postings, deleted),
+        os.path.join(tmp_postings, f"epoch={new_epoch}"),
+        os.path.join(tmp_ts, f"epoch={new_epoch}"),
+        stats["num_buckets"], stats["num_salts"], block_size,
+        num_partitions,
     )
 
     # atomic-ish swap
@@ -311,40 +287,14 @@ def compact_index(
     }
     stats.update(gen_extra)
 
-    # consolidate epoch manifests into one
+    # consolidate epoch manifests into one; it carries the batch
+    # build's fingerprint on, so build_index(resume=True) keeps the
+    # index instead of rebuilding it
+    fp = _build_fingerprint(index_dir)
     mdir = os.path.join(index_dir, "manifests")
-    if any(n.startswith("epoch=") for n in os.listdir(mdir)):
-        for name in list(os.listdir(mdir)):
-            if name.startswith("epoch=") or name == "base.json":
-                os.remove(os.path.join(mdir, name))
-        _atomic_json(
-            os.path.join(mdir, f"epoch={new_epoch}.json"),
-            {
-                "epoch": new_epoch,
-                "status": "complete",
-                "compacted": True,
-                "n_docs": stats["n_docs"],
-                "total_tf": stats["total_tf"],
-                "n_postings": stats["n_postings"],
-                "applied_at": time.time(),
-            },
-        )
-        out = _rebuild_stats(
-            index_dir, stats["num_buckets"], stats["num_salts"], block_size,
-            stats["k1"], stats["b"], stats.get("normalize_zht", False),
-            extra=gen_extra,
-        )
-        if os.path.exists(pending_path):
-            os.remove(pending_path)
-        return out
-    # compaction rewrote the layout under epoch=<new_epoch> even for a
-    # batch-built index: record it so query routing derives scan paths
-    stats["epochs"] = [new_epoch]
-    stats["avgdl"] = stats["total_tf"] / max(stats["n_docs"], 1)
-    stats["compacted_at"] = time.time()
-    # record the consolidated totals as an epoch manifest so later
-    # appends (which rebuild stats from manifests) keep counting the
-    # compacted corpus
+    for name in list(os.listdir(mdir)):
+        if name.startswith("epoch="):
+            os.remove(os.path.join(mdir, name))
     _atomic_json(
         os.path.join(mdir, f"epoch={new_epoch}.json"),
         {
@@ -355,12 +305,17 @@ def compact_index(
             "total_tf": stats["total_tf"],
             "n_postings": stats["n_postings"],
             "applied_at": time.time(),
+            **({"build_fingerprint": fp} if fp else {}),
         },
     )
-    _atomic_json(os.path.join(index_dir, "stats.json"), stats)
+    out = _rebuild_stats(
+        index_dir, stats["num_buckets"], stats["num_salts"], block_size,
+        stats["k1"], stats["b"], stats.get("normalize_zht", False),
+        extra=gen_extra,
+    )
     if os.path.exists(pending_path):
         os.remove(pending_path)
-    return stats
+    return out
 
 
 def _deleted_stats(postings, deleted) -> dict:
@@ -400,97 +355,32 @@ def _deleted_stats(postings, deleted) -> dict:
         "n_postings": int(row.np or 0),
     }
 
-def _split_epoch_layouts(paths: list[str]):
-    """Partition epoch dirs into NESTED (epoch=/bucket= subdirs) and
-    FLAT (files directly in the epoch dir, bucket as a data column -
-    the small-epoch streaming layout); dataless dirs drop out.  The
-    classifier lives with the layout convention
+def _read_epochs(spark: SparkSession, root: str, paths=None):
+    """Read epoch dirs under a shard root (``postings/`` or
+    ``termstats/``; every epoch dir when ``paths`` is None) as one
+    DataFrame, or None when none holds data.  Nested dirs read as one
+    partition-discovery group (``basePath``: epoch/bucket partition
+    columns); each flat dir reads standalone (bucket is already a data
+    column).  The union is by name, so a flat dir's missing ``epoch``
+    column is null: every consumer derives per-block epochs from
+    ``input_file_name``, which carries the epoch=N path component.
+    The layout classifier lives with the layout convention
     (tombstones.epoch_dir_layout)."""
-    nested, flat = [], []
-    for p in paths:
-        lay = epoch_dir_layout(p)
-        if lay == "nested":
-            nested.append(p)
-        elif lay == "flat":
-            flat.append(p)
-    return nested, flat
-
-
-def _read_epoch_postings(spark: SparkSession, pdir: str, eps: list[str]):
-    """Union postings across epoch dirs of BOTH layouts.  Nested dirs
-    read as one partition-discovery group (epoch/bucket partition
-    columns); each flat dir reads standalone (bucket is already a
-    data column, the epoch is not needed as a column here - every
-    consumer derives per-block epochs from input_file_name, which
-    still carries the epoch=N path component)."""
-    nested, flat = _split_epoch_layouts(eps)
-    dfs = []
-    if nested:
-        dfs.append(spark.read.option("basePath", pdir).parquet(*nested))
-    for p in flat:
-        dfs.append(spark.read.parquet(p))
+    if paths is None:
+        paths = [
+            os.path.join(root, n)
+            for n in sorted(os.listdir(root))
+            if n.startswith("epoch=")
+        ]
+    lay = {p: epoch_dir_layout(p) for p in paths}
+    nested = [p for p in paths if lay[p] == "nested"]
+    dfs = [spark.read.option("basePath", root).parquet(*nested)] if nested else []
+    dfs += [spark.read.parquet(p) for p in paths if lay[p] == "flat"]
     if not dfs:
         return None
     out = dfs[0]
     for d in dfs[1:]:
         out = out.unionByName(d, allowMissingColumns=True)
-    return out
-
-
-def _read_postings_mixed(spark: SparkSession, index_dir: str):
-    """Read the whole postings tree across MIXED layouts (batch
-    bucket= dirs at the top level, appended epoch=/bucket= dirs,
-    flat small-epoch dirs) as internally-consistent partition-
-    discovery groups unioned by name - a single whole-tree read
-    would fail with conflicting partition column names."""
-    pdir = os.path.join(index_dir, "postings")
-    top, eps = [], []
-    for name in sorted(os.listdir(pdir)):
-        p = os.path.join(pdir, name)
-        if not os.path.isdir(p):
-            continue
-        (top if name.startswith("bucket=") else eps).append(p)
-    dfs = []
-    if top:
-        dfs.append(
-            spark.read.option("basePath", pdir)
-            .parquet(*top)
-            .withColumn("epoch", F.lit(0))
-        )
-    epochs_df = _read_epoch_postings(spark, pdir, eps)
-    if epochs_df is not None:
-        dfs.append(epochs_df)
-    out = dfs[0]
-    for d in dfs[1:]:
-        out = out.unionByName(d, allowMissingColumns=True)
-    return out
-
-
-def _read_termstats_mixed(spark: SparkSession, index_dir: str):
-    """Termstats across mixed layouts: batch bucket= dirs (bucket is
-    a partition value) plus flat epoch dirs (bucket is a data
-    column), normalized to (bucket, term, df, cf)."""
-    tdir = os.path.join(index_dir, "termstats")
-    top, eps = [], []
-    for name in sorted(os.listdir(tdir)):
-        p = os.path.join(tdir, name)
-        if not os.path.isdir(p):
-            continue
-        (top if name.startswith("bucket=") else eps).append(p)
-    dfs = []
-    if top:
-        dfs.append(
-            spark.read.option("basePath", tdir)
-            .parquet(*top)
-            .select("bucket", "term", "df", "cf")
-        )
-    for p in eps:
-        dfs.append(
-            spark.read.parquet(p).select("bucket", "term", "df", "cf")
-        )
-    out = dfs[0]
-    for d in dfs[1:]:
-        out = out.unionByName(d)
     return out
 
 
@@ -524,22 +414,16 @@ def merge_epochs(
     if len(epochs) < 2:
         raise ValueError("merge_epochs needs at least two epochs")
     block_size = block_size or stats["block_size"]
-    parts = num_partitions or min(
-        stats["num_buckets"] * stats["num_salts"],
-        spark.sparkContext.defaultParallelism * 4,
-    )
     target = epochs[-1]
     pdir = os.path.join(index_dir, "postings")
     tdir = os.path.join(index_dir, "termstats")
-
-    from .build import _cell_blocks
 
     sel_paths = [
         p
         for p in (os.path.join(pdir, f"epoch={e}") for e in epochs)
         if os.path.isdir(p)
     ]
-    postings = _read_epoch_postings(spark, pdir, sel_paths)
+    postings = _read_epochs(spark, pdir, sel_paths)
     aside = []
     if postings is None:
         # every selected epoch is manifest-only (empty/stopword-only
@@ -555,36 +439,18 @@ def merge_epochs(
             if deleted is not None
             else None
         )
-        blocks = _cell_blocks(
-            _decoded_cells(postings, deleted), stats["num_salts"], parts,
-            block_size,
-        )
+        # the merged epoch goes through the build's writer into
+        # temporary dirs (termstats from the new block metadata)
         tmp_postings = os.path.join(index_dir, "_merge_postings")
-        shutil.rmtree(tmp_postings, ignore_errors=True)
-        blocks.write.mode("overwrite").partitionBy("bucket").parquet(
-            tmp_postings
-        )
-        merged_empty = not any(
-            f.endswith(".parquet")
-            for _r, _d, fs in os.walk(tmp_postings)
-            for f in fs
-        )
-
         tmp_ts = os.path.join(index_dir, "_merge_termstats")
-        shutil.rmtree(tmp_ts, ignore_errors=True)
-        if not merged_empty:
-            # merged termstats derive from the new block metadata
-            # (flat layout, bucket as a data column - same shape epoch
-            # appends use)
-            (
-                spark.read.parquet(tmp_postings)
-                .select("bucket", "term", "n", "sum_tf")
-                .groupBy("bucket", "term")
-                .agg(F.sum("n").alias("df"), F.sum("sum_tf").alias("cf"))
-                .repartition(stats["num_buckets"], "bucket")
-                .write.mode("overwrite")
-                .parquet(tmp_ts)
-            )
+        for tmp in (tmp_postings, tmp_ts):
+            shutil.rmtree(tmp, ignore_errors=True)
+        _write_epoch(
+            spark, _decoded_cells(postings, deleted), tmp_postings, tmp_ts,
+            stats["num_buckets"], stats["num_salts"], block_size,
+            num_partitions,
+        )
+        merged_empty = not _bucket_dirs(tmp_postings)
 
         # swap, non-destructively: move the merged epochs' dirs ASIDE
         # first, land the target, and only delete the originals after
@@ -604,15 +470,18 @@ def merge_epochs(
             # applies the deletes outright - no target dirs land, the
             # originals fold away, and the manifest fold below records
             # the removal
-            shutil.rmtree(tmp_postings, ignore_errors=True)
+            for tmp in (tmp_postings, tmp_ts):
+                shutil.rmtree(tmp, ignore_errors=True)
         else:
             os.replace(tmp_postings, os.path.join(pdir, f"epoch={target}"))
             os.replace(tmp_ts, os.path.join(tdir, f"epoch={target}"))
 
     # manifests: the merged manifest carries the summed totals minus
-    # what the tombstones removed
+    # what the tombstones removed, and the batch build's fingerprint
+    # when epoch 0 is folded in (build_index resume looks for it)
     mdir = os.path.join(index_dir, "manifests")
     n_docs = total_tf = n_postings = 0
+    carry = {}
     for e in epochs:
         mp = os.path.join(mdir, f"epoch={e}.json")
         if os.path.exists(mp):
@@ -621,6 +490,9 @@ def merge_epochs(
             n_docs += int(m.get("n_docs", 0))
             total_tf += int(m.get("total_tf", 0))
             n_postings += int(m.get("n_postings", 0))
+            fp = m.get("fingerprint") or m.get("build_fingerprint")
+            if fp:
+                carry["build_fingerprint"] = fp
             os.remove(mp)
     if removed is not None:
         n_docs -= removed["n_docs"]
@@ -636,6 +508,7 @@ def merge_epochs(
             "total_tf": total_tf,
             "n_postings": n_postings,
             "applied_at": time.time(),
+            **carry,
         },
     )
     out = _rebuild_stats(

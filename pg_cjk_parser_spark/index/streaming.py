@@ -1,6 +1,8 @@
-"""Incremental / streaming index maintenance.
+"""Incremental / streaming index maintenance: the epoch protocol.
 
-The batch layout was designed so appends compose:
+An index is a sequence of epochs, and every writer uses one protocol.
+The batch build is epoch 0; appends add epochs 1, 2, ...  The layout
+lets epochs compose:
 
 * posting blocks are self-contained (docids+tfs+doclens+positions per
   block) and the query engine treats every block independently - a
@@ -11,11 +13,15 @@ The batch layout was designed so appends compose:
 * term df is summed across shards at query time, so per-epoch
   termstats rows just add up.
 
-So a micro-batch append = the same explode -> salt -> encode pipeline
-written under ``epoch=N/bucket=M`` partitions (bucket pruning still
-applies across epochs), plus a running-stats update and a per-epoch
-manifest that makes re-delivered batches idempotent
-(foreachBatch at-least-once -> exactly-once effect).
+An epoch's postings and termstats share one layout: nested
+``epoch=E/bucket=N`` dirs (:func:`_write_epoch`, the batch build and
+large appends), or one flat file per subdir with bucket as a data
+column (small appends).  Each epoch's totals live in its manifest,
+``manifests/epoch=E.json``, written atomically and LAST; stats.json
+is derived from the manifests (:func:`_rebuild_stats`), so a crash
+before the manifest leaves no trace in the stats, and a re-delivered
+batch is applied once (foreachBatch at-least-once -> exactly-once
+effect).
 """
 
 from __future__ import annotations
@@ -32,12 +38,11 @@ from .build import (
     DEFAULT_BLOCK,
     DEFAULT_BUCKETS,
     DEFAULT_SALTS,
-    PACKED_SCHEMA,
     _atomic_json,
     _bucket_dirs,
     _cell_blocks,
+    _doc_cells,
     _encode_cells,
-    _packed_postings_gen,
     _with_docid,
 )
 from .xxh64 import cell_partition_key
@@ -49,6 +54,32 @@ def _stats_path(index_dir: str) -> str:
 
 def _epoch_manifest(index_dir: str, epoch: int) -> str:
     return os.path.join(index_dir, "manifests", f"epoch={epoch}.json")
+
+
+def _build_fingerprint(index_dir: str) -> str | None:
+    """Corpus fingerprint of the batch build the index holds, from its
+    complete epoch manifests: epoch 0's carries it as ``fingerprint``,
+    and one that folded epoch 0 in (``compact_index``,
+    ``merge_epochs``) as ``build_fingerprint`` - its own key, so the
+    append re-delivery guard, which looks for ``fingerprint``, still
+    fires on epoch 0 only.  None when no build is recorded."""
+    mdir = os.path.join(index_dir, "manifests")
+    try:
+        names = sorted(os.listdir(mdir))
+    except OSError:
+        return None
+    for name in names:
+        if not (name.startswith("epoch=") and name.endswith(".json")):
+            continue
+        try:
+            with open(os.path.join(mdir, name)) as f:
+                m = json.load(f)
+        except (OSError, ValueError):
+            continue
+        fp = m.get("fingerprint") or m.get("build_fingerprint")
+        if m.get("status") == "complete" and fp:
+            return fp
+    return None
 
 
 def _resolve_layout(
@@ -109,12 +140,11 @@ def append_index_batch(
     b: float | None = None,
     normalize_zht: bool | None = None,
 ) -> dict:
-    """Append one micro-batch to the index; idempotent per epoch.
+    """Append one micro-batch to the index as epoch ``epoch``;
+    idempotent per epoch.
 
-    Appending onto a BATCH-built index works: its base postings count
-    as epoch 0, and the base corpus totals are captured once into
-    ``manifests/base.json`` so the manifest-derived stats keep
-    counting them."""
+    A batch-built index is epoch 0, so appends onto it start at epoch
+    1 (``upsert_index_batch`` requires the same)."""
     lay = _resolve_layout(
         index_dir, num_buckets, num_salts, block_size, k1, b,
         normalize_zht,
@@ -125,28 +155,16 @@ def append_index_batch(
     k1 = lay["k1"]
     b = lay["b"]
     normalize_zht = lay["normalize_zht"]
-    mdir = os.path.join(index_dir, "manifests")
-    os.makedirs(mdir, exist_ok=True)
-    base_manifest = os.path.join(mdir, "base.json")
-    spath = _stats_path(index_dir)
-    if not os.path.exists(base_manifest) and os.path.exists(spath):
-        with open(spath) as f:
-            prev = json.load(f)
-        # only a BATCH-built stats file (no "epochs" key) seeds the
-        # base manifest; streaming/compacted stats already flow
-        # through epoch manifests (and a crashed epoch append must
-        # not be mistaken for a base corpus)
-        if "epochs" not in prev and prev.get("n_docs"):
-            _atomic_json(
-                base_manifest,
-                {
-                    "n_docs": prev["n_docs"],
-                    "total_tf": prev["total_tf"],
-                    "n_postings": prev["n_postings"],
-                },
-            )
+    os.makedirs(os.path.join(index_dir, "manifests"), exist_ok=True)
     mpath = _epoch_manifest(index_dir, epoch)
     if os.path.exists(mpath):
+        with open(mpath) as f:
+            if "fingerprint" in json.load(f):
+                # re-delivery would silently drop this batch
+                raise ValueError(
+                    f"epoch {epoch} holds the batch build; appends onto "
+                    "a built index start at epoch 1"
+                )
         # re-delivered batch: already applied; re-derive stats in case
         # a crash interrupted the previous stats refresh
         return _rebuild_stats(
@@ -173,35 +191,20 @@ def append_index_batch(
     # produce no postings yet must count toward N for idf/avgdl
     # parity with a batch rebuild.
     #
-    # Large epochs keep the two-job layout: (bucket, salt)-partitioned
-    # reducers (memory bounded by the salt count - the documented
-    # skew/scale lever), nested epoch=/bucket= dirs so query-time
-    # bucket pruning stays directory-level, and a Spark termstats
-    # aggregation over the persisted blocks.  The size estimate is
-    # Catalyst's plan statistic - no extra job.
+    # Large epochs go through the batch build's writer
+    # (:func:`_write_epoch`): (bucket, salt)-partitioned reducers
+    # (memory bounded by the salt count - the documented skew/scale
+    # lever) and nested epoch=/bucket= dirs so query-time bucket
+    # pruning stays directory-level.  The size estimate is Catalyst's
+    # plan statistic - no extra job.
     from pyspark.sql import Observation
 
     obs_docs = Observation(f"epoch{epoch}-docs")
-
-    # same packed-cell pipeline as the batch build's default path
-    # (build.py:_packed_postings_gen/_encode_cells): the tokenizer pass
-    # packs each (bucket, salt) cell into one fat binary row per map
-    # chunk, the shuffle moves cells (not postings), and the reducer
-    # lexsorts + block-encodes in numpy.  The row-per-posting epoch
-    # path this replaces measured ~2x slower end-to-end.
     small = _estimated_small(batch)
-    sel = (
-        _with_docid(batch, docid_col)
-        .select("docid", F.col(text_col).alias("text"))
-        .observe(obs_docs, F.count(F.lit(1)).alias("n_docs"))
+    cells = _doc_cells(
+        batch, docid_col, text_col, num_buckets, num_salts, normalize_zht,
+        obs_docs,
     )
-    cells = sel.mapInPandas(
-        lambda it: _packed_postings_gen(
-            it, num_buckets, num_salts, normalize_zht=normalize_zht
-        ),
-        PACKED_SCHEMA,
-    )
-    edir = os.path.join(index_dir, "postings", f"epoch={epoch}")
     if small:
         # encode with a handful of parallel reducers, then funnel the
         # (tiny) encoded blocks into one output file; the extra
@@ -217,66 +220,16 @@ def append_index_batch(
         )
         (
             blocks.write.mode("overwrite")
-            .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
-            .parquet(edir)
+            .option(*_V2_COMMIT)
+            .parquet(os.path.join(index_dir, "postings", f"epoch={epoch}"))
         )
-        n_batch_docs = _obs_count(obs_docs, "n_docs")
         total_tf, n_postings = _write_termstats_local(index_dir, epoch)
     else:
-        from pyspark import StorageLevel
-
-        parts = min(
-            num_buckets * num_salts, spark.sparkContext.defaultParallelism * 2
+        total_tf, n_postings, _ = _write_epoch(
+            spark, cells, *_epoch_dirs(index_dir, epoch), num_buckets,
+            num_salts, block_size,
         )
-        blocks = (
-            _cell_blocks(cells, num_salts, parts, block_size)
-            .withColumn("epoch", F.lit(epoch))
-            # kept for the termstats derivation below: re-reading data
-            # that was written milliseconds ago is pure fixed cost
-            # here and a read-after-write round trip on real object
-            # storage
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        (
-            blocks.write.mode("append")
-            # v2 commit (task output moves straight to the destination,
-            # one rename round instead of two): safe here because epoch
-            # atomicity comes from the manifest-last protocol - a
-            # crashed epoch's partial files are swept by the rmtree
-            # above on retry
-            .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
-            .partitionBy("epoch", "bucket")
-            .parquet(os.path.join(index_dir, "postings"))
-        )
-        n_batch_docs = _obs_count(obs_docs, "n_docs")
-        total_tf = n_postings = 0
-        if _bucket_dirs(edir):
-            obs_tot = Observation(f"epoch{epoch}-totals")
-            (
-                blocks.select("bucket", "term", "n", "sum_tf")
-                .groupBy("bucket", "term")
-                .agg(F.sum("n").alias("df"), F.sum("sum_tf").alias("cf"))
-                # FLAT per-epoch termstats: one plain directory with
-                # bucket as a data column, one file per bucket
-                # (bucket-clustered row groups, so the query-time
-                # term/bucket filters still prune)
-                .repartition(num_buckets, "bucket")
-                .observe(
-                    obs_tot,
-                    F.sum("cf").alias("total_tf"),
-                    F.sum("df").alias("n_postings"),
-                )
-                .write.mode("append")
-                .option(
-                    "mapreduce.fileoutputcommitter.algorithm.version", "2"
-                )
-                .parquet(
-                    os.path.join(index_dir, "termstats", f"epoch={epoch}")
-                )
-            )
-            total_tf = _obs_count(obs_tot, "total_tf")
-            n_postings = _obs_count(obs_tot, "n_postings")
-        blocks.unpersist()
+    n_batch_docs = _obs_count(obs_docs, "n_docs")
 
     # exactly-once accounting: the epoch's deltas live in its manifest
     # (written atomically, LAST); global stats are *derived* by summing
@@ -295,6 +248,81 @@ def append_index_batch(
     )
     return _rebuild_stats(
         index_dir, num_buckets, num_salts, block_size, k1, b, normalize_zht
+    )
+
+
+# v2 commit: task output moves straight to the destination, one
+# rename round instead of two.  Safe because epoch atomicity comes
+# from the manifest-last protocol: a crashed epoch's partial files are
+# swept before the epoch is written again.
+_V2_COMMIT = ("mapreduce.fileoutputcommitter.algorithm.version", "2")
+
+
+def _epoch_dirs(index_dir: str, epoch: int) -> tuple[str, str]:
+    """An epoch's (postings, termstats) dirs."""
+    return tuple(
+        os.path.join(index_dir, sub, f"epoch={epoch}")
+        for sub in ("postings", "termstats")
+    )
+
+
+def _write_epoch(
+    spark: SparkSession,
+    cells: DataFrame,
+    pdir: str,
+    tdir: str,
+    num_buckets: int,
+    num_salts: int,
+    block_size: int,
+    num_partitions: int | None = None,
+) -> tuple[int, int, int]:
+    """Write packed cells as one NESTED epoch - the one writer of the
+    batch build (epoch 0), every large append, ``compact_index`` and
+    ``merge_epochs`` (the last two into temporary dirs they swap in).
+
+    Blocks land under ``pdir/bucket=N``.  Termstats and the epoch's
+    totals derive from the written blocks' metadata: a column-pruned
+    read of (bucket, term, n, sum_tf) with a known schema (no
+    inference job) - ~1/block_size of the postings volume - instead
+    of a second shuffle over raw postings; df = sum(n) and cf =
+    sum(sum_tf) are exact because every posting lands in exactly one
+    block.  They land under ``tdir/bucket=N``, and the totals come
+    from an Observation on that write, so no further job runs.
+    Returns ``(total_tf, n_postings, n_terms)``."""
+    from pyspark.sql import Observation
+
+    parts = num_partitions or min(
+        num_buckets * num_salts, spark.sparkContext.defaultParallelism * 4
+    )
+    (
+        _cell_blocks(cells, num_salts, parts, block_size)
+        .write.mode("overwrite")
+        .option(*_V2_COMMIT)
+        .partitionBy("bucket")
+        .parquet(pdir)
+    )
+    if not _bucket_dirs(pdir):
+        os.makedirs(tdir, exist_ok=True)
+        return 0, 0, 0
+    obs = Observation()
+    (
+        spark.read.schema("bucket int, term string, n int, sum_tf long")
+        .parquet(pdir)
+        .groupBy("bucket", "term")
+        .agg(F.sum("n").alias("df"), F.sum("sum_tf").alias("cf"))
+        .observe(
+            obs,
+            F.sum("cf").alias("total_tf"),
+            F.sum("df").alias("n_postings"),
+            F.count(F.lit(1)).alias("n_terms"),
+        )
+        .write.mode("overwrite")
+        .option(*_V2_COMMIT)
+        .partitionBy("bucket")
+        .parquet(tdir)
+    )
+    return tuple(
+        _obs_count(obs, key) for key in ("total_tf", "n_postings", "n_terms")
     )
 
 
@@ -385,13 +413,6 @@ def _rebuild_stats(
 ) -> dict:
     mdir = os.path.join(index_dir, "manifests")
     epochs, n_docs, total_tf, n_postings = [], 0, 0, 0
-    base = os.path.join(mdir, "base.json")
-    if os.path.exists(base):
-        with open(base) as f:
-            m = json.load(f)
-        n_docs += int(m.get("n_docs", 0))
-        total_tf += int(m.get("total_tf", 0))
-        n_postings += int(m.get("n_postings", 0))
     for name in sorted(os.listdir(mdir)):
         if not (name.startswith("epoch=") and name.endswith(".json")):
             continue
@@ -440,11 +461,18 @@ def stream_index(
     **kwargs,
 ):
     """Structured Streaming sink: incremental index maintenance via
-    foreachBatch (exactly-once per epoch through the manifest)."""
+    foreachBatch (exactly-once per epoch through the manifest).
 
-    def sink(batch: DataFrame, epoch: int) -> None:
+    Micro-batch ``batchId`` lands as epoch ``batchId + 1``: epoch 0
+    is the batch build's, so the sink works onto a built index as
+    onto an empty one, and the offset is fixed - batchIds come from
+    the checkpoint, so a restarted query re-delivers a batch to the
+    same epoch."""
+
+    def sink(batch: DataFrame, batch_id: int) -> None:
         append_index_batch(
-            batch.sparkSession, batch, index_dir, int(epoch), **kwargs
+            batch.sparkSession, batch, index_dir, int(batch_id) + 1,
+            **kwargs,
         )
 
     return (
@@ -464,7 +492,7 @@ def upsert_index_batch(
 ) -> dict:
     """UPDATE parity: re-index a batch of documents, replacing any
     existing versions.  Tombstones the batch's docids for every epoch
-    BELOW ``epoch`` (batch-built base postings count as epoch 0),
+    BELOW ``epoch`` (the batch build is epoch 0),
     then appends the new versions as epoch ``epoch`` - queries see
     exactly one version per doc with no rewrite of existing data;
     ``compact_index`` later folds the masked versions out physically.
@@ -482,8 +510,8 @@ def upsert_index_batch(
 
     if epoch <= 0:
         raise ValueError(
-            "upsert_index_batch needs epoch >= 1: batch-built base "
-            "postings count as epoch 0, so an epoch-0 upsert could "
+            "upsert_index_batch needs epoch >= 1: the batch build "
+            "is epoch 0, so an epoch-0 upsert could "
             "never mask the versions it replaces (streaming sinks "
             "should use batchId + 1)"
         )

@@ -10,7 +10,9 @@ visible), so an UPDATE is
 ``delete_docs(ids, upto_epoch=e-1)`` followed by appending the new
 versions as epoch ``e`` - the old version disappears, the new one
 serves (``upsert_index_batch`` in index/streaming.py packages
-exactly that).  Batch-built base postings count as epoch 0.
+exactly that).  The batch build is epoch 0 of the same epoch
+protocol (index/streaming.py), so a tombstone bounds its postings
+like any appended epoch's.
 
 Every reader drops tombstoned postings as it decodes them: the one
 block decoder, ``codec.decode_blocks``, applies ONE ``alive_mask``
@@ -44,8 +46,8 @@ def _tomb_dir(index_dir: str) -> str:
 
 
 def current_max_epoch(index_dir: str) -> int:
-    """The largest epoch the index holds right now (0 for a
-    batch-built index)."""
+    """The largest epoch the index holds right now (0 for a freshly
+    built index, and when stats.json lists no epochs)."""
     import json
 
     spath = os.path.join(index_dir, "stats.json")
@@ -176,15 +178,7 @@ def load_tombstones(index_dir: str, files: list[str] | None = None):
             st = json.load(f)
         cur_gen = int(st.get("compact_gen", 0))
         applied = frozenset(st.get("applied_tombstones") or ())
-        eps = st.get("epochs") or [0]
-        # a batch-built base carries implicit epoch 0 that is not in
-        # the epochs list (only appended epoch manifests are); its
-        # marker survives until a compaction folds it away
-        if os.path.exists(
-            os.path.join(index_dir, "manifests", "base.json")
-        ):
-            eps = [0]
-        min_ep = int(min(eps))
+        min_ep = int(min(st.get("epochs") or [0]))
     except (OSError, ValueError):
         pass  # no stats yet (index mid-build): nothing to clamp to
     ids_l, upto_l = [], []
@@ -254,8 +248,8 @@ def alive_mask(
     """Boolean mask of postings that SURVIVE the tombstones: a
     posting dies when its docid is tombstoned with
     ``upto >= its epoch``.  ``epochs`` is a per-posting array, a
-    scalar (whole block from one epoch), or None (treat as epoch 0 -
-    batch layout).  Returns None when nothing dies (callers skip the
+    scalar (whole block from one epoch), or None (treat as epoch
+    0).  Returns None when nothing dies (callers skip the
     filter)."""
     if deleted is None or not ids.size:
         return None
@@ -301,8 +295,8 @@ _EPOCH_PATH_RE = (
 
 
 def path_epoch(path: str) -> int | None:
-    """Epoch of a shard dir or block file path, None for the batch
-    layout (no epoch dir) - the driver-side twin of
+    """Epoch of a shard dir or block file path (None when the path
+    names no epoch dir) - the driver-side twin of
     :func:`epoch_from_file_path`."""
     m = re.search(_EPOCH_PATH_RE, path)
     return int(m.group(1)) if m else None
@@ -310,7 +304,7 @@ def path_epoch(path: str) -> int | None:
 
 def epoch_from_file_path():
     """Spark Column: a block's epoch parsed from its file path
-    (epoch=N dir, 0 for batch-layout files) - the single home of the
+    (epoch=N dir, 0 when none matches) - the single home of the
     layout convention; query and compaction readers share it."""
     from pyspark.sql import functions as F
 

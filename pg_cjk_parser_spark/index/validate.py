@@ -1,12 +1,12 @@
 """Index integrity validation (operational tooling).
 
 ``validate_index`` cross-checks the three sources of truth an index
-carries - stats.json, the per-bucket/epoch lineage manifests, and the
-written shards - without decoding postings:
+carries - stats.json, the epoch manifests (the batch build is epoch
+0), and the written shards - without decoding postings:
 
-* every bucket manifest is complete and carries the index fingerprint
-  (batch indexes), or every epoch manifest is complete (streaming);
-* stats totals equal the sum of per-partition metrics;
+* every epoch manifest is complete, and stats.json lists exactly the
+  manifests' epochs;
+* stats totals equal the sum of the epoch manifests' totals;
 * termstats totals (a column-pruned read) equal stats totals;
 * optionally (``deep=True``) decodes a sample of posting blocks with
   the library's one block decoder (``codec.decode_blocks``, which
@@ -44,26 +44,16 @@ def validate_index(index_dir: str, deep: bool = False, sample_blocks: int = 50) 
 
     # --- manifests -------------------------------------------------------
     mdir = os.path.join(index_dir, "manifests")
-    bucket_ms, epoch_ms = [], []
-    base_m = None
+    epoch_ms = []
     if os.path.isdir(mdir):
         for name in sorted(os.listdir(mdir)):
-            if not name.endswith(".json"):
+            if not (name.startswith("epoch=") and name.endswith(".json")):
                 continue
             try:
                 with open(os.path.join(mdir, name)) as f:
-                    m = json.load(f)
+                    epoch_ms.append(json.load(f))
             except Exception as ex:
                 fail(f"manifest {name} unreadable: {ex}")
-                continue
-            if name == "base.json":
-                # batch-built corpus totals captured on first append
-                # (streaming.py): part of the stats sum, not a bucket
-                base_m = m
-            elif name.startswith("epoch="):
-                epoch_ms.append(m)
-            else:
-                bucket_ms.append(m)
     else:
         fail("manifests dir missing")
 
@@ -76,46 +66,10 @@ def validate_index(index_dir: str, deep: bool = False, sample_blocks: int = 50) 
             fail(f"stats.epochs {stats.get('epochs')} != manifests {have}")
         for key in ("n_docs", "total_tf", "n_postings"):
             s = sum(int(m.get(key, 0)) for m in epoch_ms)
-            if base_m is not None:
-                s += int(base_m.get(key, 0))
             if int(stats.get(key, -1)) != s:
-                fail(
-                    f"stats.{key}={stats.get(key)} != "
-                    f"base+sum(epochs)={s}"
-                )
+                fail(f"stats.{key}={stats.get(key)} != sum(epochs)={s}")
         report["checks"]["epochs"] = len(epoch_ms)
-    if bucket_ms:
-        fp = stats.get("fingerprint")
-        bad = [
-            m.get("bucket")
-            for m in bucket_ms
-            if m.get("status") != "complete"
-            or (
-                m.get("fingerprint") != fp
-                # base capture: epoch appends set the stats
-                # fingerprint to 'streaming' while the batch-built
-                # bucket manifests keep the original build fingerprint
-                and not (base_m is not None and fp == "streaming")
-            )
-        ]
-        if bad:
-            fail(f"stale/incomplete bucket manifests: {bad[:10]}")
-        if len(bucket_ms) != int(stats.get("num_buckets", -1)):
-            fail(
-                f"{len(bucket_ms)} bucket manifests != num_buckets="
-                f"{stats.get('num_buckets')}"
-            )
-        metrics = [m.get("metrics") for m in bucket_ms]
-        if all(metrics):
-            # after an epoch append the buckets hold the batch-built
-            # base only: base.json, not stats, is what they sum to
-            ref, name = (stats, "stats") if base_m is None else (base_m, "base")
-            for key in ("total_tf", "n_postings"):
-                s = sum(int(m[key]) for m in metrics)
-                if int(ref.get(key, -1)) != s:
-                    fail(f"{name}.{key}={ref.get(key)} != sum(buckets)={s}")
-        report["checks"]["buckets"] = len(bucket_ms)
-    if not bucket_ms and not epoch_ms:
+    else:
         fail("no manifests found")
 
     # --- termstats vs stats (column-pruned pyarrow read) ------------------

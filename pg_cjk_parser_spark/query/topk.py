@@ -106,13 +106,27 @@ _DF_CACHE_MAX_TERMS = 1 << 16
 def load_stats(index_dir: str) -> dict:
     """stats.json, cached per index version - the serving tier reads
     it on every point query, and a real serving fleet would hold this
-    catalog state resident (PG keeps it in shared catalogs)."""
+    catalog state resident (PG keeps it in shared catalogs).
+
+    Raises on an index of the older top-level layout
+    (``postings/bucket=N``): every shard now lives under an
+    ``epoch=`` dir, so its postings would never be read and queries
+    would silently return nothing."""
     ver = _index_version(index_dir)
     hit = _STATS_CACHE.get(index_dir)
     if hit is not None and hit[0] == ver:
         return dict(hit[1])
     with open(os.path.join(index_dir, "stats.json")) as f:
         stats = json.load(f)
+    try:
+        names = os.listdir(os.path.join(index_dir, "postings"))
+    except OSError:
+        names = []
+    if any(n.startswith("bucket=") for n in names):
+        raise ValueError(
+            f"{index_dir}: postings/bucket= dirs are an index written by "
+            "an older layout; rebuild it with build_index"
+        )
     if len(_STATS_CACHE) > 256:
         _STATS_CACHE.clear()
     _STATS_CACHE[index_dir] = (ver, stats)
@@ -133,7 +147,8 @@ def term_buckets(terms: list[str], num_buckets: int) -> dict[str, int]:
 
 def _shard_paths(index_dir: str, subdir: str, bset, stats) -> list[str]:
     """Scoped scan paths for the pruned bucket set under ``subdir``
-    (postings or termstats).  Listing the whole tree per query would
+    (postings or termstats): the ``bucket=`` dirs of nested epochs and
+    whole flat epoch dirs.  Listing the whole tree per query would
     cost O(index size) directory discovery - prohibitive on object
     storage at corpus scale; instead paths are constructed from the
     routing result and the known epoch list, so per-query listing is
@@ -150,46 +165,25 @@ def _shard_paths(index_dir: str, subdir: str, bset, stats) -> list[str]:
             if n.startswith("epoch=")
             and n.split("=", 1)[1].isdigit()
         )
-        epochs = found or None
+        epochs = found
     paths = []
-    for b in bset:
-        p = os.path.join(pdir, f"bucket={b}")
-        if os.path.isdir(p):
-            paths.append(p)
     for e in epochs or ():
         ebase = os.path.join(pdir, f"epoch={e}")
-        found = False
-        for b in bset:
-            p = os.path.join(ebase, f"bucket={b}")
-            if os.path.isdir(p):
-                paths.append(p)
-                found = True
-        if not found and epoch_dir_layout(ebase) == "flat":
-            # flat per-epoch shard (streaming appends write termstats
-            # this way always, and SMALL postings epochs too): one
-            # plain directory, bucket carried as a data column;
-            # term/bucket filters prune at the row-group level
-            # instead of by dir.  Directory-level bucket pruning is
-            # deliberately traded away here - a small epoch is one
-            # small file, and maintain_index folds it into the
-            # nested layout
+        nested = [
+            p
+            for p in (os.path.join(ebase, f"bucket={b}") for b in bset)
+            if os.path.isdir(p)
+        ]
+        if nested:
+            paths += nested
+        elif epoch_dir_layout(ebase) == "flat":
+            # flat per-epoch shard (small appends): one plain
+            # directory, bucket carried as a data column; term/bucket
+            # filters prune at the row-group level instead of by dir.
+            # Directory-level bucket pruning is deliberately traded
+            # away here - a small epoch is one small file, and
+            # maintain_index folds it into the nested layout
             paths.append(ebase)
-    if not paths and os.path.isdir(pdir):
-        # layout not derivable from stats (e.g. legacy index): scoped
-        # glob over epoch dirs only, still restricted to bset
-        import glob
-
-        for b in bset:
-            paths += glob.glob(os.path.join(pdir, "epoch=*", f"bucket={b}"))
-        if not paths and subdir == "termstats":
-            paths += [
-                p
-                for p in glob.glob(os.path.join(pdir, "epoch=*"))
-                if os.path.isdir(p)
-                and not any(
-                    n.startswith("bucket=") for n in os.listdir(p)
-                )
-            ]
     return paths
 
 
@@ -260,8 +254,8 @@ def _read_termstats(
     if missing:
         paths = _shard_paths(index_dir, "termstats", bset, stats)
         found: dict[str, int] = {}
-        # per-path reads: bucket-dir shards (batch/compacted layout)
-        # and flat epoch dirs (streaming layout, bucket as a column)
+        # per-path reads: bucket dirs of nested epochs and flat epoch
+        # dirs (small appends, bucket as a column)
         # carry different physical schemas, so a unified dataset would
         # fail to merge them; each path is a tiny term-filtered point
         # read anyway
@@ -486,48 +480,35 @@ def _read_blocks_local(
     """The one pyarrow block read of both runners: ``term IN terms``
     (and ``salt == salt`` when given) pushed into row-group pruning.
 
-    When per-block epochs are not needed (no tombstones loaded, or a
-    batch-only layout where every block is epoch 0 - see
-    ``_needs_epoch``) all shard paths read as ONE file-list dataset:
-    no per-path epoch parse, one threaded scan instead of a
-    sequential per-shard loop.  Epoch-relevant reads fall back to one
-    table per shard path with the block epoch parsed from the path by
-    ``path_epoch`` (epoch=N dir, 0 for batch dirs) as an ``epoch``
-    column."""
+    All shard paths read as ONE file-list dataset: one threaded scan
+    instead of a sequential per-shard loop.  When per-block epochs
+    are needed (tombstones loaded), each scanned batch's epoch comes
+    from its file path (``path_epoch``) as an ``epoch`` column."""
     import pyarrow.dataset as ds
 
     flt = ds.field("term").isin(terms)
     if salt is not None:
         flt &= ds.field("salt") == salt
+    files = [
+        os.path.join(p, n)
+        for p in paths
+        for n in sorted(os.listdir(p))
+        if n.endswith(".parquet")
+    ]
+    scan = ds.dataset(files).scanner(columns=_BLOCK_COLUMNS, filter=flt)
     if not with_epoch:
-        files = [
-            os.path.join(p, n)
-            for p in paths
-            for n in sorted(os.listdir(p))
-            if n.endswith(".parquet")
+        return scan.to_table()
+    tagged = list(scan.scan_batches())
+    epoch = np.concatenate(
+        [np.zeros(0, np.int64)]
+        + [
+            np.full(t.record_batch.num_rows, path_epoch(t.fragment.path), np.int64)
+            for t in tagged
         ]
-        return ds.dataset(files).to_table(columns=_BLOCK_COLUMNS, filter=flt)
-    tables = []
-    for p in paths:
-        t = ds.dataset(p).to_table(columns=_BLOCK_COLUMNS, filter=flt)
-        epoch = np.full(t.num_rows, path_epoch(p) or 0, np.int64)
-        tables.append(t.append_column("epoch", pa.array(epoch)))
-    return pa.concat_tables(tables)
-
-
-def _needs_epoch(stats, deleted, paths=()) -> bool:
-    """Per-posting epochs matter only when tombstones exist AND the
-    index actually holds epoch shards (else every block is epoch 0
-    and the scalar default bounds correctly).  Epoch presence is
-    judged from the RESOLVED scan paths, not stats.json alone -
-    _shard_paths serves foreign-appended epoch dirs stats never
-    learned about, and epoch-bounded tombstones must not mask those
-    blocks as if they were epoch 0."""
-    if deleted is None:
-        return False
-    if stats.get("epochs"):
-        return True
-    return any(path_epoch(p) is not None for p in paths)
+    )
+    return pa.Table.from_batches(
+        [t.record_batch for t in tagged], scan.projected_schema
+    ).append_column("epoch", pa.array(epoch))
 
 
 # kind -> (kernel function, normalization bits the index serves, flat
@@ -584,8 +565,8 @@ class _QuerySpec:
 def _route_specs(index_dir, queries, mode, kind, method=0):
     """Validate and route queries into specs: method bits first, then
     each query's shape once it routes.  Returns ``(stats, specs,
-    paths, deleted, with_epoch)`` over the union of the specs'
-    buckets, or None when no doc can match."""
+    paths, deleted)`` over the union of the specs' buckets, or None
+    when no doc can match."""
     _QuerySpec.check_method(kind, method)
     stats, specs, bset = None, [], set()
     # dict.fromkeys: a duplicate query would double-score and skew ranks
@@ -602,8 +583,7 @@ def _route_specs(index_dir, queries, mode, kind, method=0):
     paths = _shard_paths(index_dir, "postings", sorted(bset), stats)
     if not paths:
         return None
-    deleted = load_tombstones(index_dir)
-    return stats, specs, paths, deleted, _needs_epoch(stats, deleted, paths)
+    return stats, specs, paths, load_tombstones(index_dir)
 
 
 def _blocks_by_term(blocks: pa.Table) -> dict:
@@ -676,7 +656,7 @@ def _run_spark(spark, index_dir, queries, k, mode, kind, method=0):
             schema if single
             else "query string, rank int, docid long, score double",
         )
-    stats, specs, paths, deleted, with_epoch = routed
+    stats, specs, paths, deleted = routed
     terms = sorted({t for s in specs for t in s.pq.all_terms})
     bm25 = (stats["k1"], stats["b"], stats["avgdl"])
     out = pa.schema(
@@ -686,7 +666,9 @@ def _run_spark(spark, index_dir, queries, k, mode, kind, method=0):
     def score_salts(batches):
         for batch in batches:
             for salt in batch.column(0).to_pylist():
-                blocks = _read_blocks_local(paths, terms, with_epoch, salt)
+                blocks = _read_blocks_local(
+                    paths, terms, deleted is not None, salt
+                )
                 if not blocks.num_rows:
                     continue
                 hit = _score_group(specs, blocks, k, bm25, deleted)
@@ -715,8 +697,10 @@ def _run_local(index_dir, query, k, mode, kind, method=0):
     routed = _route_specs(index_dir, [query], mode, kind, method)
     if routed is None:
         return []
-    stats, specs, paths, deleted, with_epoch = routed
-    blocks = _read_blocks_local(paths, specs[0].pq.all_terms, with_epoch)
+    stats, specs, paths, deleted = routed
+    blocks = _read_blocks_local(
+        paths, specs[0].pq.all_terms, deleted is not None
+    )
     bm25 = (stats["k1"], stats["b"], stats["avgdl"])
     salt = blocks.column("salt").to_numpy()
     hits = [

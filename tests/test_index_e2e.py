@@ -1,9 +1,8 @@
 """End-to-end: synth corpus -> index build -> BM25 top-k == brute-force
-oracle (rank- and score-identical), plus checkpoint resume."""
+oracle (rank- and score-identical), plus crash recovery and resume."""
 
 import json
 import os
-import shutil
 
 import pytest
 
@@ -65,52 +64,140 @@ def test_empty_and_stopword_queries(spark, built):
     assert search(spark, index_dir, "", k=5).count() == 0
 
 
-def _bucket_files(index_dir, buckets):
-    """(bucket, file name, st_mtime_ns) under the given postings
-    bucket dirs."""
-    out = []
-    for b in buckets:
-        bdir = os.path.join(index_dir, "postings", f"bucket={b}")
-        for name in sorted(os.listdir(bdir)):
-            out.append((b, name, os.stat(os.path.join(bdir, name)).st_mtime_ns))
-    return out
+def test_build_crash_before_manifest_then_resume(
+    spark, built, tmp_path, monkeypatch
+):
+    """A rebuild that dies after its data write but before epoch 0's
+    manifest serves nothing (no half-written epoch under the previous
+    stats); resume converges to the uninterrupted build, and resuming
+    the complete index launches no Spark job."""
+    from pg_cjk_parser_spark.index import build as build_mod
+    from pg_cjk_parser_spark.index.validate import validate_index
+    from pg_cjk_parser_spark.query.topk import search_local
 
-
-def test_resume_from_checkpoint(spark, built, tmp_path):
-    """Resume rebuilds exactly the buckets whose manifests are gone:
-    the other buckets' files stay untouched, and queries are identical
-    to the oracle again."""
-    index_dir, stats, pdocs = built
-    # simulate a failed build: remove 3 bucket partitions + manifests
-    victims = [0, 5, 11]
-    for b in victims:
-        shutil.rmtree(os.path.join(index_dir, "postings", f"bucket={b}"),
-                      ignore_errors=True)
-        shutil.rmtree(os.path.join(index_dir, "termstats", f"bucket={b}"),
-                      ignore_errors=True)
-        os.remove(os.path.join(index_dir, "manifests", f"bucket={b}.json"))
-    survivors = [b for b in range(16) if b not in victims]
-    kept = _bucket_files(index_dir, survivors)
-
-    # an in-memory corpus has no input files to fingerprint, so resume
-    # needs the build's own fingerprint passed back
+    _, stats, pdocs = built
+    d = str(tmp_path / "crashed")
+    kw = dict(
+        num_buckets=16, num_salts=2, block_size=32,
+        fingerprint=stats["fingerprint"],
+    )
+    build_index(spark, synth_corpus(spark, 60, seed=7, num_partitions=2), d, **kw)
     docs = synth_corpus(spark, N_DOCS, seed=42, num_partitions=4)
-    build_index(
-        spark, docs, index_dir, num_buckets=16, num_salts=2, block_size=32,
-        resume=True, fingerprint=stats["fingerprint"],
-    )
-    manifests = os.listdir(os.path.join(index_dir, "manifests"))
-    assert len(manifests) == 16
-    assert _bucket_files(index_dir, survivors) == kept
-    assert all(
-        os.listdir(os.path.join(index_dir, "postings", f"bucket={b}"))
-        for b in victims
-    )
-    assert not os.path.exists(os.path.join(index_dir, "_staging_postings"))
+    real = build_mod._atomic_json
+
+    def killed(path, obj):
+        if path.endswith("epoch=0.json"):
+            raise OSError("killed before the manifest")
+        real(path, obj)
+
+    monkeypatch.setattr(build_mod, "_atomic_json", killed)
+    with pytest.raises(OSError, match="killed"):
+        build_index(spark, docs, d, **kw)
+    monkeypatch.undo()
+    assert os.listdir(os.path.join(d, "postings", "epoch=0"))
+    with pytest.raises(FileNotFoundError):
+        search_local(d, QUERIES[0])
+    assert not validate_index(d)["ok"]
+
+    got = build_index(spark, docs, d, resume=True, **kw)
+    timeless = lambda st: {k: v for k, v in st.items() if k != "build_seconds"}
+    assert timeless(got) == timeless(stats)
     for q in QUERIES[:4]:
-        got = [(r.docid, round(r.score, 6)) for r in search(spark, index_dir, q, k=10).collect()]
-        want = brute_force_topk(pdocs, q, k=10)
-        assert got == want, q
+        res = [(r.docid, round(r.score, 6)) for r in search(spark, d, q, k=10).collect()]
+        assert res == brute_force_topk(pdocs, q, k=10), q
+
+    sc = spark.sparkContext
+    sc.setJobGroup("resume-complete", "resume of a complete index", False)
+    try:
+        again = build_index(spark, docs, d, resume=True, **kw)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert again == got
+    assert list(sc.statusTracker().getJobIdsForGroup("resume-complete")) == []
+
+
+def test_clean_rebuild_drops_tombstones(spark, tmp_path):
+    """A clean rebuild starts from nothing: tombstones written against
+    the previous index must not mask the rebuilt docs."""
+    from pg_cjk_parser_spark.index.tombstones import delete_docs
+    from pg_cjk_parser_spark.query.topk import search_local
+
+    d = str(tmp_path / "tomb_rebuild")
+    docs = spark.createDataFrame(
+        [(1, "fast table spark"), (2, "fast value merge"), (3, "slow table")],
+        "doc_id long, text string",
+    )
+    kw = dict(docid_col="doc_id", num_buckets=4, num_salts=2)
+    build_index(spark, docs, d, **kw)
+    assert [i for i, _ in search_local(d, "fast")] == [1, 2]
+    delete_docs(d, [2])
+    assert [i for i, _ in search_local(d, "fast")] == [1]
+    build_index(spark, docs, d, resume=False, **kw)
+    assert [i for i, _ in search_local(d, "fast")] == [1, 2]
+    assert not os.path.exists(os.path.join(d, "tombstones"))
+
+
+@pytest.mark.parametrize("fold", ["compact", "merge"])
+def test_resume_after_fold_keeps_appended_epochs(spark, tmp_path, fold):
+    """compact_index and merge_epochs fold epoch 0 into another epoch;
+    the folded manifest carries the build's fingerprint on, so a
+    resume keeps the appended docs and launches no Spark job instead
+    of rebuilding over them."""
+    from pg_cjk_parser_spark.index.compact import compact_index, merge_epochs
+    from pg_cjk_parser_spark.index.streaming import append_index_batch
+    from pg_cjk_parser_spark.query.topk import search_local
+
+    d = str(tmp_path / fold)
+    base = spark.createDataFrame(
+        [(1, "fast table spark"), (2, "slow table")], "doc_id long, text string"
+    )
+    kw = dict(docid_col="doc_id", num_buckets=4, num_salts=2)
+    build_index(spark, base, d, fingerprint="fp-fold", **kw)
+    append_index_batch(
+        spark,
+        spark.createDataFrame([(3, "fast value")], "doc_id long, text string"),
+        d, 1, **kw,
+    )
+    if fold == "compact":
+        folded = compact_index(spark, d)
+    else:
+        folded = merge_epochs(spark, d, [0, 1])
+    assert folded["epochs"] == [1]
+    assert sorted(i for i, _ in search_local(d, "fast")) == [1, 3]
+
+    sc = spark.sparkContext
+    sc.setJobGroup("resume-folded", "resume of a folded index", False)
+    try:
+        got = build_index(spark, base, d, resume=True, fingerprint="fp-fold", **kw)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup("resume-folded")) == []
+    assert got["n_docs"] == 3 and got["epochs"] == [1]
+    assert sorted(i for i, _ in search_local(d, "fast")) == [1, 3]
+
+
+def test_older_layout_fails_loudly(spark, tmp_path):
+    """An index whose postings sit in top-level bucket= dirs (the
+    layout before every shard moved under an epoch= dir) must raise on
+    query rather than answer from none of its postings."""
+    from pg_cjk_parser_spark.query.topk import search_local
+
+    d = str(tmp_path / "older")
+    docs = spark.createDataFrame(
+        [(1, "fast table"), (2, "fast value")], "doc_id long, text string"
+    )
+    build_index(spark, docs, d, docid_col="doc_id", num_buckets=4, num_salts=2)
+    assert [i for i, _ in search_local(d, "fast")] == [1, 2]
+    pdir = os.path.join(d, "postings")
+    for name in os.listdir(os.path.join(pdir, "epoch=0")):
+        if name.startswith("bucket="):
+            os.replace(os.path.join(pdir, "epoch=0", name), os.path.join(pdir, name))
+    with pytest.raises(ValueError, match="older layout"):
+        search_local(d, "fast")
+    with pytest.raises(ValueError, match="older layout"):
+        search(spark, d, "fast", k=5)
 
 
 BOOL_QUERIES = [
@@ -259,18 +346,19 @@ def test_clean_rebuild_drops_stale_buckets(spark, tmp_path):
     ).upper() == "STATIC"
 
 
-def test_rebuild_crash_in_stats_write_keeps_previous_stats(
+def test_crash_in_stats_write_leaves_no_torn_stats(
     spark, tmp_path, monkeypatch
 ):
-    """A rebuild that dies part-way through writing stats.json must
-    leave the previous stats.json whole and loadable."""
+    """stats.json is only ever replaced whole: an append that dies
+    part-way through writing it leaves the previous stats.json
+    loadable, and a clean rebuild that dies there leaves none (its
+    first step removed the old one) until a resume rebuilds."""
+    from pg_cjk_parser_spark.index.streaming import append_index_batch
     from pg_cjk_parser_spark.query.topk import load_stats
 
     d = str(tmp_path / "torn")
-    build_index(
-        spark, synth_corpus(spark, 60, seed=42, num_partitions=2), d,
-        num_buckets=4, num_salts=2, block_size=16,
-    )
+    kw = dict(num_buckets=4, num_salts=2, block_size=16)
+    build_index(spark, synth_corpus(spark, 60, seed=42, num_partitions=2), d, **kw)
     real_dump = json.dump
 
     def torn_dump(obj, f, *args, **kwargs):
@@ -279,14 +367,20 @@ def test_rebuild_crash_in_stats_write_keeps_previous_stats(
             raise OSError("disk full")
         return real_dump(obj, f, *args, **kwargs)
 
+    small = synth_corpus(spark, 30, seed=7, num_partitions=2)
     monkeypatch.setattr(json, "dump", torn_dump)
     with pytest.raises(OSError, match="disk full"):
-        build_index(
-            spark, synth_corpus(spark, 30, seed=7, num_partitions=2), d,
-            num_buckets=4, num_salts=2, block_size=16,
-        )
+        append_index_batch(spark, small, d, epoch=1)
     monkeypatch.undo()
     assert load_stats(d)["n_docs"] == 60
+
+    monkeypatch.setattr(json, "dump", torn_dump)
+    with pytest.raises(OSError, match="disk full"):
+        build_index(spark, small, d, fingerprint="small", **kw)
+    monkeypatch.undo()
+    assert not os.path.exists(os.path.join(d, "stats.json"))
+    st = build_index(spark, small, d, resume=True, fingerprint="small", **kw)
+    assert st["n_docs"] == 30 and load_stats(d) == st
 
 
 def test_resume_invalidates_on_corpus_change(spark, tmp_path):
@@ -318,8 +412,8 @@ def test_resume_invalidates_on_corpus_change(spark, tmp_path):
     }
     after = search_local(d, "のび太", k=500)
     assert all(docid in valid for docid, _ in after), "stale docids resumed"
-    # the unchanged corpus resumes: every bucket is complete, so the
-    # build returns the stored stats without rebuilding
+    # the unchanged corpus resumes: epoch 0 is complete, so the build
+    # returns the stored stats without rebuilding
     again = build_index(
         spark, small, d, num_buckets=4, num_salts=2, block_size=16, resume=True
     )

@@ -257,14 +257,12 @@ def test_link_graph_single_scan_single_exchange(spark, tmp_path_factory):
     assert "partial_count" in plan, plan
 
 
-@pytest.mark.parametrize("resume", [False, True])
 def test_build_index_cell_exchange_then_map_in_arrow(
-    spark, docs, tmp_path, monkeypatch, resume
+    spark, docs, tmp_path, monkeypatch
 ):
     """The build is tokenizer MapInPandas -> ONE Exchange keyed by the
     collision-free cell map -> MapInArrow block encode (no pandas round
-    trip on the reduce side, no hash of (bucket, salt), no sort), with
-    or without resume."""
+    trip on the reduce side, no hash of (bucket, salt), no sort)."""
     from pyspark.sql.readwriter import DataFrameWriter
 
     from pg_cjk_parser_spark.index.build import build_index
@@ -279,8 +277,7 @@ def test_build_index_cell_exchange_then_map_in_arrow(
     monkeypatch.setattr(DataFrameWriter, "parquet", spy)
     build_index(
         spark, docs, str(tmp_path / "idx"), docid_col="doc_id",
-        num_buckets=8, num_salts=4, resume=resume,
-        fingerprint="plan-shape" if resume else None,
+        num_buckets=8, num_salts=4,
     )
     plan = plans[0]  # the postings write
     for op in ("MapInPandas", "Exchange", "MapInArrow"):

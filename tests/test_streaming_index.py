@@ -87,6 +87,35 @@ def test_structured_streaming_sink(spark, tmp_path):
     assert got == brute_force_topk(pdocs, "野比大雄", k=10)
 
 
+def test_structured_streaming_sink_onto_built_index(spark, tmp_path):
+    """The sink writes micro-batch B as epoch B + 1, so streaming onto
+    a built index (epoch 0) serves both corpora."""
+    idx = str(tmp_path / "built_stream")
+    src_dir = str(tmp_path / "src")
+    docs = synth_corpus(spark, 120, seed=42, num_partitions=2)
+    half = F.pmod(F.xxhash64("url"), F.lit(2))
+    kw = dict(num_buckets=8, num_salts=2, block_size=16)
+    build_index(spark, docs.where(half == 0), idx, **kw)
+    docs.where(half == 1).write.parquet(src_dir)
+    stream = spark.readStream.schema(docs.schema).parquet(src_dir)
+    q = stream_index(stream, idx, str(tmp_path / "ckpt"), **kw).trigger(
+        availableNow=True
+    ).start()
+    q.awaitTermination(120)
+    assert q.exception() is None
+
+    pdocs = [
+        (r.docid, r.text)
+        for r in docs.selectExpr("xxhash64(url) as docid", "text").collect()
+    ]
+    for query in QUERIES:
+        got = [
+            (r.docid, round(r.score, 6))
+            for r in search(spark, idx, query, k=10).collect()
+        ]
+        assert got == brute_force_topk(pdocs, query, k=10), query
+
+
 def test_crash_before_manifest_does_not_double_count(spark, tmp_path):
     """simulate: epoch applied but manifest lost -> redelivery must not
     double-count stats or postings"""
@@ -301,7 +330,7 @@ def test_validate_index_batch_stream_and_corruption(spark, tmp_path):
     build_index(spark, docs, bdir, num_buckets=8, num_salts=2, block_size=16)
     rep = validate_index(bdir, deep=True)
     assert rep["ok"], rep["errors"]
-    assert rep["checks"]["buckets"] == 8
+    assert rep["checks"]["epochs"] == 1
     assert rep["checks"]["blocks_sampled"] > 0
 
     # streaming index: epoch manifests + stats agree
@@ -316,8 +345,8 @@ def test_validate_index_batch_stream_and_corruption(spark, tmp_path):
     assert rep["ok"], rep["errors"]
     assert rep["checks"]["epochs"] == 2
 
-    # batch index + an appended epoch: the bucket manifests sum to the
-    # batch base (manifests/base.json), not to the whole index
+    # batch index + an appended epoch: the build is epoch 0, and the
+    # two epoch manifests sum to the whole index
     adir = str(tmp_path / "vappend")
     half = F.pmod(F.xxhash64("url"), F.lit(2))
     build_index(
@@ -330,18 +359,21 @@ def test_validate_index_batch_stream_and_corruption(spark, tmp_path):
     )
     rep = validate_index(adir, deep=True)
     assert rep["ok"], rep["errors"]
-    assert rep["checks"]["buckets"] == 8 and rep["checks"]["epochs"] == 1
+    assert rep["checks"]["epochs"] == 2
 
-    # corruption: tamper a bucket manifest's metrics -> caught
-    mp = os.path.join(bdir, "manifests", "bucket=3.json")
+    # corruption: tamper the build's epoch manifest totals -> caught
+    mp = os.path.join(bdir, "manifests", "epoch=0.json")
     with open(mp) as f:
         m = json.load(f)
-    m["metrics"]["total_tf"] += 7
+    m["total_tf"] += 7
     with open(mp, "w") as f:
         json.dump(m, f)
     rep = validate_index(bdir)
     assert not rep["ok"]
-    assert any("sum(buckets)" in e for e in rep["errors"])
+    assert any(
+        e == f"stats.total_tf={m['total_tf'] - 7} != sum(epochs)={m['total_tf']}"
+        for e in rep["errors"]
+    ), rep["errors"]
 
 
 def test_session_stats_batch_and_streaming(spark, tmp_path):
@@ -435,3 +467,69 @@ def test_maintain_index_folds_manifest_only_epochs(spark, tmp_path):
     assert len(st["epochs"]) <= 2
     assert st["n_docs"] == 1
     assert [d for d, _ in search_local(idx, "fast", k=5)] == [1]
+
+
+def test_one_layout_family(spark, tmp_path, monkeypatch):
+    """Build, large and small appends, merge_epochs and compact_index
+    leave one layout family: postings/ and termstats/ hold only
+    epoch= dirs, each epoch's termstats take its postings' layout
+    (nested over the same bucket= set, or flat), and termstats routing
+    for one bucket reads only that bucket's dirs of nested epochs."""
+    import os
+
+    import pg_cjk_parser_spark.index.streaming as streaming
+    from pg_cjk_parser_spark.index.compact import compact_index, merge_epochs
+    from pg_cjk_parser_spark.index.tombstones import epoch_dir_layout
+    from pg_cjk_parser_spark.query.topk import (
+        _shard_paths,
+        load_stats,
+        search_local,
+    )
+
+    idx = str(tmp_path / "layout")
+    docs = synth_corpus(spark, 90, seed=9, num_partitions=2)
+    third = F.pmod(F.xxhash64("url"), F.lit(3))
+    kw = dict(num_buckets=8, num_salts=2, block_size=16)
+
+    def subdirs(path):
+        return sorted(
+            n for n in os.listdir(path) if os.path.isdir(os.path.join(path, n))
+        )
+
+    def check(layouts):
+        epochs = {}
+        for sub in ("postings", "termstats"):
+            names = subdirs(os.path.join(idx, sub))
+            assert all(n.startswith("epoch=") for n in names), (sub, names)
+            epochs[sub] = names
+        assert epochs["postings"] == epochs["termstats"]
+        got = []
+        for name in epochs["postings"]:
+            pe, te = (os.path.join(idx, sub, name) for sub in ("postings", "termstats"))
+            got.append(epoch_dir_layout(pe))
+            assert epoch_dir_layout(te) == got[-1], name
+            if got[-1] == "nested":
+                assert subdirs(pe) == subdirs(te), name
+        assert got == layouts
+        stats = load_stats(idx)
+        for b in range(kw["num_buckets"]):
+            for p in _shard_paths(idx, "termstats", [b], stats):
+                assert (
+                    os.path.basename(p) == f"bucket={b}"
+                    or epoch_dir_layout(p) == "flat"
+                ), p
+
+    build_index(spark, docs.where(third == 0), idx, **kw)
+    check(["nested"])
+    monkeypatch.setattr(streaming, "_estimated_small", lambda batch: False)
+    append_index_batch(spark, docs.where(third == 1), idx, 1, **kw)
+    check(["nested", "nested"])
+    monkeypatch.setattr(streaming, "_estimated_small", lambda batch: True)
+    append_index_batch(spark, docs.where(third == 2), idx, 2, **kw)
+    check(["nested", "nested", "flat"])
+    before = {q: search_local(idx, q, k=10) for q in QUERIES}
+    merge_epochs(spark, idx, [0, 1])
+    check(["nested", "flat"])
+    compact_index(spark, idx)
+    check(["nested"])
+    assert {q: search_local(idx, q, k=10) for q in QUERIES} == before

@@ -953,6 +953,7 @@ def test_df_cache_sees_foreign_epoch_without_stats_refresh(spark, tmp_path):
     dictionary entries after a foreign epoch lands WITHOUT a
     stats.json refresh: the version key includes the postings dir
     mtime, which creating epoch=N bumps."""
+    import json
     import os
     import shutil
 
@@ -966,6 +967,14 @@ def test_df_cache_sees_foreign_epoch_without_stats_refresh(spark, tmp_path):
         spark.createDataFrame([(1, "fast table")], "doc_id long, text string"),
         idx, docid_col="doc_id", num_buckets=4, num_salts=2,
     )
+    # stats that list no epochs: routing lists the epoch dirs, which
+    # is what serves a foreign epoch dir
+    spath = os.path.join(idx, "stats.json")
+    with open(spath) as f:
+        st = json.load(f)
+    st.pop("epochs")
+    with open(spath, "w") as f:
+        json.dump(st, f)
     # prime the cache with a NEGATIVE entry for 'value'
     assert search_local(idx, "value", k=5) == []
     # donor epoch with the same layout params, moved in wholesale -
