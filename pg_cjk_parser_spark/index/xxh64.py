@@ -150,16 +150,22 @@ def cell_partition_key(cell, parts: int):
     return F.element_at(keys, cell % parts + 1).cast("int")
 
 
-def spark_xxhash64_str_vec(data, offsets):
+def spark_xxhash64_str_vec(data, offsets, seed=42):
     """Vectorized :func:`spark_xxhash64_str` over many UTF-8 strings
     in Arrow string layout: ``data`` holds the concatenated bytes and
     string ``i`` is ``data[offsets[i]:offsets[i + 1]]``.  Every XXH64
     step runs as uint64 numpy lanes over the strings that still have
     input (32-byte stripes, then 8-, 4- and 1-byte tails, then the
     avalanche); unaligned 8/4-byte reads are strided views over a
-    zero-padded copy of ``data``.  Bit-identical to the scalar
-    (tested for every length 0..70 and against ``F.xxhash64``).
-    Returns signed int64."""
+    zero-padded copy of ``data``.  ``seed`` is one scalar or an array
+    with one seed per string (uint64, or the int64 this function
+    returns, taken as its bits): Spark hashes an array of strings
+    by chaining, each element's XXH64 seeded with the previous hash
+    (the first with 42), so ``xxhash64(array(a, b))`` is
+    ``spark_xxhash64_str_vec(b, seed=spark_xxhash64_str_vec(a))``.
+    Bit-identical to the scalar :func:`xxh64` (tested for every length
+    0..70, per-lane seeds, and against ``F.xxhash64`` of strings and
+    of string arrays).  Returns signed int64."""
     import numpy as np
 
     P1 = np.uint64(_P1)
@@ -184,19 +190,17 @@ def spark_xxhash64_str_vec(data, offsets):
     u64 = np.ndarray((raw.size + 1,), "<u8", buf, 0, (1,))
     u32 = np.ndarray((raw.size + 1,), "<u4", buf, 0, (1,))
 
-    h = np.full(lens.size, (42 + _P5) & _M, np.uint64)
+    seed = np.broadcast_to(np.asarray(seed, np.uint64), lens.shape)
     nstripes = lens // 32
     pos = starts + nstripes * 32
     rem = lens - nstripes * 32
     with np.errstate(over="ignore"):
+        h = seed + P5
         big = np.flatnonzero(nstripes)
         if big.size:
             s0 = starts[big]
             ns = nstripes[big]
-            v = [
-                np.full(big.size, (42 + a) & _M, np.uint64)
-                for a in (_P1 + _P2, _P2, 0, -_P1)
-            ]
+            v = [seed[big] + np.uint64(a & _M) for a in (_P1 + _P2, _P2, 0, -_P1)]
             for k in range(int(ns.max())):
                 a = np.flatnonzero(ns > k)
                 base = s0[a] + 32 * k

@@ -463,6 +463,23 @@ def near_dup_clusters(
     )
 
 
+def span_hash_rows(
+    docs: DataFrame, k: int, id_col: str = "doc_id", text_col: str = "text"
+) -> DataFrame:
+    """``(id, h)``: per doc, the distinct Spark ``xxhash64`` values of
+    its k-word spans (:func:`ngrams.span_hashes`, one ``mapInArrow``
+    pass); ``id`` keeps its input type."""
+    from functools import partial
+
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    from .ngrams import span_hashes
+
+    inp = docs.select(F.col(id_col).alias(id_col), F.col(text_col))
+    schema = StructType([inp.schema[0], StructField("h", LongType(), False)])
+    return inp.mapInArrow(partial(span_hashes, k=k, names=[id_col, "h"]), schema)
+
+
 def duplicate_spans(
     docs: DataFrame,
     k: int = 8,
@@ -477,45 +494,28 @@ def duplicate_spans(
     training pipeline thresholds or span-masks on it where suffix
     arrays are the single-node tool.
 
-    Scale shape: spans hash to 64 bits JVM-side (xxhash64 of the
-    joined words - the text never travels past the projection), and
-    the per-doc dedup happens BEFORE the explode with
-    ``array_distinct`` on the doc's own hash array: a doc's duplicate
-    spans are all inside its one row, so the (doc, span) ``distinct``
-    exchange the previous shape paid (a full corpus-of-spans shuffle)
-    was pure overhead.  Then a window ``count(*) over (partition by
-    span)`` marks shared spans.  The window formulation is
-    deliberate: the naive groupBy-then-join-back reads the corpus and
-    recomputes the explode+distinct TWICE (Catalyst does not dedupe
-    common subtrees), while the window is one corpus scan and one
-    shuffle of two-long rows.  Hot boilerplate spans make one large
-    window group of (doc, span) pairs - WindowExec spills beyond its
-    buffer, and the group is the same size the join probe side would
-    have been.  No self-join on docs, no all-pairs blowup.
+    Scale shape: one ``mapInArrow`` pass (:func:`span_hash_rows`)
+    splits each batch of docs into words, hashes every k-word span
+    exactly as Spark's ``xxhash64(slice(split(text, ' '), i, k))``
+    does (k chained vectorized XXH64 passes) and emits each doc's
+    distinct ``(id, h)`` pairs - the text never travels past it, and
+    a doc's duplicate spans, all inside its one row, are dropped
+    before any exchange.  Then a window ``count(*) over (partition by
+    h)`` marks shared spans.  The window formulation is deliberate:
+    the naive groupBy-then-join-back reads the corpus and recomputes
+    the spans TWICE (Catalyst does not dedupe common subtrees), while
+    the window is one corpus scan and one shuffle of two-long rows.
+    Hot boilerplate spans make one large window group of (doc, span)
+    pairs - WindowExec spills beyond its buffer, and the group is the
+    same size the join probe side would have been.  No self-join on
+    docs, no all-pairs blowup.
     """
     from pyspark.sql import Window
 
-    t = F.split(F.col(text_col), " ")
-    # hash the k-word ARRAY slices directly: xxhash64 over an array
-    # hashes the same word bytes without materializing the space-
-    # joined span string per window (measured ~9% on 2M docs).  Words
-    # come from a single-space split so they never contain spaces,
-    # making array<->joined-string equality a bijection: the distinct
-    # structure (and therefore every count) is unchanged.
-    grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(F.size(t) - (k - 1), F.lit(1))),
-        lambda i: F.xxhash64(F.slice(t, i, k)),
-    )
-    hs = F.when(F.size(t) >= k, grams).otherwise(
-        F.array().cast("array<long>")
-    )
-    spans = docs.select(
-        F.col(id_col).alias(id_col),
-        F.explode(F.array_distinct(hs)).alias("h"),
-    )
     nd = F.count(F.lit(1)).over(Window.partitionBy("h"))
     return (
-        spans.withColumn("nd", nd)
+        span_hash_rows(docs, k, id_col, text_col)
+        .withColumn("nd", nd)
         .where(F.col("nd") >= 2)
         .groupBy(id_col)
         .agg(F.count(F.lit(1)).alias("n_dup_spans"))

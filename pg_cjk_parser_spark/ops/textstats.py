@@ -369,74 +369,54 @@ def repetition_signals(
     with at least ``max(ns)`` words.
 
     Scale shape: every signal here is a function of ONE document, so
-    nothing corpus-sized needs to shuffle at all - the n-gram counting
-    runs per row with JVM array functions (sort the doc's gram array
-    once per n, then a single ``aggregate`` pass counts distinct grams
-    and the longest equal run = the top gram's count).  The previous
-    explode + ``groupBy(id, n, gram)`` formulation moved ~200 gram
-    rows per doc through two corpus-sized exchanges and a pivot to
-    compute the same per-doc numbers; this shape's only exchange is
-    the final ``orderBy`` of the one-row-per-doc result.  No UDF."""
-    nmax = max(ns)
-    words = F.split(F.col(text_col), " ")
+    nothing corpus-sized needs to shuffle at all.  One scalar Arrow UDF
+    (:func:`ngrams.repetition_counts`) splits each batch of docs into
+    words and, per n, counts each doc's distinct n-grams and its top
+    n-gram's occurrences with one sort over exact word-code tuples
+    (nothing is hashed); it returns only those integers and the word
+    count, one struct per doc.  The length filter runs in the JVM
+    before it and the fractions, their rounding and the final
+    ``orderBy`` (the only exchange) after it.  Being a per-row column,
+    not a ``mapInArrow``, the UDF is pruned under a ``count()`` of the
+    result, which then only scans and length-filters the text.
+    Spark's ``transform``/``aggregate`` over a per-doc gram array did
+    the same counting one element at a time in interpreted lambdas,
+    and took several times longer."""
+    from functools import partial
 
-    def _stats(n: int):
-        """One pass over the doc's sorted n-gram array: (best, nd) =
-        (count of the most frequent gram, number of distinct grams).
-        Equal grams are adjacent after the sort, so the longest equal
-        run IS the top gram's count and run starts count distincts."""
-        g = F.array_sort(word_ngrams_col(words, n))
-        init = F.struct(
-            F.lit(None).cast("string").alias("prev"),
-            F.lit(0).alias("run"),
-            F.lit(0).alias("best"),
-            F.lit(0).alias("nd"),
-        )
+    from pyspark.sql.functions import arrow_udf
+    from pyspark.sql.types import IntegerType, StructField, StructType
 
-        def step(acc, x):
-            run = F.when(x.eqNullSafe(acc["prev"]), acc["run"] + 1).otherwise(
-                F.lit(1)
-            )
-            return F.struct(
-                x.alias("prev"),
-                run.alias("run"),
-                F.greatest(acc["best"], run).alias("best"),
-                (
-                    acc["nd"]
-                    + F.when(x.eqNullSafe(acc["prev"]), F.lit(0)).otherwise(
-                        F.lit(1)
-                    )
-                ).alias("nd"),
-            )
+    from .ngrams import repetition_counts
 
-        return F.aggregate(g, init, step)
-
-    # docs shorter than max(ns) words have no n-gram row for that n;
-    # keep the per-n inner-join semantics of the aggregated
-    # formulation by dropping them (split(null) has size -1, so null
-    # texts drop too, as explode used to drop them)
-    base = docs.where(F.size(words) >= nmax).select(
-        F.col(id_col).alias(id_col),
-        F.size(words).alias("_nw"),
-        *[_stats(n).alias(f"_s{n}") for n in ns],
+    names = ["nw"] + [f"{s}{n}" for n in ns for s in ("nd", "best")]
+    counts = arrow_udf(
+        partial(repetition_counts, ns=tuple(ns)),
+        StructType([StructField(c, IntegerType()) for c in names]),
+    )
+    # docs shorter than max(ns) words have no n-gram for that n and no
+    # row; split(null) has size -1, so null texts drop too
+    base = docs.where(F.size(F.split(F.col(text_col), " ")) >= max(ns)).select(
+        F.col(id_col).alias(id_col), counts(F.col(text_col)).alias("_c")
     )
     cols = [F.col(id_col)]
     for n in ns:
         # grams per doc = n_words - n + 1 (>= 1 after the filter);
         # int/int division promotes to double exactly as the long/long
         # count()/sum(c) division did, so the rounded values match
-        total = F.col("_nw") - (n - 1)
+        total = F.col("_c.nw") - (n - 1)
         cols.append(
             F.round(
-                F.lit(1.0) - F.col(f"_s{n}.nd") / total, round_digits
+                F.lit(1.0) - F.col(f"_c.nd{n}") / total, round_digits
             ).alias(f"dup{n}_frac")
         )
         cols.append(
-            F.round(F.col(f"_s{n}.best") / total, round_digits).alias(
+            F.round(F.col(f"_c.best{n}") / total, round_digits).alias(
                 f"top{n}_frac"
             )
         )
     return base.select(*cols).orderBy(id_col)
+
 
 def stratified_sample(
     docs: DataFrame,

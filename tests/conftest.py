@@ -18,3 +18,18 @@ def spark():
     )
     yield s
     s.stop()
+
+
+@pytest.fixture(scope="session")
+def perfbench_gen():
+    """The benchmark's corpus generator module (perfbench/gen.py:
+    seeded multilingual Zipf text)."""
+    import importlib.util
+    import pathlib
+    import sys
+
+    path = pathlib.Path(__file__).resolve().parents[1] / "perfbench" / "gen.py"
+    spec = importlib.util.spec_from_file_location("perfbench_gen", path)
+    gen = sys.modules.setdefault(spec.name, importlib.util.module_from_spec(spec))
+    spec.loader.exec_module(gen)  # dataclasses need the module registered
+    return gen

@@ -4,6 +4,7 @@ compare row count, column names, and order-insensitive values."""
 
 import math
 import os
+import tempfile
 
 import duckdb
 import pytest
@@ -88,7 +89,11 @@ def test_driver_vocab_covers_all_sf_dirs():
         assert not missing, (sf, sorted(missing))
 
 
-def test_entry_smoke(spark):
+def test_entry_smoke(spark, tmp_path, monkeypatch):
+    # entry() builds its index under tempfile.gettempdir(): point that at
+    # this test's own directory so two suites running side by side do not
+    # rebuild one shared index under each other
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     df = entry_mod.entry(spark)
     rows = df.collect()
     assert len(rows) > 0

@@ -283,6 +283,55 @@ def test_duplicate_spans_shared_only(spark):
     assert duplicate_spans(solo, k=4).count() == 0
 
 
+@pytest.fixture(scope="module")
+def ngram_docs(spark, perfbench_gen):
+    """A benchmark corpus with ~30% shared boilerplate plus edge docs,
+    under an int id that is not ``doc_id``: spaces that make empty
+    words, empty and null texts, docs shorter than n and k, CJK and
+    emoji words, and words of 32+ bytes (XXH64's stripe path)."""
+    corpus = perfbench_gen.make_corpus(17, 400, boilerplate_share=0.3)
+    long_words = " ".join(["x" * 40, "y" * 33, "長" * 11, "z" * 32] * 3)
+    edge = [
+        " a  a  a ", "  ", "", None, "a", "a b", "a b c",
+        "p q r s t u v",  # shorter than k=8
+        "漢字 😀 かな 漢字 😀 かな 漢字 😀 かな 한국어",
+        long_words, long_words + " tail",
+        "w w w w w w w w w w w w",
+    ]
+    rows = [(int(i), t) for i, t in zip(corpus.doc_id, corpus.text)]
+    rows += [(1000 + j, t) for j, t in enumerate(edge)]
+    return spark.createDataFrame(rows, "seq int, body string").repartition(3)
+
+
+@pytest.mark.parametrize("ns, k", [((2, 3), 8), ((1, 4), 4)])
+def test_dedup_operators_match_reference(ngram_docs, ns, k):
+    """The Arrow n-gram kernel against the higher-order-function
+    formulations (tests/ops_reference.py): identical schema and rows,
+    order included, and bit-identical per-doc span hashes."""
+    from pg_cjk_parser_spark.ops.dedup import duplicate_spans, span_hash_rows
+    from pg_cjk_parser_spark.ops.textstats import repetition_signals
+    from tests.ops_reference import (
+        duplicate_spans_reference,
+        repetition_signals_reference,
+        span_hashes_reference,
+    )
+
+    cols = dict(id_col="seq", text_col="body")
+    pairs = [
+        (repetition_signals(ngram_docs, ns=ns, **cols),
+         repetition_signals_reference(ngram_docs, ns=ns, **cols)),
+        (duplicate_spans(ngram_docs, k=k, **cols),
+         duplicate_spans_reference(ngram_docs, k=k, **cols)),
+    ]
+    for got, want in pairs:
+        assert got.schema == want.schema
+        g, w = got.collect(), want.collect()
+        assert len(g) > 100 and g == w
+    g = sorted(span_hash_rows(ngram_docs, k, **cols).collect())
+    w = sorted(span_hashes_reference(ngram_docs, k, **cols).collect())
+    assert len(g) > 1000 and g == w
+
+
 def test_stratified_sample_deterministic_and_stable(spark):
     from pg_cjk_parser_spark.ops.textstats import stratified_sample
 

@@ -44,15 +44,27 @@ def test_duplicate_spans_single_scan(docs):
     plan = _plan(duplicate_spans(docs, k=4))
     assert _count(plan, "Scan parquet") == 1, plan
     assert _count(plan, "Window") == 1, plan
+    # span hashing is the one Arrow pass, not an interpreted lambda
+    assert "lambdafunction" not in plan, plan
+    assert _count(plan, "MapInArrow") == 1, plan
 
 
 def test_repetition_signals_single_scan(docs):
-    """All n-gram sizes must explode in one tagged pass - one corpus
-    scan regardless of len(ns)."""
+    """All n-gram sizes come from one Arrow pass - one corpus scan
+    regardless of len(ns), and no interpreted per-element lambda.
+    The pass is a per-row column behind the JVM length filter, so a
+    count() of the result prunes it and only scans and filters."""
     from pg_cjk_parser_spark.ops.textstats import repetition_signals
 
     plan = _plan(repetition_signals(docs, ns=(2, 3)))
     assert _count(plan, "Scan parquet") == 1, plan
+    assert "lambdafunction" not in plan, plan
+    assert _count(plan, "ArrowEvalPython") == 1, plan
+    assert _count(plan, "MapInArrow") == 0, plan
+    counted = _plan(repetition_signals(docs, ns=(2, 3)).groupBy().count())
+    assert _count(counted, "Scan parquet") == 1, counted
+    assert _count(counted, "ArrowEvalPython") == 0, counted
+    assert _count(counted, "Sort") == 0, counted
 
 
 def test_contamination_overlap_broadcasts_probe(docs):

@@ -36,6 +36,7 @@ from pg_cjk_parser_spark.index.xxh64 import (
     spark_xxhash64_long_vec,
     spark_xxhash64_str,
     spark_xxhash64_str_vec,
+    xxh64,
 )
 from tests.index_reference import decode_blocks_exact, reference_postings
 
@@ -55,18 +56,10 @@ def _str_hash_vec(arr):
 
 
 @pytest.fixture(scope="module")
-def bench_pdf():
+def bench_pdf(perfbench_gen):
     """docid/text of a benchmark-generator corpus (perfbench/gen.py:
     multilingual Zipf text)."""
-    import importlib.util
-    import pathlib
-    import sys
-
-    path = pathlib.Path(__file__).resolve().parents[1] / "perfbench" / "gen.py"
-    spec = importlib.util.spec_from_file_location("perfbench_gen", path)
-    gen = sys.modules.setdefault(spec.name, importlib.util.module_from_spec(spec))
-    spec.loader.exec_module(gen)  # dataclasses need the module registered
-    corpus = gen.make_corpus(5, 600, boilerplate_share=0.05)
+    corpus = perfbench_gen.make_corpus(5, 600, boilerplate_share=0.05)
     return pd.DataFrame(
         {"docid": np.asarray(corpus.doc_id, np.int64), "text": corpus.text}
     )
@@ -105,6 +98,15 @@ def test_xxh64_str_vec_bit_identity(bench_pdf):
     assert _str_hash_vec(sl).tolist() == [
         spark_xxhash64_str(x) for x in strings[40:130]
     ]
+    # one seed per lane (the chained array hash), over the full
+    # uint64 range, against the scalar XXH64 with that seed
+    rng = np.random.default_rng(11)
+    seeds = rng.integers(0, 2**64, len(strings), np.uint64, endpoint=False)
+    seeds[:3] = [0, 42, 2**64 - 1]
+    got = spark_xxhash64_str_vec(*_binary_parts(arr), seed=seeds)
+    assert got.view(np.uint64).tolist() == [
+        xxh64(x.encode(), int(sd)) for x, sd in zip(strings, seeds)
+    ]
 
 
 def test_xxh64_str_vec_matches_spark(spark, bench_pdf):
@@ -117,6 +119,38 @@ def test_xxh64_str_vec_matches_spark(spark, bench_pdf):
     got = _str_hash_vec(pa.array(sample, pa.string()))
     for r in rows:
         assert int(got[r.i]) == r.h, sample[r.i]
+    # array hashes: Spark seeds each element's XXH64 with the hash of
+    # the elements before it, so xxhash64 of a k-word slice is k
+    # chained vectorized passes seeded per lane
+    texts = [" ".join(sample[i : i + 9]) for i in range(0, 140, 7)]
+    texts += [" a  b ", "  ", ""]
+    for k in (1, 3, 8):
+        spans = [
+            w[i : i + k]
+            for w in (t.split(" ") for t in texts)
+            for i in range(len(w) - k + 1)
+        ]
+        h = np.full(len(spans), 42, np.int64)
+        for j in range(k):
+            col = pa.array([s[j] for s in spans], pa.string())
+            h = spark_xxhash64_str_vec(*_binary_parts(col), seed=h)
+        words = F.split("t", " ")
+        want = (
+            spark.createDataFrame([(t,) for t in texts], "t string")
+            .select(
+                F.explode(
+                    F.when(
+                        F.size(words) >= k,
+                        F.transform(
+                            F.sequence(F.lit(1), F.size(words) - (k - 1)),
+                            lambda i: F.xxhash64(F.slice(words, i, k)),
+                        ),
+                    )
+                ).alias("h")
+            )
+            .collect()
+        )
+        assert h.tolist() == [r.h for r in want], k
 
 
 @pytest.mark.parametrize(
