@@ -32,12 +32,13 @@ Pipeline (all DataFrame/Arrow; designed for 1000-executor scale):
    ``postings/epoch=0/bucket=N`` (queries touch at most |q| buckets
    via directory pruning), termstats under ``termstats/epoch=0/
    bucket=N`` derived from the written blocks' metadata, then
-   ``manifests/epoch=0.json`` LAST, carrying the totals and the
-   corpus fingerprint; stats.json derives from the manifests.  A
-   clean build first removes the previous index, tombstones
-   included, so a crash before the manifest serves nothing under
-   stale stats; ``resume=True`` returns the stored stats once epoch
-   0 is complete for the same fingerprint and rebuilds otherwise.
+   ``manifests/epoch=0.json`` carrying the totals and the corpus
+   fingerprint, and LAST the snapshot commit: stats.json listing
+   epoch 0.  A clean build first removes the previous index,
+   tombstones included, so a crash before the commit serves nothing
+   under stale stats; ``resume=True`` returns the stored stats once
+   epoch 0 is complete for the same fingerprint and rebuilds
+   otherwise.
 """
 
 from __future__ import annotations
@@ -678,13 +679,12 @@ def build_index(
         except (OSError, ValueError):
             pass  # its stats were lost: rebuild
     # clean build: nothing of a previous index may survive - stale
-    # epochs, a half-written epoch 0, tombstones that would mask the
-    # rebuilt docs, or a compaction journal
-    for name in ("stats.json", "_compact_pending.json"):
-        try:
-            os.remove(os.path.join(index_dir, name))
-        except FileNotFoundError:
-            pass
+    # epochs, a half-written epoch 0, or tombstones that would mask
+    # the rebuilt docs
+    try:
+        os.remove(os.path.join(index_dir, "stats.json"))
+    except FileNotFoundError:
+        pass
     for sub in ("manifests", "postings", "termstats", "tombstones"):
         shutil.rmtree(os.path.join(index_dir, sub), ignore_errors=True)
 
@@ -720,6 +720,7 @@ def build_index(
     )
     return _rebuild_stats(
         index_dir, num_buckets, num_salts, block_size, k1, b, normalize_zht,
+        add={0: 0},
         extra={
             "n_terms_approx": n_terms,
             "fingerprint": fingerprint,

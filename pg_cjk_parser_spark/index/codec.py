@@ -14,8 +14,8 @@ docid sequence wrap around, and the cumulative-sum decode wraps back,
 so negative xxhash64 ids cost at most one long varint per block.
 
 :func:`decode_blocks` turns a whole Arrow batch of block rows back
-into postings.  Queries, compaction, ``merge_epochs``, the
-``decode_postings`` export, tombstone accounting and
+into postings.  Queries, compaction, ``merge_epochs`` (which also
+count the versions it drops), the ``decode_postings`` export and
 ``validate_index(deep=True)`` all decode through it, so a corrupt or
 foreign block fails the same way on every reader.
 """
@@ -104,11 +104,12 @@ def _gather_bytes(buf, starts, lens) -> tuple[np.ndarray, np.ndarray]:
     return buf[idx], ends
 
 
-def decode_blocks(rb, deleted=None, dead: bool = False):
+def decode_blocks(rb, deleted=None, dead: set | None = None):
     """Decode a whole Arrow batch of block rows back to postings, in
-    block order, without tombstoned (docid, epoch) versions - or, with
-    ``dead=True``, only those.  A batch without an ``epoch`` column is
-    all epoch 0 (the batch layout).
+    block order, without tombstoned (docid, epoch) versions; ``dead``,
+    when given, collects those versions as (docid, epoch) pairs.  A
+    batch without an ``epoch`` column is all epoch 0 (the batch
+    layout).
 
     Each of the docid, tf and doclen columns is ONE varint decode over
     the batch's concatenated blobs, with per-block cumsum resets for
@@ -191,11 +192,14 @@ def decode_blocks(rb, deleted=None, dead: bool = False):
         else None
     )
     keep = alive_mask(ids, deleted, eps)
-    if dead:
-        keep = np.zeros(ids.size, bool) if keep is None else ~keep
     plen = pend - pstart
     if keep is None:
         return blk, ids, tfs, dls, pstart, plen, pbuf
+    if dead is not None:
+        gone = ~keep
+        ep = eps[gone] if eps is not None else np.zeros(gone.sum(), np.int64)
+        pairs = np.unique(np.column_stack((ids[gone], ep)), axis=0)
+        dead.update(map(tuple, pairs.tolist()))
     return (
         blk[keep], ids[keep], tfs[keep], dls[keep], pstart[keep],
         plen[keep], pbuf,

@@ -1,52 +1,75 @@
-"""Index compaction: merge an index's epochs into one optimal layout.
+"""Index compaction and epoch merges: one fold, committed by one
+snapshot write.
 
 Every index is a sequence of epochs - the batch build is epoch 0 and
 appends add 1, 2, ... (index/streaming.py) - and each epoch leaves one
 block sequence per (term, salt); queries stay correct (the scorer
 merges block sequences by docid) but head terms accumulate many short
-tails. Compaction decodes all block rows back to postings, re-sorts
-per (bucket, salt, term, docid), and re-encodes full blocks under a
-single consolidated epoch, swapping directories atomically and
-collapsing the epoch manifests.
+tails.  A FOLD rewrites a set of epochs as one: :func:`merge_epochs`
+folds a subset, and :func:`compact_index` folds every epoch and also
+clears the tombstones it applied.  Both run through :func:`_fold`:
+
+1. read the folded epochs' dirs, as the snapshot (stats.json) lists
+   them, with the known block schema (no inference job);
+2. decode the blocks back to postings without the tombstoned
+   versions, and write them through the build's packed-cell encoder
+   and its one nested-epoch writer (``streaming._write_epoch``) into
+   the next generation of the newest folded epoch, ``epoch=E.gG``,
+   which no snapshot lists yet.  The same decode collects the dropped
+   (docid, epoch) versions in an accumulator, so the removed doc
+   count costs no second pass;
+3. write that generation's manifest, then commit with ONE atomic
+   write of stats.json listing it in place of the folded epochs;
+4. sweep what the snapshot no longer lists.
+
+A crash before the stats.json write leaves the old snapshot serving,
+plus unlisted leftovers that the next fold sweeps first; a crash
+after it leaves the new one.  Readers never see a mix.
 
 Blocks turn back into postings through the library's one block
-decoder, ``codec.decode_blocks``, which decodes a whole Arrow batch of
-block rows at once and drops tombstoned postings with one mask.
-Compaction, :func:`merge_epochs`, their tombstone accounting and the
-:func:`decode_postings` export call it once per batch, as the query
-path and ``validate_index`` do; compaction's postings then go back
-through the build's packed-cell encoder and its one nested-epoch
-writer (``streaming._write_epoch``), into temporary dirs that swap
-in.  The consolidated manifest carries the batch build's fingerprint
-on, so ``build_index(resume=True)`` still finds the build.
+decoder, ``codec.decode_blocks``, which decodes a whole Arrow batch
+of block rows at once and drops tombstoned postings with one mask;
+the :func:`decode_postings` export uses it too.  The folded manifest
+carries the batch build's fingerprint on, so
+``build_index(resume=True)`` still finds the build.
 """
 
 from __future__ import annotations
 
-import json
+import functools
 import os
+import re
 import shutil
 import time
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import SparkSession, functions as F
+from pyspark.accumulators import AccumulatorParam
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .build import _atomic_json, _bucket_dirs
+from .build import BLOCK_SCHEMA, _atomic_json
 from .codec import BLOCK_COLS, _gather_bytes, decode_blocks
-from .streaming import _build_fingerprint, _rebuild_stats, _write_epoch
+from .streaming import (
+    _epoch_dirs,
+    _epoch_manifest,
+    _load_snapshot,
+    _read_manifest,
+    _rebuild_stats,
+    _write_epoch,
+)
 from .tombstones import (
-    clear_tombstones,
     epoch_dir_layout,
-    epoch_from_file_path,
+    epoch_name,
     list_tombstone_files,
     load_tombstones,
+    snapshot_epochs,
 )
 
 _POSTING_SCHEMA = (
     "bucket int, salt int, term string, docid long, tf int, doclen int, "
     "positions binary"
 )
+
 
 def _export_postings(batches, deleted):
     """``mapInArrow`` body of :func:`decode_postings`: block rows ->
@@ -83,18 +106,34 @@ def decode_postings(spark: SparkSession, index_dir: str):
     layout or feeding postings to downstream pipelines.  Tombstoned
     (docid, epoch) versions are dropped, so the export is the LIVE
     corpus."""
-    postings = _read_epochs(spark, os.path.join(index_dir, "postings"))
+    postings = _read_epochs(
+        spark, index_dir, snapshot_epochs(_load_snapshot(index_dir))
+    )
     deleted = load_tombstones(index_dir)
-    return (
-        postings.select(*BLOCK_COLS)
-        .withColumn("epoch", epoch_from_file_path())
-        .mapInArrow(
-            lambda it: _export_postings(it, deleted), _POSTING_SCHEMA
-        )
+    return postings.mapInArrow(
+        lambda it: _export_postings(it, deleted), _POSTING_SCHEMA
     )
 
 
-def _decode_to_cells(batches, flush_at: int = 500_000, deleted=None):
+def _read_epochs(spark: SparkSession, index_dir: str, epochs: dict):
+    """Block rows (``codec.BLOCK_COLS`` plus ``epoch``) of the
+    ``{epoch: generation}`` postings dirs, or None when none holds
+    data.  Each dir reads with the known block schema, so no schema
+    inference job runs: bucket is a partition of a nested dir and a
+    data column of a flat one, and the epoch is a literal."""
+    dfs = []
+    for e, g in sorted(epochs.items()):
+        p = os.path.join(index_dir, "postings", epoch_name(e, g))
+        if epoch_dir_layout(p):
+            dfs.append(
+                spark.read.schema(BLOCK_SCHEMA)
+                .parquet(p)
+                .select(*BLOCK_COLS, F.lit(e).alias("epoch"))
+            )
+    return functools.reduce(DataFrame.union, dfs) if dfs else None
+
+
+def _decode_to_cells(batches, flush_at: int = 500_000, deleted=None, dead=None):
     """Decode posting blocks straight into packed (bucket, salt) cells
     for the packed-cell shuffle (build.py:_encode_cells) - the same
     cells-not-rows strategy as the batch build, so compaction never
@@ -106,13 +145,15 @@ def _decode_to_cells(batches, flush_at: int = 500_000, deleted=None):
     into that order - position lists are never decoded or
     re-encoded.  A cell chunk keeps its blocks' terms as its
     vocabulary; flush merges a cell's chunks with one dictionary
-    encode (build._merge_vocab)."""
+    encode (build._merge_vocab).  The (docid, epoch) versions the
+    tombstones drop go to the ``dead`` accumulator, once per task."""
     from .build import _merge_vocab, _pack_cell_idx
 
     # (bucket, salt) -> chunks of (vocab, vocab idx, docids, tfs,
     # doclens, position lengths, position bytes)
     cells: dict[tuple[int, int], list] = {}
     count = 0
+    dropped: set = set()
 
     def flush():
         rb_, rs_, rp = [], [], []
@@ -141,7 +182,9 @@ def _decode_to_cells(batches, flush_at: int = 500_000, deleted=None):
         )
 
     for rb in batches:
-        blk, ids, tfs, dls, pstart, plen, pbuf = decode_blocks(rb, deleted)
+        blk, ids, tfs, dls, pstart, plen, pbuf = decode_blocks(
+            rb, deleted, dropped
+        )
         if not blk.size:
             continue
         bkt = rb.column("bucket").to_numpy().astype(np.int64)
@@ -170,21 +213,156 @@ def _decode_to_cells(batches, flush_at: int = 500_000, deleted=None):
             count = 0
     if cells:
         yield flush()
+    if dead is not None and dropped:
+        dead.add(dropped)
 
 
-def _decoded_cells(postings, deleted):
+def _decoded_cells(postings, deleted, dead):
     """Block rows -> packed cell rows (build.PACKED_SCHEMA) with the
-    tombstones ``deleted`` applied: the map side that compaction and
-    :func:`merge_epochs` feed to ``streaming._write_epoch``."""
+    tombstones ``deleted`` applied: the map side a fold feeds to
+    ``streaming._write_epoch``."""
     from .build import PACKED_SCHEMA
 
-    return (
-        postings.select(*BLOCK_COLS)
-        .withColumn("epoch", epoch_from_file_path())
-        .mapInArrow(
-            lambda it: _decode_to_cells(it, deleted=deleted), PACKED_SCHEMA
-        )
+    return postings.mapInArrow(
+        lambda it: _decode_to_cells(it, deleted=deleted, dead=dead),
+        PACKED_SCHEMA,
     )
+
+
+class _VersionSet(AccumulatorParam):
+    """Set union of (docid, epoch) versions.  ``n_docs`` counts
+    versions, and one version spans many postings and tasks; a union
+    counts each once, also when a task is retried."""
+
+    def zero(self, value):
+        return set()
+
+    def addInPlace(self, a, b):
+        a |= b
+        return a
+
+
+def _fold(
+    spark: SparkSession,
+    index_dir: str,
+    stats: dict,
+    epochs: list[int],
+    block_size: int | None,
+    num_partitions: int | None,
+    compact: bool,
+) -> dict:
+    """Rewrite the sorted ``epochs``, which the snapshot ``stats``
+    lists, as one new generation of the newest of them - it keeps its
+    number, which tombstone bounds depend on - and commit it (module
+    docstring, steps 1-4).  ``compact`` applies a snapshot of the
+    tombstone files and records them as applied in the commit."""
+    _sweep(index_dir, stats)
+    listing = snapshot_epochs(stats)
+    block_size = block_size or stats["block_size"]
+    target = epochs[-1]
+    gen = listing[target] + 1
+    tomb_files, extra = None, {}
+    if compact:
+        # SNAPSHOT the tombstone files: deletes arriving during the
+        # (long) compaction are neither applied nor cleared.  A
+        # DEFAULT delete (upto = current max epoch, the epoch the
+        # survivors are rewritten under) keeps masking its targets and
+        # folds out next compaction.  An EXPLICIT upto below the
+        # current max cannot survive the commit faithfully: compaction
+        # collapses every version into one epoch, so a below-max bound
+        # can no longer tell the versions it targeted from the ones it
+        # spared.  Hence the generation bump, committed together with
+        # the applied file names: load_tombstones clamps an older
+        # generation's below-minimum bound up to the minimum live
+        # epoch (delete-wins) and skips an applied file, so a leftover
+        # or replayed tombstone can never re-activate
+        tomb_files = list_tombstone_files(index_dir)
+        extra = {
+            "compact_gen": int(stats.get("compact_gen", 0)) + 1,
+            "applied_tombstones": tomb_files,
+        }
+    postings = _read_epochs(spark, index_dir, {e: listing[e] for e in epochs})
+    dead = spark.sparkContext.accumulator(set(), _VersionSet())
+    total_tf = n_postings = 0
+    if postings is not None:  # None: only manifest-only (empty) epochs
+        total_tf, n_postings, _ = _write_epoch(
+            spark,
+            _decoded_cells(
+                postings, load_tombstones(index_dir, tomb_files), dead
+            ),
+            *_epoch_dirs(index_dir, target, gen),
+            stats["num_buckets"], stats["num_salts"], block_size,
+            num_partitions,
+        )
+    # the folded manifest: every folded version but the dropped ones,
+    # the written totals, and the batch build's fingerprint when
+    # epoch 0 is folded in (build_index resume looks for it)
+    folded = [_read_manifest(index_dir, e, listing[e]) for e in epochs]
+    fp = next(
+        filter(
+            None,
+            (m.get("fingerprint") or m.get("build_fingerprint") for m in folded),
+        ),
+        None,
+    )
+    _atomic_json(
+        _epoch_manifest(index_dir, target, gen),
+        {
+            "epoch": target,
+            "status": "complete",
+            "merged_from": epochs,
+            "n_docs": sum(int(m.get("n_docs", 0)) for m in folded)
+            - len(dead.value),
+            "total_tf": total_tf,
+            "n_postings": n_postings,
+            "applied_at": time.time(),
+            **({"build_fingerprint": fp} if fp else {}),
+        },
+    )
+    out = _rebuild_stats(
+        index_dir, stats["num_buckets"], stats["num_salts"], block_size,
+        stats["k1"], stats["b"], stats.get("normalize_zht", False),
+        extra=extra, add={target: gen}, drop=epochs,
+    )
+    _sweep(index_dir, out)
+    return out
+
+
+# an epoch dir (postings/, termstats/) or manifest name of any
+# generation: epoch=E or epoch=E.gG, plus .json for a manifest
+_EPOCH_ENTRY = re.compile(r"epoch=(\d+)(?:\.g\d+)?(?:\.json)?")
+
+
+def _sweep(index_dir: str, stats: dict) -> None:
+    """Remove what the snapshot ``stats`` does not list: epoch dirs
+    and manifests up to its newest epoch (a newer one may be an
+    append that has not committed yet), and the tombstone files it
+    records as applied.  Runs after every fold's commit, and first in
+    every fold, so a crashed fold's leftovers go too."""
+    listing = snapshot_epochs(stats)
+    keep = {epoch_name(e, g) for e, g in listing.items()}
+    top = max(listing, default=-1)
+    for sub in ("postings", "termstats", "manifests"):
+        d = os.path.join(index_dir, sub)
+        for n in sorted(os.listdir(d)) if os.path.isdir(d) else ():
+            m = _EPOCH_ENTRY.fullmatch(n)
+            listed = n.removesuffix(".json") in keep
+            if m and int(m.group(1)) <= top and not listed:
+                _remove(os.path.join(d, n))
+    for n in stats.get("applied_tombstones") or ():
+        _remove(os.path.join(index_dir, "tombstones", n))
+
+
+def _remove(path: str) -> None:
+    """Remove one swept file or dir.  A failure leaves unlisted
+    garbage, which no reader serves and the next sweep retries."""
+    try:
+        if os.path.isdir(path):
+            shutil.rmtree(path)
+        else:
+            os.remove(path)
+    except OSError:
+        pass
 
 
 def compact_index(
@@ -193,195 +371,15 @@ def compact_index(
     block_size: int | None = None,
     num_partitions: int | None = None,
 ) -> dict:
-    with open(os.path.join(index_dir, "stats.json")) as f:
-        stats = json.load(f)
-    block_size = block_size or stats["block_size"]
-    postings = _read_epochs(spark, os.path.join(index_dir, "postings"))
-    # SNAPSHOT the tombstone files: deletes arriving during the (long)
-    # compaction are neither applied nor cleared.  A DEFAULT delete
-    # (upto = current max epoch, which equals the consolidated epoch
-    # the survivors are rewritten under) keeps masking its targets
-    # and folds out next compaction.  An EXPLICIT upto below the
-    # current max cannot survive the swap faithfully: compaction
-    # collapses every version into the consolidated epoch, so a
-    # below-max bound can no longer tell the versions it targeted
-    # from the ones it spared.  Tombstones are generation-stamped:
-    # load_tombstones clamps a PRE-swap file's below-minimum bound up
-    # to the minimum live epoch (delete-wins - the racing delete still
-    # masks, losing only the ability to spare newer pre-compaction
-    # versions), while files this compaction applied are journaled in
-    # stats.json so a leftover or replayed tombstone can never
-    # re-activate; see delete_docs / load_tombstones
-    tomb_files = list_tombstone_files(index_dir)
-    pending_path = os.path.join(index_dir, "_compact_pending.json")
-    if os.path.exists(pending_path):
-        # crash recovery: a prior compaction swapped the data but died
-        # before the stats/manifest update; its journaled removal
-        # counts are still the truth (recomputing over the already-
-        # compacted postings would find zero)
-        with open(pending_path) as f:
-            pj = json.load(f)
-        tomb_files = pj["tomb_files"]
-        removed = pj["removed"]
-        deleted = load_tombstones(index_dir, tomb_files)
-    else:
-        deleted = load_tombstones(index_dir, tomb_files)
-        removed = (
-            _deleted_stats(postings, deleted)
-            if deleted is not None
-            else None
-        )
-        if removed is not None:
-            _atomic_json(
-                pending_path,
-                {"tomb_files": tomb_files, "removed": removed},
-            )
-    epochs = sorted(stats.get("epochs", [])) or [0]
-    new_epoch = epochs[-1]
-    # the consolidated epoch goes through the build's writer into
-    # temporary dirs; its termstats derive from the NEW block
-    # metadata, so tombstoned docs no longer count
-    tmp_postings = os.path.join(index_dir, "_compact_postings")
-    tmp_ts = os.path.join(index_dir, "_compact_termstats")
-    for tmp in (tmp_postings, tmp_ts):
-        shutil.rmtree(tmp, ignore_errors=True)
-    _write_epoch(
-        spark, _decoded_cells(postings, deleted),
-        os.path.join(tmp_postings, f"epoch={new_epoch}"),
-        os.path.join(tmp_ts, f"epoch={new_epoch}"),
-        stats["num_buckets"], stats["num_salts"], block_size,
-        num_partitions,
+    """Fold EVERY epoch into one, the newest epoch's next generation,
+    and apply the tombstones physically: postings drop, per-term
+    df/cf derive from the new block metadata, n_docs/avgdl refresh
+    exactly, and the applied tombstone files clear."""
+    stats = _load_snapshot(index_dir)
+    return _fold(
+        spark, index_dir, stats, sorted(snapshot_epochs(stats)), block_size,
+        num_partitions, compact=True,
     )
-
-    # atomic-ish swap
-    for name, tmp in (("postings", tmp_postings), ("termstats", tmp_ts)):
-        live = os.path.join(index_dir, name)
-        old = os.path.join(index_dir, f"_old_{name}")
-        shutil.rmtree(old, ignore_errors=True)
-        os.replace(live, old)
-        os.replace(tmp, live)
-        shutil.rmtree(old, ignore_errors=True)
-
-    if removed is not None:
-        # tombstones are now physically applied: refresh corpus stats
-        # (n_docs / total_tf / n_postings) and drop the tombstone files
-        stats["n_docs"] -= removed["n_docs"]
-        stats["total_tf"] -= removed["total_tf"]
-        stats["n_postings"] -= removed["n_postings"]
-        clear_tombstones(index_dir, tomb_files)
-
-    # tombstone generation bookkeeping (see tombstones.load_tombstones):
-    # every compaction collapses epoch identity, so the generation bumps
-    # unconditionally, and any snapshot file that survived its clear
-    # (OSError) is journaled as applied so it can never re-activate and
-    # destroy a delete+reinsert's spared version
-    tdir = os.path.join(index_dir, "tombstones")
-    still_applied = sorted(
-        n
-        for n in set(tomb_files) | set(stats.get("applied_tombstones") or ())
-        if os.path.exists(os.path.join(tdir, n))
-    )
-    gen_extra = {
-        "compact_gen": int(stats.get("compact_gen", 0)) + 1,
-        "applied_tombstones": still_applied,
-    }
-    stats.update(gen_extra)
-
-    # consolidate epoch manifests into one; it carries the batch
-    # build's fingerprint on, so build_index(resume=True) keeps the
-    # index instead of rebuilding it
-    fp = _build_fingerprint(index_dir)
-    mdir = os.path.join(index_dir, "manifests")
-    for name in list(os.listdir(mdir)):
-        if name.startswith("epoch="):
-            os.remove(os.path.join(mdir, name))
-    _atomic_json(
-        os.path.join(mdir, f"epoch={new_epoch}.json"),
-        {
-            "epoch": new_epoch,
-            "status": "complete",
-            "compacted": True,
-            "n_docs": stats["n_docs"],
-            "total_tf": stats["total_tf"],
-            "n_postings": stats["n_postings"],
-            "applied_at": time.time(),
-            **({"build_fingerprint": fp} if fp else {}),
-        },
-    )
-    out = _rebuild_stats(
-        index_dir, stats["num_buckets"], stats["num_salts"], block_size,
-        stats["k1"], stats["b"], stats.get("normalize_zht", False),
-        extra=gen_extra,
-    )
-    if os.path.exists(pending_path):
-        os.remove(pending_path)
-    return out
-
-
-def _deleted_stats(postings, deleted) -> dict:
-    """Exact stats removed by applying the tombstones.  The unit of
-    n_docs accounting is a (doc, epoch) VERSION - each epoch manifest
-    counted the doc once, and an upserted doc contributed one n_docs
-    unit per version - so compaction subtracts one unit per fully
-    masked version (a tombstone bound masks a doc's postings
-    uniformly within an epoch).  Emits one row per posting whose
-    docid is tombstoned at the posting's epoch, so the scanned volume
-    is bounded by the tombstone set."""
-
-    def gen(batches):
-        for rb in batches:
-            blk, ids, tfs, *_ = decode_blocks(rb, deleted, dead=True)
-            if blk.size:
-                eps = rb.column("epoch").to_numpy().astype(np.int64)
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(ids), pa.array(eps[blk]), pa.array(tfs)],
-                    names=["docid", "epoch", "tf"],
-                )
-
-    row = (
-        postings.select(*BLOCK_COLS)
-        .withColumn("epoch", epoch_from_file_path())
-        .mapInArrow(gen, "docid long, epoch long, tf long")
-        .agg(
-            F.countDistinct("docid", "epoch").alias("nd"),
-            F.sum("tf").alias("tt"),
-            F.count(F.lit(1)).alias("np"),
-        )
-        .collect()[0]
-    )
-    return {
-        "n_docs": int(row.nd or 0),
-        "total_tf": int(row.tt or 0),
-        "n_postings": int(row.np or 0),
-    }
-
-def _read_epochs(spark: SparkSession, root: str, paths=None):
-    """Read epoch dirs under a shard root (``postings/`` or
-    ``termstats/``; every epoch dir when ``paths`` is None) as one
-    DataFrame, or None when none holds data.  Nested dirs read as one
-    partition-discovery group (``basePath``: epoch/bucket partition
-    columns); each flat dir reads standalone (bucket is already a data
-    column).  The union is by name, so a flat dir's missing ``epoch``
-    column is null: every consumer derives per-block epochs from
-    ``input_file_name``, which carries the epoch=N path component.
-    The layout classifier lives with the layout convention
-    (tombstones.epoch_dir_layout)."""
-    if paths is None:
-        paths = [
-            os.path.join(root, n)
-            for n in sorted(os.listdir(root))
-            if n.startswith("epoch=")
-        ]
-    lay = {p: epoch_dir_layout(p) for p in paths}
-    nested = [p for p in paths if lay[p] == "nested"]
-    dfs = [spark.read.option("basePath", root).parquet(*nested)] if nested else []
-    dfs += [spark.read.parquet(p) for p in paths if lay[p] == "flat"]
-    if not dfs:
-        return None
-    out = dfs[0]
-    for d in dfs[1:]:
-        out = out.unionByName(d, allowMissingColumns=True)
-    return out
 
 
 def merge_epochs(
@@ -403,121 +401,27 @@ def merge_epochs(
     escape an epoch-bounded tombstone), per-(doc, epoch)-version
     stats adjust for what was dropped, and the tombstone files REMAIN
     - they may still mask unmerged epochs, and re-masking dropped
-    postings is a no-op."""
-    with open(os.path.join(index_dir, "stats.json")) as f:
-        stats = json.load(f)
-    have = set(stats.get("epochs") or [])
+    postings is a no-op.  Re-running a merge that already committed
+    only finishes its sweep."""
+    stats = _load_snapshot(index_dir)
+    listing = snapshot_epochs(stats)
     epochs = sorted(set(epochs))
-    missing = [e for e in epochs if e not in have]
+    missing = [e for e in epochs if e not in listing]
     if missing:
-        raise ValueError(f"unknown epochs {missing}; index has {sorted(have)}")
+        t = epochs[-1]
+        if t in listing and _read_manifest(index_dir, t, listing[t]).get(
+            "merged_from"
+        ) == epochs:
+            # this merge already committed: at most its sweep is left
+            _sweep(index_dir, stats)
+            return stats
+        raise ValueError(f"unknown epochs {missing}; index has {sorted(listing)}")
     if len(epochs) < 2:
         raise ValueError("merge_epochs needs at least two epochs")
-    block_size = block_size or stats["block_size"]
-    target = epochs[-1]
-    pdir = os.path.join(index_dir, "postings")
-    tdir = os.path.join(index_dir, "termstats")
-
-    sel_paths = [
-        p
-        for p in (os.path.join(pdir, f"epoch={e}") for e in epochs)
-        if os.path.isdir(p)
-    ]
-    postings = _read_epochs(spark, pdir, sel_paths)
-    aside = []
-    if postings is None:
-        # every selected epoch is manifest-only (empty/stopword-only
-        # micro-batches write a manifest but no postings): there is
-        # no data to rewrite - just fold the manifests into one so
-        # maintain_index, which preferentially picks the smallest
-        # epochs, cannot wedge on them
-        removed = None
-    else:
-        deleted = load_tombstones(index_dir)
-        removed = (
-            _deleted_stats(postings, deleted)
-            if deleted is not None
-            else None
-        )
-        # the merged epoch goes through the build's writer into
-        # temporary dirs (termstats from the new block metadata)
-        tmp_postings = os.path.join(index_dir, "_merge_postings")
-        tmp_ts = os.path.join(index_dir, "_merge_termstats")
-        for tmp in (tmp_postings, tmp_ts):
-            shutil.rmtree(tmp, ignore_errors=True)
-        _write_epoch(
-            spark, _decoded_cells(postings, deleted), tmp_postings, tmp_ts,
-            stats["num_buckets"], stats["num_salts"], block_size,
-            num_partitions,
-        )
-        merged_empty = not _bucket_dirs(tmp_postings)
-
-        # swap, non-destructively: move the merged epochs' dirs ASIDE
-        # first, land the target, and only delete the originals after
-        # the manifests are updated - a crash mid-way leaves every
-        # byte on disk under _old_merge_* instead of losing epochs
-        for e in epochs:
-            for base in (pdir, tdir):
-                live = os.path.join(base, f"epoch={e}")
-                if os.path.exists(live):
-                    old_p = os.path.join(base, f"_old_merge_epoch={e}")
-                    shutil.rmtree(old_p, ignore_errors=True)
-                    os.replace(live, old_p)
-                    aside.append(old_p)
-        if merged_empty:
-            # every merged posting was tombstone-masked (or the
-            # selected epochs held empty data files): the merge
-            # applies the deletes outright - no target dirs land, the
-            # originals fold away, and the manifest fold below records
-            # the removal
-            for tmp in (tmp_postings, tmp_ts):
-                shutil.rmtree(tmp, ignore_errors=True)
-        else:
-            os.replace(tmp_postings, os.path.join(pdir, f"epoch={target}"))
-            os.replace(tmp_ts, os.path.join(tdir, f"epoch={target}"))
-
-    # manifests: the merged manifest carries the summed totals minus
-    # what the tombstones removed, and the batch build's fingerprint
-    # when epoch 0 is folded in (build_index resume looks for it)
-    mdir = os.path.join(index_dir, "manifests")
-    n_docs = total_tf = n_postings = 0
-    carry = {}
-    for e in epochs:
-        mp = os.path.join(mdir, f"epoch={e}.json")
-        if os.path.exists(mp):
-            with open(mp) as f:
-                m = json.load(f)
-            n_docs += int(m.get("n_docs", 0))
-            total_tf += int(m.get("total_tf", 0))
-            n_postings += int(m.get("n_postings", 0))
-            fp = m.get("fingerprint") or m.get("build_fingerprint")
-            if fp:
-                carry["build_fingerprint"] = fp
-            os.remove(mp)
-    if removed is not None:
-        n_docs -= removed["n_docs"]
-        total_tf -= removed["total_tf"]
-        n_postings -= removed["n_postings"]
-    _atomic_json(
-        os.path.join(mdir, f"epoch={target}.json"),
-        {
-            "epoch": target,
-            "status": "complete",
-            "merged_from": epochs,
-            "n_docs": n_docs,
-            "total_tf": total_tf,
-            "n_postings": n_postings,
-            "applied_at": time.time(),
-            **carry,
-        },
+    return _fold(
+        spark, index_dir, stats, epochs, block_size, num_partitions,
+        compact=False,
     )
-    out = _rebuild_stats(
-        index_dir, stats["num_buckets"], stats["num_salts"], block_size,
-        stats["k1"], stats["b"], stats.get("normalize_zht", False),
-    )
-    for old_p in aside:
-        shutil.rmtree(old_p, ignore_errors=True)
-    return out
 
 
 def maintain_index(
@@ -536,21 +440,15 @@ def maintain_index(
     subset); idempotent when nothing exceeds the bound."""
     stats = None
     while True:
-        with open(os.path.join(index_dir, "stats.json")) as f:
-            cur = json.load(f)
-        epochs = sorted(cur.get("epochs") or [])
-        if len(epochs) <= max_epochs:
+        cur = _load_snapshot(index_dir)
+        listing = snapshot_epochs(cur)
+        if len(listing) <= max_epochs:
             return stats or cur
-        mdir = os.path.join(index_dir, "manifests")
-        sizes = {}
-        for e in epochs:
-            mp = os.path.join(mdir, f"epoch={e}.json")
-            try:
-                with open(mp) as f:
-                    sizes[e] = int(json.load(f).get("n_docs", 0))
-            except OSError:
-                sizes[e] = 0
-        pick = sorted(epochs, key=lambda e: (sizes[e], e))[
+        sizes = {
+            e: int(_read_manifest(index_dir, e, g).get("n_docs", 0))
+            for e, g in listing.items()
+        }
+        pick = sorted(listing, key=lambda e: (sizes[e], e))[
             : max(2, merge_factor)
         ]
         stats = merge_epochs(spark, index_dir, pick)

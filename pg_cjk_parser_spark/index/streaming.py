@@ -17,11 +17,18 @@ An epoch's postings and termstats share one layout: nested
 ``epoch=E/bucket=N`` dirs (:func:`_write_epoch`, the batch build and
 large appends), or one flat file per subdir with bucket as a data
 column (small appends).  Each epoch's totals live in its manifest,
-``manifests/epoch=E.json``, written atomically and LAST; stats.json
-is derived from the manifests (:func:`_rebuild_stats`), so a crash
-before the manifest leaves no trace in the stats, and a re-delivered
-batch is applied once (foreachBatch at-least-once -> exactly-once
-effect).
+``manifests/epoch=E.json``, written atomically after its data.
+
+stats.json is the index's SNAPSHOT and its one commit point: it
+lists the epochs every reader serves, each with its generation, and
+carries their manifests' summed totals.  Every writer ends with one
+atomic write of it (:func:`_rebuild_stats`), so a crash before that
+write leaves nothing a reader sees, and a re-delivered batch whose
+manifest already landed only commits (foreachBatch at-least-once ->
+exactly-once effect).  A fold (index/compact.py) rewrites epochs into
+a new generation, dirs ``epoch=E.gG`` and manifest
+``epoch=E.gG.json`` that no snapshot lists yet, and commits the same
+way; an epoch dir no snapshot lists is invisible.
 """
 
 from __future__ import annotations
@@ -45,6 +52,7 @@ from .build import (
     _encode_cells,
     _with_docid,
 )
+from .tombstones import epoch_name, snapshot_epochs
 from .xxh64 import cell_partition_key
 
 
@@ -52,8 +60,28 @@ def _stats_path(index_dir: str) -> str:
     return os.path.join(index_dir, "stats.json")
 
 
-def _epoch_manifest(index_dir: str, epoch: int) -> str:
-    return os.path.join(index_dir, "manifests", f"epoch={epoch}.json")
+def _load_snapshot(index_dir: str) -> dict:
+    """The committed snapshot, stats.json."""
+    with open(_stats_path(index_dir)) as f:
+        return json.load(f)
+
+
+def _listed_gen(index_dir: str, epoch: int) -> int:
+    """The generation the snapshot lists for ``epoch`` (0 for an
+    unlisted epoch and before the first commit)."""
+    try:
+        return snapshot_epochs(_load_snapshot(index_dir)).get(epoch, 0)
+    except OSError:
+        return 0
+
+
+def _epoch_manifest(index_dir: str, epoch: int, gen: int = 0) -> str:
+    return os.path.join(index_dir, "manifests", f"{epoch_name(epoch, gen)}.json")
+
+
+def _read_manifest(index_dir: str, epoch: int, gen: int = 0) -> dict:
+    with open(_epoch_manifest(index_dir, epoch, gen)) as f:
+        return json.load(f)
 
 
 def _build_fingerprint(index_dir: str) -> str | None:
@@ -97,12 +125,10 @@ def _resolve_layout(
     that query routing can never find (terms hash to different
     buckets), and a normalize_zht flip would change query-side
     normalization for the whole index.  Fail loudly instead."""
-    stats = None
     try:
-        with open(_stats_path(index_dir)) as f:
-            stats = json.load(f)
+        stats = _load_snapshot(index_dir)
     except OSError:
-        pass
+        stats = None
     resolved = {}
     for name, val, default in (
         ("num_buckets", num_buckets, DEFAULT_BUCKETS),
@@ -156,7 +182,9 @@ def append_index_batch(
     b = lay["b"]
     normalize_zht = lay["normalize_zht"]
     os.makedirs(os.path.join(index_dir, "manifests"), exist_ok=True)
-    mpath = _epoch_manifest(index_dir, epoch)
+    # a listed epoch may live in a fold's later generation
+    gen = _listed_gen(index_dir, epoch)
+    mpath = _epoch_manifest(index_dir, epoch, gen)
     if os.path.exists(mpath):
         with open(mpath) as f:
             if "fingerprint" in json.load(f):
@@ -165,11 +193,11 @@ def append_index_batch(
                     f"epoch {epoch} holds the batch build; appends onto "
                     "a built index start at epoch 1"
                 )
-        # re-delivered batch: already applied; re-derive stats in case
-        # a crash interrupted the previous stats refresh
+        # re-delivered batch: already applied; commit it in case a
+        # crash came between its manifest and the snapshot write
         return _rebuild_stats(
             index_dir, num_buckets, num_salts, block_size, k1, b,
-            normalize_zht,
+            normalize_zht, add={epoch: gen},
         )
 
     # clean any partial files from a failed earlier attempt of this epoch
@@ -232,9 +260,9 @@ def append_index_batch(
     n_batch_docs = _obs_count(obs_docs, "n_docs")
 
     # exactly-once accounting: the epoch's deltas live in its manifest
-    # (written atomically, LAST); global stats are *derived* by summing
-    # all epoch manifests, so a crash at any point before the manifest
-    # rename leaves no trace and redelivery cannot double-count.
+    # (written atomically); the snapshot commit lists the epoch and
+    # sums the listed manifests, so a crash at any point before the
+    # commit leaves no trace and redelivery cannot double-count.
     _atomic_json(
         mpath,
         {
@@ -247,21 +275,22 @@ def append_index_batch(
         },
     )
     return _rebuild_stats(
-        index_dir, num_buckets, num_salts, block_size, k1, b, normalize_zht
+        index_dir, num_buckets, num_salts, block_size, k1, b, normalize_zht,
+        add={epoch: 0},
     )
 
 
 # v2 commit: task output moves straight to the destination, one
 # rename round instead of two.  Safe because epoch atomicity comes
-# from the manifest-last protocol: a crashed epoch's partial files are
-# swept before the epoch is written again.
+# from the snapshot commit: a crashed epoch's partial files are
+# unlisted, and swept before the epoch is written again.
 _V2_COMMIT = ("mapreduce.fileoutputcommitter.algorithm.version", "2")
 
 
-def _epoch_dirs(index_dir: str, epoch: int) -> tuple[str, str]:
-    """An epoch's (postings, termstats) dirs."""
+def _epoch_dirs(index_dir: str, epoch: int, gen: int = 0) -> tuple[str, str]:
+    """An epoch generation's (postings, termstats) dirs."""
     return tuple(
-        os.path.join(index_dir, sub, f"epoch={epoch}")
+        os.path.join(index_dir, sub, epoch_name(epoch, gen))
         for sub in ("postings", "termstats")
     )
 
@@ -278,7 +307,7 @@ def _write_epoch(
 ) -> tuple[int, int, int]:
     """Write packed cells as one NESTED epoch - the one writer of the
     batch build (epoch 0), every large append, ``compact_index`` and
-    ``merge_epochs`` (the last two into temporary dirs they swap in).
+    ``merge_epochs`` (the last two into a new generation's dirs).
 
     Blocks land under ``pdir/bucket=N``.  Termstats and the epoch's
     totals derive from the written blocks' metadata: a column-pruned
@@ -410,15 +439,25 @@ def _estimated_small(batch: DataFrame) -> bool:
 def _rebuild_stats(
     index_dir, num_buckets, num_salts, block_size, k1, b,
     normalize_zht: bool = False, extra: dict | None = None,
+    add: dict | None = None, drop=(),
 ) -> dict:
-    mdir = os.path.join(index_dir, "manifests")
-    epochs, n_docs, total_tf, n_postings = [], 0, 0, 0
-    for name in sorted(os.listdir(mdir)):
-        if not (name.startswith("epoch=") and name.endswith(".json")):
-            continue
-        with open(os.path.join(mdir, name)) as f:
-            m = json.load(f)
-        epochs.append(int(m["epoch"]))
+    """Commit a new snapshot: stats.json listing the committed
+    snapshot's epochs minus ``drop`` plus ``add`` (``{epoch:
+    generation}``), with the totals of their manifests, in ONE atomic
+    write - the commit point of every writer.  The committed snapshot
+    is read here, right before the write, so an epoch another writer
+    committed meanwhile stays listed."""
+    try:
+        old = _load_snapshot(index_dir)
+    except OSError:
+        old = {}
+    listing = {
+        e: g for e, g in snapshot_epochs(old).items() if e not in drop
+    }
+    listing.update(add or {})
+    n_docs = total_tf = n_postings = 0
+    for e, g in listing.items():
+        m = _read_manifest(index_dir, e, g)
         n_docs += int(m.get("n_docs", 0))
         total_tf += int(m.get("total_tf", 0))
         n_postings += int(m.get("n_postings", 0))
@@ -434,20 +473,16 @@ def _rebuild_stats(
         "b": b,
         "fingerprint": "streaming",
         "normalize_zht": bool(normalize_zht),
-        "epochs": sorted(epochs),
+        "epochs": sorted(listing),
+        "epoch_gens": {str(e): g for e, g in sorted(listing.items()) if g},
     }
     # carry the tombstone-generation bookkeeping (see
     # tombstones.load_tombstones): appends must not reset it, or a
     # racing explicit-upto delete loses its clamp and a leftover
     # applied tombstone loses its skip entry
-    try:
-        with open(_stats_path(index_dir)) as f:
-            old = json.load(f)
-        for key in ("compact_gen", "applied_tombstones"):
-            if key in old:
-                stats[key] = old[key]
-    except (OSError, ValueError):
-        pass
+    for key in ("compact_gen", "applied_tombstones"):
+        if key in old:
+            stats[key] = old[key]
     if extra:
         stats.update(extra)
     _atomic_json(_stats_path(index_dir), stats)
@@ -515,7 +550,7 @@ def upsert_index_batch(
             "never mask the versions it replaces (streaming sinks "
             "should use batchId + 1)"
         )
-    mpath = _epoch_manifest(index_dir, epoch)
+    mpath = _epoch_manifest(index_dir, epoch, _listed_gen(index_dir, epoch))
     if not os.path.exists(mpath):
         # the SAME docid derivation the indexing path uses (incl. its
         # cast to long), so tombstoned ids always equal indexed ids

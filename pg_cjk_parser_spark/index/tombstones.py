@@ -20,6 +20,16 @@ with each posting's epoch, so on the query path deleted docs can
 neither match nor occupy WAND heap slots, while corpus statistics (n_docs, avgdl, df) stay as built -
 exactly Lucene's live-docs behavior - until ``compact_index``
 applies the tombstones physically and refreshes the statistics.
+Compaction commits the applied file names and its generation bump in
+the same stats.json write that lists the rewritten epoch, and
+removes the files only after that commit.
+
+The module also homes the epoch layout convention every reader
+shares (:func:`epoch_name`, :func:`snapshot_epochs`,
+:func:`epoch_dir_layout`, :func:`path_epoch`).  A fold rewrites an
+epoch under its own number into a new generation dir
+``epoch=E.gG``, so a tombstone keeps bounding the rewritten postings
+by their real epoch E.
 
 Scale note: the tombstone set ships to executors inside the task
 closure as two sorted int64 arrays; at ~16 bytes/doc that is fine
@@ -78,11 +88,12 @@ def delete_docs(
     compaction runs (it equals the consolidated epoch the survivors
     are rewritten under, so it keeps masking).  An EXPLICIT
     ``upto_epoch`` below the current max that races a compaction
-    loses per-epoch precision - the swap collapses version identity -
-    but it does NOT unmask: each tombstone file is stamped with the
-    index's compaction generation, and :func:`load_tombstones` clamps
-    a PRE-swap file's below-minimum bound up to the minimum live
-    epoch (delete-wins).  A below-minimum bound written AFTER a
+    loses per-epoch precision - the compaction's commit collapses
+    version identity - but it does NOT unmask: each tombstone file is
+    stamped with the index's compaction generation, and
+    :func:`load_tombstones` clamps a file from BEFORE that commit
+    whose bound is below the minimum live epoch up to that epoch
+    (delete-wins).  A below-minimum bound written AFTER a
     compaction (current generation) targets epochs that no longer
     exist and is a no-op, and a file the compaction already applied
     (recorded in stats.json) is ignored outright - so replaying a
@@ -124,7 +135,7 @@ def delete_docs(
 
 def _current_gen(index_dir: str) -> int:
     """The index's compaction generation (0 until the first
-    compaction; bumped atomically with every compaction swap)."""
+    compaction; bumped in every compaction's snapshot commit)."""
     import json
 
     try:
@@ -153,12 +164,12 @@ def load_tombstones(index_dir: str, files: list[str] | None = None):
 
     Compaction-race handling (generation-stamped, see
     :func:`delete_docs`): a file the last compaction already applied
-    (its name is journaled in stats.json ``applied_tombstones``,
-    written atomically with the generation bump) is SKIPPED - its
+    (its name is journaled in stats.json ``applied_tombstones``, in
+    the same snapshot commit as the generation bump) is SKIPPED - its
     targets are physically gone, and re-activating it would destroy a
     delete+reinsert's spared new version.  A surviving file from an
     OLDER generation with a bound below every live epoch was written
-    against pre-compaction epochs and raced the swap: its bound is
+    against pre-compaction epochs and raced the commit: its bound is
     clamped up to the minimum live epoch (delete-wins).  A
     CURRENT-generation below-minimum bound targets epochs that no
     longer exist and naturally masks nothing (no-op by
@@ -170,8 +181,8 @@ def load_tombstones(index_dir: str, files: list[str] | None = None):
         return None
     # generation / applied-journal / minimum-live-epoch snapshot; all
     # three come from the SAME stats read so a concurrent compaction
-    # cannot tear them apart (pre-swap stats: old gen + old epochs;
-    # post-swap stats: new gen + applied list + new epochs)
+    # cannot tear them apart (before its commit: old gen + old epochs;
+    # after: new gen + applied list + new epochs)
     cur_gen, applied, min_ep = 0, frozenset(), None
     try:
         with open(os.path.join(index_dir, "stats.json")) as f:
@@ -217,29 +228,11 @@ def load_tombstones(index_dir: str, files: list[str] | None = None):
     return ids, upto
 
 
-def clear_tombstones(
-    index_dir: str, files: list[str] | None = None
-) -> None:
-    """Remove tombstone files after compaction applied them - only
-    the given snapshot when ``files`` is passed, so deletes that
-    arrived DURING the compaction survive to mask (and later drop)
-    their targets."""
-    d = _tomb_dir(index_dir)
-    if files is None:
-        import shutil
+def clear_tombstones(index_dir: str) -> None:
+    """Remove every tombstone file: the deletes no longer mask."""
+    import shutil
 
-        shutil.rmtree(d, ignore_errors=True)
-        return
-    for name in files:
-        try:
-            os.remove(os.path.join(d, name))
-        except OSError:
-            pass
-    try:
-        if not os.listdir(d):
-            os.rmdir(d)
-    except OSError:
-        pass
+    shutil.rmtree(_tomb_dir(index_dir), ignore_errors=True)
 
 
 def alive_mask(
@@ -266,8 +259,8 @@ def alive_mask(
 
 
 def epoch_dir_layout(path: str) -> str | None:
-    """Physical layout of one ``epoch=N`` shard dir - the other half
-    of the layout convention this module homes: ``'nested'`` (bucket=
+    """Physical layout of one epoch shard dir - the other half of the
+    layout convention this module homes: ``'nested'`` (bucket=
     subdirs, large epochs/compaction), ``'flat'`` (parquet files
     directly in the dir with bucket as a data column - small
     streaming epochs and all per-epoch termstats), or ``None`` (no
@@ -284,34 +277,35 @@ def epoch_dir_layout(path: str) -> str | None:
     return None
 
 
-# A block's epoch is the epoch=N dir DIRECTLY under the shard root
-# (postings/ or termstats/), followed at most by a bucket dir and the
-# file name.  Anchoring at the end keeps an ancestor of the index dir
-# named epoch=N (or postings/epoch=N) from passing for a block epoch.
-# Java and Python regex share this syntax.
-_EPOCH_PATH_RE = (
-    r"/(?:postings|termstats)/epoch=(\d+)(?:/bucket=\d+)?(?:/[^/]+)?$"
+def epoch_name(epoch: int, gen: int = 0) -> str:
+    """Dir (and manifest) name of an epoch's generation ``gen``:
+    ``epoch=E`` for generation 0, the one appends and the build
+    write, and ``epoch=E.gG`` for the G-th rewrite by a fold
+    (compaction or merge), which keeps the epoch's number."""
+    return f"epoch={epoch}.g{gen}" if gen else f"epoch={epoch}"
+
+
+def snapshot_epochs(stats: dict) -> dict[int, int]:
+    """``{epoch: generation}`` the snapshot ``stats`` (stats.json)
+    lists - the only epochs any reader serves.  stats.json records
+    the epochs as ``epochs`` and the non-zero generations as
+    ``epoch_gens``; a stats.json without ``epochs`` lists none."""
+    gens = stats.get("epoch_gens") or {}
+    return {int(e): int(gens.get(str(e), 0)) for e in stats.get("epochs") or ()}
+
+
+# A block's epoch is the epoch=N dir (of any generation, .gG) DIRECTLY
+# under the shard root (postings/ or termstats/), followed at most by
+# a bucket dir and the file name.  Anchoring at the end keeps an
+# ancestor of the index dir named epoch=N (or postings/epoch=N) from
+# passing for a block epoch.
+_EPOCH_PATH_RE = re.compile(
+    r"/(?:postings|termstats)/epoch=(\d+)(?:\.g\d+)?(?:/bucket=\d+)?(?:/[^/]+)?$"
 )
 
 
 def path_epoch(path: str) -> int | None:
     """Epoch of a shard dir or block file path (None when the path
-    names no epoch dir) - the driver-side twin of
-    :func:`epoch_from_file_path`."""
-    m = re.search(_EPOCH_PATH_RE, path)
+    names no epoch dir)."""
+    m = _EPOCH_PATH_RE.search(path)
     return int(m.group(1)) if m else None
-
-
-def epoch_from_file_path():
-    """Spark Column: a block's epoch parsed from its file path
-    (epoch=N dir, 0 when none matches) - the single home of the
-    layout convention; query and compaction readers share it."""
-    from pyspark.sql import functions as F
-
-    return F.coalesce(
-        F.nullif(
-            F.regexp_extract(F.input_file_name(), _EPOCH_PATH_RE, 1),
-            F.lit(""),
-        ).cast("int"),
-        F.lit(0),
-    )

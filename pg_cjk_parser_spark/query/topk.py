@@ -68,34 +68,26 @@ from ..kernel.tsvector import (
 from ..index.codec import decode_blocks, gather_positions
 from ..index.tombstones import (
     epoch_dir_layout,
+    epoch_name,
     load_tombstones,
     path_epoch,
+    snapshot_epochs,
 )
 
 
 def _index_version(index_dir: str):
-    """Version key for an index: the mtime_ns of stats.json and of
-    the postings AND termstats dirs.  Every in-contract mutation
-    (append, upsert epoch, compact, merge) rewrites stats.json last;
-    the shard-dir mtimes additionally catch FOREIGN epoch dirs
-    landing without a stats refresh (the crashed-append case
-    _shard_paths's directory fallback serves) - creating epoch=N
-    bumps the parent dir's mtime, and BOTH dirs are tracked so a
-    postings-first landing cannot freeze a negative df entry taken
-    before its termstats arrived.  Tombstones deliberately bump none
-    of the three - the dictionary df stays frozen until compaction
-    (live-docs semantics), so cached df values remain correct."""
-    def mt(p):
-        try:
-            return os.stat(p).st_mtime_ns
-        except OSError:
-            return -1
-
-    return (
-        mt(os.path.join(index_dir, "stats.json")),
-        mt(os.path.join(index_dir, "postings")),
-        mt(os.path.join(index_dir, "termstats")),
-    )
+    """Version key for an index: the stats.json file's identity.
+    stats.json is the snapshot - every mutation that changes what
+    readers serve (append, upsert epoch, compact, merge) commits by
+    atomically replacing it, and no reader serves an epoch it does
+    not list.  Tombstones deliberately do not bump it - the
+    dictionary df stays frozen until compaction (live-docs
+    semantics), so cached df values remain correct."""
+    try:
+        st = os.stat(os.path.join(index_dir, "stats.json"))
+    except OSError:
+        return None
+    return st.st_mtime_ns, st.st_ino, st.st_size
 
 
 _STATS_CACHE: dict = {}
@@ -148,27 +140,16 @@ def term_buckets(terms: list[str], num_buckets: int) -> dict[str, int]:
 def _shard_paths(index_dir: str, subdir: str, bset, stats) -> list[str]:
     """Scoped scan paths for the pruned bucket set under ``subdir``
     (postings or termstats): the ``bucket=`` dirs of nested epochs and
-    whole flat epoch dirs.  Listing the whole tree per query would
+    whole flat epoch dirs, of exactly the epoch generations the
+    snapshot ``stats`` lists.  Listing the whole tree per query would
     cost O(index size) directory discovery - prohibitive on object
     storage at corpus scale; instead paths are constructed from the
-    routing result and the known epoch list, so per-query listing is
+    routing result and the snapshot, so per-query listing is
     O(|q| buckets x epochs)."""
     pdir = os.path.join(index_dir, subdir)
-    epochs = stats.get("epochs")
-    if epochs is None and os.path.isdir(pdir):
-        # stats predate (or never learned about) epoch appends: trust
-        # the directory over the stats so foreign-appended epochs are
-        # not silently dropped
-        found = sorted(
-            int(n.split("=", 1)[1])
-            for n in os.listdir(pdir)
-            if n.startswith("epoch=")
-            and n.split("=", 1)[1].isdigit()
-        )
-        epochs = found
     paths = []
-    for e in epochs or ():
-        ebase = os.path.join(pdir, f"epoch={e}")
+    for e, g in sorted(snapshot_epochs(stats).items()):
+        ebase = os.path.join(pdir, epoch_name(e, g))
         nested = [
             p
             for p in (os.path.join(ebase, f"bucket={b}") for b in bset)
@@ -232,8 +213,8 @@ def _read_termstats(
     reads entirely - the serving analog of PG keeping the GIN term
     btree's hot pages in shared_buffers.  Tombstones don't invalidate
     it (df is deliberately frozen until compaction); every structural
-    mutation bumps the version key (stats.json rewrite or a new epoch
-    dir).  ``ver`` must be the version snapshot taken BEFORE ``stats``
+    mutation bumps the version key (its snapshot commit rewrites
+    stats.json).  ``ver`` must be the version snapshot taken BEFORE ``stats``
     was loaded (see _route) so a concurrent append landing in between
     caches its possibly-stale reads under the OLD key, which the next
     query's fresh version replaces - never under the new one.

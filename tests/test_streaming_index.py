@@ -292,9 +292,13 @@ def test_windowed_ingest_stats_with_watermark(spark, tmp_path):
 
 
 def test_search_survives_missing_epoch_stats(spark, tmp_path):
-    """Legacy/foreign index whose stats.json lacks the epoch list:
-    routing must fall back to a scoped glob and still answer."""
+    """stats.json is the snapshot every reader takes its epochs from.
+    One without the epoch list (only a hand-edited one lacks it)
+    serves no epoch: the query paths answer nothing instead of listing
+    the epoch dirs, and answer again once the list is back."""
     import json, os
+
+    from pg_cjk_parser_spark.query.topk import search_local
 
     inc_dir = str(tmp_path / "legacy")
     docs = synth_corpus(spark, 100, seed=3, num_partitions=2)
@@ -309,7 +313,10 @@ def test_search_survives_missing_epoch_stats(spark, tmp_path):
     sp = os.path.join(inc_dir, "stats.json")
     with open(sp) as f:
         stats = json.load(f)
-    stats.pop("epochs")
+    with open(sp, "w") as f:
+        json.dump({k: v for k, v in stats.items() if k != "epochs"}, f)
+    assert search(spark, inc_dir, "のび太", k=10).collect() == []
+    assert search_local(inc_dir, "のび太", k=10) == []
     with open(sp, "w") as f:
         json.dump(stats, f)
     after = [

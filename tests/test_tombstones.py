@@ -826,45 +826,50 @@ def test_randomized_crud_prefix_websearch_rank_differential(spark, tmp_path):
 
 
 def test_foreign_epoch_survives_epoch_bounded_tombstone(spark, tmp_path):
-    """An epoch dir that stats.json never learned about (crashed
-    stats refresh / external writer - the case _shard_paths's
-    directory fallback serves) must still be tombstone-bounded by its
-    REAL epoch: a delete bounded at epoch 0 may not mask the epoch-1
-    version just because stats lack an 'epochs' key."""
-    import json
+    """An epoch dir that no snapshot lists (an external writer's, or
+    an append that crashed before its commit) is invisible to every
+    reader, and an epoch-bounded tombstone bounds a LISTED
+    generation-suffixed dir by its REAL epoch: compaction rewrites
+    epoch 1 into ``epoch=1.g1``, and a delete bounded at epoch 0 may
+    not mask the epoch-1 version there."""
     import os
+    import shutil
 
     from pg_cjk_parser_spark.index.streaming import append_index_batch
     from pg_cjk_parser_spark.query.topk import search_local
 
     idx = str(tmp_path / "foreign")
+    donor = str(tmp_path / "donor")
+    kw = dict(docid_col="doc_id", num_buckets=4, num_salts=2)
+    for e, row in enumerate([(1, "fast table"), (2, "fast value")]):
+        append_index_batch(
+            spark,
+            spark.createDataFrame([row], "doc_id long, text string"),
+            idx, epoch=e, **kw,
+        )
+    compact_index(spark, idx)
+    assert os.listdir(os.path.join(idx, "postings")) == ["epoch=1.g1"]
+    # a foreign epoch 3 lands next to it without a snapshot commit
     append_index_batch(
         spark,
-        spark.createDataFrame([(1, "fast table")], "doc_id long, text string"),
-        idx, epoch=0, docid_col="doc_id", num_buckets=4, num_salts=2,
+        spark.createDataFrame([(3, "fast row")], "doc_id long, text string"),
+        donor, epoch=3, **kw,
     )
-    append_index_batch(
-        spark,
-        spark.createDataFrame([(2, "fast value")], "doc_id long, text string"),
-        idx, epoch=1, docid_col="doc_id", num_buckets=4, num_salts=2,
-    )
-    # simulate the foreign/crashed case: stats forget the epochs
-    spath = os.path.join(idx, "stats.json")
-    with open(spath) as f:
-        st = json.load(f)
-    st.pop("epochs", None)
-    with open(spath, "w") as f:
-        json.dump(st, f)
+    for sub in ("postings", "termstats"):
+        shutil.move(
+            os.path.join(donor, sub, "epoch=3"),
+            os.path.join(idx, sub, "epoch=3"),
+        )
     # delete doc 2 bounded at epoch 0: its only version is epoch 1,
     # which the bound does NOT cover - it must stay visible on every
-    # path (Spark + serving)
+    # path (Spark + serving), and the foreign doc 3 on none
     delete_docs(idx, [2], upto_epoch=0)
-    assert any(
-        d == 2 for d, _ in search_local(idx, "fast", k=10)
-    ), "epoch-1 posting wrongly masked as epoch 0"
+    assert sorted(
+        d for d, _ in search_local(idx, "fast", k=10)
+    ) == [1, 2], "epoch-1 posting wrongly masked as epoch 0"
     got = {r.docid for r in search(spark, idx, "fast", k=10).collect()}
     assert got == {1, 2}
-    # and an unbounded delete still masks it
+    # and a delete bounded at epoch 1 masks it
     delete_docs(idx, [2], upto_epoch=1)
     assert [d for d, _ in search_local(idx, "fast", k=10)] == [1]
     got = {r.docid for r in search(spark, idx, "fast", k=10).collect()}
@@ -949,53 +954,54 @@ def test_ancestor_epoch_dir_does_not_unmask_batch_tombstones(
 
 
 def test_df_cache_sees_foreign_epoch_without_stats_refresh(spark, tmp_path):
-    """The serving df cache must not serve stale (or negative)
-    dictionary entries after a foreign epoch lands WITHOUT a
-    stats.json refresh: the version key includes the postings dir
-    mtime, which creating epoch=N bumps."""
-    import json
+    """The serving df cache serves exactly the snapshot: a foreign
+    epoch landing WITHOUT a stats.json commit stays invisible to it
+    (no df from unlisted termstats), and the commit that lists the
+    epoch - here a re-delivery of the batch whose manifest already
+    landed - replaces the cached negative entry."""
     import os
     import shutil
 
     from pg_cjk_parser_spark.index.streaming import append_index_batch
-    from pg_cjk_parser_spark.query.topk import search_local
+    from pg_cjk_parser_spark.query.topk import (
+        _read_termstats,
+        search_local,
+        term_buckets,
+    )
 
     idx = str(tmp_path / "main")
     donor = str(tmp_path / "donor")
+    kw = dict(docid_col="doc_id", num_buckets=4, num_salts=2)
     build_index(
         spark,
         spark.createDataFrame([(1, "fast table")], "doc_id long, text string"),
-        idx, docid_col="doc_id", num_buckets=4, num_salts=2,
+        idx, **kw,
     )
-    # stats that list no epochs: routing lists the epoch dirs, which
-    # is what serves a foreign epoch dir
-    spath = os.path.join(idx, "stats.json")
-    with open(spath) as f:
-        st = json.load(f)
-    st.pop("epochs")
-    with open(spath, "w") as f:
-        json.dump(st, f)
-    # prime the cache with a NEGATIVE entry for 'value'
-    assert search_local(idx, "value", k=5) == []
-    # donor epoch with the same layout params, moved in wholesale -
-    # the crashed-append shape _shard_paths's directory fallback
-    # serves (stats.json of idx never changes)
-    build_index(
-        spark,
-        spark.createDataFrame([(2, "value line")], "doc_id long, text string"),
-        donor, docid_col="doc_id", num_buckets=4, num_salts=2,
-    )
-    append_index_batch(
-        spark,
-        spark.createDataFrame([(2, "value line")], "doc_id long, text string"),
-        donor, epoch=1, docid_col="doc_id", num_buckets=4, num_salts=2,
-    )
+    # prime the cache with a NEGATIVE entry for 'spark'
+    assert search_local(idx, "spark", k=5) == []
+    # donor epoch with the same layout params, moved in wholesale with
+    # its manifest: the shape of an append that crashed right before
+    # its commit (stats.json of idx never changes)
+    batch = spark.createDataFrame([(2, "spark line")], "doc_id long, text string")
+    append_index_batch(spark, batch, donor, epoch=1, **kw)
     for sub in ("postings", "termstats"):
         shutil.move(
             os.path.join(donor, sub, "epoch=1"),
             os.path.join(idx, sub, "epoch=1"),
         )
-    got = search_local(idx, "value", k=5)
+    shutil.move(
+        os.path.join(donor, "manifests", "epoch=1.json"),
+        os.path.join(idx, "manifests", "epoch=1.json"),
+    )
+    bset = [term_buckets(["spark"], 4)["spark"]]
+    assert _read_termstats(idx, bset, ["spark"], load_stats(idx)) == {}
+    assert search_local(idx, "spark", k=5) == []
+    append_index_batch(spark, batch, idx, epoch=1, **kw)
+    assert load_stats(idx)["epochs"] == [0, 1]
+    assert _read_termstats(idx, bset, ["spark"], load_stats(idx)) == {
+        "spark": 1
+    }
+    got = search_local(idx, "spark", k=5)
     assert [d for d, _ in got] == [2], got
 
 
