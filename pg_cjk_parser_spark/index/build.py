@@ -20,18 +20,23 @@ Pipeline (all DataFrame/Arrow; designed for 1000-executor scale):
    every reducer gets floor or ceil of B*S/parts cells - hashing
    (bucket, salt) directly left reducers idle next to ones with 2x
    the cells.
-3. **Block encode** (``mapInArrow`` over :func:`_encode_cells`): per
-   (bucket, salt, term), docid-sorted blocks of ``block_size``
-   postings; delta+varint docids, varint tfs & doclens, per-doc
-   delta-varint positions, per-block ``(max_tf, min_doclen, min/max
-   docid)`` for block-max pruning.  Blocks leave Python as Arrow
-   batches built from the varint buffers (:func:`_slice_blocks`), with
-   no per-block Python objects and no pandas conversion.
-4. **Write** epoch 0 of the epoch protocol (index/streaming.py,
-   ``_write_epoch`` - the same writer large appends use): blocks under
-   ``postings/epoch=0/bucket=N`` (queries touch at most |q| buckets
-   via directory pruning), termstats under ``termstats/epoch=0/
-   bucket=N`` derived from the written blocks' metadata, then
+3. **Block encode and write** (``mapInArrow``, index/streaming.py
+   ``_write_cells`` over :func:`_encode_cell_blocks`): per (bucket,
+   salt, term), docid-sorted blocks of ``block_size`` postings;
+   delta+varint docids, varint tfs & doclens, per-doc delta-varint
+   positions, per-block ``(max_tf, min_doclen, min/max docid)`` for
+   block-max pruning.  Blocks are Arrow batches built from the varint
+   buffers (:func:`_slice_blocks`), with no per-block Python objects
+   and no pandas conversion, and the task writes each cell's blocks
+   itself with pyarrow to ``postings/epoch=0/bucket=N/part-sS.parquet``
+   (queries touch at most |q| buckets via directory pruning): blocks
+   never go back to the JVM.  It returns only the cell's per-term
+   ``(df, cf)`` rows.
+4. **Termstats and commit** of epoch 0 of the epoch protocol
+   (index/streaming.py, ``_write_epoch`` - the same writer large
+   appends and folds use): one exchange by bucket sends each bucket's
+   per-term rows to one task, which sums them into
+   ``termstats/epoch=0/bucket=N`` and returns exact totals; then
    ``manifests/epoch=0.json`` carrying the totals and the corpus
    fingerprint, and LAST the snapshot commit: stats.json listing
    epoch 0.  A clean build first removes the previous index,
@@ -72,13 +77,6 @@ def _atomic_json(path: str, obj: dict) -> None:
     with open(tmp, "w") as f:
         json.dump(obj, f)
     os.replace(tmp, path)
-
-
-def _bucket_dirs(path: str) -> list[str]:
-    """hive bucket= partition dirs under ``path`` ([] for an empty index)."""
-    if not os.path.isdir(path):
-        return []
-    return [x for x in os.listdir(path) if x.startswith("bucket=")]
 
 
 PACKED_SCHEMA = "bucket int, salt int, payload binary"
@@ -385,12 +383,16 @@ def _packed_postings_gen(batches, num_buckets, num_salts, flush_at=500_000,
         yield df
 
 
-def _encode_cells(batches, block_size: int):
-    """Reduce side of the packed shuffle (``mapInArrow``): gather each
-    (bucket, salt) cell's payloads, unpack, sort by (term, docid) with
-    integer term ranks (numpy lexsort; no wide-unicode arrays), and
-    yield the cell's posting blocks as Arrow batches via the columnar
-    block slicer :func:`_slice_blocks`.
+def _encode_cell_blocks(batches, block_size: int):
+    """Reduce side of the packed shuffle: gather each (bucket, salt)
+    cell's payloads, unpack, sort by (term, docid) with integer term
+    ranks (numpy lexsort; no wide-unicode arrays), and yield per cell
+    ``(bucket, salt, blocks, term_stats)``: the cell's posting blocks
+    as Arrow batches from the columnar block slicer
+    :func:`_slice_blocks`, and one ``(bucket, term, df, cf)`` batch
+    with a row per term of the cell, in term order - df is the term's
+    posting count and cf its summed tf, taken over the same term
+    groups the blocks are cut from.
 
     Memory: one reduce partition's payloads live in RAM, and it encodes
     one cell at a time; size num_salts (docid-disjoint shards) so cells
@@ -449,11 +451,29 @@ def _encode_cells(batches, block_size: int):
         bids = (bstarts - gstarts[gid]) // bs
         terms = vocab.take(order_u).cast(pa.string())
         nb = bstarts.size
-        yield from _slice_blocks(
+        blocks = _slice_blocks(
             np.full(nb, bkt, np.int32), np.full(nb, salt, np.int32),
             terms.take(rs_[bstarts]), bids, bstarts, bends,
             ds, ts, dls_, (pos_bytes, p_ends),
         )
+        term_stats = pa.RecordBatch.from_arrays(
+            [
+                pa.array(np.full(gstarts.size, bkt, np.int32)),
+                terms.take(rs_[gstarts]),
+                pa.array(glens.astype(np.int64)),
+                pa.array(np.add.reduceat(ts, gstarts).astype(np.int64)),
+            ],
+            names=["bucket", "term", "df", "cf"],
+        )
+        yield bkt, salt, blocks, term_stats
+
+
+def _encode_cells(batches, block_size: int):
+    """``mapInArrow`` body yielding only the posting blocks of
+    :func:`_encode_cell_blocks` (BLOCK_SCHEMA's Arrow types, no pandas
+    round trip either way)."""
+    for _, _, blocks, _ in _encode_cell_blocks(batches, block_size):
+        yield from blocks
 
 
 def _with_docid(docs: DataFrame, docid_col: str | None) -> DataFrame:
@@ -578,21 +598,6 @@ def _slice_blocks(bucket, salt, term, bids, bstarts, bends, d, t, dl, pos):
     return out
 
 
-def _cell_blocks(cells: DataFrame, num_salts: int, parts: int, block_size: int):
-    """Reduce side shared by build, append and compact: packed cell
-    rows -> posting blocks.  One exchange that places cell
-    ``bucket * num_salts + salt`` on partition ``cell % parts``
-    (collision-free, xxh64.cell_partition_key), then ``mapInArrow``
-    over :func:`_encode_cells`, whose batches already carry
-    BLOCK_SCHEMA's Arrow types (no pandas round trip either way)."""
-    from .xxh64 import cell_partition_key
-
-    cell = F.col("bucket") * num_salts + F.col("salt")
-    return cells.repartition(parts, cell_partition_key(cell, parts)).mapInArrow(
-        lambda it: _encode_cells(it, block_size), BLOCK_SCHEMA
-    )
-
-
 def build_index(
     spark: SparkSession,
     docs: DataFrame,
@@ -696,7 +701,7 @@ def build_index(
     # shuffle moves ~B*S rows per map task instead of one row per
     # posting (the per-row Python<->JVM Arrow boundary measured ~5s per
     # direction at 10M postings), and the reducer sorts + block-encodes
-    # in numpy and hands Arrow batches straight back to the JVM.
+    # in numpy and writes the blocks itself.
     cells = _doc_cells(
         docs, docid_col, text_col, num_buckets, num_salts, normalize_zht
     )

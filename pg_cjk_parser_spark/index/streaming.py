@@ -14,9 +14,13 @@ lets epochs compose:
   termstats rows just add up.
 
 An epoch's postings and termstats share one layout: nested
-``epoch=E/bucket=N`` dirs (:func:`_write_epoch`, the batch build and
-large appends), or one flat file per subdir with bucket as a data
-column (small appends).  Each epoch's totals live in its manifest,
+``epoch=E/bucket=N`` dirs (:func:`_write_epoch`, the batch build,
+large appends and folds), or one flat file per subdir with bucket as
+a data column (small appends).  The nested writer's Spark tasks write
+their files themselves with pyarrow, one per (bucket, salt) cell of
+postings and one per bucket of termstats, each named by its cell or
+bucket and landed by an atomic rename, so a retried task rewrites
+the same file.  Each epoch's totals live in its manifest,
 ``manifests/epoch=E.json``, written atomically after its data.
 
 stats.json is the index's SNAPSHOT and its one commit point: it
@@ -37,18 +41,22 @@ import json
 import os
 import shutil
 import time
+import uuid
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .build import (
+    BLOCK_ARROW_SCHEMA,
     BLOCK_SCHEMA,
     DEFAULT_BLOCK,
     DEFAULT_BUCKETS,
     DEFAULT_SALTS,
     _atomic_json,
-    _bucket_dirs,
-    _cell_blocks,
     _doc_cells,
+    _encode_cell_blocks,
     _encode_cells,
     _with_docid,
 )
@@ -308,50 +316,136 @@ def _write_epoch(
     """Write packed cells as one NESTED epoch - the one writer of the
     batch build (epoch 0), every large append, ``compact_index`` and
     ``merge_epochs`` (the last two into a new generation's dirs).
+    Whatever ``pdir`` and ``tdir`` held before is removed first.
 
-    Blocks land under ``pdir/bucket=N``.  Termstats and the epoch's
-    totals derive from the written blocks' metadata: a column-pruned
-    read of (bucket, term, n, sum_tf) with a known schema (no
-    inference job) - ~1/block_size of the postings volume - instead
-    of a second shuffle over raw postings; df = sum(n) and cf =
-    sum(sum_tf) are exact because every posting lands in exactly one
-    block.  They land under ``tdir/bucket=N``, and the totals come
-    from an Observation on that write, so no further job runs.
-    Returns ``(total_tf, n_postings, n_terms)``."""
-    from pyspark.sql import Observation
+    The tasks write the files themselves, with pyarrow, in two jobs
+    after the map side:
 
+    1. ONE exchange places cell ``bucket * num_salts + salt`` on
+       partition ``cell % parts`` (collision-free,
+       ``xxh64.cell_partition_key``); each encode task
+       (:func:`_write_cells`) writes every cell it owns as
+       ``pdir/bucket=B/part-sS.parquet`` and returns only the cell's
+       ``(bucket, term, df, cf)`` rows;
+    2. those rows go through an exchange keyed by bucket, and each
+       termstats task (:func:`_write_termstats`) sums its buckets'
+       rows per term into ``tdir/bucket=B/part-00000.parquet`` and
+       returns its exact ``(total_tf, n_postings, n_terms)``, which
+       the driver sums.  Every (bucket, term) lands in one task, so
+       ``n_terms`` is exact.
+
+    Every file name is fixed by its cell or bucket and every file
+    lands by an atomic rename of a dot-prefixed temp in the same dir
+    (:func:`_write_parquet`), so a retried or speculative task rewrites
+    the same bytes under the same name and no reader sees a partial
+    file.  Returns ``(total_tf, n_postings, n_terms)``, ``(0, 0, 0)``
+    for an epoch without postings."""
+    for d in (pdir, tdir):
+        shutil.rmtree(d, ignore_errors=True)
+        os.makedirs(d)
     parts = num_partitions or min(
         num_buckets * num_salts, spark.sparkContext.defaultParallelism * 4
     )
-    (
-        _cell_blocks(cells, num_salts, parts, block_size)
-        .write.mode("overwrite")
-        .option(*_V2_COMMIT)
-        .partitionBy("bucket")
-        .parquet(pdir)
-    )
-    if not _bucket_dirs(pdir):
-        os.makedirs(tdir, exist_ok=True)
-        return 0, 0, 0
-    obs = Observation()
-    (
-        spark.read.schema("bucket int, term string, n int, sum_tf long")
-        .parquet(pdir)
-        .groupBy("bucket", "term")
-        .agg(F.sum("n").alias("df"), F.sum("sum_tf").alias("cf"))
-        .observe(
-            obs,
-            F.sum("cf").alias("total_tf"),
-            F.sum("df").alias("n_postings"),
-            F.count(F.lit(1)).alias("n_terms"),
+    tparts = min(num_buckets, spark.sparkContext.defaultParallelism)
+    cell = F.col("bucket") * num_salts + F.col("salt")
+    totals = (
+        cells.repartition(parts, cell_partition_key(cell, parts))
+        .mapInArrow(
+            lambda it: _write_cells(it, pdir, block_size),
+            "bucket int, term string, df long, cf long",
         )
-        .write.mode("overwrite")
-        .option(*_V2_COMMIT)
-        .partitionBy("bucket")
-        .parquet(tdir)
+        .repartition(tparts, cell_partition_key(F.col("bucket"), tparts))
+        .mapInArrow(
+            lambda it: _write_termstats(it, tdir),
+            "total_tf long, n_postings long, n_terms long",
+        )
+        .collect()
     )
-    return tuple(
-        _obs_count(obs, key) for key in ("total_tf", "n_postings", "n_terms")
+    return tuple(sum(int(r[i]) for r in totals) for i in range(3))
+
+
+# the blocks' file schema: bucket is the directory, as a hive partition
+_BLOCK_FILE_SCHEMA = BLOCK_ARROW_SCHEMA.remove(
+    BLOCK_ARROW_SCHEMA.get_field_index("bucket")
+)
+_TERMSTATS_FILE_SCHEMA = pa.schema(
+    [("term", pa.string()), ("df", pa.int64()), ("cf", pa.int64())]
+)
+
+
+def _write_parquet(path: str, schema, batches) -> None:
+    """Write ``batches`` as the Parquet file ``path``: into a
+    dot-prefixed temp in the same dir (every reader skips those), then
+    an atomic rename.  No Arrow schema is stored and ``term``, whose
+    values are nearly all distinct, is not dictionary-encoded: both
+    keep the files small."""
+    d, name = os.path.split(path)
+    os.makedirs(d, exist_ok=True)
+    tmp = os.path.join(d, f".{name}.{uuid.uuid4().hex}.tmp")
+    try:
+        with pq.ParquetWriter(
+            tmp, schema, store_schema=False,
+            use_dictionary=[n for n in schema.names if n != "term"],
+        ) as w:
+            for rb in batches:
+                w.write_batch(rb)
+        os.replace(tmp, path)
+    except BaseException:
+        try:
+            os.remove(tmp)
+        except OSError:
+            pass
+        raise
+
+
+def _write_cells(batches, pdir: str, block_size: int):
+    """``mapInArrow`` body of the epoch writer's encode tasks: encode
+    each packed cell (``build._encode_cell_blocks``), write its blocks
+    to ``pdir/bucket=B/part-sS.parquet``, and yield only its
+    ``(bucket, term, df, cf)`` rows."""
+    for bkt, salt, blocks, term_stats in _encode_cell_blocks(
+        batches, block_size
+    ):
+        _write_parquet(
+            os.path.join(pdir, f"bucket={bkt}", f"part-s{salt}.parquet"),
+            _BLOCK_FILE_SCHEMA,
+            (rb.drop_columns(["bucket"]) for rb in blocks),
+        )
+        yield term_stats
+
+
+def _write_termstats(batches, tdir: str):
+    """``mapInArrow`` body of the epoch writer's termstats tasks: per
+    bucket, sum the cells' ``(term, df, cf)`` rows per term, write
+    them in term order to ``tdir/bucket=B/part-00000.parquet``, and
+    yield the task's ``(total_tf, n_postings, n_terms)``."""
+    batches = list(batches)
+    if not sum(rb.num_rows for rb in batches):
+        return
+    tbl = pa.Table.from_batches(batches)
+    total_tf = n_postings = n_terms = 0
+    buckets = tbl.column("bucket")
+    for bkt in pc.unique(buckets).to_pylist():
+        agg = (
+            tbl.filter(pc.equal(buckets, bkt))
+            .group_by("term")
+            .aggregate([("df", "sum"), ("cf", "sum")])
+            .sort_by("term")
+        )
+        out = pa.Table.from_arrays(
+            [agg["term"], agg["df_sum"], agg["cf_sum"]],
+            schema=_TERMSTATS_FILE_SCHEMA,
+        )
+        _write_parquet(
+            os.path.join(tdir, f"bucket={bkt}", "part-00000.parquet"),
+            _TERMSTATS_FILE_SCHEMA, out.to_batches(),
+        )
+        total_tf += pc.sum(out["cf"]).as_py()
+        n_postings += pc.sum(out["df"]).as_py()
+        n_terms += out.num_rows
+    yield pa.RecordBatch.from_arrays(
+        [pa.array([v], pa.int64()) for v in (total_tf, n_postings, n_terms)],
+        names=["total_tf", "n_postings", "n_terms"],
     )
 
 

@@ -375,10 +375,11 @@ def repetition_signals(
     n-gram's occurrences with one sort over exact word-code tuples
     (nothing is hashed); it returns only those integers and the word
     count, one struct per doc.  The length filter runs in the JVM
-    before it and the fractions, their rounding and the final
-    ``orderBy`` (the only exchange) after it.  Being a per-row column,
-    not a ``mapInArrow``, the UDF is pruned under a ``count()`` of the
-    result, which then only scans and length-filters the text.
+    before it and the fractions, their rounding, a hash exchange of
+    the small result rows and the final ``orderBy`` after it.  Being
+    a per-row column, not a ``mapInArrow``, the UDF is pruned under a
+    ``count()`` of the result, which then only scans and
+    length-filters the text.
     Spark's ``transform``/``aggregate`` over a per-doc gram array did
     the same counting one element at a time in interpreted lambdas,
     and took several times longer."""
@@ -415,7 +416,10 @@ def repetition_signals(
                 f"top{n}_frac"
             )
         )
-    return base.select(*cols).orderBy(id_col)
+    # the hash exchange keeps the UDF out of orderBy's range sampling:
+    # AQE samples the shuffled result rows instead of re-running the
+    # scan and the UDF, so each doc reaches Python once
+    return base.select(*cols).repartition(id_col).orderBy(id_col)
 
 
 def stratified_sample(

@@ -1,15 +1,16 @@
 """compact_index and merge_epochs are one fold that commits by one
 atomic stats.json write: a crash at any file step leaves queries on
 the old or the new snapshot, a re-run converges, validate_index reads
-only listed shards, and a fold launches at most four Spark jobs."""
+only listed shards, and a fold launches at most three Spark jobs, as
+many as the batch build."""
 
 import os
 import random
 import shutil
 
 import pytest
-from pyspark.sql.readwriter import DataFrameWriter
 
+import pg_cjk_parser_spark.index.compact as compact
 import pg_cjk_parser_spark.index.streaming as streaming
 from pg_cjk_parser_spark.index.build import build_index
 from pg_cjk_parser_spark.index.compact import compact_index, merge_epochs
@@ -98,8 +99,9 @@ class Killed(Exception):
 
 
 def _file_steps(mp, index_dir, kill_at=None):
-    """Log the file steps under ``index_dir`` - each parquet data
-    write, each rename (the manifest and stats.json writes are atomic
+    """Log the file steps under ``index_dir`` - the epoch writer's data
+    jobs (``streaming._write_epoch``, whose tasks write the parquet
+    files), each rename (the manifest and stats.json writes are atomic
     renames) and each removal - and raise :class:`Killed` at step
     ``kill_at`` (1-based) instead of taking it."""
     log = []
@@ -115,7 +117,7 @@ def _file_steps(mp, index_dir, kill_at=None):
 
         return wrapped
 
-    mp.setattr(DataFrameWriter, "parquet", step("write", DataFrameWriter.parquet, 1))
+    mp.setattr(compact, "_write_epoch", step("write", compact._write_epoch, 2))
     for mod, name in (
         (os, "replace"), (os, "rename"), (os, "remove"), (shutil, "rmtree")
     ):
@@ -199,18 +201,79 @@ def test_validate_reads_only_listed_shards(spark, tombstoned, tmp_path):
 
 
 @pytest.mark.parametrize("fold", ["compact", "merge"])
-def test_fold_launches_at_most_four_jobs(spark, tombstoned, tmp_path, fold):
-    """On a tombstoned index with nested and flat epochs a fold runs
-    no schema-inference read and no second decode pass for its
-    removal counts: the rewrite and its termstats, at most 4 jobs."""
-    d = _copy(tombstoned, tmp_path, fold)
+def test_partial_generation_leftovers_are_invisible(
+    spark, tombstoned, tmp_path, fold
+):
+    """A crashed writer's leftovers in the generation dir a fold is
+    about to write - a partial part file and a dot-prefixed temp file
+    - change no query, and the fold replaces them: it converges to the
+    uninterrupted fold, and validate_index finds no unlisted dir."""
+    run = FOLDS[fold]
+    pre = _view(spark, tombstoned)
+    ref = _copy(tombstoned, tmp_path, "ref")
+    want = run(spark, ref)
+    post = _view(spark, ref)
+    d = _copy(tombstoned, tmp_path, "leftovers")
+    (gen_dir,) = [f"epoch={e}.g{g}" for e, g in want["epoch_gens"].items()]
+    src = os.path.join(ref, "postings", gen_dir, "bucket=0")
+    dst = os.path.join(d, "postings", gen_dir, "bucket=0")
+    os.makedirs(dst)
+    part = sorted(n for n in os.listdir(src) if n.endswith(".parquet"))[0]
+    with open(os.path.join(src, part), "rb") as f:
+        data = f.read()
+    with open(os.path.join(dst, part), "wb") as f:
+        f.write(data[: len(data) // 2])
+    with open(os.path.join(dst, f".{part}.0123.tmp"), "wb") as f:
+        f.write(data)
+    assert _view(spark, d) == pre
+    assert run(spark, d) == want
+    assert _view(spark, d) == post
+    rep = validate_index(d, deep=True)
+    assert rep["ok"], rep["errors"]
+    assert rep["checks"]["unlisted_dirs"] == []
+    assert not any(
+        n.startswith(".")
+        for sub in ("postings", "termstats")
+        for _, _, names in os.walk(os.path.join(d, sub, gen_dir))
+        for n in names
+    )
+
+
+def _jobs(spark, group, fn):
+    """Spark jobs ``fn()`` launches, counted through a job group."""
     sc = spark.sparkContext
-    group = f"fold-{fold}"
-    sc.setJobGroup(group, f"{fold} of a tombstoned index", False)
+    sc.setJobGroup(group, group, False)
     try:
-        FOLDS[fold](spark, d)
+        fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    jobs = list(sc.statusTracker().getJobIdsForGroup(group))
-    assert 0 < len(jobs) <= 4, jobs
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("fold", ["compact", "merge"])
+def test_fold_launches_at_most_three_jobs(spark, tombstoned, tmp_path, fold):
+    """On a tombstoned index with nested and flat epochs a fold runs
+    no schema-inference read and no second decode pass for its
+    removal counts: the decode, the encode tasks that write the
+    blocks, and the termstats tasks, at most 3 jobs."""
+    d = _copy(tombstoned, tmp_path, fold)
+    jobs = _jobs(spark, f"fold-{fold}", lambda: FOLDS[fold](spark, d))
+    assert 0 < len(jobs) <= 3, jobs
+
+
+def test_build_launches_three_jobs(spark, tmp_path):
+    """build_index of a multi-file corpus with a known doc count:
+    tokenize and pack, encode and write the blocks, write the
+    termstats - 3 jobs (the Spark-writer build took 4)."""
+    src = str(tmp_path / "docs")
+    _docs(spark, range(200), 7).repartition(4).write.parquet(src)
+    docs = spark.read.parquet(src)
+    assert len(docs.inputFiles()) > 1
+    d = str(tmp_path / "idx")
+    jobs = _jobs(
+        spark, "build-jobs",
+        lambda: build_index(spark, docs, d, n_docs=200, **KW),
+    )
+    assert len(jobs) == 3, jobs
+    assert load_stats(d)["n_docs"] == 200

@@ -256,6 +256,35 @@ def test_repetition_signals_gopher_fractions(spark):
     assert r2.dup2_frac == 0.0 and r2.top2_frac == 0.2
 
 
+def test_repetition_signals_sends_each_doc_to_python_once(
+    spark, ngram_docs, monkeypatch
+):
+    """The n-gram UDF sees each doc once under a noop write - the
+    ordered result's range sampling reads shuffled result rows, not a
+    second scan through the UDF - and no doc under a count()."""
+    from pg_cjk_parser_spark.ops import ngrams
+    from pg_cjk_parser_spark.ops.textstats import repetition_signals
+
+    seen = spark.sparkContext.accumulator(0)
+    counts = ngrams.repetition_counts
+
+    def counted(texts, ns):
+        seen.add(len(texts))
+        return counts(texts, ns=ns)
+
+    monkeypatch.setattr(ngrams, "repetition_counts", counted)
+    cols = dict(id_col="seq", text_col="body")
+    n_rows = repetition_signals(ngram_docs, **cols).count()
+    assert n_rows > 100 and seen.value == 0
+    repetition_signals(ngram_docs, **cols).write.format("noop").mode(
+        "overwrite"
+    ).save()
+    long_enough = ngram_docs.where(
+        F.size(F.split(F.col("body"), " ")) >= 3
+    ).count()
+    assert seen.value == long_enough == n_rows
+
+
 def test_duplicate_spans_shared_only(spark):
     from pg_cjk_parser_spark.ops.dedup import duplicate_spans
 

@@ -273,33 +273,40 @@ def test_build_index_cell_exchange_then_map_in_arrow(
     spark, docs, tmp_path, monkeypatch
 ):
     """The build is tokenizer MapInPandas -> ONE Exchange keyed by the
-    collision-free cell map -> MapInArrow block encode (no pandas round
-    trip on the reduce side, no hash of (bucket, salt), no sort)."""
-    from pyspark.sql.readwriter import DataFrameWriter
-
+    collision-free cell map -> MapInArrow block encode that writes the
+    blocks (no pandas round trip on the reduce side, no hash of
+    (bucket, salt), no sort), then one Exchange by bucket -> the
+    MapInArrow termstats write, all in the writer's one plan."""
     from pg_cjk_parser_spark.index.build import build_index
 
     plans = []
-    write = DataFrameWriter.parquet
+    frame = type(docs)
+    collect = frame.collect
 
-    def spy(self, path, *args, **kwargs):
-        plans.append(_plan(self._df))
-        return write(self, path, *args, **kwargs)
+    def spy(self):
+        plans.append(_plan(self))
+        return collect(self)
 
-    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    monkeypatch.setattr(frame, "collect", spy)
     build_index(
         spark, docs, str(tmp_path / "idx"), docid_col="doc_id",
         num_buckets=8, num_salts=4,
     )
-    plan = plans[0]  # the postings write
-    for op in ("MapInPandas", "Exchange", "MapInArrow"):
-        assert _count(plan, op) == 1, plan
+    (plan,) = [p for p in plans if "MapInPandas" in p]  # the writer's
+    assert _count(plan, "MapInPandas") == 1, plan
+    assert _count(plan, "Exchange") == 2, plan
+    assert _count(plan, "MapInArrow") == 2, plan
     assert _count(plan, "Sort") == 0, plan
 
-    def op_id(op):
-        return int(re.search(rf"^\((\d+)\) {op}\s*$", plan, re.M).group(1))
+    def op_ids(op):
+        return [
+            int(m) for m in re.findall(rf"^\((\d+)\) {op}\s*$", plan, re.M)
+        ]
 
-    assert op_id("MapInPandas") < op_id("Exchange") < op_id("MapInArrow"), plan
+    (tok,), (cell_x, bucket_x), (enc, terms) = (
+        op_ids(op) for op in ("MapInPandas", "Exchange", "MapInArrow")
+    )
+    assert tok < cell_x < enc < bucket_x < terms, plan
     key = re.search(
         r"^\(\d+\) Exchange\s*\n(?:.+\n)*?Arguments: (.+)$", plan, re.M
     ).group(1)
