@@ -601,7 +601,6 @@ def _phrase_match(v: dict[str, list[int]], ph: Phrase) -> bool:
         # tsvector, PG semantics (phrases below never do)
         return True
     # build each item's position set ONCE, not per candidate base
-    # (the lazy phrase-recheck path calls this per doc)
     possets = {}
     for t, _ in ph.items:
         if t not in possets:

@@ -55,6 +55,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
 from ..kernel.tsvector import (
+    MAXENTRYPOS,
     And,
     Not,
     Or,
@@ -543,11 +544,13 @@ class _QuerySpec:
             )
 
 
-def _route_specs(index_dir, queries, mode, kind, method=0):
-    """Validate and route queries into specs: method bits first, then
-    each query's shape once it routes.  Returns ``(stats, specs,
-    paths, deleted)`` over the union of the specs' buckets, or None
-    when no doc can match."""
+def _route_specs(index_dir, queries, k, mode, kind, method=0):
+    """Validate and route queries into specs: ``k`` and method bits
+    first, then each query's shape once it routes.  Returns ``(stats,
+    specs, paths, deleted)`` over the union of the specs' buckets, or
+    None when no doc can match."""
+    if k < 1:
+        raise ValueError(f"k must be at least 1, got {k}")
     _QuerySpec.check_method(kind, method)
     stats, specs, bset = None, [], set()
     # dict.fromkeys: a duplicate query would double-score and skew ranks
@@ -629,7 +632,7 @@ def _run_spark(spark, index_dir, queries, k, mode, kind, method=0):
         cols = ("query", "docid", "score")
         schema = "query string, docid long, score double"
     routed = _route_specs(
-        index_dir, [queries] if single else queries, mode, kind, method
+        index_dir, [queries] if single else queries, k, mode, kind, method
     )
     if routed is None:
         return spark.createDataFrame(
@@ -675,7 +678,7 @@ def _run_spark(spark, index_dir, queries, k, mode, kind, method=0):
 def _run_local(index_dir, query, k, mode, kind, method=0):
     """Local runner: pyarrow read, each salt group scored in process,
     global top-k ``(docid, value)`` merged on the driver."""
-    routed = _route_specs(index_dir, [query], mode, kind, method)
+    routed = _route_specs(index_dir, [query], k, mode, kind, method)
     if routed is None:
         return []
     stats, specs, paths, deleted = routed
@@ -762,10 +765,10 @@ def search_rank_cd(
 
     Candidates come from the conjunctive intersection (the same
     rarest-first, block-range-pruned machinery as BM25 ``search``);
-    each candidate's restricted tsvector is assembled from lazily
-    decoded position blocks and ranked with the exact tsrank.c cover
-    fold (kernel/tsrank.py), so results are rank-identical to running
-    ``ts_rank_cd`` over the raw text (tests assert it).
+    the candidates' positions decode in bulk and rank with the exact
+    tsrank.c cover fold (kernel/tsrank.py), so results are
+    rank-identical to running ``ts_rank_cd`` over the raw text (tests
+    assert it).
 
     Supported queries: conjunctive (AND / phrase) - the shapes whose
     candidate set the index enumerates cheaply.  Supported
@@ -890,8 +893,13 @@ def _pos_keys(tl, cand):
 
 def _chain_starts(keys_of, items):
     """Keys of every match START of the phrase chain ``items``: the
-    sorted intersection of each term's offset-shifted keys."""
+    sorted intersection of each term's offset-shifted keys.  A chain
+    spanning more than MAXENTRYPOS matches nothing (no doc holds
+    positions that far apart), and a wider shift would carry a key
+    into the previous candidate's range."""
     base = items[0][1]
+    if max(off for _, off in items) - base > MAXENTRYPOS:
+        return np.empty(0, np.int64)
     starts = None
     for t, off in items:
         kb = keys_of(t) - (off - base)
@@ -1043,53 +1051,48 @@ _RANK_OR_CONTRIB = _rank_or_contrib_table()
 _CURW = _curw_table()
 
 
-def _rank_and2_positions_bulk(lists, cand, terms):
-    """Vectorized calc_rank_and for the two-distinct-term case (the
-    dominant and-path shape; every CJK bigram phrase ranks through
-    it): curw values for ALL cross-position pairs of ALL candidates
-    are computed in one pass from the exact CURW lookup table, with
-    the kernel's pair order (term-1 positions outer, term-0 inner)
-    preserved by segment arithmetic.  Only the final per-doc
-    1-(1-res)(1-curw) fold stays a Python loop (a handful of
-    multiplies per doc) so the bits match kernel ts_rank.  Position
-    lists clip at MAXNUMPOS (a defensive cap: index-built postings can never
-    exceed it - the builder stores tf = len(to_tsvector positions),
-    which to_tsvector caps at 256)."""
-    (ia, pa) = lists[terms[0]].positions_bulk(cand)
-    (ib, pb) = lists[terms[1]].positions_bulk(cand)
+def _rank_and_positions_bulk(lists, cand, terms):
+    """Vectorized calc_rank_and: the curw values of every
+    cross-position pair of every term pair of every candidate, from
+    the exact CURW lookup table.  Each pair (i, k < i), in the
+    kernel's order, is one grid with term i's positions outer and
+    term k's inner; a stable sort by candidate lines the grids up per
+    doc in that order.  Only the per-doc 1-(1-res)(1-curw) fold stays
+    a Python loop (a handful of multiplies per pair) so the bits
+    match kernel ts_rank.  Position lists clip at MAXNUMPOS (a
+    defensive cap: index-built postings can never exceed it - the
+    builder stores tf = len(to_tsvector positions), which to_tsvector
+    caps at 256)."""
     n = cand.size
     grid = np.arange(n)
-    a_start = np.searchsorted(ia, grid, "left")
-    a_end = np.searchsorted(ia, grid, "right")
-    b_start = np.searchsorted(ib, grid, "left")
-    b_end = np.searchsorted(ib, grid, "right")
-    na = a_end - a_start
-    nb = b_end - b_start
-    if (na > _MAXNUMPOS).any() or (nb > _MAXNUMPOS).any():
-        na = np.minimum(na, _MAXNUMPOS)
-        nb = np.minimum(nb, _MAXNUMPOS)
-    sizes = na * nb
-    tot = int(sizes.sum())
-    cum = np.cumsum(sizes)
-    within = np.arange(tot) - np.repeat(cum - sizes, sizes)
-    na_rep = np.repeat(na, sizes)
-    # kernel pair order (i=1, k=0): l outer over terms[1] positions,
-    # p inner over terms[0] positions
-    l_idx = np.repeat(b_start, sizes) + within // na_rep
-    p_idx = np.repeat(a_start, sizes) + within % na_rep
-    d = np.abs(pb[l_idx] - pa[p_idx])
-    curw = _CURW[np.minimum(d, 101)]
+    spans = []
+    for t in terms:
+        cidx, pos = lists[t].positions_bulk(cand)
+        b = np.searchsorted(cidx, np.arange(n + 1))
+        spans.append((pos, b[:-1], np.minimum(np.diff(b), _MAXNUMPOS)))
+    docs, dists = [], []
+    for i, (pi, si, ni) in enumerate(spans):
+        for pk, sk, nk in spans[:i]:
+            sizes = ni * nk
+            cum = np.cumsum(sizes)
+            within = np.arange(cum[-1]) - np.repeat(cum - sizes, sizes)
+            nk_rep = np.repeat(nk, sizes)
+            d = np.abs(
+                pi[np.repeat(si, sizes) + within // nk_rep]
+                - pk[np.repeat(sk, sizes) + within % nk_rep]
+            )
+            nz = d > 0  # dist 0 pairs contribute nothing
+            docs.append(np.repeat(grid, sizes)[nz])
+            dists.append(d[nz])
+    doc = np.concatenate(docs)
+    order = np.argsort(doc, kind="stable")
+    cl = _CURW[np.minimum(np.concatenate(dists)[order], 101)].tolist()
     ranks = np.empty(n, np.float64)
-    cl = curw.tolist()
-    seg_ends = cum.tolist()
     s = 0
-    for di in range(n):
-        e = seg_ends[di]
+    for di, e in enumerate(np.cumsum(np.bincount(doc, minlength=n)).tolist()):
         res = -1.0
-        for j in range(s, e):
-            if cl[j] > 0.0:  # dist==0 pairs contribute nothing
-                v = cl[j]
-                res = v if res < 0 else 1.0 - (1.0 - res) * (1.0 - v)
+        for v in cl[s:e]:
+            res = v if res < 0 else 1.0 - (1.0 - res) * (1.0 - v)
         ranks[di] = 1e-20 if res < 0 else res
         s = e
     return ranks
@@ -1136,7 +1139,6 @@ def _rank_ts_local(per_term, pq, k, method, deleted=None):
         if not cand.size:
             return None
 
-    nq = len(terms)
     if not and_path:
         # vectorized or-path: contribution is a pure function of the
         # capped tf; accumulate per doc in item order (the kernel's
@@ -1162,45 +1164,8 @@ def _rank_ts_local(per_term, pq, k, method, deleted=None):
                     _RANK_OR_CONTRIB, np.float64
                 )[n_eff]
         ranks = ranks / float(len(groups))
-    elif nq == 2:
-        ranks = _rank_and2_positions_bulk(lists, cand, terms)
     else:
-        found = []
-        for t in terms:
-            tl = lists[t]
-            cidx, pos = tl.positions_bulk(cand)
-            found.append((cidx, pos))
-        ranks = np.empty(cand.size, np.float64)
-        curw_l = _CURW.tolist()
-        # per-candidate slices per term (docs sorted in cidx order)
-        slicers = []
-        for cidx, pos in found:
-            starts = np.searchsorted(cidx, np.arange(cand.size), "left")
-            ends = np.searchsorted(cidx, np.arange(cand.size), "right")
-            slicers.append((pos, starts, ends))
-        for di in range(cand.size):
-            res = -1.0
-            for i in range(nq):
-                pos_i, s_i, e_i = slicers[i]
-                pi = pos_i[s_i[di] : e_i[di]][:_MAXNUMPOS]
-                if not pi.size:
-                    continue
-                for kk in range(i):
-                    pos_k, s_k, e_k = slicers[kk]
-                    pk = pos_k[s_k[di] : e_k[di]][:_MAXNUMPOS]
-                    if not pk.size:
-                        continue
-                    d = np.abs(pi[:, None] - pk[None, :]).ravel()
-                    cw = np.minimum(d, 101)
-                    for j, dist in enumerate(d.tolist()):
-                        if dist:
-                            curw = curw_l[int(cw[j])]
-                            res = (
-                                curw
-                                if res < 0
-                                else 1.0 - (1.0 - res) * (1.0 - curw)
-                            )
-            ranks[di] = 1e-20 if res < 0 else res
+        ranks = _rank_and_positions_bulk(lists, cand, terms)
 
     if method & (1 | 2):
         dls = np.zeros(cand.size, np.int64)
@@ -1274,13 +1239,20 @@ def _rank_cd_generic(lists, cand, tree, k, method):
     """Per-candidate kernel ranking - the reference path for
     arbitrary trees, and the fallback the bulk paths take when
     position-clamp collisions (distinct lexemes sharing MAXENTRYPOS
-    in >16383-token docs) break their unique-key assumptions."""
+    in >16383-token docs) break their unique-key assumptions.  Each
+    term's positions come from ONE :meth:`_TermList.positions_bulk`
+    call, sliced per doc for kernel ``ts_rank_cd``."""
     from ..kernel.tsrank import ts_rank_cd
 
+    grid = np.arange(cand.size + 1)
+    spans = {}
+    for t, tl in lists.items():
+        cidx, pos = tl.positions_bulk(cand)
+        spans[t] = (pos.tolist(), np.searchsorted(cidx, grid).tolist())
     out_ids: list[int] = []
     out_ranks: list[float] = []
-    for d in cand.tolist():
-        v = {t: tl.positions_of(d) for t, tl in lists.items()}
+    for di, d in enumerate(cand.tolist()):
+        v = {t: p[b[di] : b[di + 1]] or None for t, (p, b) in spans.items()}
         r = ts_rank_cd(v, tree, method=method)
         if r > 0.0:
             out_ids.append(int(d))
@@ -1310,33 +1282,25 @@ class _TermList:
         self._pstart = pstart[srt]
         self._plen = plen[srt]
 
-    def _positions(self, sel):
-        """``(npos, positions)`` of the postings ``sel`` selects."""
-        npos = self.tfs[sel].astype(np.int64)
-        return npos, gather_positions(
-            self._pbuf, self._pstart[sel], self._plen[sel], npos
-        )
-
-    def positions_of(self, docid: int):
-        """Positions for one doc (None if absent): :meth:`positions_bulk`
-        for one candidate, found by binary search."""
-        lo = np.searchsorted(self.ids, docid, "left")
-        hi = np.searchsorted(self.ids, docid, "right")
-        if lo == hi:
-            return None
-        return self._positions(slice(lo, hi))[1].tolist()
-
     def positions_bulk(self, cand: np.ndarray):
-        """Positions for EVERY candidate docid in one vectorized pass.
+        """Positions for EVERY candidate docid in one vectorized pass:
+        one byte gather and one varint decode.  The query layer's only
+        position reader - phrase rechecks and every ranker call it.
 
         ``cand`` must be sorted.  Returns ``(cand_idx, pos)`` int64
-        arrays aligned per occurrence, ordered by (candidate,
-        position) - the batched equivalent of calling
-        :meth:`positions_of` per candidate, for rankers that touch
-        every candidate (cover-density) rather than a few."""
-        sel = np.flatnonzero(_isin_sorted(self.ids, cand))
-        npos, pos = self._positions(sel)
-        return np.repeat(np.searchsorted(cand, self.ids[sel]), npos), pos
+        arrays aligned per occurrence, ordered by candidate, each
+        posting's positions ascending.  Each candidate gets the
+        positions of every posting of its docid, found by binary
+        search, so a docid listed twice (two live versions) or
+        repeated in ``cand`` still reads all of them."""
+        lo = np.searchsorted(self.ids, cand, "left")
+        cnt = np.searchsorted(self.ids, cand, "right") - lo
+        sel = np.repeat(lo - np.cumsum(cnt) + cnt, cnt) + np.arange(cnt.sum())
+        npos = self.tfs[sel].astype(np.int64)
+        pos = gather_positions(
+            self._pbuf, self._pstart[sel], self._plen[sel], npos
+        )
+        return np.repeat(np.repeat(np.arange(cand.size), cnt), npos), pos
 
 
 def _score_local(per_term, pq, idf_map, bm25, k, deleted=None):
@@ -1374,19 +1338,22 @@ def _score_local(per_term, pq, idf_map, bm25, k, deleted=None):
         return _topk(cand[keep], scores[keep], k)
     if not phrases:
         return _topk(cand, scores, k)
-    # lazy phrase recheck: walk candidates in score order, decoding
-    # positions only until k docs pass
-    order_idx = np.lexsort((cand, -scores))
-    out_ids: list[int] = []
-    out_scores: list[float] = []
-    for i in order_idx.tolist():
-        d = int(cand[i])
-        if all(_phrase_ok_lazy(chain, lists, d) for chain in phrases):
-            out_ids.append(d)
-            out_scores.append(float(scores[i]))
-            if len(out_ids) >= k:
-                break
-    return _topk(out_ids, out_scores, k)  # already in top-k order
+    # phrase recheck in (score desc, docid asc) order, in doubling
+    # chunks of k, 2k, 4k ... candidates filtered in bulk: positions
+    # decode only until k docs have passed
+    order = np.lexsort((cand, -scores))
+    passed = []
+    n_passed, lo, size = 0, 0, k
+    while lo < order.size and n_passed < k:
+        sel = np.sort(order[lo : lo + size])
+        for chain in phrases:
+            sel = sel[_phrase_start_docs(lists, cand[sel], chain)]
+        passed.append(sel)
+        n_passed += sel.size
+        lo += size
+        size *= 2
+    sel = np.concatenate(passed)
+    return _topk(cand[sel], scores[sel], k)
 
 
 def _is_flat_or(tree) -> bool:
@@ -1470,15 +1437,7 @@ def _eval_tree(tree, lists: dict[str, "_TermList"], phrases) -> np.ndarray | Non
                     _isin_sorted(ids, tl.ids)
                 ]
             if len(node.items) > 1 and ids.size:
-                ok = np.fromiter(
-                    (
-                        _phrase_ok_lazy(node.items, lists, int(d))
-                        for d in ids
-                    ),
-                    dtype=bool,
-                    count=ids.size,
-                )
-                ids = ids[ok]
+                ids = ids[_phrase_start_docs(lists, ids, node.items)]
             return ids, False
         if isinstance(node, Not):
             ids, comp = ev(node.child)
@@ -1521,24 +1480,6 @@ def _eval_tree(tree, lists: dict[str, "_TermList"], phrases) -> np.ndarray | Non
     if comp:
         raise ValueError("query reduces to a pure negation")
     return np.sort(ids)
-
-
-def _phrase_ok_lazy(chain, lists: dict[str, "_TermList"], docid: int) -> bool:
-    first_t, first_off = chain[0]
-    starts = lists[first_t].positions_of(docid)
-    if starts is None:
-        return False
-    possets = {}
-    for t, _ in chain[1:]:
-        ps = lists[t].positions_of(docid)
-        if ps is None:
-            return False
-        possets[t] = set(ps)
-    for p in starts:
-        base = p - first_off
-        if all(base + off in possets[t] for t, off in chain[1:]):
-            return True
-    return False
 
 
 def _topk(ids, scores, k: int):

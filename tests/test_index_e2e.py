@@ -596,8 +596,8 @@ def test_search_many_randomized_batches(spark, built):
 
 
 def test_distance_phrase_query_index_path(spark, built):
-    """PG `<N>` distance phrases through the INDEX path: the lazy
-    position recheck must honor non-adjacent offsets, rank- and
+    """PG `<N>` distance phrases through the INDEX path: the bulk
+    chain-start recheck must honor non-adjacent offsets, rank- and
     score-identical to the brute-force oracle."""
     index_dir, _, pdocs = built
     # '野比' <2> '大雄' skips the intermediate 比大 bigram; '<5>' must
@@ -617,6 +617,53 @@ def test_distance_phrase_query_index_path(spark, built):
         assert bool(got) == expect_hits, q
 
 
+def test_phrase_recheck_reads_past_first_chunk(spark, built):
+    """BM25 phrase recheck at small k when the best conjunctive
+    candidates all fail the phrase: the recheck must keep reading
+    candidates (in score order) until k docs pass, and agree with the
+    brute-force oracle on both runners."""
+    from pg_cjk_parser_spark.query.topk import search_local
+
+    index_dir, _, pdocs = built
+    q, k = "'动画' <-> '今天'", 2
+    want = brute_force_topk(pdocs, q, k=k, mode="tsquery")
+    conj = brute_force_topk(pdocs, "'动画' & '今天'", k=k, mode="tsquery")
+    assert len(want) == k
+    # the first k conjunctive candidates all fail the phrase
+    assert not {d for d, _ in conj} & {d for d, _ in want}
+    got = [
+        (r.docid, round(r.score, 6))
+        for r in search(spark, index_dir, q, k=k, mode="tsquery").collect()
+    ]
+    assert got == want
+    local = search_local(index_dir, q, k=k, mode="tsquery")
+    assert [(d, round(s, 6)) for d, s in local] == want
+
+
+@pytest.mark.parametrize("k", [0, -1])
+@pytest.mark.parametrize(
+    "entry",
+    [
+        "search", "search_many", "search_local", "search_rank",
+        "search_rank_cd", "search_many_rank", "rank_local",
+    ],
+)
+def test_entry_points_reject_k_below_one(spark, built, entry, k):
+    """Every entry point rejects k < 1 before routing, also for a
+    query that matches nothing."""
+    from pg_cjk_parser_spark.query import topk
+
+    index_dir, _, _ = built
+    fn = getattr(topk, entry)
+    for q in ("doraemnon", "zzqxnomatch"):
+        qs = [q] if entry.startswith("search_many") else q
+        args = (index_dir, qs) if entry.endswith("_local") else (
+            spark, index_dir, qs
+        )
+        with pytest.raises(ValueError, match="k must be at least 1"):
+            fn(*args, k=k)
+
+
 def test_rank_cd_index_path_equals_scan_path(spark, built):
     """search_rank_cd (covers ranked from index position lists) must
     be rank- and value-identical to ts_rank_cd over the raw text."""
@@ -631,6 +678,14 @@ def test_rank_cd_index_path_equals_scan_path(spark, built):
         ("doraemnon & nobita", 4),
         ("のび太", 32),
     ]
+    # no bulk shape: the generic per-doc kernel path
+    generic = [
+        ("doraemnon & nobita & farm", 0),
+        ("doraemnon & nobita & farm", 36),
+        ("のび太 & nobita", 0),       # phrase chain and a term
+        ("のび太 & nobita", 4),
+    ]
+    cases += generic
     nonempty = 0
     for q, method in cases:
         node = to_tsquery(q)
@@ -649,6 +704,7 @@ def test_rank_cd_index_path_equals_scan_path(spark, built):
             ).collect()
         ]
         assert got == scan, (q, method)
+        assert scan or (q, method) not in generic, (q, method)
         nonempty += bool(scan)
     assert nonempty >= 3  # the comparison must not be vacuous
 
@@ -738,6 +794,29 @@ def test_rank_cd_phrase_bulk_differential_dense_covers(spark, tmp_path):
             assert got == scan, (q, method)
 
 
+def test_phrase_wider_than_maxentrypos_matches_nothing(spark, tmp_path):
+    """A phrase chain spanning more positions than a doc can hold
+    matches nothing on every path.  Its offset-shifted position keys
+    would otherwise reach into the previous candidate's key range and
+    pair one doc's first term with the next doc's second."""
+    from pg_cjk_parser_spark.query.topk import rank_local, search_local
+
+    docs = spark.createDataFrame(
+        [(0, "fast table"), (1, "fast table")], "doc_id long, text string"
+    )
+    index_dir = str(tmp_path / "idx")
+    build_index(
+        spark, docs, index_dir, docid_col="doc_id",
+        num_buckets=2, num_salts=1, block_size=4,
+    )
+    near, far = "'fast' <-> 'table'", "'fast' <65537> 'table'"
+    assert [d for d, _ in search_local(index_dir, near, mode="tsquery")] == [0, 1]
+    assert search_local(index_dir, far, mode="tsquery") == []
+    for cd in (True, False):
+        assert len(rank_local(index_dir, near, cd=cd)) == 2
+        assert rank_local(index_dir, far, cd=cd) == []
+
+
 def test_ts_rank_index_path_equals_scan_path(spark, built):
     """search_rank (or-path from tf streams, and-path from position
     folds) must be bit-identical to kernel ts_rank over raw text,
@@ -759,6 +838,14 @@ def test_ts_rank_index_path_equals_scan_path(spark, built):
         ("のび太", 0),                # phrase -> and-path + @@ adjacency
         ("のび太", 32),
     ]
+    # three lexemes: the and-path fold over every term pair
+    three = [
+        ("doraemnon & nobita & farm", 0),
+        ("doraemnon & nobita & farm", 1),
+        ("のび太 & nobita", 0),       # phrase chain and a term
+        ("のび太 & nobita", 2),
+    ]
+    cases += three
     nonempty = 0
     for q, method in cases:
         node = to_tsquery(q)
@@ -778,6 +865,7 @@ def test_ts_rank_index_path_equals_scan_path(spark, built):
             ).collect()
         ]
         assert got == scan, (q, method)
+        assert scan or (q, method) not in three, (q, method)
         nonempty += bool(scan)
     assert nonempty >= 4
 

@@ -451,7 +451,7 @@ def test_headline_fragments_phrase_closed_form_matches_kernel():
 
 def test_bm25_phrase_or_routes_through_tree_evaluation():
     """The bm25_phrase_or_topk driver row exists to exercise the
-    boolean-tree evaluator with a lazy phrase recheck - assert the
+    boolean-tree evaluator with a bulk phrase recheck - assert the
     query actually classifies to that path (non-conjunctive, not the
     flat-OR WAND shape, with a 2-term phrase chain collected)."""
     from pg_cjk_parser_spark.query.topk import _is_flat_or, parse_query
