@@ -34,10 +34,14 @@ The seven public entry points are thin wrappers over one executor:
    :func:`_run_local` (serving tier: no Spark job) reads once, splits
    the table by salt and merges on the driver.
 
-The Spark runner picks the global merge from what the caller passed:
-a query string keeps ``orderBy(value desc, docid).limit(k)`` over
-<= S*k rows (one job, no Window, no Exchange); a list of queries gets
-a per-query ``row_number`` window.
+The Spark runner picks the global merge from what the caller passed.
+A query string keeps ``orderBy(value desc, docid).limit(k)`` over
+<= S*k rows: a lazy plan of one job with no shuffle.
+A list of Q queries runs its one job (one stage, one task per salt)
+when the function is called.  It collects the <= S*k*Q per-salt rows
+as Arrow, cuts each query's top-k on the driver with one lexsort
+(:func:`_merge_topk`, shared with the local runner) and returns the
+<= Q*k rows as a local DataFrame, so collecting it launches no job.
 
 BM25 uses k1/b from the index stats, idf = ln((N-df+0.5)/(df+0.5)+1).
 """
@@ -52,7 +56,7 @@ from dataclasses import dataclass
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.window import Window
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..kernel.tsvector import (
     MAXENTRYPOS,
@@ -553,8 +557,9 @@ def _route_specs(index_dir, queries, k, mode, kind, method=0):
         raise ValueError(f"k must be at least 1, got {k}")
     _QuerySpec.check_method(kind, method)
     stats, specs, bset = None, [], set()
-    # dict.fromkeys: a duplicate query would double-score and skew ranks
-    for q in dict.fromkeys(queries):
+    # a duplicate query would double-score and skew ranks; sorted, so
+    # spec i is the i-th query in result order
+    for q in sorted(set(queries)):
         routed = _route(index_dir, q, mode)
         if routed is None:
             continue
@@ -586,13 +591,13 @@ def _blocks_by_term(blocks: pa.Table) -> dict:
 
 def _score_group(specs, blocks, k, bm25, deleted):
     """The per-salt scorer dispatch: every spec's top-k over ONE salt
-    group's blocks (an Arrow table) as aligned ``(query, docid,
-    score)`` arrays, or None.  Each spec sees only its own terms'
-    blocks, so queries stay independent; ``bm25`` is the index's
-    ``(k1, b, avgdl)``."""
+    group's blocks (an Arrow table) as aligned ``(qid, docid, score)``
+    arrays, ``qid`` being the spec's index, or None.  Each spec sees
+    only its own terms' blocks, so queries stay independent; ``bm25``
+    is the index's ``(k1, b, avgdl)``."""
     groups = _blocks_by_term(blocks)
-    queries, ids, scores = [], [], []
-    for spec in specs:
+    qids, ids, scores = [], [], []
+    for qid, spec in enumerate(specs):
         per_term = {
             t: g for t, g in groups.items() if t in spec.pq.all_terms
         }
@@ -607,45 +612,50 @@ def _score_group(specs, blocks, k, bm25, deleted):
         else:
             hit = _rank_cd_local(per_term, spec.pq, k, spec.method, deleted)
         if hit is not None:
-            queries.append(np.full(hit[0].size, spec.query, object))
+            qids.append(np.full(hit[0].size, qid, np.int32))
             ids.append(hit[0])
             scores.append(hit[1])
     if not ids:
         return None
-    return tuple(map(np.concatenate, (queries, ids, scores)))
+    return tuple(map(np.concatenate, (qids, ids, scores)))
+
+
+_BATCH_SCHEMA = pa.schema([
+    ("query", pa.string()), ("rank", pa.int32()), ("docid", pa.int64()),
+    ("score", pa.float64()),
+])
 
 
 def _run_spark(spark, index_dir, queries, k, mode, kind, method=0):
     """Spark runner: one task per salt, each reading its own salt's
     blocks with pyarrow and scoring every spec - no parquet scan and
-    no exchange before the merge.  The merge fits what the caller
-    passed: a query string gets ``(docid, score|rank)`` via
-    orderBy/limit, a list gets ``(query, rank, docid, score)`` via a
-    per-query window."""
+    no exchange.  The merge fits what the caller passed: a query
+    string gets a lazy ``(docid, score|rank)`` plan merged by
+    orderBy/limit; a list runs its one job now and gets ``(query,
+    rank, docid, score)`` merged on the driver by
+    :func:`_merge_topk`, ordered by (query, rank)."""
     single = isinstance(queries, str)
     value = "rank" if kind in _RANK_KINDS else "score"
-    # a single query's rows carry no query column, so its plan needs no
+    # a single query's rows carry no qid column, so its plan needs no
     # Project to drop one
     if single:
-        cols, schema = ("docid", value), f"docid long, {value} double"
+        out = pa.schema([("docid", pa.int64()), (value, pa.float64())])
     else:
-        cols = ("query", "docid", "score")
-        schema = "query string, docid long, score double"
+        out = pa.schema([
+            ("qid", pa.int32()), ("docid", pa.int64()), ("score", pa.float64())
+        ])
     routed = _route_specs(
         index_dir, [queries] if single else queries, k, mode, kind, method
     )
     if routed is None:
+        # an Arrow table plans as a LocalTableScan: collecting it
+        # launches no job
         return spark.createDataFrame(
-            [],
-            schema if single
-            else "query string, rank int, docid long, score double",
+            (out if single else _BATCH_SCHEMA).empty_table()
         )
     stats, specs, paths, deleted = routed
     terms = sorted({t for s in specs for t in s.pq.all_terms})
     bm25 = (stats["k1"], stats["b"], stats["avgdl"])
-    out = pa.schema(
-        list(zip(cols, (pa.string(), pa.int64(), pa.float64())[-len(cols):]))
-    )
 
     def score_salts(batches):
         for batch in batches:
@@ -657,22 +667,40 @@ def _run_spark(spark, index_dir, queries, k, mode, kind, method=0):
                     continue
                 hit = _score_group(specs, blocks, k, bm25, deleted)
                 if hit is not None:
-                    yield pa.record_batch(list(hit[-len(cols):]), schema=out)
+                    yield pa.record_batch(list(hit[-len(out):]), schema=out)
 
     salts = stats["num_salts"]
-    scored = spark.range(0, salts, 1, salts).mapInArrow(score_salts, schema)
+    scored = spark.range(0, salts, 1, salts).mapInArrow(
+        score_salts, from_arrow_schema(out)
+    )
     if single:
         return (
             scored.orderBy(F.desc(value), F.asc("docid"))
             .limit(k)
             .select("docid", value)
         )
-    w = Window.partitionBy("query").orderBy(F.desc("score"), F.asc("docid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query", "rank", "docid", "score")
+    hits = scored.toArrow()
+    qid, rank, ids, scores = _merge_topk(
+        *(hits.column(c).to_numpy() for c in out.names), k
     )
+    query = np.array([s.query for s in specs], object)[qid]
+    return spark.createDataFrame(
+        pa.table([query, rank, ids, scores], schema=_BATCH_SCHEMA)
+    )
+
+
+def _merge_topk(qid, ids, scores, k):
+    """The global merge of every salt's aligned ``(qid, docid, score)``
+    rows: each query's top-k by (qid, score desc, docid asc) -
+    :func:`_topk`'s order per query - as ``(qid, rank, docid, score)``
+    arrays, rank counting from 1."""
+    order = np.lexsort((ids, -scores, qid))
+    qid = qid[order]
+    # each row's offset from its query's first row
+    rank = np.arange(qid.size) - np.searchsorted(qid, qid) + 1
+    keep = rank <= k
+    order = order[keep]
+    return qid[keep], rank[keep].astype(np.int32), ids[order], scores[order]
 
 
 def _run_local(index_dir, query, k, mode, kind, method=0):
@@ -699,8 +727,9 @@ def _run_local(index_dir, query, k, mode, kind, method=0):
     ]
     if not hits:
         return []
-    _, ids, scores = (np.concatenate(c) for c in zip(*hits))
-    ids, scores = _topk(ids, scores, k)
+    _, _, ids, scores = _merge_topk(
+        *(np.concatenate(c) for c in zip(*hits)), k
+    )
     return list(zip(ids.tolist(), scores.tolist()))
 
 
@@ -723,8 +752,8 @@ def search_many(
     mode: str = "plain",
 ) -> DataFrame:
     """Batched top-k: ALL queries answered in ONE Spark job -
-    ``(query, rank, docid, score)``, rank-/score-identical per query to
-    :func:`search`.
+    ``(query, rank, docid, score)`` ordered by (query, rank),
+    rank-/score-identical per query to :func:`search`.
 
     A production workload runs queries in batches, and per-query jobs
     pay scheduling + read setup B times; here the routed bucket paths
@@ -733,7 +762,14 @@ def search_many(
     its own term subset (queries stay independent - conjunction
     semantics are per-query on the filtered frame).  Driver-side
     routing stays O(total query terms); queries that cannot match any
-    doc are simply absent from the result."""
+    doc are simply absent from the result.
+
+    The job runs when this function is called (one stage, one task per
+    salt), and each query's top-k is merged on the driver.  The
+    returned DataFrame holds the at most ``len(queries) * k`` result
+    rows, so collecting it launches no job, it does not see later
+    index mutations, and a corrupt block raises from this call, not
+    from ``.collect()``."""
     return _run_spark(spark, index_dir, list(queries), k, mode, "bm25")
 
 
@@ -821,11 +857,13 @@ def search_many_rank(
 ) -> DataFrame:
     """Batched rank workload: every query's ``ORDER BY
     ts_rank_cd/ts_rank LIMIT k`` answered in ONE Spark job -
-    ``(query, rank, docid, score)`` per-query identical to
-    :func:`search_rank_cd` / :func:`search_rank` (tests assert it).
-    Same unioned-routing strategy as :func:`search_many`; the same
-    per-query shape/method restrictions apply and invalid queries
-    raise up front."""
+    ``(query, rank, docid, score)`` ordered by (query, rank), per-query
+    identical to :func:`search_rank_cd` / :func:`search_rank` (tests
+    assert it).  Same unioned-routing strategy and the same eager
+    contract as :func:`search_many`: the job runs when this function
+    is called, and the returned DataFrame holds the merged result rows.
+    The same per-query shape/method restrictions apply and invalid
+    queries raise up front."""
     kind = "rank_cd" if cd else "rank"
     return _run_spark(spark, index_dir, list(queries), k, mode, kind, method)
 

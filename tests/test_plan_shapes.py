@@ -133,25 +133,58 @@ def test_single_query_plans_have_no_scan_or_exchange(spark, plan_index):
         assert _count(plan, "TakeOrderedAndProject") == 1, plan
 
 
-def test_batch_plans_have_one_window_exchange(spark, plan_index):
-    """search_many / search_many_rank keep the per-query row_number
-    window; its hash Exchange on query is the plan's only one."""
-    from pg_cjk_parser_spark.query.topk import search_many, search_many_rank
-
-    plans = [
-        _plan(search_many(spark, plan_index, ["のび太", "Doraemnon"], k=5))
+def _jobs(spark, group, make):
+    """``(df, rows, jobs)``: the DataFrame ``make()`` returns, its
+    collected rows, and the Spark jobs that both launched under job
+    group ``group`` (unique per call) as per-stage task counts."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group, False)
+    try:
+        df = make()
+        rows = df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status store is fed by the async listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    st = sc.statusTracker()
+    return df, rows, [
+        [st.getStageInfo(s).numTasks for s in st.getJobInfo(j).stageIds]
+        for j in st.getJobIdsForGroup(group)
     ]
-    for cd, qs in (
-        (False, ["doraemnon | nobita", "のび太"]),
-        (True, ["のび太", "doraemnon & nobita"]),
-    ):
-        plans.append(_plan(
-            search_many_rank(spark, plan_index, qs, k=5, mode="tsquery", cd=cd)
-        ))
-    for plan in plans:
-        assert _count(plan, "Exchange") == 1, plan
-        assert _count(plan, "Window") >= 1, plan
-        assert _count(plan, "Scan parquet") == 0, plan
+
+
+def test_batch_runs_one_job_and_returns_local_rows(spark, plan_index):
+    """search_many / search_many_rank run ONE Spark job when called,
+    whose only stage has one task per salt, and merge each query's
+    top-k on the driver: the returned plan is a local scan with no
+    Exchange, Window or parquet scan, so collecting it launches no
+    second job."""
+    from pg_cjk_parser_spark.query.topk import (
+        load_stats,
+        search_many,
+        search_many_rank,
+    )
+
+    calls = {
+        "bm25": lambda: search_many(
+            spark, plan_index, ["のび太", "Doraemnon"], k=5
+        ),
+        "rank": lambda: search_many_rank(
+            spark, plan_index, ["doraemnon | nobita", "のび太"], k=5, cd=False
+        ),
+        "rank_cd": lambda: search_many_rank(
+            spark, plan_index, ["のび太", "doraemnon & nobita"], k=5, cd=True
+        ),
+    }
+    salts = load_stats(plan_index)["num_salts"]
+    for name, call in calls.items():
+        df, rows, jobs = _jobs(spark, f"plan-shapes-batch-{name}", call)
+        assert rows, name
+        assert jobs == [[salts]], (name, jobs)
+        plan = _plan(df)
+        for op in ("Exchange", "Window", "Scan parquet"):
+            assert _count(plan, op) == 0, (op, plan)
+        assert _count(plan, "LocalTableScan") == 1, plan
 
 
 def test_search_runs_one_job_with_one_task_per_salt(spark, plan_index):
@@ -159,22 +192,35 @@ def test_search_runs_one_job_with_one_task_per_salt(spark, plan_index):
     task per salt."""
     from pg_cjk_parser_spark.query.topk import load_stats, search
 
-    sc = spark.sparkContext
-    sc.setJobGroup("plan-shapes-search", "one search", False)
-    try:
-        rows = search(spark, plan_index, "のび太", k=5).collect()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+    _, rows, jobs = _jobs(
+        spark, "plan-shapes-search",
+        lambda: search(spark, plan_index, "のび太", k=5),
+    )
     assert rows
-    # the status store is fed by the async listener bus
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    st = sc.statusTracker()
-    jobs = st.getJobIdsForGroup("plan-shapes-search")
-    assert len(jobs) == 1, jobs
-    stages = list(st.getJobInfo(jobs[0]).stageIds)
-    assert [st.getStageInfo(s).numTasks for s in stages] == [
-        load_stats(plan_index)["num_salts"]
-    ]
+    assert jobs == [[load_stats(plan_index)["num_salts"]]], jobs
+
+
+def test_unindexed_query_launches_no_job(spark, plan_index):
+    """A query that routes to nothing returns an empty local frame of
+    the entry point's columns: collecting it launches no Spark job."""
+    from pg_cjk_parser_spark.query.topk import (
+        search,
+        search_many,
+        search_rank_cd,
+    )
+
+    for name, call, cols in (
+        ("search", lambda: search(spark, plan_index, "zzqxnomatch"),
+         ["docid", "score"]),
+        ("search_rank_cd", lambda: search_rank_cd(
+            spark, plan_index, "zzqxnomatch"), ["docid", "rank"]),
+        ("search_many", lambda: search_many(
+            spark, plan_index, ["zzqxnomatch", "qqzzxnone"]),
+         ["query", "rank", "docid", "score"]),
+    ):
+        df, rows, jobs = _jobs(spark, f"plan-shapes-empty-{name}", call)
+        assert rows == [] and df.columns == cols, (name, df.columns)
+        assert jobs == [], (name, jobs)
 
 
 def test_salt_reader_returns_only_requested_terms_and_salt(plan_index):

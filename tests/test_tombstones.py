@@ -876,6 +876,68 @@ def test_foreign_epoch_survives_epoch_bounded_tombstone(spark, tmp_path):
     assert got == {1}
 
 
+def test_batch_merge_matches_single_queries(spark, tmp_path):
+    """The batch's driver-side merge: search_many and search_many_rank
+    (cd and ts_rank) rows equal per-query search / search_rank_cd /
+    search_rank by float.hex and come back ordered by (query, rank) -
+    at k=1, with score ties at the cut-off, with a duplicate and an
+    unroutable query in the batch, on a tombstoned two-epoch index."""
+    from pg_cjk_parser_spark.index.streaming import append_index_batch
+    from pg_cjk_parser_spark.query.topk import search_many_rank
+
+    idx = str(tmp_path / "idx")
+    schema = "doc_id long, text string"
+    build_index(
+        spark, spark.createDataFrame(list(enumerate(TEXTS)), schema), idx,
+        docid_col="doc_id", num_buckets=4, num_salts=2, block_size=4,
+    )
+    append_index_batch(
+        spark,
+        spark.createDataFrame(
+            [(i + 24, t) for i, t in enumerate(TEXTS[:12])], schema
+        ),
+        idx, 1, docid_col="doc_id",
+    )
+    delete_docs(idx, [0, 11, 27])
+
+    def single(fn, q, k):
+        return [
+            (r[0], r[1].hex())
+            for r in fn(spark, idx, q, k=k, mode="tsquery").collect()
+        ]
+
+    cases = [
+        (search,
+         lambda qs, k: search_many(spark, idx, qs, k=k, mode="tsquery"),
+         ["fast & table", "'fast' | 'spark' | 'batch'", "merge <-> fast"]),
+        (search_rank_cd,
+         lambda qs, k: search_many_rank(spark, idx, qs, k=k, cd=True),
+         ["fast & table", "fast <-> table", "merge & spark"]),
+        (search_rank,
+         lambda qs, k: search_many_rank(spark, idx, qs, k=k, cd=False),
+         ["fast & table", "'fast' | 'spark'", "merge <-> fast"]),
+    ]
+    for one, many, qs in cases:
+        ties = 0
+        for k in (1, 2, 3, 50):
+            rows = [
+                (r.query, r.rank, r.docid, r.score.hex())
+                for r in many(["zzqxnomatch", *qs, qs[0]], k).collect()
+            ]
+            assert rows == sorted(rows), (one.__name__, k)
+            assert {r[0] for r in rows} == set(qs), (one.__name__, k)
+            for q in qs:
+                want = single(one, q, k)
+                got = [(d, s) for qq, _, d, s in rows if qq == q]
+                assert got == want, (one.__name__, q, k)
+                assert [r for qq, r, _, _ in rows if qq == q] == list(
+                    range(1, len(want) + 1)
+                )
+                more = single(one, q, k + 1)
+                ties += len(more) > k and more[k - 1][1] == more[k][1]
+        assert ties, one.__name__  # a tie at the cut-off was exercised
+
+
 def test_flat_small_epoch_tombstoned_spark_paths_match_local(spark, tmp_path):
     """On a flat small-epoch index (parquet files directly in
     epoch=N, block epochs taken from the path) with epoch-bounded

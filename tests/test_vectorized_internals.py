@@ -379,7 +379,11 @@ def test_compact_rejects_corrupt_block(spark, tmp_path, corrupt):
     from pg_cjk_parser_spark.index.compact import compact_index
     from pg_cjk_parser_spark.index.validate import validate_index
     from pg_cjk_parser_spark.kernel.tokenizer import lexemes
-    from pg_cjk_parser_spark.query.topk import search, search_local
+    from pg_cjk_parser_spark.query.topk import (
+        search,
+        search_local,
+        search_many,
+    )
     from pg_cjk_parser_spark.spark.corpus import synth_corpus
 
     idx = str(tmp_path / "idx")
@@ -437,6 +441,9 @@ def test_compact_rejects_corrupt_block(spark, tmp_path, corrupt):
         search_local(idx, term)
     with pytest.raises(Exception, match=re.escape(named)):
         search(spark, idx, term).collect()
+    # a batch runs its job when called, so the call itself raises
+    with pytest.raises(Exception, match=re.escape(named)):
+        search_many(spark, idx, [term])
     rep = validate_index(idx, deep=True, sample_blocks=1 << 30)
     assert not rep["ok"]
     assert any(want in e for e in rep["errors"]), rep["errors"]
