@@ -468,14 +468,6 @@ def _encode_cell_blocks(batches, block_size: int):
         yield bkt, salt, blocks, term_stats
 
 
-def _encode_cells(batches, block_size: int):
-    """``mapInArrow`` body yielding only the posting blocks of
-    :func:`_encode_cell_blocks` (BLOCK_SCHEMA's Arrow types, no pandas
-    round trip either way)."""
-    for _, _, blocks, _ in _encode_cell_blocks(batches, block_size):
-        yield from blocks
-
-
 def _with_docid(docs: DataFrame, docid_col: str | None) -> DataFrame:
     if docid_col is None:
         return docs.withColumn("docid", F.xxhash64(F.col("url")))

@@ -135,7 +135,7 @@ def _read_epochs(spark: SparkSession, index_dir: str, epochs: dict):
 
 def _decode_to_cells(batches, flush_at: int = 500_000, deleted=None, dead=None):
     """Decode posting blocks straight into packed (bucket, salt) cells
-    for the packed-cell shuffle (build.py:_encode_cells) - the same
+    for the packed-cell shuffle (build._encode_cell_blocks) - the same
     cells-not-rows strategy as the batch build, so compaction never
     pays a per-posting Arrow row boundary.
 

@@ -14,13 +14,13 @@ lets epochs compose:
   termstats rows just add up.
 
 An epoch's postings and termstats share one layout: nested
-``epoch=E/bucket=N`` dirs (:func:`_write_epoch`, the batch build,
-large appends and folds), or one flat file per subdir with bucket as
-a data column (small appends).  The nested writer's Spark tasks write
-their files themselves with pyarrow, one per (bucket, salt) cell of
-postings and one per bucket of termstats, each named by its cell or
-bucket and landed by an atomic rename, so a retried task rewrites
-the same file.  Each epoch's totals live in its manifest,
+``epoch=E/bucket=N`` dirs (the batch build, large appends and folds),
+or one flat ``part-00000.parquet`` per subdir with bucket as a data
+column (small appends), written by :func:`_write_epoch` and
+:func:`_write_flat_epoch`.  Their Spark tasks write the files
+themselves with pyarrow, each named by its cell, bucket or epoch and
+landed by an atomic rename, so a retried task rewrites the same
+file.  Each epoch's totals live in its manifest,
 ``manifests/epoch=E.json``, written atomically after its data.
 
 stats.json is the index's SNAPSHOT and its one commit point: it
@@ -37,6 +37,7 @@ way; an epoch dir no snapshot lists is invisible.
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
 import shutil
@@ -50,14 +51,13 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .build import (
     BLOCK_ARROW_SCHEMA,
-    BLOCK_SCHEMA,
     DEFAULT_BLOCK,
     DEFAULT_BUCKETS,
     DEFAULT_SALTS,
+    _BATCH_BYTES,
     _atomic_json,
     _doc_cells,
     _encode_cell_blocks,
-    _encode_cells,
     _with_docid,
 )
 from .tombstones import epoch_name, snapshot_epochs
@@ -178,7 +178,12 @@ def append_index_batch(
     idempotent per epoch.
 
     A batch-built index is epoch 0, so appends onto it start at epoch
-    1 (``upsert_index_batch`` requires the same)."""
+    1 (``upsert_index_batch`` requires the same).
+
+    An append does not replace documents: a docid still live in an
+    earlier epoch must go through ``upsert_index_batch``, since
+    appending it leaves two live versions and every query entry point
+    then returns both."""
     lay = _resolve_layout(
         index_dir, num_buckets, num_salts, block_size, k1, b,
         normalize_zht,
@@ -208,66 +213,34 @@ def append_index_batch(
             normalize_zht, add={epoch: gen},
         )
 
-    # clean any partial files from a failed earlier attempt of this epoch
-    for sub in ("postings", "termstats"):
-        shutil.rmtree(
-            os.path.join(index_dir, sub, f"epoch={epoch}"), ignore_errors=True
-        )
-
-    # Small epochs land FLAT: the postings are ONE file in the epoch
-    # dir (bucket as a data column), and the per-epoch termstats
-    # derive DRIVER-SIDE from that file's block metadata via a
-    # column-pruned pyarrow read (n/sum_tf only - the fat binary
-    # columns never leave disk).  Both paths run the same 3 Spark jobs
-    # per call; the flat path stays for what it leaves behind: one
-    # postings file per small epoch instead of B*S, so compaction and
-    # local serving read far fewer files.  Measured with 8 interleaved
-    # 400-doc appends onto a 3,000-doc index at B=64, S=4, flat vs
-    # forced nested: compact_index 3.0 vs 8.5 s (264 vs 2,304
-    # postings files), search_local 28 vs 35 ms, append 1.21 vs
-    # 1.17 s (0.73 vs 0.98 s at B=8).  The source doc count
-    # folds in as an observed metric - counted from the source, not
-    # the postings, because docs with empty/stop-word-only text
-    # produce no postings yet must count toward N for idf/avgdl
+    # Small epochs land FLAT, one postings and one termstats file
+    # written by ONE task: compaction and local serving then read one
+    # file per small epoch instead of B*S.  Measured with 8
+    # interleaved 400-doc appends onto a 3,000-doc index at B=64,
+    # S=4, flat vs forced nested: compact_index 3.0 vs 8.5 s (264 vs
+    # 2,304 postings files), search_local 28 vs 35 ms.  Large epochs
+    # land NESTED, in (bucket, salt)-partitioned tasks (memory bounded
+    # by the salt count, the skew/scale lever) and epoch=/bucket= dirs
+    # for directory-level bucket pruning.  "Small" is Catalyst's plan
+    # size estimate (_estimated_small) - no extra job.  The source doc
+    # count folds in as an observed metric: docs with empty/stop-word-
+    # only text produce no postings yet count toward N, for idf/avgdl
     # parity with a batch rebuild.
-    #
-    # Large epochs go through the batch build's writer
-    # (:func:`_write_epoch`): (bucket, salt)-partitioned reducers
-    # (memory bounded by the salt count - the documented skew/scale
-    # lever) and nested epoch=/bucket= dirs so query-time bucket
-    # pruning stays directory-level.  The size estimate is Catalyst's
-    # plan statistic - no extra job.
     from pyspark.sql import Observation
 
     obs_docs = Observation(f"epoch{epoch}-docs")
-    small = _estimated_small(batch)
     cells = _doc_cells(
         batch, docid_col, text_col, num_buckets, num_salts, normalize_zht,
         obs_docs,
     )
-    if small:
-        # encode with a handful of parallel reducers, then funnel the
-        # (tiny) encoded blocks into one output file; the extra
-        # funnel shuffle moves kilobytes
-        nred = max(1, num_buckets // 4)
-        blocks = (
-            cells.repartition(nred, cell_partition_key(F.col("bucket"), nred))
-            .mapInArrow(
-                lambda it: _encode_cells(it, block_size), BLOCK_SCHEMA
-            )
-            .repartition(1)
-        )
-        (
-            blocks.write.mode("overwrite")
-            .option(*_V2_COMMIT)
-            .parquet(os.path.join(index_dir, "postings", f"epoch={epoch}"))
-        )
-        total_tf, n_postings = _write_termstats_local(index_dir, epoch)
+    pdir, tdir = _epoch_dirs(index_dir, epoch)
+    if _estimated_small(batch):
+        totals = _write_flat_epoch(cells, pdir, tdir, block_size)
     else:
-        total_tf, n_postings, _ = _write_epoch(
-            spark, cells, *_epoch_dirs(index_dir, epoch), num_buckets,
-            num_salts, block_size,
+        totals = _write_epoch(
+            spark, cells, pdir, tdir, num_buckets, num_salts, block_size
         )
+    total_tf, n_postings, _ = totals
     n_batch_docs = _obs_count(obs_docs, "n_docs")
 
     # exactly-once accounting: the epoch's deltas live in its manifest
@@ -291,13 +264,6 @@ def append_index_batch(
     )
 
 
-# v2 commit: task output moves straight to the destination, one
-# rename round instead of two.  Safe because epoch atomicity comes
-# from the snapshot commit: a crashed epoch's partial files are
-# unlisted, and swept before the epoch is written again.
-_V2_COMMIT = ("mapreduce.fileoutputcommitter.algorithm.version", "2")
-
-
 def _epoch_dirs(index_dir: str, epoch: int, gen: int = 0) -> tuple[str, str]:
     """An epoch generation's (postings, termstats) dirs."""
     return tuple(
@@ -316,8 +282,8 @@ def _write_epoch(
     block_size: int,
     num_partitions: int | None = None,
 ) -> tuple[int, int, int]:
-    """Write packed cells as one NESTED epoch - the one writer of the
-    batch build (epoch 0), every large append, ``compact_index`` and
+    """Write packed cells as one NESTED epoch - the writer of the batch
+    build (epoch 0), large appends, ``compact_index`` and
     ``merge_epochs`` (the last two into a new generation's dirs).
     Whatever ``pdir`` and ``tdir`` held before is removed first.
 
@@ -330,58 +296,92 @@ def _write_epoch(
        (:func:`_write_cells`) writes every cell it owns as
        ``pdir/bucket=B/part-sS.parquet`` and returns only the cell's
        ``(bucket, term, df, cf)`` rows;
-    2. those rows go through an exchange keyed by bucket, and each
-       termstats task (:func:`_write_termstats`) sums its buckets'
-       rows per term into ``tdir/bucket=B/part-00000.parquet`` and
-       returns its exact ``(total_tf, n_postings, n_terms)``, which
-       the driver sums.  Every (bucket, term) lands in one task, so
-       ``n_terms`` is exact.
+    2. an exchange keyed by bucket sends each bucket's rows to one
+       termstats task (:func:`_write_termstats`), which writes
+       ``tdir/bucket=B/part-00000.parquet``.
 
-    Every file name is fixed by its cell or bucket and every file
-    lands by an atomic rename of a dot-prefixed temp in the same dir
-    (:func:`_write_parquet`), so a retried or speculative task rewrites
-    the same bytes under the same name and no reader sees a partial
-    file.  Returns ``(total_tf, n_postings, n_terms)``, ``(0, 0, 0)``
-    for an epoch without postings."""
-    for d in (pdir, tdir):
-        shutil.rmtree(d, ignore_errors=True)
-        os.makedirs(d)
+    Every file name is fixed by its cell or bucket and lands by an
+    atomic rename (:func:`_write_parquet`), so a retried or
+    speculative task rewrites the same bytes under the same name and
+    no reader sees a partial file.  Returns the tasks' summed
+    ``(total_tf, n_postings, n_terms)``, exact because every (bucket,
+    term) lands in one task; ``(0, 0, 0)`` and no file for an epoch
+    without postings."""
+    _reset_dirs(pdir, tdir)
     parts = num_partitions or min(
         num_buckets * num_salts, spark.sparkContext.defaultParallelism * 4
     )
     tparts = min(num_buckets, spark.sparkContext.defaultParallelism)
     cell = F.col("bucket") * num_salts + F.col("salt")
-    totals = (
+    return _sum_totals(
         cells.repartition(parts, cell_partition_key(cell, parts))
         .mapInArrow(
             lambda it: _write_cells(it, pdir, block_size),
             "bucket int, term string, df long, cf long",
         )
         .repartition(tparts, cell_partition_key(F.col("bucket"), tparts))
-        .mapInArrow(
-            lambda it: _write_termstats(it, tdir),
-            "total_tf long, n_postings long, n_terms long",
-        )
-        .collect()
+        .mapInArrow(lambda it: _write_termstats(it, tdir), _TOTALS_SCHEMA)
     )
-    return tuple(sum(int(r[i]) for r in totals) for i in range(3))
 
 
-# the blocks' file schema: bucket is the directory, as a hive partition
+def _write_flat_epoch(
+    cells: DataFrame, pdir: str, tdir: str, block_size: int
+) -> tuple[int, int, int]:
+    """Write packed cells as one FLAT epoch (small appends) in one job
+    after the map side: ONE exchange sends every cell to the one task
+    of :func:`_write_flat`.  Dirs, file landing and totals as for
+    :func:`_write_epoch`.  That task holds all of the epoch's packed
+    cells, so only batches :func:`_estimated_small` admits come here."""
+    _reset_dirs(pdir, tdir)
+    return _sum_totals(
+        cells.repartition(1).mapInArrow(
+            lambda it: _write_flat(it, pdir, tdir, block_size),
+            _TOTALS_SCHEMA,
+        )
+    )
+
+
+def _reset_dirs(*dirs: str) -> None:
+    for d in dirs:
+        shutil.rmtree(d, ignore_errors=True)
+        os.makedirs(d)
+
+
+def _sum_totals(totals: DataFrame) -> tuple[int, int, int]:
+    """Run the writer job; sum its tasks' totals rows."""
+    rows = totals.collect()
+    return tuple(sum(int(r[i]) for r in rows) for i in range(3))
+
+
+_TOTALS_SCHEMA = "total_tf long, n_postings long, n_terms long"
+# termstats rows: per (bucket, term) document and collection frequency
+_TERMSTATS_SCHEMA = pa.schema(
+    [
+        ("bucket", pa.int32()), ("term", pa.string()), ("df", pa.int64()),
+        ("cf", pa.int64()),
+    ]
+)
+# nested files' schemas: bucket is the directory, as a hive partition
 _BLOCK_FILE_SCHEMA = BLOCK_ARROW_SCHEMA.remove(
     BLOCK_ARROW_SCHEMA.get_field_index("bucket")
 )
-_TERMSTATS_FILE_SCHEMA = pa.schema(
-    [("term", pa.string()), ("df", pa.int64()), ("cf", pa.int64())]
+_TERMSTATS_FILE_SCHEMA = _TERMSTATS_SCHEMA.remove(
+    _TERMSTATS_SCHEMA.get_field_index("bucket")
 )
 
 
 def _write_parquet(path: str, schema, batches) -> None:
     """Write ``batches`` as the Parquet file ``path``: into a
     dot-prefixed temp in the same dir (every reader skips those), then
-    an atomic rename.  No Arrow schema is stored and ``term``, whose
-    values are nearly all distinct, is not dictionary-encoded: both
-    keep the files small."""
+    an atomic rename.  Consecutive batches share a row group while
+    they fit in ``_BATCH_BYTES``: a flat epoch's file holds B*S small
+    cells, and readers pay per row group they scan (a row group per
+    cell made ``search_local`` 10x slower).  A cell's own batches never
+    share one, since the block slicer cuts them so that two in a row
+    pass ``_BATCH_BYTES``, so a nested file keeps a row group per
+    batch.  No Arrow schema is stored and ``term``, whose values are
+    nearly all distinct, is not dictionary-encoded: both keep the files
+    small."""
     d, name = os.path.split(path)
     os.makedirs(d, exist_ok=True)
     tmp = os.path.join(d, f".{name}.{uuid.uuid4().hex}.tmp")
@@ -390,8 +390,15 @@ def _write_parquet(path: str, schema, batches) -> None:
             tmp, schema, store_schema=False,
             use_dictionary=[n for n in schema.names if n != "term"],
         ) as w:
+            group, size = [], 0
             for rb in batches:
-                w.write_batch(rb)
+                if group and size + rb.nbytes > _BATCH_BYTES:
+                    w.write_table(pa.Table.from_batches(group, schema))
+                    group, size = [], 0
+                group.append(rb)
+                size += rb.nbytes
+            if group:
+                w.write_table(pa.Table.from_batches(group, schema))
         os.replace(tmp, path)
     except BaseException:
         try:
@@ -402,7 +409,7 @@ def _write_parquet(path: str, schema, batches) -> None:
 
 
 def _write_cells(batches, pdir: str, block_size: int):
-    """``mapInArrow`` body of the epoch writer's encode tasks: encode
+    """``mapInArrow`` body of the nested writer's encode tasks: encode
     each packed cell (``build._encode_cell_blocks``), write its blocks
     to ``pdir/bucket=B/part-sS.parquet``, and yield only its
     ``(bucket, term, df, cf)`` rows."""
@@ -417,39 +424,82 @@ def _write_cells(batches, pdir: str, block_size: int):
         yield term_stats
 
 
+def _sum_termstats(batches) -> pa.Table:
+    """The cells' ``(bucket, term, df, cf)`` rows summed per (bucket,
+    term), in (bucket, term) order: the termstats rows of both
+    layouts."""
+    agg = (
+        pa.Table.from_batches(batches)
+        .group_by(["bucket", "term"])
+        .aggregate([("df", "sum"), ("cf", "sum")])
+        .sort_by([("bucket", "ascending"), ("term", "ascending")])
+    )
+    return pa.Table.from_arrays(
+        [agg["bucket"], agg["term"], agg["df_sum"], agg["cf_sum"]],
+        schema=_TERMSTATS_SCHEMA,
+    )
+
+
+def _totals(tbl: pa.Table) -> pa.RecordBatch:
+    """A writer task's ``(total_tf, n_postings, n_terms)`` row."""
+    return pa.RecordBatch.from_pydict({
+        "total_tf": [pc.sum(tbl["cf"]).as_py()],
+        "n_postings": [pc.sum(tbl["df"]).as_py()],
+        "n_terms": [tbl.num_rows],
+    })
+
+
 def _write_termstats(batches, tdir: str):
-    """``mapInArrow`` body of the epoch writer's termstats tasks: per
-    bucket, sum the cells' ``(term, df, cf)`` rows per term, write
-    them in term order to ``tdir/bucket=B/part-00000.parquet``, and
-    yield the task's ``(total_tf, n_postings, n_terms)``."""
+    """``mapInArrow`` body of the nested writer's termstats tasks: sum
+    the cells' rows per (bucket, term) (:func:`_sum_termstats`), write
+    each bucket's in term order to ``tdir/bucket=B/part-00000.parquet``,
+    and yield the task's ``(total_tf, n_postings, n_terms)``."""
     batches = list(batches)
     if not sum(rb.num_rows for rb in batches):
         return
-    tbl = pa.Table.from_batches(batches)
-    total_tf = n_postings = n_terms = 0
+    tbl = _sum_termstats(batches)
     buckets = tbl.column("bucket")
     for bkt in pc.unique(buckets).to_pylist():
-        agg = (
-            tbl.filter(pc.equal(buckets, bkt))
-            .group_by("term")
-            .aggregate([("df", "sum"), ("cf", "sum")])
-            .sort_by("term")
-        )
-        out = pa.Table.from_arrays(
-            [agg["term"], agg["df_sum"], agg["cf_sum"]],
-            schema=_TERMSTATS_FILE_SCHEMA,
-        )
         _write_parquet(
             os.path.join(tdir, f"bucket={bkt}", "part-00000.parquet"),
-            _TERMSTATS_FILE_SCHEMA, out.to_batches(),
+            _TERMSTATS_FILE_SCHEMA,
+            tbl.filter(pc.equal(buckets, bkt))
+            .drop_columns(["bucket"])
+            .to_batches(),
         )
-        total_tf += pc.sum(out["cf"]).as_py()
-        n_postings += pc.sum(out["df"]).as_py()
-        n_terms += out.num_rows
-    yield pa.RecordBatch.from_arrays(
-        [pa.array([v], pa.int64()) for v in (total_tf, n_postings, n_terms)],
-        names=["total_tf", "n_postings", "n_terms"],
+    yield _totals(tbl)
+
+
+def _write_flat(batches, pdir: str, tdir: str, block_size: int):
+    """``mapInArrow`` body of the flat writer's one task: encode every
+    packed cell (``build._encode_cell_blocks``), stream the blocks
+    cell by cell into ``pdir/part-00000.parquet``, write their
+    per-(bucket, term) sums (:func:`_sum_termstats`) to
+    ``tdir/part-00000.parquet``, and yield the task's ``(total_tf,
+    n_postings, n_terms)``.  Without postings it writes no file."""
+    encoded = _encode_cell_blocks(batches, block_size)
+    first = next(encoded, None)
+    if first is None:
+        return
+    term_stats = []
+
+    def blocks():
+        for _, _, cell_blocks, cell_stats in itertools.chain(
+            [first], encoded
+        ):
+            term_stats.append(cell_stats)
+            yield from cell_blocks
+
+    _write_parquet(
+        os.path.join(pdir, "part-00000.parquet"), BLOCK_ARROW_SCHEMA,
+        blocks(),
     )
+    tbl = _sum_termstats(term_stats)
+    _write_parquet(
+        os.path.join(tdir, "part-00000.parquet"), _TERMSTATS_SCHEMA,
+        tbl.to_batches(),
+    )
+    yield _totals(tbl)
 
 
 def _obs_count(obs, key) -> int:
@@ -464,61 +514,20 @@ def _obs_count(obs, key) -> int:
         return 0
 
 
-def _write_termstats_local(index_dir: str, epoch: int):
-    """Derive and write a SMALL epoch's termstats on the driver from
-    the freshly-written flat postings file's block metadata - a
-    column-pruned pyarrow read (bucket/term/n/sum_tf; the fat binary
-    posting columns never leave disk) over one small file, replacing
-    a whole second Spark job whose fixed cost dominated the per-epoch
-    floor.  Returns (total_tf, n_postings) for the manifest."""
-    import pyarrow as pa
-    import pyarrow.dataset as pds
-    import pyarrow.parquet as pq
-
-    edir = os.path.join(index_dir, "postings", f"epoch={epoch}")
-    try:
-        files = [
-            os.path.join(edir, n)
-            for n in sorted(os.listdir(edir))
-            if n.endswith(".parquet")
-        ]
-    except FileNotFoundError:
-        return 0, 0
-    if not files:
-        return 0, 0
-    tbl = pds.dataset(files).to_table(
-        columns=["bucket", "term", "n", "sum_tf"]
-    )
-    if tbl.num_rows == 0:
-        return 0, 0
-    pdf = (
-        tbl.to_pandas()
-        .groupby(["bucket", "term"], as_index=False)
-        .agg(df=("n", "sum"), cf=("sum_tf", "sum"))
-        .sort_values(["bucket", "term"], kind="stable")
-    )
-    tdir = os.path.join(index_dir, "termstats", f"epoch={epoch}")
-    os.makedirs(tdir, exist_ok=True)
-    out = os.path.join(tdir, "part-00000.parquet")
-    tmp = out + ".tmp"
-    pq.write_table(
-        pa.Table.from_pandas(
-            pdf[["bucket", "term", "df", "cf"]], preserve_index=False
-        ),
-        tmp,
-    )
-    os.replace(tmp, out)
-    return int(pdf["cf"].sum()), int(pdf["df"].sum())
-
-
-_SMALL_EPOCH_BYTES = 256 << 20
+# The flat writer's one task encodes the whole epoch serially and
+# holds all of its packed cells, where the nested writer encodes in
+# parallel (bucket, salt) tasks.  On 4 vCPUs (synth parquet batches,
+# B=64, S=4) the one task appended faster at 6k docs, even at 15k (a
+# 2.0 MB estimate) and slower from 40k (5.4 MB) on: ~30% at 150k
+# docs, where it peaked at 466 MB RSS.
+_SMALL_EPOCH_BYTES = 2 << 20
 
 
 def _estimated_small(batch: DataFrame) -> bool:
     """True when Catalyst's size estimate for the micro-batch is under
-    ~256 MB of source bytes - the regime where per-file commit costs
-    dominate over reducer memory concerns.  Falls back to the
-    conservative large-epoch layout when no estimate is available."""
+    ``_SMALL_EPOCH_BYTES`` (2 MiB) of source bytes: a batch for the
+    flat layout's one writer task.  Falls back to the conservative
+    large-epoch layout when no estimate is available."""
     try:
         est = int(
             str(
@@ -599,7 +608,10 @@ def stream_index(
     is the batch build's, so the sink works onto a built index as
     onto an empty one, and the offset is fixed - batchIds come from
     the checkpoint, so a restarted query re-delivers a batch to the
-    same epoch."""
+    same epoch.  Each batch is appended (``append_index_batch``), so a
+    stream must not carry a docid still live in an earlier epoch: it
+    would leave two live versions, and every query entry point returns
+    both; updates go through ``upsert_index_batch``."""
 
     def sink(batch: DataFrame, batch_id: int) -> None:
         append_index_batch(

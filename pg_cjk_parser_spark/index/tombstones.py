@@ -261,10 +261,10 @@ def alive_mask(
 def epoch_dir_layout(path: str) -> str | None:
     """Physical layout of one epoch shard dir - the other half of the
     layout convention this module homes: ``'nested'`` (bucket=
-    subdirs, large epochs/compaction), ``'flat'`` (parquet files
-    directly in the dir with bucket as a data column - small
-    streaming epochs and all per-epoch termstats), or ``None`` (no
-    data: missing dir, or a 0-row epoch that wrote only _SUCCESS).
+    subdirs: the build, large appends and folds), ``'flat'`` (one
+    ``part-00000.parquet`` directly in the dir with bucket as a data
+    column: small appends), or ``None`` (no data: a missing dir, or
+    an epoch without postings, whose dirs hold no file).
     Query routing and compaction readers share this classifier."""
     try:
         names = os.listdir(path)

@@ -240,11 +240,10 @@ def _read_termstats(
     if missing:
         paths = _shard_paths(index_dir, "termstats", bset, stats)
         found: dict[str, int] = {}
-        # per-path reads: bucket dirs of nested epochs and flat epoch
-        # dirs (small appends, bucket as a column)
-        # carry different physical schemas, so a unified dataset would
-        # fail to merge them; each path is a tiny term-filtered point
-        # read anyway
+        # per-path reads, each a tiny term-filtered point read: a
+        # nested epoch's bucket dir holds (term, df, cf) files, a flat
+        # epoch's dir (small appends) one file that also carries
+        # bucket as a data column; df and cf are int64 in both
         for p in paths:
             tbl = ds.dataset(p).to_table(
                 columns=["term", "df"],

@@ -6,6 +6,8 @@ plain per-doc and per-block Python, slow but easy to check by eye.
   postings a build must produce;
 - ``decode_blocks_exact``: per-block decode of posting blocks with
   per-block tombstone masks, the postings compaction must recover;
+- ``encoded_blocks``: the library encoder's posting blocks alone,
+  for tests that compare blocks;
 - the plain per-blob codec (``encode_varints``, ``delta_encode`` /
   ``delta_decode``, ``encode_positions`` / ``decode_positions``) the
   references encode and decode one blob at a time with.
@@ -14,7 +16,7 @@ plain per-doc and per-block Python, slow but easy to check by eye.
 import numpy as np
 import pyarrow as pa
 
-from pg_cjk_parser_spark.index.build import _pack_cell_idx
+from pg_cjk_parser_spark.index.build import _encode_cell_blocks, _pack_cell_idx
 from pg_cjk_parser_spark.index.codec import (
     decode_varints,
     encode_varints_offsets,
@@ -25,6 +27,13 @@ from pg_cjk_parser_spark.index.xxh64 import (
     spark_xxhash64_long,
     spark_xxhash64_str,
 )
+
+
+def encoded_blocks(batches, block_size: int):
+    """The posting blocks ``build._encode_cell_blocks`` yields for
+    packed cell batches, as Arrow batches, cell after cell."""
+    for _, _, blocks, _ in _encode_cell_blocks(batches, block_size):
+        yield from blocks
 
 
 def encode_varints(a: np.ndarray) -> bytes:

@@ -7,6 +7,7 @@ from tests.index_reference import (
     delta_encode,
     encode_positions,
     encode_varints,
+    encoded_blocks,
 )
 
 
@@ -173,8 +174,6 @@ def test_encode_partition_roundtrip_any_batching():
     per posting; block ids run 0.. per (bucket, salt, term)."""
     import random
 
-    from pg_cjk_parser_spark.index.build import _encode_cells
-
     rng = random.Random(11)
     cols = ["bucket", "salt", "term", "docid", "tf", "doclen", "plist"]
     for nt, mp, bs in [(30, 300, 128), (120, 8, 16), (2, 900, 64), (1, 2, 4)]:
@@ -182,7 +181,7 @@ def test_encode_partition_roundtrip_any_batching():
         want = sorted(tuple(x) for x in df[cols].itertuples(index=False))
         for chunks_of in (lambda i: 0, lambda i: i % 3, lambda i: i):
             cells = _pack_rows(df, chunks_of)
-            out = _blocks_frame(_encode_cells(_arrow_batches([cells]), bs))
+            out = _blocks_frame(encoded_blocks(_arrow_batches([cells]), bs))
             assert sorted(_decode_block_rows(out)) == want
             gb = out.groupby(["bucket", "salt", "term"])["block_id"].apply(
                 lambda s_: sorted(s_) == list(range(len(s_)))
@@ -195,14 +194,12 @@ def test_encode_cells_matches_row_encoder():
     reference block encoder for the same postings."""
     import random
 
-    from pg_cjk_parser_spark.index.build import _encode_cells
-
     rng = random.Random(23)
     df = _random_posting_rows(rng, 60, 120)
     ref = _reference_blocks(df, 32)
     # packed path: split postings into 3 arbitrary map chunks per cell
     cells = _pack_rows(df, lambda i: rng.randrange(3))
-    cell_out = _blocks_frame(_encode_cells(_arrow_batches([cells]), 32))
+    cell_out = _blocks_frame(encoded_blocks(_arrow_batches([cells]), 32))
     key = ["bucket", "salt", "term", "block_id"]
     a = ref.sort_values(key, ignore_index=True)
     c = cell_out.sort_values(key, ignore_index=True)

@@ -1,10 +1,13 @@
-"""The nested-epoch writer (streaming._write_epoch): its encode tasks
-write each cell's blocks and its termstats tasks each bucket's
-termstats as Parquet files of their own, named by cell or bucket and
-landed by atomic renames, so a retried task rewrites identical bytes,
-an earlier attempt's files do not survive, and every reader - the
-Spark read of compaction and the pyarrow read of queries - gets
-exactly the encoder's rows."""
+"""The epoch writers (streaming._write_epoch, nested, and
+streaming._write_flat_epoch, flat): their tasks write every
+file themselves, with pyarrow - the nested layout's encode tasks one
+file per cell and its termstats tasks one per bucket, the flat
+layout's one task (small appends) one postings and one termstats
+file - named by cell, bucket or epoch and landed by atomic renames,
+so a retried task rewrites identical bytes, an earlier attempt's
+files do not survive, and every reader - the Spark read of
+compaction and the pyarrow read of queries - gets exactly the
+encoder's rows."""
 
 import os
 
@@ -12,18 +15,16 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
+import pyarrow.parquet as pq
 import pytest
 
 from pg_cjk_parser_spark.index import streaming
-from pg_cjk_parser_spark.index.build import (
-    PACKED_SCHEMA,
-    _encode_cells,
-    _packed_postings_gen,
-)
+from pg_cjk_parser_spark.index.build import PACKED_SCHEMA, _packed_postings_gen
 from pg_cjk_parser_spark.index.codec import BLOCK_COLS
 from pg_cjk_parser_spark.index.compact import _read_epochs
 from pg_cjk_parser_spark.index.tombstones import epoch_dir_layout
 from pg_cjk_parser_spark.query.topk import _BLOCK_COLUMNS, _read_blocks_local
+from tests.index_reference import encoded_blocks
 
 B, S, BS = 4, 2, 16
 
@@ -49,7 +50,7 @@ def packed():
 @pytest.fixture(scope="module")
 def blocks(packed):
     """The encoder's block rows for ``packed``."""
-    return pa.Table.from_batches(list(_encode_cells(iter(packed), BS)))
+    return pa.Table.from_batches(list(encoded_blocks(iter(packed), BS)))
 
 
 def _files(d):
@@ -66,60 +67,115 @@ def _rows(tbl, cols):
     return sorted(zip(*(tbl.column(c).to_pylist() for c in cols)))
 
 
+def _per_term(blocks):
+    """The blocks' ``(bucket, term, df, cf)`` sums, sorted."""
+    agg = blocks.group_by(["bucket", "term"]).aggregate(
+        [("n", "sum"), ("sum_tf", "sum")]
+    )
+    return _rows(agg, ["bucket", "term", "n_sum", "sum_tf_sum"])
+
+
 def test_retried_encode_task_rewrites_identical_files(packed, blocks, tmp_path):
-    """Running the encode-and-write task body twice over the same
-    packed cells, as a task retry does, leaves byte-identical files
-    under the same per-cell names and no temp file; its termstats
-    rows are the blocks' per-term sums."""
-    pdir = str(tmp_path / "postings")
-    first = pa.Table.from_batches(list(streaming._write_cells(iter(packed), pdir, BS)))
-    files = _files(pdir)
-    again = pa.Table.from_batches(list(streaming._write_cells(iter(packed), pdir, BS)))
-    assert _files(pdir) == files
+    """Running a writer task body twice over the same packed cells, as
+    a task retry does, leaves byte-identical files under the same
+    names and no temp file, in both layouts.  The nested layout's
+    encode task writes a file per cell and yields rows whose per-term
+    sums are the blocks'; the flat layout's one task writes
+    ``part-00000.parquet`` postings holding the blocks in one row group
+    and termstats holding those sums in (bucket, term) order, and
+    yields their totals."""
+    for flat in (False, True):
+        _retry_writer_task(packed, blocks, tmp_path / str(flat), flat)
+
+
+def _retry_writer_task(packed, blocks, tmp_path, flat):
+    pdir, tdir = str(tmp_path / "postings"), str(tmp_path / "termstats")
+    if flat:
+        def run():
+            return list(streaming._write_flat(iter(packed), pdir, tdir, BS))
+    else:
+        def run():
+            return list(streaming._write_cells(iter(packed), pdir, BS))
+    first = pa.Table.from_batches(run())
+    files = _files(str(tmp_path))
+    again = pa.Table.from_batches(run())
+    assert _files(str(tmp_path)) == files
     assert first.equals(again)
-    cells = set(zip(blocks["bucket"].to_pylist(), blocks["salt"].to_pylist()))
-    assert sorted(files) == sorted(
-        f"bucket={b}/part-s{s}.parquet" for b, s in cells
-    )
-    per_term = (
-        blocks.group_by(["bucket", "term"])
-        .aggregate([("n", "sum"), ("sum_tf", "sum")])
-    )
-    got = (
-        first.group_by(["bucket", "term"])
-        .aggregate([("df", "sum"), ("cf", "sum")])
-    )
-    assert _rows(got, ["bucket", "term", "df_sum", "cf_sum"]) == _rows(
-        per_term, ["bucket", "term", "n_sum", "sum_tf_sum"]
-    )
+    if flat:
+        assert sorted(files) == [
+            os.path.join(sub, "part-00000.parquet")
+            for sub in ("postings", "termstats")
+        ]
+        postings = pq.ParquetFile(os.path.join(pdir, "part-00000.parquet"))
+        assert postings.read().equals(blocks)
+        # the cells share one row group: readers pay per row group
+        assert postings.num_row_groups == 1 < len(set(zip(
+            blocks["bucket"].to_pylist(), blocks["salt"].to_pylist()
+        )))
+        stats = pq.read_table(os.path.join(tdir, "part-00000.parquet"))
+        assert stats.schema == streaming._TERMSTATS_SCHEMA
+        rows = list(zip(*(stats.column(c).to_pylist() for c in stats.column_names)))
+        assert rows == _per_term(blocks)
+        assert first.to_pylist() == [{
+            "total_tf": pc.sum(blocks["sum_tf"]).as_py(),
+            "n_postings": pc.sum(blocks["n"]).as_py(),
+            "n_terms": len(rows),
+        }]
+    else:
+        cells = set(zip(blocks["bucket"].to_pylist(), blocks["salt"].to_pylist()))
+        assert sorted(files) == sorted(
+            os.path.join("postings", f"bucket={b}", f"part-s{s}.parquet")
+            for b, s in cells
+        )
+        got = first.group_by(["bucket", "term"]).aggregate(
+            [("df", "sum"), ("cf", "sum")]
+        )
+        assert _rows(got, ["bucket", "term", "df_sum", "cf_sum"]) == _per_term(
+            blocks
+        )
 
 
 def test_epoch_write_replaces_stale_files_and_reads_back(
     spark, packed, blocks, tmp_path
 ):
-    """A stale file an earlier attempt left in the epoch's dirs is gone
-    after the write, an empty epoch writes no file and returns
-    (0, 0, 0), and compaction's Spark read and the query's pyarrow
-    read both return exactly the encoder's rows."""
+    """In both layouts, stale files an earlier attempt left in the
+    epoch's dirs - the nested layout's bucket dirs, a Spark file
+    commit's part file and _SUCCESS - are gone after the write, an
+    empty epoch writes no file and returns (0, 0, 0), the written dirs
+    take the writer's layout, and compaction's Spark read and the
+    query's pyarrow read both return exactly the encoder's rows."""
+    for flat in (False, True):
+        _write_over_stale_files(spark, packed, blocks, tmp_path / str(flat), flat)
+
+
+def _write_over_stale_files(spark, packed, blocks, tmp_path, flat):
     idx = str(tmp_path / "idx")
     pdir, tdir = streaming._epoch_dirs(idx, 0)
     stale = [
         os.path.join(pdir, "bucket=0", "part-00007-stale.c000.snappy.parquet"),
+        os.path.join(pdir, "part-00000-stale.c000.snappy.parquet"),
+        os.path.join(pdir, "_SUCCESS"),
         os.path.join(tdir, "bucket=9", "part-00000.parquet"),
+        os.path.join(tdir, "part-00001.parquet"),
     ]
-    for p in stale:
-        os.makedirs(os.path.dirname(p))
-        with open(p, "wb") as f:
-            f.write(b"stale")
-    empty = spark.createDataFrame([], PACKED_SCHEMA)
-    assert streaming._write_epoch(spark, empty, pdir, tdir, B, S, BS) == (0, 0, 0)
+
+    def plant():
+        for p in stale:
+            os.makedirs(os.path.dirname(p), exist_ok=True)
+            with open(p, "wb") as f:
+                f.write(b"stale")
+
+    def write(cells):
+        if flat:
+            return streaming._write_flat_epoch(cells, pdir, tdir, BS)
+        return streaming._write_epoch(spark, cells, pdir, tdir, B, S, BS)
+
+    plant()
+    assert write(spark.createDataFrame([], PACKED_SCHEMA)) == (0, 0, 0)
     assert not any(map(os.path.exists, stale))
     assert epoch_dir_layout(pdir) is None and epoch_dir_layout(tdir) is None
 
-    for p in stale:
-        os.makedirs(os.path.dirname(p), exist_ok=True)
-        with open(p, "wb") as f:
-            f.write(b"stale")
+    plant()
     cells = spark.createDataFrame(
         [
             (b, s, p)
@@ -128,13 +184,17 @@ def test_epoch_write_replaces_stale_files_and_reads_back(
         ],
         PACKED_SCHEMA,
     )
-    totals = streaming._write_epoch(spark, cells, pdir, tdir, B, S, BS)
+    totals = write(cells)
     assert not any(map(os.path.exists, stale))
     n_terms = len(set(zip(blocks["bucket"].to_pylist(), blocks["term"].to_pylist())))
     assert totals == (
         pc.sum(blocks["sum_tf"]).as_py(), pc.sum(blocks["n"]).as_py(), n_terms
     )
     assert not [n for n in _files(idx) if os.path.basename(n).startswith(".")]
+    layout = "flat" if flat else "nested"
+    assert epoch_dir_layout(pdir) == epoch_dir_layout(tdir) == layout
+    if flat:
+        assert os.listdir(pdir) == os.listdir(tdir) == ["part-00000.parquet"]
 
     spark_rows = sorted(
         tuple(bytes(v) if isinstance(v, bytearray) else v for v in r)
@@ -143,7 +203,7 @@ def test_epoch_write_replaces_stale_files_and_reads_back(
     assert spark_rows == _rows(blocks, BLOCK_COLS)
     paths = [os.path.join(pdir, f"bucket={b}") for b in range(B)]
     local = _read_blocks_local(
-        [p for p in paths if os.path.isdir(p)],
+        [pdir] if flat else [p for p in paths if os.path.isdir(p)],
         blocks["term"].unique().to_pylist(), with_epoch=False,
     )
     assert _rows(local, _BLOCK_COLUMNS) == _rows(blocks, _BLOCK_COLUMNS)

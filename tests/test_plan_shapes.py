@@ -133,24 +133,34 @@ def test_single_query_plans_have_no_scan_or_exchange(spark, plan_index):
         assert _count(plan, "TakeOrderedAndProject") == 1, plan
 
 
-def _jobs(spark, group, make):
-    """``(df, rows, jobs)``: the DataFrame ``make()`` returns, its
-    collected rows, and the Spark jobs that both launched under job
-    group ``group`` (unique per call) as per-stage task counts."""
+def _group_jobs(spark, group, call):
+    """``(call(), jobs)``: what ``call()`` returns and the Spark jobs it
+    launched under job group ``group`` (unique per call) as per-stage
+    task counts."""
     sc = spark.sparkContext
     sc.setJobGroup(group, group, False)
     try:
-        df = make()
-        rows = df.collect()
+        out = call()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     # the status store is fed by the async listener bus
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     st = sc.statusTracker()
-    return df, rows, [
+    return out, [
         [st.getStageInfo(s).numTasks for s in st.getJobInfo(j).stageIds]
         for j in st.getJobIdsForGroup(group)
     ]
+
+
+def _jobs(spark, group, make):
+    """``(df, rows, jobs)``: the DataFrame ``make()`` returns, its
+    collected rows, and the Spark jobs that both launched."""
+    def run():
+        df = make()
+        return df, df.collect()
+
+    (df, rows), jobs = _group_jobs(spark, group, run)
+    return df, rows, jobs
 
 
 def test_batch_runs_one_job_and_returns_local_rows(spark, plan_index):
@@ -358,3 +368,92 @@ def test_build_index_cell_exchange_then_map_in_arrow(
     ).group(1)
     assert key.startswith("hashpartitioning(element_at("), key
     assert not re.match(r"hashpartitioning\(bucket#\d+, salt#\d+", key), key
+
+
+def test_small_append_writes_flat_epoch_in_two_jobs(
+    spark, docs, tmp_path, monkeypatch
+):
+    """A small parquet batch appends as a FLAT epoch in 2 Spark jobs -
+    the tokenizer's map stage, then ONE writer task behind the one
+    exchange - and its postings and termstats dirs each hold only
+    ``part-00000.parquet`` (no Spark commit files), termstats ``df`` is
+    int64 in both layouts, and the rows equal a forced-nested append of
+    the same batch once the layout is dropped."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pg_cjk_parser_spark.index import streaming
+    from pg_cjk_parser_spark.index.codec import BLOCK_COLS
+    from pg_cjk_parser_spark.index.compact import _read_epochs
+    from pg_cjk_parser_spark.index.tombstones import epoch_dir_layout
+
+    kw = dict(docid_col="doc_id", num_buckets=8, num_salts=2, block_size=16)
+
+    def append(idx):
+        return streaming.append_index_batch(spark, docs, idx, 1, **kw)
+
+    flat_idx, nested_idx = str(tmp_path / "flat"), str(tmp_path / "nested")
+    stats, jobs = _group_jobs(
+        spark, "plan-shapes-small-append", lambda: append(flat_idx)
+    )
+    assert stats["n_docs"] == 50
+    assert len(jobs) == 2, jobs
+    # the writer's job lists the map stage it reuses (skipped)
+    (map_job,), (write_job,) = ([j for j in jobs if len(j) == n] for n in (1, 2))
+    assert write_job == map_job + [1], jobs
+    monkeypatch.setattr(streaming, "_estimated_small", lambda batch: False)
+    append(nested_idx)
+
+    def rows(idx):
+        pdir, tdir = streaming._epoch_dirs(idx, 1)
+        layout = epoch_dir_layout(pdir)
+        assert epoch_dir_layout(tdir) == layout
+        blocks = sorted(
+            tuple(bytes(v) if isinstance(v, bytearray) else v for v in r)
+            for r in _read_epochs(spark, idx, {1: 0})
+            .select(*BLOCK_COLS).collect()
+        )
+        terms = []
+        for dp, _, names in os.walk(tdir):
+            for n in names:
+                t = pq.read_table(os.path.join(dp, n))
+                assert t.schema.field("df").type == "int64", (layout, dp)
+                if "bucket" not in t.column_names:  # a nested epoch's dir
+                    bucket = int(os.path.basename(dp).removeprefix("bucket="))
+                    t = t.add_column(0, "bucket", pa.array([bucket] * len(t)))
+                terms += [tuple(r.values()) for r in t.to_pylist()]
+        return layout, blocks, sorted(terms)
+
+    layout, blocks, terms = rows(flat_idx)
+    assert layout == "flat"
+    for d in streaming._epoch_dirs(flat_idx, 1):
+        assert os.listdir(d) == ["part-00000.parquet"], d
+    nested = rows(nested_idx)
+    assert nested[0] == "nested"
+    assert blocks and terms
+    assert (blocks, terms) == nested[1:]
+
+
+def test_append_over_the_small_gate_lands_nested(
+    spark, docs, tmp_path, monkeypatch
+):
+    """Only a batch whose Catalyst size estimate is under
+    ``_SMALL_EPOCH_BYTES`` goes to the flat writer's one task: with the
+    gate at the batch's own estimate the append lands nested, one byte
+    above it flat."""
+    from pg_cjk_parser_spark.index import streaming
+    from pg_cjk_parser_spark.index.tombstones import epoch_dir_layout
+
+    est = int(
+        str(docs._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    )
+    assert 0 < est < streaming._SMALL_EPOCH_BYTES
+    kw = dict(docid_col="doc_id", num_buckets=8, num_salts=2, block_size=16)
+    for gate, layout in ((est, "nested"), (est + 1, "flat")):
+        monkeypatch.setattr(streaming, "_SMALL_EPOCH_BYTES", gate)
+        idx = str(tmp_path / layout)
+        streaming.append_index_batch(spark, docs, idx, 1, **kw)
+        for d in streaming._epoch_dirs(idx, 1):
+            assert epoch_dir_layout(d) == layout, (gate, d)

@@ -38,7 +38,11 @@ from pg_cjk_parser_spark.index.xxh64 import (
     spark_xxhash64_str_vec,
     xxh64,
 )
-from tests.index_reference import decode_blocks_exact, reference_postings
+from tests.index_reference import (
+    decode_blocks_exact,
+    encoded_blocks,
+    reference_postings,
+)
 
 
 def test_xxh64_long_vec_bit_identity():
@@ -188,15 +192,13 @@ def test_encoders_yield_block_arrow_schema(spark, corpus_pdf):
     form of BLOCK_SCHEMA (mapInArrow rejects any other types)."""
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    from pg_cjk_parser_spark.index.build import _encode_cells
-
     want = to_arrow_schema(spark.createDataFrame([], BLOCK_SCHEMA).schema)
     assert BLOCK_ARROW_SCHEMA == want
     cells = [
         pa.RecordBatch.from_pandas(f, preserve_index=False)
         for f in _packed_postings_gen(iter([corpus_pdf]), 8, 2)
     ]
-    out = list(_encode_cells(iter(cells), 32))
+    out = list(encoded_blocks(iter(cells), 32))
     assert out and all(b.schema == want for b in out)
     n_postings = sum(len(v) for v in reference_postings(corpus_pdf, 8, 2).values())
     assert sum(int(b.column("n").to_numpy().sum()) for b in out) == n_postings
@@ -211,9 +213,9 @@ def test_block_batches_split_at_byte_cap(monkeypatch, corpus_pdf):
         pa.RecordBatch.from_pandas(f, preserve_index=False)
         for f in _packed_postings_gen(iter([corpus_pdf]), 4, 2)
     ]
-    whole = list(build._encode_cells(iter(cells), 32))
+    whole = list(encoded_blocks(iter(cells), 32))
     monkeypatch.setattr(build, "_BATCH_BYTES", 4096)
-    split = list(build._encode_cells(iter(cells), 32))
+    split = list(encoded_blocks(iter(cells), 32))
     assert len(split) > 4 * len(whole)
     bins = ("docids", "tfs", "doclens", "positions")
     for b in split:
@@ -308,14 +310,12 @@ def test_packed_gen_batch_split_invariant(corpus_pdf):
 def corpus_blocks(corpus_pdf):
     """(cells, blocks) of the corpus: packed cells, and their encoded
     blocks as a table whose rows alternate between epochs 0 and 1."""
-    from pg_cjk_parser_spark.index.build import _encode_cells
-
     cells = pd.concat(
         list(_packed_postings_gen(iter([corpus_pdf]), 8, 2)),
         ignore_index=True,
     )
     blocks = pa.Table.from_batches(
-        list(_encode_cells(iter([pa.RecordBatch.from_pandas(cells, preserve_index=False)]), 32))
+        list(encoded_blocks(iter([pa.RecordBatch.from_pandas(cells, preserve_index=False)]), 32))
     )
     epochs = pa.array(np.arange(blocks.num_rows) % 2, pa.int32())
     return cells, blocks.append_column("epoch", epochs)
@@ -415,9 +415,6 @@ def test_compact_rejects_corrupt_block(spark, tmp_path, corrupt):
             t.schema.get_field_index(name), name, pa.array(col, pa.binary())
         )
     pq.write_table(t, path)
-    crc = os.path.join(os.path.dirname(path), f".{os.path.basename(path)}.crc")
-    if os.path.exists(crc):
-        os.remove(crc)  # the local filesystem would reject the new bytes
     bucket = int(re.search(r"bucket=(\d+)", path).group(1))
     salt, term = t.column("salt")[i].as_py(), t.column("term")[i].as_py()
 
