@@ -15,11 +15,11 @@ Pipeline (all DataFrame/Arrow; designed for 1000-executor scale):
    lists cover the same docid subset, so per-salt partitions can run
    local conjunctions/WAND without a docid shuffle.  Doc length rides
    along with every posting so scoring never joins on docid.
-2. **Cell shuffle**: ONE exchange that places cell ``bucket*S + salt``
-   on partition ``cell % parts`` (``xxh64.cell_partition_key``), so
-   every reducer gets floor or ceil of B*S/parts cells - hashing
-   (bucket, salt) directly left reducers idle next to ones with 2x
-   the cells.
+2. **Bucket shuffle**: ONE exchange that places bucket ``B`` on
+   partition ``B % parts`` (``xxh64.cell_partition_key``), so all S
+   salt cells of a bucket meet in one writer task and every task gets
+   floor or ceil of B/parts buckets - hashing the key directly left
+   reducers idle next to ones with 2x the cells.
 3. **Block encode and write** (``mapInArrow``, index/streaming.py
    ``_write_cells`` over :func:`_encode_cell_blocks`): per (bucket,
    salt, term), docid-sorted blocks of ``block_size`` postings;
@@ -30,14 +30,13 @@ Pipeline (all DataFrame/Arrow; designed for 1000-executor scale):
    and no pandas conversion, and the task writes each cell's blocks
    itself with pyarrow to ``postings/epoch=0/bucket=N/part-sS.parquet``
    (queries touch at most |q| buckets via directory pruning): blocks
-   never go back to the JVM.  It returns only the cell's per-term
-   ``(df, cf)`` rows.
+   never go back to the JVM.
 4. **Termstats and commit** of epoch 0 of the epoch protocol
    (index/streaming.py, ``_write_epoch`` - the same writer large
-   appends and folds use): one exchange by bucket sends each bucket's
-   per-term rows to one task, which sums them into
-   ``termstats/epoch=0/bucket=N`` and returns exact totals; then
-   ``manifests/epoch=0.json`` carrying the totals and the corpus
+   appends and folds use): after a bucket's last cell, the same task
+   sums the cells' per-term ``(df, cf)`` rows into
+   ``termstats/epoch=0/bucket=N`` and the tasks return exact totals;
+   then ``manifests/epoch=0.json`` carrying the totals and the corpus
    fingerprint, and LAST the snapshot commit: stats.json listing
    epoch 0.  A clean build first removes the previous index,
    tombstones included, so a crash before the commit serves nothing
@@ -397,7 +396,15 @@ def _encode_cell_blocks(batches, block_size: int):
     Memory: one reduce partition's payloads live in RAM, and it encodes
     one cell at a time; size num_salts (docid-disjoint shards) so cells
     fit - the salt count is the scale lever, exactly as for head-term
-    skew."""
+    skew.  The nested writer keys its tasks by bucket, so a task holds
+    all S cells of each of its buckets: B*S/parts cells, as many as
+    (bucket, salt)-keyed tasks held wherever 4 tasks per core <= B,
+    and twice as many at B=8 on 4 cores.  Measured on 4 vCPUs (python
+    workers not reused, RSS sampled every 20 ms), the writer tasks'
+    peak RSS was 150 MB against 145 MB (encode) and 151 MB
+    (termstats) for separate stages at B=8, S=4 on 3,000 docs, and
+    202-204 MB against 186 MB (two runs each) at B=64, S=4 on 200k
+    synth docs; the tokenizer tasks peaked higher, at 158 and 627 MB."""
     bs = block_size
     cells: dict[tuple[int, int], list[bytes]] = {}
     for rb in batches:
@@ -618,7 +625,9 @@ def build_index(
     identify documents.
 
     The index is written as epoch 0 of the epoch protocol, manifest
-    last (module docstring, step 4).  ``resume=True`` returns the
+    last (module docstring, step 4).  ``num_partitions`` sets the
+    writer's task count, each task writing whole buckets; it defaults
+    to 4 per core and is capped at ``num_buckets``.  ``resume=True`` returns the
     stored stats without running a Spark job when epoch 0's manifest
     is complete and carries ``fingerprint`` - also after later
     appends, and after a compaction or merge folded epoch 0 into
@@ -698,8 +707,8 @@ def build_index(
         docs, docid_col, text_col, num_buckets, num_salts, normalize_zht
     )
     total_tf, n_postings, n_terms = _write_epoch(
-        spark, cells, *_epoch_dirs(index_dir, 0), num_buckets, num_salts,
-        block_size, num_partitions,
+        spark, cells, *_epoch_dirs(index_dir, 0), num_buckets, block_size,
+        num_partitions,
     )
     os.makedirs(os.path.dirname(mpath), exist_ok=True)
     _atomic_json(

@@ -291,8 +291,7 @@ def _fold(
                 postings, load_tombstones(index_dir, tomb_files), dead
             ),
             *_epoch_dirs(index_dir, target, gen),
-            stats["num_buckets"], stats["num_salts"], block_size,
-            num_partitions,
+            stats["num_buckets"], block_size, num_partitions,
         )
     # the folded manifest: every folded version but the dropped ones,
     # the written totals, and the batch build's fingerprint when
@@ -374,7 +373,9 @@ def compact_index(
     """Fold EVERY epoch into one, the newest epoch's next generation,
     and apply the tombstones physically: postings drop, per-term
     df/cf derive from the new block metadata, n_docs/avgdl refresh
-    exactly, and the applied tombstone files clear."""
+    exactly, and the applied tombstone files clear.
+    ``num_partitions`` sets the writer's task count, each task writing
+    whole buckets (default 4 per core, capped at the bucket count)."""
     stats = _load_snapshot(index_dir)
     return _fold(
         spark, index_dir, stats, sorted(snapshot_epochs(stats)), block_size,
@@ -402,7 +403,8 @@ def merge_epochs(
     stats adjust for what was dropped, and the tombstone files REMAIN
     - they may still mask unmerged epochs, and re-masking dropped
     postings is a no-op.  Re-running a merge that already committed
-    only finishes its sweep."""
+    only finishes its sweep.  ``num_partitions`` is as for
+    :func:`compact_index`."""
     stats = _load_snapshot(index_dir)
     listing = snapshot_epochs(stats)
     epochs = sorted(set(epochs))

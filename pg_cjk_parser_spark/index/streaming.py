@@ -237,9 +237,7 @@ def append_index_batch(
     if _estimated_small(batch):
         totals = _write_flat_epoch(cells, pdir, tdir, block_size)
     else:
-        totals = _write_epoch(
-            spark, cells, pdir, tdir, num_buckets, num_salts, block_size
-        )
+        totals = _write_epoch(spark, cells, pdir, tdir, num_buckets, block_size)
     total_tf, n_postings, _ = totals
     n_batch_docs = _obs_count(obs_docs, "n_docs")
 
@@ -278,7 +276,6 @@ def _write_epoch(
     pdir: str,
     tdir: str,
     num_buckets: int,
-    num_salts: int,
     block_size: int,
     num_partitions: int | None = None,
 ) -> tuple[int, int, int]:
@@ -287,18 +284,14 @@ def _write_epoch(
     ``merge_epochs`` (the last two into a new generation's dirs).
     Whatever ``pdir`` and ``tdir`` held before is removed first.
 
-    The tasks write the files themselves, with pyarrow, in two jobs
-    after the map side:
-
-    1. ONE exchange places cell ``bucket * num_salts + salt`` on
-       partition ``cell % parts`` (collision-free,
-       ``xxh64.cell_partition_key``); each encode task
-       (:func:`_write_cells`) writes every cell it owns as
-       ``pdir/bucket=B/part-sS.parquet`` and returns only the cell's
-       ``(bucket, term, df, cf)`` rows;
-    2. an exchange keyed by bucket sends each bucket's rows to one
-       termstats task (:func:`_write_termstats`), which writes
-       ``tdir/bucket=B/part-00000.parquet``.
+    ONE exchange places bucket ``B`` on partition ``B % parts``
+    (collision-free, ``xxh64.cell_partition_key``), so all salt cells
+    of a bucket land in one writer task (:func:`_write_cells`), which
+    writes each cell as ``pdir/bucket=B/part-sS.parquet`` and, after
+    the bucket's last cell, the bucket's summed per-term rows as
+    ``tdir/bucket=B/part-00000.parquet``: one job after the map side.
+    ``parts`` is ``num_partitions`` or 4 tasks per core, at most
+    ``num_buckets`` (a task beyond that would get no bucket).
 
     Every file name is fixed by its cell or bucket and lands by an
     atomic rename (:func:`_write_parquet`), so a retried or
@@ -308,19 +301,16 @@ def _write_epoch(
     term) lands in one task; ``(0, 0, 0)`` and no file for an epoch
     without postings."""
     _reset_dirs(pdir, tdir)
-    parts = num_partitions or min(
-        num_buckets * num_salts, spark.sparkContext.defaultParallelism * 4
+    parts = min(
+        num_partitions or spark.sparkContext.defaultParallelism * 4,
+        num_buckets,
     )
-    tparts = min(num_buckets, spark.sparkContext.defaultParallelism)
-    cell = F.col("bucket") * num_salts + F.col("salt")
     return _sum_totals(
-        cells.repartition(parts, cell_partition_key(cell, parts))
+        cells.repartition(parts, cell_partition_key(F.col("bucket"), parts))
         .mapInArrow(
-            lambda it: _write_cells(it, pdir, block_size),
-            "bucket int, term string, df long, cf long",
+            lambda it: _write_cells(it, block_size, _nested_files(pdir, tdir)),
+            _TOTALS_SCHEMA,
         )
-        .repartition(tparts, cell_partition_key(F.col("bucket"), tparts))
-        .mapInArrow(lambda it: _write_termstats(it, tdir), _TOTALS_SCHEMA)
     )
 
 
@@ -328,14 +318,16 @@ def _write_flat_epoch(
     cells: DataFrame, pdir: str, tdir: str, block_size: int
 ) -> tuple[int, int, int]:
     """Write packed cells as one FLAT epoch (small appends) in one job
-    after the map side: ONE exchange sends every cell to the one task
-    of :func:`_write_flat`.  Dirs, file landing and totals as for
-    :func:`_write_epoch`.  That task holds all of the epoch's packed
-    cells, so only batches :func:`_estimated_small` admits come here."""
+    after the map side: ONE exchange sends every cell to one
+    :func:`_write_cells` task, which writes ``pdir/part-00000.parquet``
+    and ``tdir/part-00000.parquet``.  Dirs, file landing and totals as
+    for :func:`_write_epoch`.  That task holds all of the epoch's
+    packed cells, so only batches :func:`_estimated_small` admits come
+    here."""
     _reset_dirs(pdir, tdir)
     return _sum_totals(
         cells.repartition(1).mapInArrow(
-            lambda it: _write_flat(it, pdir, tdir, block_size),
+            lambda it: _write_cells(it, block_size, _flat_files(pdir, tdir)),
             _TOTALS_SCHEMA,
         )
     )
@@ -370,6 +362,28 @@ _TERMSTATS_FILE_SCHEMA = _TERMSTATS_SCHEMA.remove(
 )
 
 
+def _nested_files(pdir: str, tdir: str):
+    """A nested epoch's files for :func:`_write_cells`: one per
+    (bucket, salt) cell and one termstats file per bucket."""
+    return (
+        lambda b, s: os.path.join(pdir, f"bucket={b}", f"part-s{s}.parquet"),
+        _BLOCK_FILE_SCHEMA,
+        lambda b: os.path.join(tdir, f"bucket={b}", "part-00000.parquet"),
+        _TERMSTATS_FILE_SCHEMA,
+    )
+
+
+def _flat_files(pdir: str, tdir: str):
+    """A flat epoch's files for :func:`_write_cells`: one postings and
+    one termstats file, bucket a data column of both."""
+    return (
+        lambda b, s: os.path.join(pdir, "part-00000.parquet"),
+        BLOCK_ARROW_SCHEMA,
+        lambda b: os.path.join(tdir, "part-00000.parquet"),
+        _TERMSTATS_SCHEMA,
+    )
+
+
 def _write_parquet(path: str, schema, batches) -> None:
     """Write ``batches`` as the Parquet file ``path``: into a
     dot-prefixed temp in the same dir (every reader skips those), then
@@ -381,7 +395,7 @@ def _write_parquet(path: str, schema, batches) -> None:
     pass ``_BATCH_BYTES``, so a nested file keeps a row group per
     batch.  No Arrow schema is stored and ``term``, whose values are
     nearly all distinct, is not dictionary-encoded: both keep the files
-    small."""
+    small.  Only ``schema``'s columns of a batch are written."""
     d, name = os.path.split(path)
     os.makedirs(d, exist_ok=True)
     tmp = os.path.join(d, f".{name}.{uuid.uuid4().hex}.tmp")
@@ -392,6 +406,7 @@ def _write_parquet(path: str, schema, batches) -> None:
         ) as w:
             group, size = [], 0
             for rb in batches:
+                rb = rb.select(schema.names)
                 if group and size + rb.nbytes > _BATCH_BYTES:
                     w.write_table(pa.Table.from_batches(group, schema))
                     group, size = [], 0
@@ -408,20 +423,37 @@ def _write_parquet(path: str, schema, batches) -> None:
         raise
 
 
-def _write_cells(batches, pdir: str, block_size: int):
-    """``mapInArrow`` body of the nested writer's encode tasks: encode
-    each packed cell (``build._encode_cell_blocks``), write its blocks
-    to ``pdir/bucket=B/part-sS.parquet``, and yield only its
-    ``(bucket, term, df, cf)`` rows."""
-    for bkt, salt, blocks, term_stats in _encode_cell_blocks(
-        batches, block_size
+def _write_cells(batches, block_size: int, files):
+    """``mapInArrow`` body of both writers' tasks: encode the task's
+    packed cells (``build._encode_cell_blocks``, in (bucket, salt)
+    order), stream each cell's blocks into the postings file
+    ``files`` names for it - consecutive cells naming one file share
+    it - and after the last cell of a termstats file, write their
+    per-(bucket, term) sums (:func:`_sum_termstats`) to it and yield
+    their ``(total_tf, n_postings, n_terms)``.  Without postings it
+    writes no file.  ``files`` is :func:`_nested_files` or
+    :func:`_flat_files`."""
+    block_path, block_schema, stats_path, stats_schema = files
+    for path, group in itertools.groupby(
+        _encode_cell_blocks(batches, block_size),
+        lambda cell: stats_path(cell[0]),
     ):
-        _write_parquet(
-            os.path.join(pdir, f"bucket={bkt}", f"part-s{salt}.parquet"),
-            _BLOCK_FILE_SCHEMA,
-            (rb.drop_columns(["bucket"]) for rb in blocks),
-        )
-        yield term_stats
+        term_stats = []
+        for bpath, cells in itertools.groupby(
+            group, lambda cell: block_path(cell[0], cell[1])
+        ):
+            _write_parquet(bpath, block_schema, _blocks(cells, term_stats))
+        tbl = _sum_termstats(term_stats)
+        _write_parquet(path, stats_schema, tbl.to_batches())
+        yield _totals(tbl)
+
+
+def _blocks(cells, term_stats: list):
+    """The encoded ``cells``' blocks, cell by cell; each cell's
+    per-term rows go to ``term_stats`` as its blocks are taken."""
+    for _, _, blocks, cell_stats in cells:
+        term_stats.append(cell_stats)
+        yield from blocks
 
 
 def _sum_termstats(batches) -> pa.Table:
@@ -441,65 +473,12 @@ def _sum_termstats(batches) -> pa.Table:
 
 
 def _totals(tbl: pa.Table) -> pa.RecordBatch:
-    """A writer task's ``(total_tf, n_postings, n_terms)`` row."""
+    """The ``(total_tf, n_postings, n_terms)`` row of termstats rows."""
     return pa.RecordBatch.from_pydict({
         "total_tf": [pc.sum(tbl["cf"]).as_py()],
         "n_postings": [pc.sum(tbl["df"]).as_py()],
         "n_terms": [tbl.num_rows],
     })
-
-
-def _write_termstats(batches, tdir: str):
-    """``mapInArrow`` body of the nested writer's termstats tasks: sum
-    the cells' rows per (bucket, term) (:func:`_sum_termstats`), write
-    each bucket's in term order to ``tdir/bucket=B/part-00000.parquet``,
-    and yield the task's ``(total_tf, n_postings, n_terms)``."""
-    batches = list(batches)
-    if not sum(rb.num_rows for rb in batches):
-        return
-    tbl = _sum_termstats(batches)
-    buckets = tbl.column("bucket")
-    for bkt in pc.unique(buckets).to_pylist():
-        _write_parquet(
-            os.path.join(tdir, f"bucket={bkt}", "part-00000.parquet"),
-            _TERMSTATS_FILE_SCHEMA,
-            tbl.filter(pc.equal(buckets, bkt))
-            .drop_columns(["bucket"])
-            .to_batches(),
-        )
-    yield _totals(tbl)
-
-
-def _write_flat(batches, pdir: str, tdir: str, block_size: int):
-    """``mapInArrow`` body of the flat writer's one task: encode every
-    packed cell (``build._encode_cell_blocks``), stream the blocks
-    cell by cell into ``pdir/part-00000.parquet``, write their
-    per-(bucket, term) sums (:func:`_sum_termstats`) to
-    ``tdir/part-00000.parquet``, and yield the task's ``(total_tf,
-    n_postings, n_terms)``.  Without postings it writes no file."""
-    encoded = _encode_cell_blocks(batches, block_size)
-    first = next(encoded, None)
-    if first is None:
-        return
-    term_stats = []
-
-    def blocks():
-        for _, _, cell_blocks, cell_stats in itertools.chain(
-            [first], encoded
-        ):
-            term_stats.append(cell_stats)
-            yield from cell_blocks
-
-    _write_parquet(
-        os.path.join(pdir, "part-00000.parquet"), BLOCK_ARROW_SCHEMA,
-        blocks(),
-    )
-    tbl = _sum_termstats(term_stats)
-    _write_parquet(
-        os.path.join(tdir, "part-00000.parquet"), _TERMSTATS_SCHEMA,
-        tbl.to_batches(),
-    )
-    yield _totals(tbl)
 
 
 def _obs_count(obs, key) -> int:

@@ -140,10 +140,11 @@ def cell_partition_key(cell, parts: int):
     """Shuffle key for ``repartition(parts, key)`` that sends the int
     id column ``cell`` to partition ``cell % parts``: the id picks its
     partition's entry of :func:`partition_keys` through a literal
-    array, evaluated in the JVM.  Hashing (bucket, salt) directly put
-    several cells on one reducer and left others idle (4 of 16 build
-    tasks got 4 cells / none); with this map every partition gets
-    floor or ceil of ids/parts."""
+    array, evaluated in the JVM.  The index writer keys it by bucket,
+    so a bucket's salt cells meet in one task.  Hashing the ids
+    directly put several on one reducer and left others idle (4 of 16
+    build tasks got 4 cells / none); with this map every partition
+    gets floor or ceil of ids/parts."""
     from pyspark.sql import functions as F
 
     keys = F.array(*[F.lit(k) for k in partition_keys(parts)])

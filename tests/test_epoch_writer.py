@@ -1,13 +1,12 @@
 """The epoch writers (streaming._write_epoch, nested, and
-streaming._write_flat_epoch, flat): their tasks write every
-file themselves, with pyarrow - the nested layout's encode tasks one
-file per cell and its termstats tasks one per bucket, the flat
-layout's one task (small appends) one postings and one termstats
-file - named by cell, bucket or epoch and landed by atomic renames,
-so a retried task rewrites identical bytes, an earlier attempt's
-files do not survive, and every reader - the Spark read of
-compaction and the pyarrow read of queries - gets exactly the
-encoder's rows."""
+streaming._write_flat_epoch, flat): their tasks write every file
+themselves, with pyarrow - a nested epoch's bucket-keyed tasks one
+postings file per cell and one termstats file per bucket, a flat
+epoch's one task (small appends) one postings and one termstats file
+- named by cell, bucket or epoch and landed by atomic renames, so a
+retried task rewrites identical bytes, an earlier attempt's files do
+not survive, and every reader - the Spark read of compaction and the
+pyarrow read of queries - gets exactly the encoder's rows."""
 
 import os
 
@@ -76,31 +75,33 @@ def _per_term(blocks):
 
 
 def test_retried_encode_task_rewrites_identical_files(packed, blocks, tmp_path):
-    """Running a writer task body twice over the same packed cells, as
-    a task retry does, leaves byte-identical files under the same
-    names and no temp file, in both layouts.  The nested layout's
-    encode task writes a file per cell and yields rows whose per-term
-    sums are the blocks'; the flat layout's one task writes
+    """Running the writer task body twice over the same packed cells,
+    as a task retry does, leaves byte-identical postings and termstats
+    files under the same names and no temp file, in both layouts, and
+    yields totals equal to the blocks' sums.  A nested epoch gets a
+    postings file per cell and a termstats file per bucket, a flat one
     ``part-00000.parquet`` postings holding the blocks in one row group
-    and termstats holding those sums in (bucket, term) order, and
-    yields their totals."""
+    and termstats with a bucket column; in both the termstats rows are
+    the blocks' per-term sums in (bucket, term) order."""
     for flat in (False, True):
         _retry_writer_task(packed, blocks, tmp_path / str(flat), flat)
 
 
 def _retry_writer_task(packed, blocks, tmp_path, flat):
     pdir, tdir = str(tmp_path / "postings"), str(tmp_path / "termstats")
-    if flat:
-        def run():
-            return list(streaming._write_flat(iter(packed), pdir, tdir, BS))
-    else:
-        def run():
-            return list(streaming._write_cells(iter(packed), pdir, BS))
-    first = pa.Table.from_batches(run())
+    layout = streaming._flat_files if flat else streaming._nested_files
+
+    def run():
+        return pa.Table.from_batches(
+            list(streaming._write_cells(iter(packed), BS, layout(pdir, tdir)))
+        )
+
+    first = run()
     files = _files(str(tmp_path))
-    again = pa.Table.from_batches(run())
+    again = run()
     assert _files(str(tmp_path)) == files
     assert first.equals(again)
+    assert not [n for n in files if os.path.basename(n).startswith(".")]
     if flat:
         assert sorted(files) == [
             os.path.join(sub, "part-00000.parquet")
@@ -115,24 +116,29 @@ def _retry_writer_task(packed, blocks, tmp_path, flat):
         stats = pq.read_table(os.path.join(tdir, "part-00000.parquet"))
         assert stats.schema == streaming._TERMSTATS_SCHEMA
         rows = list(zip(*(stats.column(c).to_pylist() for c in stats.column_names)))
-        assert rows == _per_term(blocks)
-        assert first.to_pylist() == [{
-            "total_tf": pc.sum(blocks["sum_tf"]).as_py(),
-            "n_postings": pc.sum(blocks["n"]).as_py(),
-            "n_terms": len(rows),
-        }]
     else:
         cells = set(zip(blocks["bucket"].to_pylist(), blocks["salt"].to_pylist()))
+        buckets = sorted({b for b, _ in cells})
         assert sorted(files) == sorted(
-            os.path.join("postings", f"bucket={b}", f"part-s{s}.parquet")
-            for b, s in cells
+            [
+                os.path.join("postings", f"bucket={b}", f"part-s{s}.parquet")
+                for b, s in cells
+            ] + [
+                os.path.join("termstats", f"bucket={b}", "part-00000.parquet")
+                for b in buckets
+            ]
         )
-        got = first.group_by(["bucket", "term"]).aggregate(
-            [("df", "sum"), ("cf", "sum")]
-        )
-        assert _rows(got, ["bucket", "term", "df_sum", "cf_sum"]) == _per_term(
-            blocks
-        )
+        rows = []
+        for b in buckets:
+            stats = pq.read_table(
+                os.path.join(tdir, f"bucket={b}", "part-00000.parquet")
+            )
+            assert stats.schema == streaming._TERMSTATS_FILE_SCHEMA
+            rows += [(b, *r.values()) for r in stats.to_pylist()]
+    assert rows == _per_term(blocks)
+    assert [pc.sum(first[c]).as_py() for c in first.column_names] == [
+        pc.sum(blocks["sum_tf"]).as_py(), pc.sum(blocks["n"]).as_py(), len(rows)
+    ]
 
 
 def test_epoch_write_replaces_stale_files_and_reads_back(
@@ -168,7 +174,7 @@ def _write_over_stale_files(spark, packed, blocks, tmp_path, flat):
     def write(cells):
         if flat:
             return streaming._write_flat_epoch(cells, pdir, tdir, BS)
-        return streaming._write_epoch(spark, cells, pdir, tdir, B, S, BS)
+        return streaming._write_epoch(spark, cells, pdir, tdir, B, BS)
 
     plant()
     assert write(spark.createDataFrame([], PACKED_SCHEMA)) == (0, 0, 0)

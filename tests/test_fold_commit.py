@@ -1,7 +1,7 @@
 """compact_index and merge_epochs are one fold that commits by one
 atomic stats.json write: a crash at any file step leaves queries on
 the old or the new snapshot, a re-run converges, validate_index reads
-only listed shards, and a fold launches at most three Spark jobs, as
+only listed shards, and a fold launches at most two Spark jobs, as
 many as the batch build."""
 
 import os
@@ -252,28 +252,58 @@ def _jobs(spark, group, fn):
 
 
 @pytest.mark.parametrize("fold", ["compact", "merge"])
-def test_fold_launches_at_most_three_jobs(spark, tombstoned, tmp_path, fold):
+def test_fold_launches_at_most_two_jobs(spark, tombstoned, tmp_path, fold):
     """On a tombstoned index with nested and flat epochs a fold runs
     no schema-inference read and no second decode pass for its
-    removal counts: the decode, the encode tasks that write the
-    blocks, and the termstats tasks, at most 3 jobs."""
+    removal counts: the decode, then the bucket-keyed tasks that write
+    the blocks and the termstats, at most 2 jobs."""
     d = _copy(tombstoned, tmp_path, fold)
     jobs = _jobs(spark, f"fold-{fold}", lambda: FOLDS[fold](spark, d))
-    assert 0 < len(jobs) <= 3, jobs
+    assert 0 < len(jobs) <= 2, jobs
 
 
-def test_build_launches_three_jobs(spark, tmp_path):
-    """build_index of a multi-file corpus with a known doc count:
-    tokenize and pack, encode and write the blocks, write the
-    termstats - 3 jobs (the Spark-writer build took 4)."""
+@pytest.fixture
+def multi_file_docs(spark, tmp_path):
+    """A 200-doc corpus read from several parquet files."""
     src = str(tmp_path / "docs")
     _docs(spark, range(200), 7).repartition(4).write.parquet(src)
     docs = spark.read.parquet(src)
     assert len(docs.inputFiles()) > 1
+    return docs
+
+
+def test_build_launches_two_jobs(spark, multi_file_docs, tmp_path):
+    """build_index of a multi-file corpus with a known doc count:
+    tokenize and pack, then the bucket-keyed tasks that encode and
+    write the blocks and the termstats - 2 jobs (the Spark-writer
+    build took 4, a separate termstats stage 3).  A ``num_partitions``
+    above the bucket count still runs one writer task per bucket."""
     d = str(tmp_path / "idx")
     jobs = _jobs(
         spark, "build-jobs",
-        lambda: build_index(spark, docs, d, n_docs=200, **KW),
+        lambda: build_index(
+            spark, multi_file_docs, d, n_docs=200, num_partitions=64, **KW
+        ),
     )
-    assert len(jobs) == 3, jobs
+    assert len(jobs) == 2, jobs
+    st = spark.sparkContext.statusTracker()
+    writer = max(st.getJobInfo(max(jobs)).stageIds)
+    assert st.getStageInfo(writer).numTasks == KW["num_buckets"]
     assert load_stats(d)["n_docs"] == 200
+
+
+def test_nested_append_launches_two_jobs(spark, multi_file_docs, tmp_path):
+    """An append over the small-epoch gate writes a nested epoch in the
+    same 2 jobs as the build: tokenize and pack, then the bucket-keyed
+    writer tasks."""
+    d = str(tmp_path / "idx")
+    build_index(spark, _docs(spark, range(200, 260), 8), d, **KW)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(streaming, "_estimated_small", lambda batch: False)
+        jobs = _jobs(
+            spark, "nested-append-jobs",
+            lambda: append_index_batch(spark, multi_file_docs, d, 1, **KW),
+        )
+    assert len(jobs) == 2, jobs
+    assert epoch_dir_layout(os.path.join(d, "postings", "epoch=1")) == "nested"
+    assert load_stats(d)["n_docs"] == 260

@@ -329,10 +329,10 @@ def test_build_index_cell_exchange_then_map_in_arrow(
     spark, docs, tmp_path, monkeypatch
 ):
     """The build is tokenizer MapInPandas -> ONE Exchange keyed by the
-    collision-free cell map -> MapInArrow block encode that writes the
-    blocks (no pandas round trip on the reduce side, no hash of
-    (bucket, salt), no sort), then one Exchange by bucket -> the
-    MapInArrow termstats write, all in the writer's one plan."""
+    collision-free bucket map -> ONE MapInArrow whose tasks encode and
+    write the blocks and the termstats (no pandas round trip on the
+    reduce side, no hash of the bucket, no sort, no second exchange),
+    all in the writer's one plan."""
     from pg_cjk_parser_spark.index.build import build_index
 
     plans = []
@@ -350,8 +350,8 @@ def test_build_index_cell_exchange_then_map_in_arrow(
     )
     (plan,) = [p for p in plans if "MapInPandas" in p]  # the writer's
     assert _count(plan, "MapInPandas") == 1, plan
-    assert _count(plan, "Exchange") == 2, plan
-    assert _count(plan, "MapInArrow") == 2, plan
+    assert _count(plan, "Exchange") == 1, plan
+    assert _count(plan, "MapInArrow") == 1, plan
     assert _count(plan, "Sort") == 0, plan
 
     def op_ids(op):
@@ -359,15 +359,19 @@ def test_build_index_cell_exchange_then_map_in_arrow(
             int(m) for m in re.findall(rf"^\((\d+)\) {op}\s*$", plan, re.M)
         ]
 
-    (tok,), (cell_x, bucket_x), (enc, terms) = (
+    (tok,), (bucket_x,), (write,) = (
         op_ids(op) for op in ("MapInPandas", "Exchange", "MapInArrow")
     )
-    assert tok < cell_x < enc < bucket_x < terms, plan
+    assert tok < bucket_x < write, plan
     key = re.search(
         r"^\(\d+\) Exchange\s*\n(?:.+\n)*?Arguments: (.+)$", plan, re.M
     ).group(1)
-    assert key.startswith("hashpartitioning(element_at("), key
-    assert not re.match(r"hashpartitioning\(bucket#\d+, salt#\d+", key), key
+    # partition bucket % parts through the literal map, salt not in it
+    assert re.match(
+        r"hashpartitioning\(element_at\(\[[\d,]+\], \(\(bucket#\d+ % \d+\) \+ 1\)",
+        key,
+    ), key
+    assert "salt" not in key, key
 
 
 def test_small_append_writes_flat_epoch_in_two_jobs(

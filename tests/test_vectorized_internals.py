@@ -299,7 +299,8 @@ def test_packed_gen_matches_reference(corpus_pdf):
 def test_packed_gen_batch_split_invariant(corpus_pdf):
     """Postings must not depend on Arrow batch boundaries."""
     parts = [
-        c.reset_index(drop=True) for c in np.array_split(corpus_pdf, 4)
+        corpus_pdf.iloc[ix].reset_index(drop=True)
+        for ix in np.array_split(np.arange(len(corpus_pdf)), 4)
     ]
     one = _cells_to_postings(_packed_postings_gen(iter([corpus_pdf]), 8, 2))
     many = _cells_to_postings(_packed_postings_gen(iter(parts), 8, 2))
